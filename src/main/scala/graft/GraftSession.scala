@@ -95,44 +95,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         ShingleExplode(exprs.head,
           GraftExtensions.foldableK(exprs(1), "shingle_explode"))
       }))
-    // mergeable KLL quantile sketches — the pure-SQL face of the MV
-    // quantile tier: `kll_quantile(kll_sketch_agg(x), 0.5)` over a
-    // registered base rewrites onto summary-cell sketches exactly like
-    // the Column-API form (the analyzer wraps a bare AggregateFunction
-    // in its AggregateExpression, so these register like sum/min/max)
-    e.injectFunction((FunctionIdentifier("kll_sketch_agg"),
-      info("kll_sketch_agg"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.isEmpty || exprs.length > 2)
-          throw new IllegalArgumentException(
-            "kll_sketch_agg(col[, k]) takes 1 or 2 arguments")
-        graft.functions.KllSketchAgg(exprs.head,
-          if (exprs.length == 2)
-            GraftExtensions.foldableK(exprs(1), "kll_sketch_agg")
-          else graft.functions.KllSketchAgg.DefaultK)
-      }))
-    e.injectFunction((FunctionIdentifier("kll_merge_agg"),
-      info("kll_merge_agg"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.isEmpty || exprs.length > 2)
-          throw new IllegalArgumentException(
-            "kll_merge_agg(sketch[, k]) takes 1 or 2 arguments")
-        graft.functions.KllMergeAgg(exprs.head,
-          if (exprs.length == 2)
-            GraftExtensions.foldableK(exprs(1), "kll_merge_agg")
-          else graft.functions.KllSketchAgg.DefaultK)
-      }))
-    e.injectFunction((FunctionIdentifier("kll_quantile"),
-      info("kll_quantile"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            "kll_quantile(sketch, rank) takes exactly 2 arguments")
-        // SQL `0.5` parses as DECIMAL(1,1) — widen any numeric rank
-        graft.functions.KllQuantile(exprs.head,
-          org.apache.spark.sql.catalyst.expressions.Cast(exprs(1),
-            org.apache.spark.sql.types.DoubleType))
-      }))
   }
 }
 

@@ -2966,16 +2966,16 @@ object RelationalOps extends QueryModule {
     // summary cannot answer "median price per flag" at any grain but
     // its own. The MV materializes a mergeable KLL sketch of
     // l_extendedprice per (l_returnflag, l_linestatus) cell; the user's
-    // kll_quantile(kll_sketch_agg(price), q) at the COARSER
-    // l_returnflag grain is auto-rewritten to a MERGE of cell sketches
-    // over |MV| rows (same algebra as the c21 HLL rollup — at 100 TB
-    // the latency dashboard never rescans the fact table). Oracle gate,
-    // the c21 pattern: exact p50/p95 are recomputed base-side (DuckDB
-    // reproduces them via quantile_cont), `rank_err_ok` pins each
-    // estimate inside the exact values at rank q ± 0.05 (3× KLL k=200's
-    // ~1.65% published rank error — KLL compaction is randomized, so
-    // the claim is the rank bound, NEVER estimate equality), and
-    // `mv_used` pins the plan shape.
+    // kll_sketch_get_quantile_double(kll_sketch_agg_double(price), q) at
+    // the COARSER l_returnflag grain is auto-rewritten to a MERGE of
+    // cell sketches over |MV| rows (same algebra as the c21 HLL rollup —
+    // at 100 TB the latency dashboard never rescans the fact table).
+    // Oracle gate, the c21 pattern: exact p50/p95 are recomputed
+    // base-side (DuckDB reproduces them via quantile_cont), `rank_err_ok`
+    // pins each estimate inside the exact values at rank q ± 0.05 (3×
+    // KLL k=200's ~1.65% published rank error — KLL compaction is
+    // randomized, so the claim is the rank bound, NEVER estimate
+    // equality), and `mv_used` pins the plan shape.
     "c23_mv_kll_rewrite" -> ((s, d) => {
       // per-run root: every invocation publishes a NEW generation, so
       // the root is mutable — concurrent runs must not share it
@@ -2984,12 +2984,10 @@ object RelationalOps extends QueryModule {
       graft.plans.MvRewrite.materialize(s, base,
         Seq("l_returnflag", "l_linestatus"), Seq("l_quantity"), mvPath,
         quantileCols = Seq("l_extendedprice"))
-      import graft.functions.KllFunctions._
+      def estimate(q: Double) = kll_sketch_get_quantile_double(
+        kll_sketch_agg_double(col("l_extendedprice")), lit(q))
       val est = base.groupBy("l_returnflag")
-        .agg(kllQuantile(kllSketchAgg(col("l_extendedprice")), 0.5)
-          .as("p50_est"),
-          kllQuantile(kllSketchAgg(col("l_extendedprice")), 0.95)
-            .as("p95_est"))
+        .agg(estimate(0.5).as("p50_est"), estimate(0.95).as("p95_est"))
       // invocation-independent claim (see c15): the estimate side must
       // not scan the base — any live generation of this logical MV is
       // an equally valid summary to answer from
@@ -3027,13 +3025,13 @@ object RelationalOps extends QueryModule {
     // median recomputed next to the estimate (DuckDB reproduces it),
     // the merged estimate pinned inside the exact ±0.05-rank window.
     "a29_kll_partitioned" -> ((s, d) => {
-      import graft.functions.KllFunctions._
       val ev = Tables.events(s, d)
       val daily = ev
         .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
-        .agg(kllSketchAgg(col("value")).as("sk"))
+        .agg(kll_sketch_agg_double(col("value")).as("sk"))
       val merged = daily.groupBy("event_type")
-        .agg(kllQuantile(kllMergeAgg(col("sk")), 0.5).as("p50_est"))
+        .agg(kll_sketch_get_quantile_double(kll_merge_agg_double(col("sk")),
+          lit(0.5)).as("p50_est"))
       val exact = ev.groupBy("event_type")
         .agg(expr("percentile(value, array(0.45, 0.5, 0.55))").as("q"))
         .select(col("event_type"),

@@ -80,11 +80,15 @@ object CurrencyPipeline {
 
   /** C2: last-write-wins upsert of `incoming` into `existing`, keyed
     * (cc, exchangedate); newest ingest_ts wins, idempotent under replay. */
-  def merge(existing: DataFrame, incoming: DataFrame): DataFrame = {
+  def merge(existing: DataFrame, incoming: DataFrame): DataFrame =
+    latestWins(existing.unionByName(incoming))
+
+  /** The last-write-wins rule: one row per (cc, exchangedate), the one
+    * with the newest ingest_ts. */
+  def latestWins(rates: DataFrame): DataFrame = {
     val w = Window.partitionBy("cc", "exchangedate")
       .orderBy(col("ingest_ts").desc)
-    existing.unionByName(incoming)
-      .withColumn("rn", row_number().over(w))
+    rates.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn")
   }

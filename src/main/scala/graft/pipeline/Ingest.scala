@@ -51,12 +51,8 @@ object Ingest {
         .add("ingest_date", org.apache.spark.sql.types.StringType))
       .option("basePath", rawDir)
       .json(s"$rawDir/ingest_date=*")
-    val transformed = CurrencyPipeline.transform(
+    CurrencyPipeline.latestWins(CurrencyPipeline.transform(
       raw.withColumn("ingest_ts", to_timestamp(col("ingest_date")))
-        .drop("ingest_date"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("cc", "exchangedate").orderBy(col("ingest_ts").desc)
-    transformed.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
+        .drop("ingest_date")))
   }
 }

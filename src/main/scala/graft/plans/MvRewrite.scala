@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute,
   AttributeReference, Cast, Divide, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, Average, Complete, Count, HllSketchAgg, HllUnionAgg,
-  Max, Min, Sum}
+  KllMergeAggDouble, KllSketchAggDouble, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan,
   Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -106,12 +106,18 @@ object MvRewrite {
     * for lgK-14 would silently change the error bound. */
   val SketchLgK = 12
 
-  /** K every summary QUANTILE sketch is built at (DataSketches KLL
-    * default: normalized rank error ≈ 1.65% at 99% confidence). The
-    * rewrite only fires when the query's sketch uses the same K —
-    * answering a higher-precision request from a lower-precision
-    * summary would silently change the error bound. */
-  val KllK = graft.functions.KllSketchAgg.DefaultK
+  /** K every summary QUANTILE sketch is built at — Spark's
+    * `kll_sketch_agg_double` default (normalized rank error ≈ 1.65% at
+    * 99% confidence). The rewrite only fires when the query's sketch
+    * uses the same K — answering a higher-precision request from a
+    * lower-precision summary would silently change the error bound. */
+  val KllK = 200
+
+  /** The K a query's KLL sketch is built at: its constant k argument,
+    * or Spark's default when it has none (Spark keeps its own resolved
+    * value protected). */
+  private[plans] def kllK(ks: KllSketchAggDouble): Int =
+    ks.kExpr.fold(KllK)(_.eval().asInstanceOf[Number].intValue)
 
   /** Keyed by the LOGICAL summary root: re-materializing or refreshing
     * the same MV atomically re-points its registration at the freshly
@@ -195,8 +201,7 @@ object MvRewrite {
       // KLL sketch per cell is what lets median/p99 dashboards roll up
       // (the same BI-engine pattern as the HLL distinct partials)
       quantileCols.map(x =>
-        graft.functions.KllFunctions.kllSketchAgg(col(x), KllK)
-          .as(s"kll_$x"))
+        kll_sketch_agg_double(col(x), KllK).as(s"kll_$x"))
 
   /** Commit a freshly-computed summary frame as the next generation
     * under `path` and return the registered definition: write to the
@@ -352,8 +357,7 @@ object MvRewrite {
       xs.map(x => hll_union_agg(col(s"hll_$x")).as(s"hll_$x"))) ++
       // KLL merges like HLL unions: the refreshed cell sketch is the
       // same state a rebuild over old ∪ delta rows would reach
-      qs.map(x => graft.functions.KllFunctions
-        .kllMergeAgg(col(s"kll_$x"), KllK).as(s"kll_$x"))
+      qs.map(x => kll_merge_agg_double(col(s"kll_$x"), KllK).as(s"kll_$x"))
     // declared schema (the registered plan's): no footer-inference job
     val merged = spark.read.schema(d.mvPlan.schema).parquet(d.genDir)
       .unionByName(deltaSum)
@@ -648,17 +652,17 @@ object MvRewriteRule extends Rule[LogicalPlan] {
                  else aggExpr(HllUnionAgg(cell, Literal(false))))
           case _ => None
         }
-      // kll_sketch_agg(x) over a QUANTILE-COVERED column at matching
-      // precision: same algebra as the HLL arm — sketch state merges,
-      // so median/p99 queries roll up through the summary. The
-      // user-facing kll_quantile(…, q) wrapper rides through the
-      // recursive scalar case untouched.
-      case ks: graft.functions.KllSketchAgg if ks.k == MvRewrite.KllK =>
+      // kll_sketch_agg_double(x) over a QUANTILE-COVERED column at
+      // matching precision: same algebra as the HLL arm — sketch state
+      // merges, so median/p99 queries roll up through the summary. The
+      // user-facing kll_sketch_get_quantile_double(…, q) wrapper rides
+      // through the recursive scalar case untouched.
+      case ks: KllSketchAggDouble if MvRewrite.kllK(ks) == MvRewrite.KllK =>
         ks.child match {
           case a: AttributeReference if d.quantileCols.contains(a.name) =>
             val cell = mv(s"kll_${a.name}")
             Some(if (exact) cell
-                 else aggExpr(graft.functions.KllMergeAgg(cell, ks.k)))
+                 else aggExpr(KllMergeAggDouble(cell, ks.kExpr)))
           case _ => None
         }
       case _ => None
@@ -855,12 +859,11 @@ object MvRewriteRule extends Rule[LogicalPlan] {
               Literal(false))))
           case _ => None
         }
-      case ks: graft.functions.KllSketchAgg if ks.k == MvRewrite.KllK =>
+      case ks: KllSketchAggDouble if MvRewrite.kllK(ks) == MvRewrite.KllK =>
         ks.child match {
           case a: AttributeReference
               if factOut.contains(a) && d.quantileCols.contains(a.name) =>
-            Some(aggExpr(graft.functions.KllMergeAgg(
-              mv(s"kll_${a.name}"), ks.k)))
+            Some(aggExpr(KllMergeAggDouble(mv(s"kll_${a.name}"), ks.kExpr)))
           case _ => None
         }
       case _ => None

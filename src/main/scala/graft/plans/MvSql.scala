@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute,
   AttributeReference, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
-  AggregateExpression, Average, Count, HllSketchAgg, Max, Min, Sum}
+  AggregateExpression, Average, Count, HllSketchAgg, KllSketchAggDouble, Max,
+  Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan,
   Project, SubqueryAlias}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -24,7 +25,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
   * aggregate is classified into the self-maintainable algebra
   * ([[MvRewrite]]): count/sum/min/max/avg over a column → measure,
   * count(DISTINCT)/hll_sketch_agg → HLL-sketch-covered column,
-  * kll_sketch_agg/kll_quantile → KLL-sketch-covered column — and
+  * kll_sketch_agg_double → KLL-sketch-covered column — and
   * materializes the CANONICAL summary ([[MvRewrite.materialize]]), so
   * the one stored summary answers the defining view AND every other
   * rewritable aggregate at or above its grain. The name is also bound
@@ -134,15 +135,16 @@ object MvSql {
         case other => fail("CREATE MATERIALIZED VIEW: hll_sketch_agg " +
           s"over a non-column ${other.sql} is not maintainable")
       }
-      case k: graft.functions.KllSketchAgg => k.child match {
+      case k: KllSketchAggDouble => k.child match {
         case a: AttributeReference => quantiles += a.name
-        case other => fail("CREATE MATERIALIZED VIEW: kll_sketch_agg " +
-          s"over a non-column ${other.sql} is not maintainable")
+        case other => fail("CREATE MATERIALIZED VIEW: " +
+          s"kll_sketch_agg_double over a non-column ${other.sql} is not " +
+          "maintainable")
       }
       case other => fail("CREATE MATERIALIZED VIEW: " +
         s"${other.prettyName} is not in the self-maintainable algebra " +
         "(count/sum/min/max/avg, count(DISTINCT), hll_sketch_agg, " +
-        "kll_sketch_agg)")
+        "kll_sketch_agg_double)")
     }
     agg.aggregateExpressions.foreach { ne =>
       ne.foreach {

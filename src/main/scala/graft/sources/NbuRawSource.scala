@@ -40,12 +40,7 @@ class NbuRawSource extends TableProvider {
 }
 
 object NbuRawSource {
-  val schema: StructType = StructType(Seq(
-    StructField("r030", LongType),
-    StructField("txt", StringType),
-    StructField("rate", DoubleType),
-    StructField("cc", StringType),
-    StructField("exchangedate", StringType)))
+  val schema: StructType = graft.pipeline.CurrencyPipeline.rawSchema
 }
 
 class NbuRawTable(path: String) extends Table with SupportsRead {

@@ -84,15 +84,23 @@ class MvRewriteSpec extends SparkSuite {
   }
 
   test("quantile-covered MV: kll queries roll up through the summary") {
-    import graft.functions.KllFunctions._
-    val base = spark.read.parquet(writeBase())
+    // kll_sketch_agg_double takes DOUBLE input only: a base whose m2 is
+    // DOUBLE too, so the uncovered-column probe below type-checks
+    val dir = tmp("qbase")
+    spark.read.parquet(writeBase())
+      .withColumn("m2", col("m2").cast("double"))
+      .write.mode("overwrite").parquet(dir)
+    val base = spark.read.parquet(dir)
     val mvPath = tmp("mvq")
     plans.MvRewrite.materialize(spark, base, Seq("g1", "g2"), Seq("m1"),
       mvPath, quantileCols = Seq("m1"))
+    // Spark's default k (200) is the summaries' KllK
+    def quantile(c: String, q: Double, k: Option[Int] = None) =
+      kll_sketch_get_quantile_double(k.fold(kll_sketch_agg_double(col(c)))(
+        kll_sketch_agg_double(col(c), _)), lit(q))
     // rollup grain: cell sketches MERGE (quantiles don't decompose
     // through sums — the KLL partial is what makes this derivable)
-    val q = base.groupBy("g1")
-      .agg(kllQuantile(kllSketchAgg(col("m1")), 0.5).as("med"))
+    val q = base.groupBy("g1").agg(quantile("m1", 0.5).as("med"))
     assert(onMv(q, mvPath),
       s"expected an MV-only plan, got ${q.queryExecution.optimizedPlan}")
     // 6 rows — far below retained capacity, so the sketch is EXACT
@@ -100,19 +108,17 @@ class MvRewriteSpec extends SparkSuite {
       .map(r => (r.getString(0), r.getDouble(1))) ===
       Array(("a", 2.0), ("b", 5.0)))
     // exact grain: the stored cell sketch answers directly
-    val qe = base.groupBy("g1", "g2")
-      .agg(kllQuantile(kllSketchAgg(col("m1")), 1.0).as("mx"))
+    val qe = base.groupBy("g1", "g2").agg(quantile("m1", 1.0).as("mx"))
     assert(onMv(qe, mvPath))
     assert(qe.orderBy("g1", "g2").collect().map(_.getDouble(2)) ===
       Array(2.0, 3.0, 4.0, 6.0))
     // a different precision must NOT rewrite: answering a k=128
     // request from k=200 summary state would change the error bound
     val qk = base.groupBy("g1")
-      .agg(kllQuantile(kllSketchAgg(col("m1"), k = 128), 0.5).as("med"))
+      .agg(quantile("m1", 0.5, k = Some(128)).as("med"))
     assert(!onMv(qk, mvPath))
     // an uncovered column must not rewrite either
-    val qu = base.groupBy("g1")
-      .agg(kllQuantile(kllSketchAgg(col("m2")), 0.5).as("med"))
+    val qu = base.groupBy("g1").agg(quantile("m2", 0.5).as("med"))
     assert(!onMv(qu, mvPath))
   }
 

@@ -119,6 +119,49 @@ class MvSqlSpec extends SparkSuite {
     }
   }
 
+  test("CREATE with kll_sketch_agg_double covers quantiles; a coarser " +
+      "median rewrites onto merged cell sketches") {
+    val root = tmp("kll")
+    val dir = s"$root/pq"
+    val mvPath = s"$root/mv"
+    spark.range(1, 10001)
+      .select((col("id") % 10).as("g"), (col("id") % 3).as("h"),
+        col("id").cast("double").as("x"))
+      .write.mode("overwrite").parquet(dir)
+    s.read.parquet(dir).createOrReplaceTempView("mvsql_kt")
+    try {
+      s.sql(s"""CREATE MATERIALIZED VIEW mvsql_kll LOCATION '$mvPath'
+        AS SELECT g, h, kll_sketch_agg_double(x) AS sk
+           FROM mvsql_kt GROUP BY g, h""")
+      def q(k: String) = s.sql(
+        s"""SELECT g, kll_sketch_get_quantile_double(
+           |  kll_sketch_agg_double(x$k), 0.5) AS med
+           |FROM mvsql_kt GROUP BY g""".stripMargin)
+      assert(usesMv(q(""), mvPath),
+        s"expected MV plan: ${q("").queryExecution.optimizedPlan}")
+      // percentile is outside the MV algebra, so this reads the base
+      val exact = s.sql("SELECT g, percentile(x, 0.5) FROM mvsql_kt " +
+        "GROUP BY g").collect().map(r => r.getLong(0) -> r.getDouble(1))
+        .toMap
+      // x is uniform on [1,10000] within every g: 3x the k=200 rank
+      // bound (~1.65%) maps to a value error of 3 * 0.0165 * 10000
+      val tol = 3 * 0.0165 * 10000
+      val est = q("").collect()
+      assert(est.length === 10)
+      est.foreach { r =>
+        val (g, med) = (r.getLong(0), r.getDouble(1))
+        assert(math.abs(med - exact(g)) <= tol, s"g=$g median $med")
+      }
+      // a k=128 request must not be answered from k=200 summary state
+      assert(!usesMv(q(", 128"), mvPath))
+      s.sql("DROP MATERIALIZED VIEW mvsql_kll")
+      ()
+    } finally {
+      s.catalog.dropTempView("mvsql_kt")
+      plans.MvRewrite.clear()
+    }
+  }
+
   test("file-source base: REFRESH re-materializes and re-arms") {
     val root = tmp("fullr")
     val dir = s"$root/pq"
