@@ -106,6 +106,30 @@ object RelationalOps extends QueryModule {
           / col("nd_users_exact"), 6).as("rel_err"))
   }
 
+  /** c11/c12 fixture: events as a fresh 64-small-file GDX table
+    * (k = event_id, v = event_type, value). Returns its path. */
+  private def compactFixture(s: SparkSession, d: String,
+                             prefix: String): String = {
+    val dir = graft.Scratch.tablePath(prefix)
+    Tables.events(s, d)
+      .select(col("event_id").as("k"), col("event_type").as("v"),
+        round(col("value"), 6).as("value"))
+      .repartition(64)
+      .write.format("graft.sources.GdxSource").option("path", dir)
+      .mode("overwrite").save()
+    dir
+  }
+
+  /** c11/c12 read-back under the original column names, with the
+    * file-count claim riding along. */
+  private def compactReadBack(s: SparkSession, dir: String,
+                              shrunk: Boolean): DataFrame =
+    s.read.format("graft.sources.GdxSource").option("path", dir).load()
+      .select(col("k").as("event_id"), col("v").as("event_type"),
+        col("value"))
+      .withColumn("files_shrunk", lit(shrunk))
+      .orderBy("event_id")
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // P1 — column projection (pruned scan: ReadSchema carries 4 of 11 cols)
     "p1_project" -> ((s, d) =>
@@ -252,10 +276,10 @@ object RelationalOps extends QueryModule {
         Seq("o_custkey"), "o_totalprice", "o_orderkey", k = 2)
         .orderBy("o_custkey", "o_orderkey")),
 
-    // O4 — Z-order (Morton) clustering key: the multi-dimensional
-    // layout curve `Layout.zorderWrite` clusters by, exposed as a
-    // query so the bit math itself is oracle-verified (LayoutSpec
-    // quantifies the file-pruning win of the layout it drives)
+    // O4 — Z-order (Morton) clustering key: a 16-bit two-column bit
+    // interleave, exposed as a query so the bit math itself is
+    // oracle-verified (LayoutSpec pins hand-computed cases; GDX's
+    // OPTIMIZE ZORDER BY clusters on its own ZValue curve instead)
     "o4_zorder_key" -> ((s, d) =>
       Tables.orders(s, d)
         .select(col("o_orderkey"),
@@ -264,25 +288,26 @@ object RelationalOps extends QueryModule {
             col("o_orderkey").bitwiseAND(65535)).as("zkey"))
         .orderBy("o_orderkey")),
 
-    // O5 — manifest-driven data skipping: orders range-clustered on
-    // o_totalprice (16 files with disjoint value ranges), a per-file
-    // min/max manifest built in one scan, and the band probe reads ONLY
-    // the files whose interval intersects — O(matching range) files
-    // opened, not O(table). Residual filter re-applied, so the answer
-    // is exactly the full scan's (the oracle). SkippingSpec asserts the
-    // probe's file list is actually pruned.
+    // O5 — zone-map data skipping: orders range-clustered on
+    // o_totalprice into 16 GDX files with disjoint value ranges. The
+    // manifest's extended zone maps (per-file min/max of every numeric
+    // column) let the BETWEEN read plan ONLY the files whose interval
+    // intersects the band — O(matching range) files opened, not
+    // O(table). The scan re-applies the row filter, so the answer is
+    // exactly the full scan's (the oracle). SkippingSpec asserts the
+    // planned file list is actually pruned.
     "o5_minmax_skipping" -> ((s, d) => {
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_skip_" + d.replaceAll("[^A-Za-z0-9.]", "_")).getPath
-      val (tbl, man) = (s"$base/orders", s"$base/manifest")
+      val dir = graft.Scratch.tablePath("graft_skip_")
+      val fmt = "graft.sources.GdxSource"
       Tables.orders(s, d)
+        .select(col("o_orderkey").as("k"), col("o_orderstatus").as("v"),
+          col("o_custkey"), col("o_totalprice"))
         .repartitionByRange(16, col("o_totalprice"))
-        .sortWithinPartitions("o_totalprice")
-        .write.mode("overwrite").parquet(tbl)
-      graft.pipeline.Skipping.writeManifest(s, tbl, "o_totalprice", man)
-      graft.pipeline.Skipping
-        .prunedRead(s, tbl, man, "o_totalprice", 30000.0, 60000.0)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .write.format(fmt).option("path", dir).mode("overwrite").save()
+      s.read.format(fmt).option("path", dir).load()
+        .filter(col("o_totalprice").between(30000.0, 60000.0))
+        .select(col("k").as("o_orderkey"), col("o_custkey"),
+          col("o_totalprice"))
         .orderBy("o_orderkey")
     }),
 
@@ -1376,57 +1401,28 @@ object RelationalOps extends QueryModule {
     }),
 
     // C11 — compaction round-trip, correctness-gated: a 64-small-file
-    // table (the streaming-sink accretion shape) compacted by
-    // Maintenance.compact (one narrow repartition pass + TableSwap
-    // atomic promote) must read back byte-identical with FEWER files.
-    // MaintenanceSpec pins the crash-recovery protocol; this query puts
-    // the data-preservation half under the per-round DuckDB oracle.
+    // GDX table (the streaming-sink accretion shape) compacted by
+    // GdxSource.compact (one truncate commit of the rewritten snapshot)
+    // must read back byte-identical with FEWER files. GdxSourceSpec
+    // pins the version/history half; this query puts the
+    // data-preservation half under the per-round DuckDB oracle.
     "c11_compact_roundtrip" -> ((s, d) => {
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_compact_" + d.replaceAll("[^A-Za-z0-9.]", "_")).getPath
-      Tables.events(s, d)
-        .select(col("event_id"), col("event_type"),
-          round(col("value"), 6).as("value"))
-        .repartition(64)
-        .write.mode("overwrite").parquet(dir)
-      val (before, after) =
-        graft.pipeline.Maintenance.compact(s, dir)
-      // declared read-back schema: no footer-inference job
-      s.read.schema("event_id BIGINT, event_type STRING, value DOUBLE")
-        .parquet(dir)
-        .select(col("event_id"), col("event_type"), col("value"))
-        .withColumn("files_shrunk", lit(after < before))
-        .orderBy("event_id")
+      val dir = compactFixture(s, d, "graft_compact_")
+      val (before, after) = graft.sources.GdxSource.compact(s, dir)
+      compactReadBack(s, dir, after < before)
     }),
 
-    // C12 — the OBJECT-STORE-SAFE compaction round-trip: same
-    // data-preservation gate as c11, but through the versioned
-    // marker-commit promote (TableSwap.nextVersion/commitVersion — no
-    // rename on the crash path, the protocol object stores need).
-    // Fresh version slots accrete across verify/bench runs on the
-    // shared tmp root; compactVersioned's own vacuum(keepLast=2)
-    // bounds them. MaintenanceSpec pins crash invisibility + version
-    // burning; this puts the read-back equality under the oracle.
+    // C12 — bin-packing compaction round-trip: the same 64-file table
+    // through GdxSource.compactSmall with a 128 MB small-file
+    // threshold, so every file is tail and the whole snapshot
+    // rewrites in one CAS'd commit. Same data-preservation gate as
+    // c11; GdxCompactSmallSpec pins the carried-by-reference and
+    // partitioned-layout halves.
     "c12_compact_versioned" -> ((s, d) => {
-      val root = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_vcompact_" + d.replaceAll("[^A-Za-z0-9.]", "_")).getPath
-      val swap = graft.pipeline.TableSwap
-      val conf = s.sparkContext.hadoopConfiguration
-      val (v, dst) = swap.nextVersion(root, conf)
-      Tables.events(s, d)
-        .select(col("event_id"), col("event_type"),
-          round(col("value"), 6).as("value"))
-        .repartition(64)
-        .write.mode("overwrite").parquet(dst)
-      swap.commitVersion(root, v, conf)
+      val dir = compactFixture(s, d, "graft_vcompact_")
       val (before, after) =
-        graft.pipeline.Maintenance.compactVersioned(s, root)
-      // declared read-back schema: no footer-inference job
-      s.read.schema("event_id BIGINT, event_type STRING, value DOUBLE")
-        .parquet(swap.liveVersionPath(root, conf).get)
-        .select(col("event_id"), col("event_type"), col("value"))
-        .withColumn("files_shrunk", lit(after < before))
-        .orderBy("event_id")
+        graft.sources.GdxSource.compactSmall(s, dir, 128L * 1024 * 1024)
+      compactReadBack(s, dir, after < before)
     }),
 
     // C13 — MERGE (LWW upsert) into the GDX table format: base snapshot

@@ -247,8 +247,8 @@ object Similarity extends QueryModule {
     * tie-break), so probes over the extended layout stay exact —
     * SimilaritySpec proves both halves. Re-clustering (quantizer drift
     * after the corpus shifts) is a deliberate offline event: new
-    * centroids mean a NEW layout directory, swapped in atomically via
-    * the TableSwap protocol. */
+    * centroids mean a NEW layout, written in full and published as one
+    * commit (e.g. a GDX overwrite). */
   def ivfAssignFrozen(e: DataFrame, centroids: DataFrame): DataFrame = {
     val cents = centroids.orderBy("cluster").collect()
       .map(_.getSeq[Double](1).toArray)

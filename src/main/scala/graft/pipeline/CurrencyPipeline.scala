@@ -47,8 +47,11 @@ object CurrencyPipeline {
     spark.read.option("multiLine", value = true).schema(rawSchema).json(path)
 
   /** P1-P4/F6: project → parse dd.MM.yyyy → derive rate_per_100 → keep
-    * USD/EUR. One codegen stage over the scan. */
+    * USD/EUR. One codegen stage over the scan. `keep` holds ISO 4217
+    * codes (three uppercase letters), the domain `rateKey` encodes. */
   def transform(raw: DataFrame, keep: Seq[String] = Seq("USD", "EUR")): DataFrame = {
+    require(keep.forall(_.matches("[A-Z]{3}")),
+      s"transform: keep codes must be three uppercase letters: $keep")
     // P1 projection; an ingest_ts stamp (backfill replay) passes through.
     // try_to_date, not to_date: under Spark 4's default ANSI mode a single
     // malformed record would fail the whole job — malformed dates become
@@ -72,6 +75,15 @@ object CurrencyPipeline {
       count(lit(1)).as("n_rows"),
       count(when(col("exchangedate").isNull, 1)).as("n_bad_dates"),
       approx_count_distinct(col("cc")).as("n_currencies"))
+
+  /** The rates table's GDX key: one BIGINT per (exchangedate, cc) —
+    * days since epoch × 26³ plus the base-26 value of the code's three
+    * letters (A = 0). Injective over every code `transform` can keep. */
+  def rateKey(exchangedate: Column, cc: Column): Column = {
+    def letter(i: Int): Column = ascii(substring(cc, i, 1)).cast("long") - 65
+    unix_date(exchangedate).cast("long") * 17576 +
+      letter(1) * 676 + letter(2) * 26 + letter(3)
+  }
 
   /** Stamp a batch with its ingest time (the recency tie-break carried as
     * data so replays stay order-independent). */

@@ -1,22 +1,17 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Multi-dimensional data layout: Z-order (Morton) clustering.
+/** Z-order (Morton) curve arithmetic.
   *
-  * A table range-laid-out on ONE column prunes scans only on that
-  * column; a predicate on any other column reads everything. Z-ordering
-  * interleaves the bits of two (bounded) key columns so that rows close
-  * in EITHER dimension land close in the one-dimensional sort order —
-  * after `zorderWrite`, every output file covers a tight bounding box in
-  * BOTH dimensions and parquet min/max stats prune files for filters on
-  * either column (LayoutSpec quantifies the win vs a linear layout).
-  *
-  * At 100 TB this is a maintenance job like `Maintenance.compact`: one
-  * range-repartition + sorted write, re-run per partition as data
-  * accretes. The curve is computed by pure bit arithmetic (codegen'd,
+  * Z-ordering interleaves the bits of two (bounded) key columns so that
+  * rows close in EITHER dimension land close in the one-dimensional
+  * sort order. The curve is computed by pure bit arithmetic (codegen'd,
   * engine-portable — the o4_zorder_key oracle reproduces it in SQL).
+  * Clustering a table on a Z-curve is GDX's job
+  * (`GdxSource.optimizeZOrder`, which uses its own bucketized
+  * `ZValue` curve).
   */
 object Layout {
 
@@ -34,30 +29,4 @@ object Layout {
     (0 until 16).map { i =>
       s"((($x >> $i) & 1) << ${2 * i}) + ((($y >> $i) & 1) << ${2 * i + 1})"
     }.mkString("CAST(", " + ", " AS BIGINT)")
-
-  /** Rewrite `df` into `nFiles` parquet files clustered by the Z-curve
-    * over (x, y): range-partition on the curve so files own disjoint
-    * curve segments (= tight 2-D boxes), sort within partitions so
-    * row-group stats are tight too.
-    *
-    * Each dimension is min/max-NORMALIZED to the full 16-bit domain
-    * before interleaving — with raw values, the wider-ranged column
-    * monopolizes the curve's high bits and the narrow column gets no
-    * pruning at all (every production Z-order does this from column
-    * stats; the one tiny stats job here is that). */
-  def zorderWrite(df: DataFrame, x: Column, y: Column, path: String,
-                  nFiles: Int): Unit = {
-    val stats = df.agg(min(x).cast("double"), max(x).cast("double"),
-      min(y).cast("double"), max(y).cast("double")).head()
-    def scale(c: Column, lo: Double, hi: Double): Column =
-      if (hi <= lo) lit(0L)
-      else floor((c.cast("double") - lo) * 65535.0 / (hi - lo)).cast("long")
-    df.withColumn("zkey", morton16(
-        scale(x, stats.getDouble(0), stats.getDouble(1)),
-        scale(y, stats.getDouble(2), stats.getDouble(3))))
-      .repartitionByRange(nFiles, col("zkey"))
-      .sortWithinPartitions("zkey")
-      .drop("zkey")
-      .write.mode("overwrite").parquet(path)
-  }
 }

@@ -3,73 +3,31 @@ package graft.pipeline
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Crash-safe promote of a freshly-written table directory over a live
-  * one without a transactional format: the live table is renamed ASIDE
-  * (never deleted first), tmp is promoted, then the set-aside copy is
-  * removed. Any crash leaves at least one complete copy: before the
-  * promote `.old` is restorable, after it the new table is live.
-  * `recover` must run before READING a table that may have crashed
-  * mid-swap (live missing, `.old` present) — writers below call it.
+/** Versioned promote — an object-store-safe commit protocol for a
+  * table directory written without a transactional format (the same
+  * numbered-marker idea as GdxSource's `_manifest-%08d` snapshot log).
+  *
+  * Layout:  root/v=N/…data…   root/_commit-0000000N   (marker file)
+  *
+  * Data lands under a FRESH `v=N` prefix nobody reads yet, then ONE
+  * single-object marker PUT makes it live — readers resolve the table
+  * to `v=max(committed N)`. No rename is ever required for crash
+  * safety: a crash before the marker leaves an invisible orphan dir
+  * (vacuumed later, its number never reused); a crash after the marker
+  * is a completed promote. The marker is created with overwrite=false,
+  * so two racing writers can't both claim the same version — the loser
+  * gets an error, not a corrupt table.
   *
   * Substrate: the Hadoop `FileSystem` API, so the same protocol runs on
   * the local FS (`file://`), HDFS, or any mounted Hadoop filesystem —
   * pass the job's `hadoopConfiguration` so scheme resolution and
-  * credentials match the Spark session's. On HDFS both renames are
-  * atomic namenode operations. OBJECT-STORE CAVEAT: S3/GCS "rename" is
-  * copy+delete — neither atomic nor O(1) — so the RENAME protocol does
-  * NOT give crash safety there. For object stores use the VERSIONED
-  * promote below (`nextVersion`/`commitVersion`/`liveVersionPath`):
-  * data lands under a fresh `v=N` prefix and one marker-file PUT is the
-  * commit point — no rename on the crash path at all.
-  *
-  * The swap is two renames, not one atomic operation: a concurrent
-  * reader can hit a missing path in the instant between them. That is a
-  * read retry, not data loss; a serialized writer topology (one
-  * streaming query, one maintenance job) is the supported shape.
+  * credentials match the Spark session's. Materialized-view summary
+  * generations (`MvRewrite`) are its user.
   * Plain throws — never assert, which -Xelide-below would strip. */
 object TableSwap {
 
   private def fsFor(p: Path, conf: Configuration): FileSystem =
     p.getFileSystem(conf)
-
-  /** True if the table directory exists (recover first if it may have
-    * crashed mid-swap). */
-  def exists(tablePath: String,
-             conf: Configuration = new Configuration()): Boolean = {
-    val live = new Path(tablePath)
-    fsFor(live, conf).exists(live)
-  }
-
-  /** Restore a half-swapped table: if the live path is gone but the
-    * set-aside copy exists, put it back. Returns true if restored. */
-  def recover(tablePath: String,
-              conf: Configuration = new Configuration()): Boolean = {
-    val live = new Path(tablePath)
-    val old = new Path(tablePath + ".old")
-    val fs = fsFor(live, conf)
-    if (!fs.exists(live) && fs.exists(old)) {
-      if (!fs.rename(old, live))
-        throw new java.io.IOException(s"cannot restore $old -> $live")
-      true
-    } else false
-  }
-
-  // ------------------------------------------------------------------
-  // Versioned promote — the OBJECT-STORE-SAFE commit protocol (closes
-  // the rename caveat above; same numbered-marker idea as GdxSource's
-  // `_manifest-%08d` snapshot log, GdxSource.scala:103-115).
-  //
-  // Layout:  root/v=N/…data…   root/_commit-0000000N   (marker file)
-  //
-  // Data lands under a FRESH `v=N` prefix nobody reads yet, then ONE
-  // single-object marker PUT makes it live — readers resolve the table
-  // to `v=max(committed N)`. No rename is ever required for crash
-  // safety: a crash before the marker leaves an invisible orphan dir
-  // (vacuumed later, its number never reused); a crash after the marker
-  // is a completed promote. The marker is created with overwrite=false,
-  // so two racing writers can't both claim the same version — the loser
-  // gets an error, not a corrupt table.
-  // ------------------------------------------------------------------
 
   private val MarkerPrefix = "_commit-"
   private def markerFor(root: Path, v: Int) =
@@ -130,23 +88,6 @@ object TableSwap {
     try out.write(s"v=$v\n".getBytes("UTF-8")) finally out.close()
   }
 
-  /** Convenience promote for an externally-written tmp dir: move it to
-    * the next version slot and commit. The move is a rename (cheap on
-    * HDFS/local; a copy on object stores — write with `nextVersion`
-    * directly there to skip it); crash safety never depends on it,
-    * only on the marker. Returns the committed version. */
-  def promoteVersioned(tableRoot: String, tmpPath: String,
-                       conf: Configuration = new Configuration()): Int = {
-    val (v, dst) = nextVersion(tableRoot, conf)
-    val root = new Path(tableRoot)
-    val fs = fsFor(root, conf)
-    if (!fs.exists(root)) fs.mkdirs(root)
-    if (!fs.rename(new Path(tmpPath), new Path(dst)))
-      throw new java.io.IOException(s"cannot move $tmpPath -> $dst")
-    commitVersion(tableRoot, v, conf)
-    v
-  }
-
   /** Drop old committed versions beyond the `keepLast` newest, plus any
     * orphaned uncommitted dir BELOW the latest committed version (an
     * orphan above it may be a promote in flight — never touch it).
@@ -171,28 +112,5 @@ object TableSwap {
       fs.delete(versionDir(root, v), true)
     }
     victims.length
-  }
-
-  def promote(tablePath: String, tmpPath: String,
-              conf: Configuration = new Configuration()): Unit = {
-    val tmp = new Path(tmpPath)
-    val live = new Path(tablePath)
-    val old = new Path(tablePath + ".old")
-    val fs = fsFor(live, conf)
-    // a leftover .old with no live table is a previous crash mid-swap:
-    // the .old copy is the ONLY data — restore it, never delete it
-    recover(tablePath, conf)
-    if (fs.exists(old) && !fs.delete(old, true))
-      throw new java.io.IOException(s"cannot clear stale $old")
-    // every rename below targets a non-existent destination — required:
-    // HDFS rename onto an existing directory moves the source INTO it
-    if (fs.exists(live) && !fs.rename(live, old))
-      throw new java.io.IOException(s"cannot set aside $live -> $old")
-    if (!fs.rename(tmp, live)) {
-      if (fs.exists(old)) fs.rename(old, live) // roll back to the old copy
-      throw new java.io.IOException(s"cannot promote $tmp -> $live")
-    }
-    if (fs.exists(old) && !fs.delete(old, true))
-      throw new java.io.IOException(s"cannot drop set-aside $old")
   }
 }

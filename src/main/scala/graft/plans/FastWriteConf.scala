@@ -78,7 +78,7 @@ class GraftWriteFilesExec(
           }
           c = c.getSuperclass
         }
-      } catch { case _: Throwable => () }
+      } catch { case scala.util.control.NonFatal(_) => () }
     }
     val fast = new WriteJobDescription(d.uuid,
       new SameJvmWriteConf(d.serializableHadoopConf.value),

@@ -27,11 +27,19 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * DSv2 `SupportsRowLevelOperations` machinery — the same extension
   * seam Delta used for years. Non-GDX targets pass through untouched.
   *
-  * Supported MERGE shape — the engine's merge contract, stated loudly:
-  * `ON t.k = s.k WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
-  * INSERT *` (key-equality LWW upsert). Conditional/partial-assignment
-  * merges raise a clear error instead of silently diverging from the
-  * transactional semantics the format actually provides. */
+  * MERGE lowers along one of two paths. The classic key-equality LWW
+  * upsert over a (k, v) table — `ON t.k = s.k WHEN MATCHED THEN UPDATE
+  * SET * WHEN NOT MATCHED THEN INSERT *`, both clauses unconditional —
+  * becomes [[GdxMergeCommand]] ([[graft.sources.GdxSource.merge]]: one
+  * union + max-struct aggregate, no join). Every other shape —
+  * conditional clauses (e.g. `WHEN MATCHED AND s.ingest_ts >=
+  * t.ingest_ts`), partial assignments, MATCHED DELETE, NOT MATCHED BY
+  * SOURCE, wider tables — becomes [[GdxMergeGeneralCommand]]
+  * ([[graft.sources.GdxSource.mergeGeneral]]: the full ANSI clause
+  * matrix over a key join, DV + new files in one commit). Only
+  * statements the engine cannot express (duplicate source column
+  * names, a clause referencing the wrong side, an assignment to a
+  * non-target column) raise an error. */
 object GdxDmlRule extends Rule[LogicalPlan] {
 
   private def gdxPath(plan: LogicalPlan): Option[String] = plan match {

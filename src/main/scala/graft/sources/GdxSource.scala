@@ -126,7 +126,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    DSv2 DPP hook).
   *
   * All I/O goes through the Hadoop `FileSystem` resolved from the path
-  * (the Maintenance/TableSwap discipline), so the same connector runs on
+  * (the TableSwap discipline), so the same connector runs on
   * file://, hdfs://, and object stores; executor-side tasks carry the
   * driver's Hadoop configuration via [[SerializableHadoopConf]].
   *

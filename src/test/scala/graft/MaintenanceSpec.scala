@@ -1,66 +1,10 @@
 package graft
 
-import graft.pipeline.{Maintenance, TableSwap}
-import org.apache.spark.sql.functions._
+import graft.pipeline.TableSwap
 
-/** Small-file compaction + atomic table swap semantics. */
+/** Versioned marker-commit promote (TableSwap) semantics. */
 class MaintenanceSpec extends SparkSuite {
   import spark.implicits._
-
-  test("compact merges small files and preserves every row") {
-    // explicit file:// scheme: the whole path — listing, swap, rewrite —
-    // must resolve through the Hadoop FileSystem API, not java.io.File
-    val local = java.nio.file.Files.createTempDirectory("graft_compact")
-      .resolve("t").toString
-    val dir = "file:" + local
-    // 40 tiny files
-    spark.range(10000).select(col("id"), (col("id") % 7).as("k"))
-      .repartition(40).write.parquet(dir)
-    val checksumBefore = spark.read.parquet(dir)
-      .agg(sum("id"), count(lit(1))).as[(Long, Long)].head()
-    val (before, after) = Maintenance.compact(spark, dir, targetBytes = 1L << 20)
-    assert(before === 40)
-    assert(after < before, s"expected fewer files, got $before -> $after")
-    val checksumAfter = spark.read.parquet(dir)
-      .agg(sum("id"), count(lit(1))).as[(Long, Long)].head()
-    assert(checksumAfter === checksumBefore)
-    assert(!new java.io.File(local + ".compact_tmp").exists())
-    assert(!new java.io.File(local + ".old").exists())
-  }
-
-  test("compact preserves a Hive-partitioned layout and its pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_p")
-      .resolve("t").toString
-    spark.range(4000).select(col("id"), (col("id") % 3).as("k"))
-      .repartition(20).write.partitionBy("k").parquet(dir)
-    val before = spark.read.parquet(dir)
-      .agg(sum("id"), count(lit(1))).as[(Long, Long)].head()
-    val (nb, na) = Maintenance.compact(spark, dir, targetBytes = 1L << 20)
-    assert(na < nb)
-    // partition directories survive → pruning still works
-    assert(new java.io.File(dir, "k=0").isDirectory, "partition dirs kept")
-    val after = spark.read.parquet(dir)
-      .agg(sum("id"), count(lit(1))).as[(Long, Long)].head()
-    assert(after === before)
-    assert(spark.read.parquet(dir).filter(col("k") === 1).count() ===
-      before._2 / 3)
-  }
-
-  test("recover restores a table stranded in .old by a mid-swap crash") {
-    val base = java.nio.file.Files.createTempDirectory("graft_recover")
-    val live = base.resolve("t").toString
-    Seq(7L).toDF("tag").write.parquet(live)
-    // simulate a crash between the two renames: live moved aside, no tmp
-    assert(new java.io.File(live).renameTo(new java.io.File(live + ".old")))
-    assert(TableSwap.recover(live), "recover must restore the copy")
-    assert(spark.read.parquet(live).as[Long].head() === 7L)
-    assert(!new java.io.File(live + ".old").exists())
-    // and promote() self-heals the same state rather than deleting .old
-    assert(new java.io.File(live).renameTo(new java.io.File(live + ".old")))
-    Seq(8L).toDF("tag").write.parquet(live + ".tmp")
-    TableSwap.promote(live, live + ".tmp")
-    assert(spark.read.parquet(live).as[Long].head() === 8L)
-  }
 
   test("versioned promote: marker commit is the visibility point") {
     val base = java.nio.file.Files.createTempDirectory("graft_vswap")
@@ -68,9 +12,11 @@ class MaintenanceSpec extends SparkSuite {
     def writeTag(path: String, tag: Long): Unit =
       Seq(tag).toDF("tag").write.mode("overwrite").parquet(path)
     assert(TableSwap.liveVersionPath(root).isEmpty)
-    // promote from a tmp dir → v=1 live
-    writeTag(root + ".tmp", 1L)
-    assert(TableSwap.promoteVersioned(root, root + ".tmp") === 1)
+    // first promote → v=1 live
+    val (v1, dst1) = TableSwap.nextVersion(root)
+    assert(v1 === 1)
+    writeTag(dst1, 1L)
+    TableSwap.commitVersion(root, v1)
     assert(spark.read.parquet(TableSwap.liveVersionPath(root).get)
       .as[Long].head() === 1L)
     // direct write into the next slot: INVISIBLE until the marker lands
@@ -92,8 +38,9 @@ class MaintenanceSpec extends SparkSuite {
     val root = "file:" + base.resolve("t").toString
     def writeTag(path: String, tag: Long): Unit =
       Seq(tag).toDF("tag").write.mode("overwrite").parquet(path)
-    writeTag(root + ".tmp", 1L)
-    TableSwap.promoteVersioned(root, root + ".tmp")
+    val (v1, dst1) = TableSwap.nextVersion(root)
+    writeTag(dst1, 1L)
+    TableSwap.commitVersion(root, v1)
     // simulate a crashed writer: data landed in v=2, marker never written
     val (vOrphan, dstOrphan) = TableSwap.nextVersion(root)
     writeTag(dstOrphan, 99L)
@@ -112,41 +59,5 @@ class MaintenanceSpec extends SparkSuite {
       .exists(), "orphan vacuumed")
     assert(new java.io.File(base.resolve("t/v=1").toString).exists(),
       "previous committed version retained for keepLast=2")
-  }
-
-  test("compactVersioned merges files with the live version always intact") {
-    val base = java.nio.file.Files.createTempDirectory("graft_vcompact")
-    val root = "file:" + base.resolve("t").toString
-    spark.range(10000).select(col("id"), (col("id") % 7).as("k"))
-      .repartition(40).write.parquet(root + ".tmp")
-    TableSwap.promoteVersioned(root, root + ".tmp")
-    val before = spark.read.parquet(TableSwap.liveVersionPath(root).get)
-      .agg(sum("id"), count(lit(1))).as[(Long, Long)].head()
-    val (nb, na) = Maintenance.compactVersioned(spark, root,
-      targetBytes = 1L << 20)
-    assert(nb === 40)
-    assert(na < nb, s"expected fewer files, got $nb -> $na")
-    val after = spark.read.parquet(TableSwap.liveVersionPath(root).get)
-      .agg(sum("id"), count(lit(1))).as[(Long, Long)].head()
-    assert(after === before)
-    assert(TableSwap.committedVersions(root) === Seq(1, 2),
-      "keepLast=2 retains the pre-compaction version")
-  }
-
-  test("promote replaces the live table and rolls cleanly from no-table") {
-    val base = java.nio.file.Files.createTempDirectory("graft_swap")
-    // scheme-qualified: promote/recover run through the Hadoop FS
-    val live = "file:" + base.resolve("t").toString
-    def writeTag(path: String, tag: Long): Unit =
-      Seq(tag).toDF("tag").write.mode("overwrite").parquet(path)
-    // first promote: no live table yet
-    writeTag(live + ".tmp", 1L)
-    TableSwap.promote(live, live + ".tmp")
-    assert(spark.read.parquet(live).as[Long].head() === 1L)
-    // second promote replaces content
-    writeTag(live + ".tmp", 2L)
-    TableSwap.promote(live, live + ".tmp")
-    assert(spark.read.parquet(live).as[Long].head() === 2L)
-    assert(!new java.io.File(base.resolve("t.old").toString).exists())
   }
 }

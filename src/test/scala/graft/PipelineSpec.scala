@@ -67,6 +67,21 @@ class PipelineSpec extends SparkSuite {
       again.select("rate").as[Double].head() === 42.0)
   }
 
+  test("rateKey: one distinct key per (exchangedate, three-letter code)") {
+    val letters = ('A' to 'Z').map(_.toString)
+    val codes = for (a <- letters; b <- letters; c <- letters) yield a + b + c
+    val keys = codes.toDF("cc")
+      .crossJoin(Seq(day("1969-12-31"), day("1970-01-01"), day("2025-09-19"))
+        .toDF("exchangedate"))
+      .select(rateKey(col("exchangedate"), col("cc")).as("k"))
+    assert(keys.agg(countDistinct("k"), count(lit(1))).as[(Long, Long)]
+      .head() === ((3L * 17576, 3L * 17576)))
+    intercept[IllegalArgumentException] {
+      graft.pipeline.CurrencyPipeline.transform(
+        spark.read.schema(rawSchema).json(fixturePath), Seq("usd"))
+    }
+  }
+
   test("forecast: flat at last 7-row rolling mean, 5 future days") {
     // 10 days of USD rates 1..10 — last 7-row mean = mean(4..10) = 7
     val rates = (1 to 10).map(i =>

@@ -1,50 +1,62 @@
 package graft
 
-import graft.pipeline.Skipping
+import graft.sources.GdxSource
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 
-/** Manifest-driven file skipping: the candidate list must actually
-  * shrink on a range-clustered layout, stay a sound superset (pruned
-  * read ≡ full-scan filter), and handle the empty-band edge. */
+/** Zone-map file skipping on o5_minmax_skipping's GDX layout (orders
+  * range-clustered on o_totalprice into 16 files): the planned file
+  * list must actually shrink, stay a sound superset (pruned read ≡
+  * full-scan filter), and handle the empty-band edge. */
 class SkippingSpec extends SparkSuite {
 
-  private def layOut(): (String, String, Long) = {
-    val base = java.nio.file.Files.createTempDirectory("graft_skip")
-    val (tbl, man) = (base.resolve("t").toString, base.resolve("m").toString)
+  private val fmt = "graft.sources.GdxSource"
+
+  private def layOut(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_skip")
+      .resolve("t").toString
     Tables.orders(spark, sf())
+      .select(col("o_orderkey").as("k"), col("o_orderstatus").as("v"),
+        col("o_custkey"), col("o_totalprice"))
       .repartitionByRange(16, col("o_totalprice"))
-      .sortWithinPartitions("o_totalprice")
-      .write.parquet(tbl)
-    Skipping.writeManifest(spark, tbl, "o_totalprice", man)
-    val nFiles = spark.read.parquet(man).count()
-    (tbl, man, nFiles)
+      .write.format(fmt).option("path", dir).mode("overwrite").save()
+    dir
   }
 
+  private def band(lo: Double, hi: Double) =
+    Seq(GreaterThanOrEqual("o_totalprice", lo),
+      LessThanOrEqual("o_totalprice", hi))
+
+  private def read(dir: String) =
+    spark.read.format(fmt).option("path", dir).load()
+
   test("manifest covers every file and every row") {
-    val (tbl, man, nFiles) = layOut()
-    assert(nFiles === 16)
-    val rows = spark.read.parquet(man).agg(sum("n_rows")).head().getLong(0)
-    assert(rows === Tables.orders(spark, sf()).count())
+    val dir = layOut()
+    val entries = GdxSource.committedEntries(dir, GdxSource.driverConf())
+    assert(entries.size === 16)
+    assert(entries.map(_.stats.get.rows).sum ===
+      Tables.orders(spark, sf()).count())
   }
 
   test("range probe opens only intersecting files; result is exact") {
-    val (tbl, man, nFiles) = layOut()
-    val cand = Skipping.candidateFiles(spark, man, 30000.0, 60000.0)
-    assert(cand.nonEmpty && cand.size < nFiles / 2,
-      s"range-clustered layout must prune: ${cand.size} of $nFiles files")
-    val pruned = Skipping
-      .prunedRead(spark, tbl, man, "o_totalprice", 30000.0, 60000.0)
-      .select("o_orderkey").orderBy("o_orderkey").collect().toSeq
-    val full = spark.read.parquet(tbl)
+    val dir = layOut()
+    val (planned, nFiles) = GdxSource.plannedFiles(dir, band(30000.0, 60000.0))
+    assert(nFiles === 16)
+    assert(planned >= 1 && planned < nFiles / 2,
+      s"range-clustered layout must prune: $planned of $nFiles files")
+    val pruned = read(dir)
+      .filter(col("o_totalprice").between(30000.0, 60000.0))
+      .select("k").orderBy("k").collect().toSeq
+    val full = Tables.orders(spark, sf())
       .filter(col("o_totalprice").between(30000.0, 60000.0))
       .select("o_orderkey").orderBy("o_orderkey").collect().toSeq
-    assert(pruned === full)
+    assert(pruned.nonEmpty && pruned === full)
   }
 
   test("band outside the domain prunes everything and returns empty") {
-    val (tbl, man, _) = layOut()
-    assert(Skipping.candidateFiles(spark, man, -2e9, -1e9).isEmpty)
-    assert(Skipping.prunedRead(spark, tbl, man, "o_totalprice", -2e9, -1e9)
+    val dir = layOut()
+    assert(GdxSource.plannedFiles(dir, band(-2e9, -1e9))._1 === 0)
+    assert(read(dir).filter(col("o_totalprice").between(-2e9, -1e9))
       .count() === 0L)
   }
 }

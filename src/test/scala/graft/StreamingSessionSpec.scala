@@ -179,16 +179,23 @@ class StreamingSessionSpec extends SparkSuite {
       java.nio.file.Files.copy(fixture, d.resolve("response.json"))
       ()
     }
+    def read() = spark.read.format("graft.sources.GdxSource")
+      .option("path", table).load()
+    def versions() = graft.sources.GdxSource.listVersions(table,
+      spark.sparkContext.hadoopConfiguration)
     land("2025-09-19")
     val q1 = graft.streaming.StreamMerge.run(spark, raw, table)
     q1.awaitTermination()
-    assert(spark.read.parquet(table).count() === 2) // USD+EUR, one day
+    assert(read().count() === 2) // USD+EUR, one day
+    val v1 = versions()
     // re-deliver the same payload under a new landing date → converges,
     // no duplicates (same cc+exchangedate keys win by recency)
     land("2025-09-20")
     val q2 = graft.streaming.StreamMerge.run(spark, raw, table)
     q2.awaitTermination()
-    val t = spark.read.parquet(table)
+    assert(versions().size === v1.size + 1,
+      s"the second run must publish one MERGE version: $v1 -> ${versions()}")
+    val t = read()
     assert(t.count() === 2)
     assert(t.select("cc").as[String].collect().sorted.toSeq ===
       Seq("EUR", "USD"))

@@ -1,7 +1,9 @@
 #!/bin/bash
 # One-shot round gate: compile, tests, verify+selfcheck, bench.
 # Usage: tools/gate.sh  (from anywhere; ~5 min)
-set -e
+# pipefail: a failing sbt run or selfcheck fails its `| tail` pipeline,
+# and set -e then stops the gate there.
+set -eo pipefail
 cd "$(dirname "$0")/.."
 echo "=== compile + test ==="
 sbt -batch test 2>&1 | grep -E 'Tests:|error' | tail -2
