@@ -1426,13 +1426,15 @@ object RelationalOps extends QueryModule {
     }),
 
     // C13 — MERGE (LWW upsert) into the GDX table format: base snapshot
-    // of the even keys, then GdxSource.merge upserts the %3 keys
-    // (matched rows replaced, unmatched inserted, the rest carried
-    // forward) as ONE truncate commit. The oracle recomputes the merge
-    // as a FULL OUTER JOIN over the same source rows, and the
-    // `history_intact` claim pins the transactional half: the pre-merge
-    // snapshot must still read back exactly as written (commits never
-    // rewrite history — the MERGE is a new version, not an edit).
+    // of the even keys, then GdxSource.mergeGeneral upserts the %3 keys
+    // (`ON t.k = s.k WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED
+    // THEN INSERT *`: matched rows DV'd and rewritten, unmatched
+    // inserted, the rest carried by reference) as ONE commit. The
+    // oracle recomputes the merge as a FULL OUTER JOIN over the same
+    // source rows, and the `history_intact` claim pins the
+    // transactional half: the pre-merge snapshot must still read back
+    // exactly as written (commits never rewrite history — the MERGE is
+    // a new version, not an edit).
     "c13_gdx_upsert" -> ((s, d) => {
       val dir = graft.Scratch.tablePath("graft_gdxmrg_")
       val gdx = graft.sources.GdxSource
@@ -1443,7 +1445,12 @@ object RelationalOps extends QueryModule {
       val updates = Tables.events(s, d).filter(col("event_id") % 3 === 0)
         .select(col("event_id").as("k"),
           concat(lit("u_"), col("event_type")).as("v"))
-      val v = gdx.merge(s, dir, updates)
+      val all = Some(Seq("k" -> "__s_k", "v" -> "__s_v"))
+      val (v, _, _, _) = gdx.mergeGeneral(s, dir,
+        updates.toDF("__s_k", "__s_v"), "__t_k = __s_k",
+        matched = Seq(graft.sources.GdxMergeClause(None, all)),
+        notMatched = Seq(graft.sources.GdxMergeClause(None, all)),
+        notMatchedBySource = Nil, pruneKeySql = Some("__s_k"))
       val pre = s.read.format(fmt).option("path", dir)
         .option("version", (v - 1).toString).load()
       val historyIntact = pre.except(base).isEmpty && base.except(pre).isEmpty
@@ -3196,9 +3203,9 @@ object RelationalOps extends QueryModule {
     // transactional row-level operations c13/c14/c17 drive through the
     // Scala API, here driven end to end through spark.sql — CREATE
     // TABLE USING, then UPDATE (DV + rewrite), DELETE FROM (deletion
-    // vectors), MERGE INTO (CAS'd LWW upsert) — via the GdxDmlRule
-    // post-hoc resolution rule GraftExtensions injects. The oracle
-    // recomputes the whole DML chain relationally (CASE update,
+    // vectors), MERGE INTO (LWW upsert: DV + new files) — via the
+    // GdxDmlRule post-hoc resolution rule GraftExtensions injects. The
+    // oracle recomputes the whole DML chain relationally (CASE update,
     // WHERE-NOT delete, full-outer LWW merge), and `versions_ok` pins
     // the transactional ledger: exactly ONE commit per statement, in
     // statement order.
@@ -3723,9 +3730,7 @@ object RelationalOps extends QueryModule {
           .option("path", s"$wh/lab/dim").mode("append").save()
         val conflictAborts =
           (try { c.sql("COMMIT"); false } catch {
-            case t: Throwable => Iterator.iterate(t)(_.getCause)
-              .takeWhile(_ != null).take(8).exists(_.isInstanceOf[
-                graft.sources.GdxConcurrentModificationException])
+            case t: Throwable => graft.sources.GdxSource.isConflict(t)
           }) &&
           c.table(s"$cat.lab.facts").filter(col("k") === -1L)
             .count() == 0 &&

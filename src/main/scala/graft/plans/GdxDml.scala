@@ -17,7 +17,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * provider is GdxSource, routed to the engine's transactional row-level
   * operations ([[graft.sources.GdxSource.delete]] — deletion vectors,
   * [[graft.sources.GdxSource.update]] — DV + rewrite in one commit,
-  * [[graft.sources.GdxSource.merge]] — CAS'd LWW upsert).
+  * [[graft.sources.GdxSource.mergeGeneral]] — DV + new files in one
+  * commit).
   *
   * Spark's parser already produces the standard resolved plans
   * (`DeleteFromTable`/`UpdateTable`/`MergeIntoTable`); this post-hoc
@@ -27,19 +28,15 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * DSv2 `SupportsRowLevelOperations` machinery — the same extension
   * seam Delta used for years. Non-GDX targets pass through untouched.
   *
-  * MERGE lowers along one of two paths. The classic key-equality LWW
-  * upsert over a (k, v) table — `ON t.k = s.k WHEN MATCHED THEN UPDATE
-  * SET * WHEN NOT MATCHED THEN INSERT *`, both clauses unconditional —
-  * becomes [[GdxMergeCommand]] ([[graft.sources.GdxSource.merge]]: one
-  * union + max-struct aggregate, no join). Every other shape —
-  * conditional clauses (e.g. `WHEN MATCHED AND s.ingest_ts >=
-  * t.ingest_ts`), partial assignments, MATCHED DELETE, NOT MATCHED BY
-  * SOURCE, wider tables — becomes [[GdxMergeGeneralCommand]]
+  * Every MERGE lowers along one path, [[GdxMergeGeneralCommand]]
   * ([[graft.sources.GdxSource.mergeGeneral]]: the full ANSI clause
-  * matrix over a key join, DV + new files in one commit). Only
-  * statements the engine cannot express (duplicate source column
-  * names, a clause referencing the wrong side, an assignment to a
-  * non-target column) raise an error. */
+  * matrix over a key join, DV + new files in one commit, candidate
+  * files scoped by zone maps) — the plain upsert `ON t.k = s.k WHEN
+  * MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *` as much
+  * as conditional clauses, partial assignments, MATCHED DELETE and NOT
+  * MATCHED BY SOURCE. Only statements the engine cannot express
+  * (duplicate source column names, a clause referencing the wrong
+  * side, an assignment to a non-target column) raise an error. */
 object GdxDmlRule extends Rule[LogicalPlan] {
 
   private def gdxPath(plan: LogicalPlan): Option[String] = plan match {
@@ -104,29 +101,10 @@ object GdxDmlRule extends Rule[LogicalPlan] {
       }
     case m: MergeIntoTable if m.childrenResolved =>
       gdxPath(m.targetTable) match {
-        case Some(p) => rewriteMerge(p, m)
+        case Some(p) => generalMerge(p, m)
         case None    => plan
       }
     case _ => plan
-  }
-
-  /** MERGE dispatch: the classic LWW-upsert shape keeps its dedicated
-    * fast path (one unionByName + one max-struct aggregate, no join
-    * materialization); every other clause combination routes to the
-    * GENERAL merge ([[graft.sources.GdxSource.mergeGeneral]] — the
-    * full ANSI matrix: conditional clauses, partial assignments,
-    * MATCHED DELETE, NOT MATCHED BY SOURCE). */
-  private def rewriteMerge(path: String, m: MergeIntoTable): LogicalPlan = {
-    // WITH SCHEMA EVOLUTION needs no engine work by the time this rule
-    // sees the plan: the analyzer already applied the source's extra
-    // columns through GdxCatalog.alterTable (one addColumn metadata
-    // commit — the AUTOMATIC_SCHEMA_EVOLUTION capability, catalog
-    // tables only) and re-resolved every clause against the evolved
-    // schema, so the matrix below references only known columns and
-    // old files read the new columns as NULL
-    if (legacyShape(m))
-      GdxMergeCommand(path, m.sourceTable, gdxName(m.targetTable))
-    else generalMerge(path, m)
   }
 
   /** Strip analyzer-inserted widening casts down to the attribute. */
@@ -137,44 +115,6 @@ object GdxDmlRule extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** The classic LWW shape: a (k, v) table, `ON t.k = s.k`, exactly
-    * one unconditional `UPDATE SET *` + one unconditional `INSERT *`,
-    * no NOT-MATCHED-BY-SOURCE branch. Key and assignment values are
-    * checked by attribute IDENTITY, not name — `ON t.k = t.k` is a
-    * degenerate always-true condition, and `SET v = t.v` (keep the
-    * target's value) diverges from source-wins LWW; both route to the
-    * general path instead. */
-  private def legacyShape(m: MergeIntoTable): Boolean = {
-    val tids = m.targetTable.outputSet
-    val sids = m.sourceTable.outputSet
-    val keyOk = m.mergeCondition match {
-      case EqualTo(l, r) =>
-        (keyAttr(l), keyAttr(r)) match {
-          case (Some(a), Some(b)) if a.name == "k" && b.name == "k" =>
-            (tids.contains(a) && sids.contains(b)) ||
-              (tids.contains(b) && sids.contains(a))
-          case _ => false
-        }
-      case _ => false
-    }
-    def starAssignments(as: Seq[Assignment]): Boolean = as.forall {
-      case Assignment(k: AttributeReference, v) =>
-        keyAttr(v).exists(a => a.name == k.name && sids.contains(a))
-      case _ => false
-    }
-    keyOk &&
-      m.targetTable.output.map(_.name) == Seq("k", "v") &&
-      m.notMatchedBySourceActions.isEmpty &&
-      (m.matchedActions match {
-        case Seq(UpdateAction(None, as, _)) => starAssignments(as)
-        case _ => false
-      }) &&
-      (m.notMatchedActions match {
-        case Seq(InsertAction(None, as)) => starAssignments(as)
-        case _ => false
-      })
-  }
-
   /** Lower the resolved MERGE to the engine's general form: every
     * expression is re-rooted onto the engine's joined frame by RENAMING
     * each attribute to `__t_<name>` / `__s_<name>` by which side its
@@ -183,7 +123,15 @@ object GdxDmlRule extends Rule[LogicalPlan] {
     * DELETE/UPDATE path) would destroy, so `t.v` and `s.v` stay
     * distinct. ANSI sidedness is enforced here: NOT MATCHED (INSERT)
     * expressions may reference only the source, NOT MATCHED BY SOURCE
-    * only the target. */
+    * only the target.
+    *
+    * WITH SCHEMA EVOLUTION needs no engine work by the time this rule
+    * sees the plan: the analyzer already applied the source's extra
+    * columns through GdxCatalog.alterTable (one addColumn metadata
+    * commit — the AUTOMATIC_SCHEMA_EVOLUTION capability, catalog
+    * tables only) and re-resolved every clause against the evolved
+    * schema, so the matrix references only known columns and old files
+    * read the new columns as NULL. */
   private def generalMerge(path: String, m: MergeIntoTable): LogicalPlan = {
     val tids = m.targetTable.outputSet
     val sids = m.sourceTable.outputSet
@@ -370,31 +318,8 @@ case class GdxUpdateCommand(path: String, set: Seq[(String, String)],
   }
 }
 
-/** `MERGE INTO <gdx table> USING <source> ON t.k = s.k ...` → CAS'd
-  * LWW upsert of the source frame. Returns (version). Inside an open
-  * SQL transaction the merge STAGES instead (the source pinned to its
-  * stage-time snapshot, folded onto the transaction's basis at COMMIT
-  * under the same conflict check — see GdxSqlTxn) and returns the -1
-  * staged sentinel. */
-case class GdxMergeCommand(path: String, source: LogicalPlan,
-                            table: String = "")
-    extends LeafRunnableCommand {
-  override def innerChildren: Seq[LogicalPlan] = Seq(source)
-  override val output: Seq[Attribute] = GdxDml.versionOutput
-  override def run(spark: SparkSession): Seq[Row] = {
-    val src = ColumnBridge.ofRows(spark, source)
-    if (GdxSqlTxn.isOpen(spark)) {
-      GdxSqlTxn.stageLww(spark, path,
-        if (table.nonEmpty) table else path, src)
-      return Seq(Row(-1L))
-    }
-    val v = graft.sources.GdxSource.merge(spark, path, src)
-    Seq(Row(v.toLong))
-  }
-}
-
-/** General `MERGE INTO <gdx table> ...` — the full clause matrix,
-  * lowered to [[graft.sources.GdxSource.mergeGeneral]]. The source
+/** `MERGE INTO <gdx table> ...` — every MERGE, the full clause
+  * matrix, lowered to [[graft.sources.GdxSource.mergeGeneral]]. The source
   * plan rides as an inner child (resolved against the statement's own
   * catalog state); clause expressions ride as `__t_`/`__s_`-rooted
   * SQL. Returns Delta-style metrics: (version, rows_inserted,
@@ -433,9 +358,6 @@ private[plans] object GdxDml {
     org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(
       StructType(Seq(StructField("version", LongType, nullable = false),
         StructField("n_rows", LongType, nullable = false))))
-  def versionOutput: Seq[Attribute] =
-    org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(
-      StructType(Seq(StructField("version", LongType, nullable = false))))
   def mergeMetricsOutput: Seq[Attribute] =
     org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(
       StructType(Seq(

@@ -17,9 +17,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *   `INSERT INTO <gdx table> [(cols)] SELECT ... | VALUES ...`
   *   `DELETE FROM <gdx table> WHERE ...`          (staged)
   *   `UPDATE <gdx table> SET ... WHERE ...`       (staged)
-  *   `MERGE INTO <gdx table> ... ` (LWW shape AND the full
-  *        WHEN-matrix: conditional clauses, partial assignments,
-  *        MATCHED DELETE, NOT MATCHED BY SOURCE)  (staged)
+  *   `MERGE INTO <gdx table> ... ` (the full WHEN-matrix:
+  *        unconditional upserts, conditional clauses, partial
+  *        assignments, MATCHED DELETE, NOT MATCHED BY SOURCE)  (staged)
   *   `SAVEPOINT <name>` / `ROLLBACK TO SAVEPOINT <name>`
   *   `COMMIT`              (one decision: all tables or none)
   *   `ROLLBACK`            (nothing surfaces anywhere)
@@ -30,9 +30,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * [(cols)] <query>` shape and the interception is RUNTIME-inert:
   * with no open transaction on the session the original statement
   * re-dispatches through the delegate byte-for-byte, and parse-only
-  * consumers see an inert command either way. DELETE and LWW MERGE
-  * route through their normal DML commands, which stage instead of
-  * committing while a transaction is open.
+  * consumers see an inert command either way. DELETE, UPDATE and
+  * MERGE route through their normal DML commands, which stage instead
+  * of committing while a transaction is open.
   *
   * SNAPSHOT SEMANTICS, stated as the contract:
   *  - Every GDX table read by a staged statement's source query is
@@ -89,12 +89,7 @@ object GdxSqlTxn {
     * contract the non-staged UPDATE's one-select rewrite keeps). */
   private[plans] final case class StagedUpdate(dir: String, table: String,
       condSql: String, set: Seq[(String, String)]) extends Staged
-  /** The legacy (k,v) LWW-upsert MERGE shape, staged: `plan` is the
-    * (snapshot-pinned) source frame; semantics mirror
-    * [[graft.sources.GdxSource.merge]] exactly. */
-  private[plans] final case class StagedLww(dir: String, table: String,
-      plan: LogicalPlan) extends Staged
-  /** The GENERAL WHEN-matrix MERGE, staged: `plan` is the
+  /** A MERGE (the WHEN-matrix), staged: `plan` is the
     * (snapshot-pinned, un-prefixed) source frame; the clause SQL
     * references `__t_<col>`/`__s_<col>` names exactly as
     * [[graft.sources.GdxSource.mergeGeneral]]'s matrix does. At COMMIT
@@ -201,16 +196,6 @@ object GdxSqlTxn {
     ()
   }
 
-  private[plans] def stageLww(s: SparkSession, dir: String,
-                              table: String, source: DataFrame): Unit = {
-    val sc = scopeOf(s)
-    sc.basis.getOrElseUpdate(dir, graft.sources.GdxSource
-      .latestDecidedVersion(dir, graft.sources.GdxSource.driverConf()))
-    sc.ops += StagedLww(dir, table,
-      pinSnapshots(source.queryExecution.analyzed))
-    ()
-  }
-
   private[plans] def stageMergeGeneral(s: SparkSession, dir: String,
       table: String, source: DataFrame, onSql: String,
       matched: Seq[graft.sources.GdxMergeClause],
@@ -247,8 +232,7 @@ object GdxSqlTxn {
     * conflict-checked against the basis at commit time. */
   private[plans] def prepareWrites(spark: SparkSession)
       : Seq[(String, graft.sources.GdxSource.GdxTxnWrite)] = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, max,
-      not, struct}
+    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
     val sc = scopeOf(spark)
     val gdx = graft.sources.GdxSource
     val bridge = org.apache.spark.sql.graft.ColumnBridge
@@ -286,15 +270,6 @@ object GdxSqlTxn {
               case None => col(s"`$c`")
             }
           }.toSeq: _*)
-        case StagedLww(_, _, p) =>
-          val up = bridge.ofRows(spark, p)
-            .select(col("k").cast("long").as("k"),
-              col("v").cast("string").as("v"))
-          df = df.withColumn("__pri", lit(0))
-            .unionByName(up.withColumn("__pri", lit(1)))
-            .groupBy("k")
-            .agg(max(struct(col("__pri"), col("v"))).as("__w"))
-            .select(col("k"), col("__w.v").as("v"))
         case StagedMergeGeneral(_, _, p, onSql, matched, notMatched,
             nmbs) =>
           import org.apache.spark.sql.functions.{monotonically_increasing_id,

@@ -94,11 +94,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *    listing diffs or notification service. `maxVersionsPerTrigger`
   *    bounds each micro-batch (admission control), and AvailableNow
   *    pins its drain target at query start.
-  *  - **MERGE + row-level DELETE**: [[GdxSource.merge]] applies
-  *    last-writer-wins upserts as one truncate commit under a CAS
-  *    (`expectedBaseVersion`) so concurrent commits surface as
-  *    [[GdxConcurrentModificationException]] and retry instead of
-  *    silently erasing each other; [[GdxSource.delete]] subtracts rows
+  *  - **MERGE + row-level DELETE**: [[GdxSource.mergeGeneral]] runs
+  *    every MERGE as deletion vectors on the matched rows plus new
+  *    files for their images, scoped by zone maps and published as
+  *    one exclusive manifest claim — a lost race re-reads and retries
+  *    instead of silently erasing a concurrent commit;
+  *    [[GdxSource.delete]] subtracts rows
   *    via `.dvx` deletion-vector sidecars — no data file rewritten,
   *    [[GdxSource.compact]] purges DVs, [[GdxSource.vacuum]] reaps
   *    superseded sidecars, metadata-only aggregates stand down while a
@@ -3134,10 +3135,11 @@ object GdxSource {
     * `expectedBase >= 0` turns the claim into a CAS: the commit must
     * land as exactly `expectedBase + 1` or throw
     * [[GdxConcurrentModificationException]] — the conflict-DETECTING
-    * path non-commutative commits (MERGE's read-compute-truncate)
-    * need, where silently landing on a later version would erase a
-    * concurrent writer's rows. The caller re-reads and retries the
-    * whole computation (see [[merge]]); commutative appends keep the
+    * path non-commutative commits (a maintenance rewrite's
+    * read-compute-truncate) need, where silently landing on a later
+    * version would erase a concurrent writer's rows. The caller
+    * re-reads and retries the whole computation (see
+    * [[rewriteWithCas]]); commutative appends keep the
     * retry-forward default. */
   /** A replaceWhere slice: the raw partition-spec text, the allowed
     * directory keys, and the slice's entries (name, dv) OBSERVED when
@@ -3668,6 +3670,13 @@ object GdxSource {
     }
   }
 
+  /** Did a commit lose a CAS race? Spark wraps a commit-time
+    * [[GdxConcurrentModificationException]] in its own job/write
+    * exceptions, so the cause chain is walked (a bounded depth). */
+  private[graft] def isConflict(t: Throwable): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
+      .exists(_.isInstanceOf[GdxConcurrentModificationException])
+
   /** `OPTIMIZE ... WHERE`: partial compaction — rewrite ONLY the
     * predicate's partitions (DVs folded in, small files merged),
     * carry every other partition's files by reference through a
@@ -3682,9 +3691,6 @@ object GdxSource {
                    target: Int = 1, maxRetries: Int = 10): (Int, Int) = {
     import org.apache.spark.sql.functions.col
     val (c, values) = parsePartPredicate(whereTxt)
-    def isConflict(t: Throwable): Boolean =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
-        .exists(_.isInstanceOf[GdxConcurrentModificationException])
     var attempt = 0
     while (true) {
       val conf = driverConf()
@@ -3742,16 +3748,13 @@ object GdxSource {
     * (it would survive only in history). So the rewrite pins its READ to
     * the version it observed, publishes with a CAS
     * (`expectedBaseVersion`), and on a lost race recomputes against the
-    * advanced snapshot — the same loop [[merge]]/[[delete]] run, and the
-    * conflict check Delta's OPTIMIZE performs. `body` returns None for a
-    * no-op (already at/under target), or (files_before, rewritten frame)
-    * to publish. */
+    * advanced snapshot — the same loop [[mergeGeneral]]/[[delete]]
+    * run, and the conflict check Delta's OPTIMIZE performs. `body`
+    * returns None for a no-op (already at/under target), or
+    * (files_before, rewritten frame) to publish. */
   private def rewriteWithCas(dir: String, maxRetries: Int = 10)
       (body: Int => Option[(Int, org.apache.spark.sql.DataFrame)])
       : (Int, Int) = {
-    def isConflict(t: Throwable): Boolean =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
-        .exists(_.isInstanceOf[GdxConcurrentModificationException])
     var attempt = 0
     while (true) {
       val readV = decidedHead(dir, driverConf())
@@ -4307,70 +4310,6 @@ object GdxSource {
       entries.size)
   }
 
-  /** MERGE (last-writer-wins upsert) into a GDX table: per key, an
-    * `updates` row replaces the current snapshot's row; unmatched
-    * update keys insert; unmatched existing keys carry forward — the
-    * Delta `MERGE WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT`
-    * essentials. Emitted as ONE truncate commit of the merged rows, so
-    * snapshot isolation does the transactional work: concurrent readers
-    * of version N are untouched (commits never delete data files),
-    * time travel to the pre-merge snapshot keeps working, and
-    * [[vacuum]] reclaims superseded files later. The read-then-
-    * overwrite is safe for the same reason — the scan plans version
-    * N's files and nothing deletes them mid-job.
-    *
-    * Shape: one unionByName + one max-struct aggregate per key (update
-    * priority, then v as the deterministic tie-break among duplicate
-    * update keys) — no window, no self-join. At 100 TB the same merge
-    * runs k-range-wise: zone maps scope the rewrite to files whose
-    * range intersects the batch's keys (the Delta/Iceberg MERGE
-    * file-pruning path); the commit protocol is unchanged. Returns the
-    * committed version.
-    *
-    * CONFLICT DETECTION: read-compute-truncate is NOT commutative — if
-    * another commit lands between this merge's read and its publish, a
-    * blind truncate would silently erase that writer's rows. The merge
-    * therefore pins its read to the version it observed and publishes
-    * with a CAS (`expectedBaseVersion`); a lost race surfaces as
-    * [[GdxConcurrentModificationException]] and the whole
-    * read-compute-publish retries against the advanced snapshot — the
-    * Delta/Iceberg serializable-MERGE loop. */
-  def merge(spark: SparkSession, dir: String,
-            updates: org.apache.spark.sql.DataFrame,
-            maxRetries: Int = 10): Int = {
-    import org.apache.spark.sql.functions._
-    def isConflict(t: Throwable): Boolean =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
-        .exists(_.isInstanceOf[GdxConcurrentModificationException])
-    var attempt = 0
-    while (true) {
-      val readV = decidedHead(dir, driverConf())
-      val curReader = spark.read.format("graft.sources.GdxSource")
-        .option("path", dir)
-      val cur = (if (readV > 0) curReader.option("version", readV.toString)
-                 else curReader).load()
-        .withColumn("pri", lit(0))
-      val up = updates
-        .select(col("k").cast("long").as("k"),
-          col("v").cast("string").as("v"))
-        .withColumn("pri", lit(1))
-      try {
-        cur.unionByName(up)
-          .groupBy("k")
-          .agg(max(struct(col("pri"), col("v"))).as("w"))
-          .select(col("k"), col("w.v").as("v"))
-          .write.format("graft.sources.GdxSource").option("path", dir)
-          .option("expectedBaseVersion", readV.toString)
-          .mode("overwrite").save()
-        return readV + 1
-      } catch {
-        case t: Throwable if isConflict(t) && attempt < maxRetries =>
-          attempt += 1 // lost the race - recompute against the new snapshot
-      }
-    }
-    -1 // unreachable
-  }
-
   /** Row-level DELETE via deletion vectors: rows matching `condition`
     * (over any snapshot column, evolved ones included) are subtracted
     * from the table WITHOUT
@@ -4391,11 +4330,11 @@ object GdxSource {
     * k-range cannot intersect a k-only condition never even get a task.
     * The commit is a FULL manifest publish at `readVersion + 1` under
     * CAS — a concurrent commit surfaces as conflict and the delete
-    * recomputes, same serializable loop as [[merge]]. Time travel to
-    * the pre-delete snapshot still sees every row (DVs are new files;
-    * nothing is rewritten). Returns (committed version, rows deleted);
-    * a no-match delete publishes nothing and returns the current
-    * version with 0. */
+    * recomputes, same serializable loop as [[mergeGeneral]]. Time
+    * travel to the pre-delete snapshot still sees every row (DVs are
+    * new files; nothing is rewritten). Returns (committed version,
+    * rows deleted); a no-match delete publishes nothing and returns
+    * the current version with 0. */
   def delete(spark: SparkSession, dir: String,
              condition: org.apache.spark.sql.Column,
              maxRetries: Int = 10): (Int, Long) =
@@ -5804,7 +5743,7 @@ object GdxSource {
   /** Guards shared by RENAME/DROP COLUMN: the column must exist, must
     * not be one of the CLASSIC CORE slots (physical 0 = the key k,
     * physical 1 = v — zone maps, blooms, k/v pushdown, DPP, metadata
-    * aggregates, and the LWW-merge key all bind to them by name and
+    * aggregates, and MERGE's file-pruning key all bind to them by name and
     * position; they are part of the format's contract, exactly like a
     * partition column in Delta), and no CHECK constraint may reference
     * it. Returns (field index, its physical slot). */

@@ -604,14 +604,16 @@ object StreamingOps extends QueryModule {
     // STREAMING CDC APPLY — changefeed in, MERGE out: the GDX
     // changefeed of a source table is applied per micro-batch as a
     // last-writer-wins MERGE into a second GDX table (foreachBatch +
-    // GdxSource.merge, the Delta "apply CDC with MERGE" topology).
-    // Same-key rows across commits are UPDATES; the target converges
-    // to one row per user. Values embed the zero-padded event_id, so
-    // LWW-by-max-v is batching-invariant — whether the feed arrives as
-    // one micro-batch or one per commit, the final state equals the
-    // oracle's plain max(v) per key. Merge's CAS conflict loop
-    // (GdxSourceSpec) is what makes the per-batch truncate commit safe
-    // against any concurrent writer on the target.
+    // GdxSource.mergeGeneral, the Delta "apply CDC with MERGE"
+    // topology). Each batch is first reduced to max(v) per key (user_id
+    // collides within a batch), then merged with `WHEN MATCHED AND
+    // s.v > t.v THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`; the
+    // first batch creates the table. Values embed the zero-padded
+    // event_id, so LWW-by-max-v is batching-invariant — whether the
+    // feed arrives as one micro-batch or one per commit, the final
+    // state equals the oracle's plain max(v) per key. The merge's
+    // publish-race retry loop (GdxSourceSpec) keeps each per-batch
+    // commit safe against any concurrent writer on the target.
     "stream_gdx_upsert" -> ((s, d) => {
       // per-run unique root: feed, target table, and checkpoint are
       // all mutable — concurrent self-invocations stay disjoint
@@ -640,7 +642,21 @@ object StreamingOps extends QueryModule {
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[
             org.apache.spark.sql.Row], _: Long) =>
           if (!batch.isEmpty) {
-            graft.sources.GdxSource.merge(s, tgt, batch)
+            val gdx = graft.sources.GdxSource
+            val top = batch.groupBy(col("k").cast("long").as("k"))
+              .agg(max(col("v").cast("string")).as("v"))
+            if (gdx.listVersions(tgt, gdx.driverConf()).isEmpty)
+              top.write.format(fmt).option("path", tgt)
+                .mode("overwrite").save()
+            else {
+              val all = Some(Seq("k" -> "__s_k", "v" -> "__s_v"))
+              gdx.mergeGeneral(s, tgt, top.toDF("__s_k", "__s_v"),
+                "__t_k = __s_k",
+                matched = Seq(graft.sources.GdxMergeClause(
+                  Some("__s_v > __t_v"), all)),
+                notMatched = Seq(graft.sources.GdxMergeClause(None, all)),
+                notMatchedBySource = Nil, pruneKeySql = Some("__s_k"))
+            }
           }
           ()
         }

@@ -57,16 +57,15 @@ class GdxDmlSpec extends SparkSuite {
       s.sql("INSERT INTO gdxdml_gen VALUES (1,'a'),(2,'b')")
       s.sql("""CREATE OR REPLACE TEMP VIEW gdxdml_gsrc AS
         SELECT * FROM VALUES (1, 'A'), (9, 'i') AS t(k, v)""")
-      // conditional matched action — not LWW, handled by the general
-      // engine: only k=1 matches AND satisfies the condition
+      // conditional matched action: only k=1 matches AND satisfies
+      // the condition
       s.sql("""MERGE INTO gdxdml_gen t USING gdxdml_gsrc s ON t.k = s.k
         WHEN MATCHED AND s.v = 'A' THEN UPDATE SET v = s.v""")
       assert(s.sql("SELECT k, v FROM gdxdml_gen ORDER BY k").collect()
         .map(r => (r.getLong(0), r.getString(1))).toSeq ===
         Seq((1L, "A"), (2L, "b")))
       // TARGET self-assignment `SET v = t.v` means "keep the target's
-      // value" — ANSI semantics the general path honors exactly (the
-      // LWW fast path must NOT claim it: source-wins would overwrite)
+      // value" — ANSI semantics, never source-wins
       s.sql("""MERGE INTO gdxdml_gen t USING gdxdml_gsrc s ON t.k = s.k
         WHEN MATCHED THEN UPDATE SET k = s.k, v = t.v
         WHEN NOT MATCHED THEN INSERT *""")
@@ -82,6 +81,42 @@ class GdxDmlSpec extends SparkSuite {
       assert(s.sql("SELECT v FROM gdxdml_gen WHERE k = 1")
         .head.getString(0) === "hit")
     } finally s.sql("DROP TABLE IF EXISTS gdxdml_gen")
+  }
+
+  test("an unconditional upsert MERGE leaves files outside the source's " +
+      "key range untouched") {
+    import spark.implicits._
+    val gdx = graft.sources.GdxSource
+    val dir = freshDir("dmlscope")
+    s.sql(s"""CREATE TABLE gdxdml_scope (k BIGINT, v STRING)
+      USING graft.sources.GdxSource OPTIONS (path '$dir')""")
+    try {
+      // two range-disjoint files: k 2..20 and k 22..40
+      (1L to 20L).map(i => (2 * i, s"v${2 * i}")).toDF("k", "v")
+        .repartitionByRange(2, $"k")
+        .write.format("graft.sources.GdxSource").option("path", dir)
+        .mode("append").save()
+      val conf = gdx.driverConf()
+      val files = gdx.committedEntries(dir, conf)
+      assert(files.size === 2, files)
+      val hi = files.maxBy(_.stats.map(_.minK).getOrElse(0L))
+      assert(hi.stats.exists(_.minK > 20L), hi)
+      val before = gdx.listVersions(dir, conf)
+      // every source key (one match, one insert) lies in the low file
+      s.sql("""CREATE OR REPLACE TEMP VIEW gdxdml_ssrc AS
+        SELECT * FROM VALUES (4, 'X'), (5, 'ins') AS t(k, v)""")
+      s.sql("""MERGE INTO gdxdml_scope t USING gdxdml_ssrc s ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT *""")
+      val after = gdx.committedEntries(dir, conf)
+      assert(after.exists(e => e.name == hi.name && e.dv.isEmpty),
+        s"the high file was rewritten or DV'd: $after")
+      assert(gdx.listVersions(dir, conf) === before :+ (before.last + 1))
+      val want = ((1L to 20L).map(i => (2 * i, s"v${2 * i}")).toMap +
+        (4L -> "X") + (5L -> "ins")).toSeq.sorted
+      assert(s.sql("SELECT k, v FROM gdxdml_scope ORDER BY k").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq === want)
+    } finally s.sql("DROP TABLE IF EXISTS gdxdml_scope")
   }
 
   test("UPDATE SET is simultaneous assignment: SET v = w, w = v swaps") {

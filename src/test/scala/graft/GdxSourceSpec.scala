@@ -18,6 +18,17 @@ class GdxSourceSpec extends SparkSuite with PruneAuditHelper {
   private def read(dir: String) =
     spark.read.format("graft.sources.GdxSource").option("path", dir).load()
 
+  /** `MERGE ... ON t.k = s.k WHEN MATCHED THEN UPDATE SET * WHEN NOT
+    * MATCHED THEN INSERT *` through mergeGeneral; returns the version. */
+  private def upsert(dir: String, rows: Seq[(Long, String)]): Int = {
+    val all = Some(Seq("k" -> "__s_k", "v" -> "__s_v"))
+    sources.GdxSource.mergeGeneral(spark, dir,
+      rows.toDF("__s_k", "__s_v"), "__t_k = __s_k",
+      matched = Seq(sources.GdxMergeClause(None, all)),
+      notMatched = Seq(sources.GdxMergeClause(None, all)),
+      notMatchedBySource = Nil, pruneKeySql = Some("__s_k"))._1
+  }
+
   test("round-trip preserves rows; commit publishes a manifest") {
     val dir = freshDir("rt")
     write(dir, Seq((1L, "a"), (2L, "b"), (3L, "a")))
@@ -540,8 +551,7 @@ class GdxSourceSpec extends SparkSuite with PruneAuditHelper {
   test("merge: update wins per key, inserts land, history untouched") {
     val dir = freshDir("merge")
     write(dir, Seq((1L, "a"), (2L, "b"), (3L, "c")))
-    val v = sources.GdxSource.merge(spark, dir,
-      Seq((2L, "B"), (4L, "D")).toDF("k", "v"))
+    val v = upsert(dir, Seq((2L, "B"), (4L, "D")))
     assert(read(dir).as[(Long, String)].collect().toSet ===
       Set((1L, "a"), (2L, "B"), (3L, "c"), (4L, "D")))
     // the pre-merge snapshot is still fully readable (time travel)
@@ -549,11 +559,16 @@ class GdxSourceSpec extends SparkSuite with PruneAuditHelper {
       .option("path", dir).option("version", (v - 1).toString).load()
     assert(pre.as[(Long, String)].collect().toSet ===
       Set((1L, "a"), (2L, "b"), (3L, "c")))
-    // duplicate update keys resolve deterministically (max v wins)
-    sources.GdxSource.merge(spark, dir,
-      Seq((1L, "x"), (1L, "y")).toDF("k", "v"))
+    // duplicate update keys are ambiguous (ANSI): the merge raises
+    // and commits nothing
+    val conf = sources.GdxSource.driverConf()
+    val before = sources.GdxSource.listVersions(dir, conf)
+    intercept[sources.GdxMergeCardinalityException] {
+      upsert(dir, Seq((1L, "x"), (1L, "y")))
+    }
+    assert(sources.GdxSource.listVersions(dir, conf) === before)
     assert(read(dir).filter(col("k") === 1L).as[(Long, String)]
-      .collect().toSeq === Seq((1L, "y")))
+      .collect().toSeq === Seq((1L, "a")))
   }
 
   test("delete: deletion vector subtracts rows, rewrites nothing") {
@@ -906,16 +921,19 @@ class GdxSourceSpec extends SparkSuite with PruneAuditHelper {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    // two writers race read-compute-truncate on DISJOINT key sets; a
-    // blind truncate would let the loser erase the winner's update
+    // two writers race read-compute-publish on DISJOINT key sets; the
+    // loser of the version claim must recompute on the winner's
+    // snapshot, or the winner's update would be lost
     val fs = Seq(Seq((1L, "A")), Seq((2L, "B"))).map(up => Future {
-      sources.GdxSource.merge(spark, dir, up.toDF("k", "v"))
+      upsert(dir, up)
     })
-    Await.result(Future.sequence(fs), 120.seconds)
+    val vs = Await.result(Future.sequence(fs), 120.seconds)
+    assert(vs.toSet === Set(2, 3), s"both merges must commit: $vs")
     val got = read(dir).as[(Long, String)].collect().toMap
     assert(got(1L) === "A" && got(2L) === "B",
       s"an update was lost to the merge race: $got")
     assert(got.size === 8)
+    assert(read(dir).count() === 8L, "a DV'd row came back")
   }
 
   test("concurrent appends: no commit lost, snapshots stay consecutive") {

@@ -1,9 +1,12 @@
 #!/bin/bash
 # Run graft.Verify without sbt startup overhead (classes must be compiled
 # first: `sbt compile`). Usage: tools/run_verify.sh [sfDir] [outDir]
+# The classes come from the checkout this script lives in; relative
+# sfDir/outDir arguments resolve against the caller's directory.
 set -e
-SF=${1:-/root/testdata/sf0.01}
-OUT=${2:-/tmp/verify_out}
+SF=$(realpath -m "${1:-/root/testdata/sf0.01}")
+OUT=$(realpath -m "${2:-/tmp/verify_out}")
+cd "$(dirname "$0")/.."
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -14,5 +17,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $ADD_OPENS -Dfile.encoding=UTF-8 -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Verify "$SF" "$OUT"
