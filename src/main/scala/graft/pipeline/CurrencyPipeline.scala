@@ -20,14 +20,16 @@ import org.apache.spark.sql.types._
   *  - report: 11-query analytics collapsed into one grouped pass
   *    src/analyze.py:20-160
   *
-  * Scale notes: merge is the one operator with real engine semantics — a
-  * dedup-by-recency window over the union, idempotent and replay-order
-  * safe because recency comes from an explicit ingest_ts column, not
-  * arrival order (SURVEY §7.3). At warehouse scale the union+window runs
-  * per (cc, exchangedate)-hash partition; with a partitioned table layout
-  * only affected date partitions need rewriting (dynamic partition
-  * overwrite), which is how the daily 2-row upsert stays O(day), not
-  * O(history).
+  * Scale notes: last-write-wins is the one rule with real engine
+  * semantics — idempotent and replay-order safe because recency comes
+  * from an explicit ingest_ts column, not arrival order (SURVEY §7.3).
+  * The daily upsert is a GDX MERGE on `rateKey` (`ON t.k = s.k WHEN
+  * MATCHED AND s.ingest_ts >= t.ingest_ts THEN UPDATE SET * WHEN NOT
+  * MATCHED THEN INSERT *`, run by `GdxSource.mergeGeneral`): zone maps
+  * scope it to the files holding the day's keys, replaced rows get
+  * deletion vectors and new images land in fresh files, so the 2-row
+  * upsert stays O(day), not O(history). `latestWins` is the same rule
+  * as a window, for folding a batch or a replayed history.
   */
 object CurrencyPipeline {
 
@@ -153,7 +155,8 @@ object CurrencyPipeline {
   }
 
   /** Nested report struct {usd:{...}, eur:{...}, general:{...}} matching
-    * src/analyze.py:142-160; one row, ready for to_json (K6). */
+    * src/analyze.py:142-160; one row, ready for to_json (K6).
+    * `perCurrency` is report-scale (at most one row per currency). */
   def reportStruct(perCurrency: DataFrame): DataFrame = {
     def block(cc: String): Column = max(when(col("cc") === cc, struct(
       col("last_rate").as("last"),
@@ -162,7 +165,9 @@ object CurrencyPipeline {
         .as("range_year"),
       col("avg_all_time"),
       col("days")))).as(cc.toLowerCase)
-    perCurrency.agg(
+    // one partition already satisfies the distinct aggregate's
+    // clustering: one stage, no exchange, for a report-scale frame
+    perCurrency.coalesce(1).agg(
       block("USD"), block("EUR"),
       struct(countDistinct(col("cc")).as("num_currencies")).as("general"))
   }
@@ -173,7 +178,7 @@ object CurrencyPipeline {
     * reference's empty-range branch (analyze.py:180-186) instead of
     * NPE-ing on unboxing. */
   def reportTxt(perCurrency: DataFrame, asOf: java.sql.Date): String = {
-    val rows = perCurrency.orderBy("cc").collect()
+    val rows = perCurrency.collect()
     def opt(r: org.apache.spark.sql.Row, field: String): Option[Double] =
       if (r.isNullAt(r.fieldIndex(field))) None
       else Some(r.getAs[Double](field))

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -8,8 +9,11 @@ import org.apache.spark.sql.functions._
   * /root/reference/src/analyze.py:164-203.
   *
   * Report results are ≤1 row per currency, so driver-side materialization
-  * of the FINAL struct is safe by construction (SURVEY §3.2); everything
-  * upstream of it stays distributed.
+  * of the FINAL rows is safe by construction (SURVEY §3.2); everything
+  * upstream of them stays distributed. Each sink therefore collects its
+  * rows once, formatted by Spark where a format applies (`to_json`,
+  * `to_csv`), and writes its files from the driver: no Spark write job
+  * or commit per file.
   */
 object ReportSinks {
 
@@ -31,7 +35,7 @@ object ReportSinks {
                width: Int = 640, height: Int = 360): Unit = {
     val rows = history.select(col("cc"), col("rate").cast("double"))
       .collect().map(r => (r.getString(0), r.getDouble(1)))
-    require(rows.nonEmpty, "chartPng: empty report frame")
+    require(rows.nonEmpty, "chartPng: empty history frame")
     val img = new java.awt.image.BufferedImage(
       width, height, java.awt.image.BufferedImage.TYPE_INT_RGB)
     val g = img.createGraphics()
@@ -93,20 +97,35 @@ object ReportSinks {
     targets.count()
   }
 
-  /** K5: per-currency one-row CSV files + a general summary CSV. */
+  /** K5: per-currency CSV files + a general summary CSV, the layout
+    * a `coalesce(1)` CSV write with a header gives, minus its
+    * `_SUCCESS` marker: `<cc>_report/part-00000.csv` holds the header
+    * and that currency's rows, `general_report/part-00000.csv` the
+    * number of distinct currencies; each directory is replaced whole.
+    * The frame is report-scale, so ONE collect of `to_csv` lines (the
+    * formatting Spark's CSV writer uses) feeds every file, written
+    * from the driver — no commit job per file. */
   def writeCsvReports(perCurrency: DataFrame, outDir: String): Unit = {
-    perCurrency.cache()
-    perCurrency.select("cc").distinct().collect().map(_.getString(0))
-      .foreach { cc =>
-        perCurrency.filter(col("cc") === cc)
-          .coalesce(1).write.mode("overwrite")
-          .option("header", "true")
-          .csv(s"$outDir/${cc.toLowerCase}_report")
-      }
-    perCurrency.agg(countDistinct(col("cc")).as("num_currencies"))
-      .coalesce(1).write.mode("overwrite")
-      .option("header", "true").csv(s"$outDir/general_report")
-    perCurrency.unpersist()
-    ()
+    val names = perCurrency.columns.toSeq
+    val rows = perCurrency.select(col("cc"),
+        to_csv(struct(names.map(n => col(s"`$n`")): _*)),
+        to_csv(struct(names.map(lit): _*)))
+      .collect()
+    val fs = new Path(outDir)
+      .getFileSystem(perCurrency.sparkSession.sparkContext.hadoopConfiguration)
+    def writeCsv(dir: String, lines: Seq[String]): Unit = {
+      val d = new Path(outDir, dir)
+      fs.delete(d, true)
+      val out = fs.create(new Path(d, "part-00000.csv"), false)
+      try out.write(lines.map(_ + "\n").mkString
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+    rows.groupBy(_.getString(0)).foreach { case (cc, rs) =>
+      writeCsv(s"${cc.toLowerCase}_report",
+        rs.head.getString(2) +: rs.toSeq.map(_.getString(1)))
+    }
+    writeCsv("general_report", Seq("num_currencies",
+      rows.map(_.getString(0)).filter(_ != null).distinct.length.toString))
   }
 }

@@ -3011,7 +3011,17 @@ object GdxSource {
     val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
       fs.create(p, true), "UTF-8"))
     try lines.foreach(out.println) finally out.close()
+    failOnWriteError(out, p)
   }
+
+  /** A `PrintWriter` never throws: a failed write, flush or close only
+    * sets its error flag. Checked after `close()`, so a short write
+    * (disk full, a lost stream) raises instead of passing for a whole
+    * manifest, sidecar or data file. */
+  private[graft] def failOnWriteError(out: java.io.PrintWriter,
+                                      p: Path): Unit =
+    if (out.checkError())
+      throw new java.io.IOException(s"gdx: write to $p failed")
 
   /** In-process commit serialization, striped by table path: writers in
     * the same JVM (concurrent queries on a local[n] session, parallel
@@ -3035,8 +3045,8 @@ object GdxSource {
     if (fs.exists(dst)) return false // cheap early reject; claim is below
     val tmp = new Path(dst.getParent,
       s".${dst.getName}.tmp-${java.util.UUID.randomUUID}")
-    writeLines(fs, tmp, lines)
     try {
+      writeLines(fs, tmp, lines)
       if ("file" == Option(dst.toUri.getScheme).getOrElse("file")) {
         // the content link below bypasses ChecksumFileSystem, so a
         // stale `.dst.crc` from an fs.create-era write of the same
@@ -4390,16 +4400,17 @@ object GdxSource {
       // write, constraint probe, rewrite), where one materialization
       // still wins and keeps the consumers consistent under retries.
       // The UPDATE checkpoint is LAZY: the DV-sidecar write is the
-      // first consumer and drains every partition (groupBy over the
-      // full matched set), so it doubles as the materializing job —
+      // first consumer and drains every partition (a shuffle by file
+      // over the full matched set), so it doubles as the materializing job —
       // the eager form paid a separate full-width line-parse job per
       // UPDATE statement for the same blocks.
       val matched =
         if (rewrite.isEmpty) live.filter(condition)
         else live.filter(condition).localCheckpoint(eager = false)
-      val newDvs = writeDvSidecars(matched.select("_file", "_pos"),
+      val newDvs = writeDvSidecars(
+        matched.select(col("_file"), col("_pos"), lit(2).as("_act")),
         dirStr, dvByName, sconf)
-      if (newDvs.isEmpty) return (readV, 0L)
+      if (newDvs.sidecars.isEmpty) return (readV, 0L)
       // UPDATE: the matched rows, with `set` applied, land as fresh
       // data files (same line format, written executor-side with UUID
       // names — a lost CAS leaves only vacuumable orphans)
@@ -4444,7 +4455,7 @@ object GdxSource {
           writeDataFiles(updatedRows, dirStr, tblSchema, sconf,
             tblColmap)
       }
-      val dvFor = newDvs.map(r => r._1 -> r._2).toMap
+      val dvFor = newDvs.sidecars.toMap
       val updated = entries.map(e =>
         dvFor.get(e.name).map(d => e.copy(dv = Some(d))).getOrElse(e)) ++
         rewrittenEntries
@@ -4460,7 +4471,7 @@ object GdxSource {
         manifestFor(dir, readV + 1), lines)
       if (published) {
         writeLines(fs, manifest(dir), lines)
-        val touched = newDvs.map(_._3).sum
+        val touched = newDvs.deleted
         // only a DELETE removes rows (UPDATE rewrites them 1:1) —
         // a large one invalidates the ANALYZE sidecar
         if (rewrite.isEmpty) decayColStats(dirStr, conf0, touched)
@@ -4473,38 +4484,75 @@ object GdxSource {
     (-1, -1L) // unreachable
   }
 
-  /** Write DV sidecars for the `(_file, _pos)` pairs in `positions`:
-    * one task-side sidecar per touched file, each folding the file's
-    * EXISTING deleted positions in (a DV supersedes, never chains).
-    * Executor-side UUID names — a retried task or a lost CAS leaves
-    * only unreferenced orphans for [[vacuum]], never a clobbered
-    * committed sidecar. Returns (fileName, dvName, newlyDeleted). */
+  /** [[writeDvSidecars]]'s outcome: the new sidecar of every file
+    * that had an applied position, the positions applied as UPDATE
+    * and as DELETE, and whether some target position came twice. */
+  private final case class DvWrite(sidecars: Seq[(String, String)],
+                                   updated: Long, deleted: Long,
+                                   repeated: Boolean)
+
+  /** Write DV sidecars for the `(_file, _pos, _act)` rows in
+    * `positions`, `_act` being 1 for a position an UPDATE replaces, 2
+    * for one a DELETE removes, and 0 for a matched position no clause
+    * applies to: one task-side sidecar per file with an applied
+    * position, each folding the file's EXISTING deleted positions in
+    * (a DV supersedes, never chains). A position seen twice is a target
+    * row matched by two source rows — its file gets no sidecar and the
+    * result says `repeated`, for the caller to refuse. Executor-side
+    * UUID names — a retried task or a lost CAS leaves only
+    * unreferenced orphans for [[vacuum]], never a clobbered committed
+    * sidecar. One job: an RDD shuffle by file, no separate aggregate. */
   private def writeDvSidecars(positions: org.apache.spark.sql.DataFrame,
                               dirStr: String,
                               dvByName: Map[String, Option[String]],
-                              sconf: SerializableHadoopConf)
-      : Array[(String, String, Long)] = {
-    import positions.sparkSession.implicits._
-    import org.apache.spark.sql.functions._
-    positions
-      .groupBy("_file")
-      .agg(collect_list("_pos").as("_dels"))
-      .as[(String, Seq[Long])]
-      .map { case (name, dels) =>
-        val base = new Path(dirStr)
-        val fs = base.getFileSystem(sconf.conf)
-        val old = dvByName(name).map(d =>
-          GdxSource.readDvPositions(fs, GdxSource.entryPath(dirStr, d)))
-          .getOrElse(java.util.Collections.emptySet[Long]())
-        val all = new java.util.TreeSet[Long](old)
-        dels.foreach(all.add(_))
-        val dvName = s"dv-${java.util.UUID.randomUUID}.dvx"
-        val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-          fs.create(new Path(base, dvName), false), "UTF-8"))
-        try all.forEach(p => out.println(p)) finally out.close()
-        (name, dvName, dels.size.toLong)
+                              sconf: SerializableHadoopConf): DvWrite = {
+    val perFile = positions.rdd
+      .mapPartitions { rows =>
+        // packed map-side as `_pos << 2 | _act`: the shuffle moves one
+        // primitive array per (partition, file), not a record per row
+        val byFile = scala.collection.mutable.HashMap
+          .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+        rows.foreach { r =>
+          byFile.getOrElseUpdate(r.getString(0),
+            new scala.collection.mutable.ArrayBuilder.ofLong) +=
+            (r.getLong(1) << 2 | r.getInt(2))
+        }
+        byFile.iterator.map { case (f, b) => (f, b.result()) }
+      }
+      .reduceByKey(_ ++ _)
+      .map { case (name, packed) =>
+        // sorted, a repeated position sits next to its twin
+        java.util.Arrays.sort(packed)
+        var upd = 0L; var del = 0L; var repeated = false
+        var i = 0
+        while (i < packed.length) {
+          if (i > 0 && (packed(i) >>> 2) == (packed(i - 1) >>> 2))
+            repeated = true
+          val act = packed(i) & 3
+          if (act == 1) upd += 1 else if (act == 2) del += 1
+          i += 1
+        }
+        if (repeated || upd + del == 0) (name, null: String, 0L, 0L, repeated)
+        else {
+          val base = new Path(dirStr)
+          val fs = base.getFileSystem(sconf.conf)
+          val old = dvByName(name).map(d =>
+            GdxSource.readDvPositions(fs, GdxSource.entryPath(dirStr, d)))
+            .getOrElse(java.util.Collections.emptySet[Long]())
+          val all = new java.util.TreeSet[Long](old)
+          packed.foreach(p => if ((p & 3) != 0) all.add(p >>> 2))
+          val dvName = s"dv-${java.util.UUID.randomUUID}.dvx"
+          val dvPath = new Path(base, dvName)
+          val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
+            fs.create(dvPath, false), "UTF-8"))
+          try all.forEach(p => out.println(p)) finally out.close()
+          GdxSource.failOnWriteError(out, dvPath)
+          (name, dvName, upd, del, false)
+        }
       }
       .collect()
+    DvWrite(perFile.collect { case (f, d, _, _, _) if d != null => (f, d) },
+      perFile.map(_._3).sum, perFile.map(_._4).sum, perFile.exists(_._5))
   }
 
   /** GENERAL MERGE — the full ANSI/Delta clause matrix over a GDX
@@ -4533,6 +4581,12 @@ object GdxSource {
     * ONE source row raises [[GdxMergeCardinalityException]] (the
     * Delta/ANSI ambiguous-merge error) instead of applying an
     * arbitrary winner.
+    *
+    * Jobs: the source-key pre-scan, the join, the image write and the
+    * DV write. The ambiguity check, the NULL-key/CHECK gate and the
+    * inserted/updated/deleted counts ride the two writes, so every
+    * refusal is decided after them and before the publish; the files
+    * already written are unreferenced orphans for [[vacuum]].
     *
     * 100 TB shape: the cost driver is one shuffle join of target and
     * source on the merge key plus data files proportional to AFFECTED
@@ -4636,8 +4690,8 @@ object GdxSource {
             when(c.condSql.map(expr(_)).getOrElse(lit(true)), lit(i))
               .otherwise(rest)
         }
-      // one materialization of the joined + classified frame; every
-      // pass below (cardinality, DVs, images, metrics) scans it. The
+      // one materialization of the joined + classified frame; both
+      // writes below (images, then DVs) scan it. The
       // join keeps only the sides the clause matrix can touch: a
       // matched-only merge never materializes the unmatched bulk of a
       // large target (inner), INSERT-bearing merges keep unmatched
@@ -4650,11 +4704,11 @@ object GdxSource {
         case (false, true)  => "left_outer"
         case (false, false) => "inner"
       }
-      // LAZY checkpoint: the first full-drain aggregate below (the
-      // cardinality check when matched clauses exist, otherwise the
-      // ins/upd/del counts — both consume every partition, no limits)
-      // doubles as the materializing action, so the merge pays one
-      // fewer job + driver gap per statement than an eager checkpoint.
+      // LAZY checkpoint: the image write below is its first consumer
+      // and drains every partition (a union of whole-frame filters, no
+      // limits), so it doubles as the materializing job and the DV
+      // write reads the cached blocks; with no image clause the DV
+      // write is the first consumer and drains every partition itself.
       val ann = target.join(src, expr(onSql), joinType)
         .withColumn("__m",
           when(tPresent && sPresent, firstMatch(matched)).otherwise(-1))
@@ -4664,16 +4718,6 @@ object GdxSource {
           when(tPresent && !sPresent, firstMatch(notMatchedBySource))
             .otherwise(-1))
         .localCheckpoint(eager = false)
-      if (matched.nonEmpty) {
-        // no limit(1): a local limit would stop each partition's scan
-        // early and leave the lazy checkpoint's blocks partial
-        val dup = ann.filter(tPresent && sPresent)
-          .groupBy("_file", "_pos").count()
-          .filter(col("count") > 1).count()
-        if (dup > 0) throw new GdxMergeCardinalityException(
-          "gdx merge: the ON condition matched a target row to more " +
-            "than one source row — an UPDATE/DELETE would be ambiguous")
-      }
       val mUpd = matched.zipWithIndex.collect {
         case (c, i) if c.assigns.isDefined => i }
       val bUpd = notMatchedBySource.zipWithIndex.collect {
@@ -4682,14 +4726,6 @@ object GdxSource {
           : org.apache.spark.sql.Column =
         if (idx.isEmpty) lit(false) else idx.map(c === _).reduce(_ || _)
       val updFlag = inIdx(col("__m"), mUpd) || inIdx(col("__b"), bUpd)
-      val delFlag = (col("__m") >= 0 || col("__b") >= 0) && !updFlag
-      val counts = ann.agg(
-        count(when(col("__n") >= 0, 1)).as("ins"),
-        count(when(updFlag, 1)).as("upd"),
-        count(when(delFlag, 1)).as("del")).head()
-      val (nIns, nUpd, nDel) =
-        (counts.getLong(0), counts.getLong(1), counts.getLong(2))
-      if (nIns + nUpd + nDel == 0) return (readV, 0L, 0L, 0L)
       // new row images, schema order: SQL simultaneous-assignment
       // semantics — every value evaluates against the OLD joined row
       def images(clauses: Seq[GdxMergeClause], act: String,
@@ -4709,34 +4745,49 @@ object GdxSource {
         images(matched, "__m", f => col("__t_" + f.name)) ++
         images(notMatched, "__n", f => lit(null).cast(f.dataType)) ++
         images(notMatchedBySource, "__b", f => col("__t_" + f.name))
-      val rewrittenEntries: Seq[GdxFileEntry] =
+      // the write gates itself: NULL keys (the line format requires
+      // a key) and one violation flag per CHECK constraint ride each
+      // image as trailing columns the writer counts and never writes
+      val (rewrittenEntries, gate) =
         imgs.reduceOption(_.unionByName(_)) match {
-          case None => Seq.empty
+          case None =>
+            (Seq.empty[GdxFileEntry], new Array[Long](checks.size + 1))
           case Some(newRows) =>
-            // one aggregate job gates the write: non-null key (the
-            // line format requires it) + every CHECK constraint over
-            // the merged images — a violation aborts with nothing
-            // committed
-            val keyName = tblSchema.fields.head.name
-            val aggs = count(when(col(keyName).isNull, 1)).as("__k") +:
-              checks.map { case (n, sql) =>
-                count(when(not(coalesce(expr(sql), lit(true))), 1)).as(n) }
-            val gate = newRows.agg(aggs.head, aggs.tail.toSeq: _*).head()
-            if (gate.getLong(0) > 0) throw new IllegalArgumentException(
-              s"gdx merge: ${gate.getLong(0)} merged row(s) have a NULL " +
-                s"key ($keyName) — the key column is required")
-            checks.zipWithIndex.foreach { case ((n, sql), i) =>
-              val bad = gate.getLong(i + 1)
-              if (bad > 0) throw new GdxConstraintViolationException(
-                s"gdx merge: $bad merged row(s) would violate CHECK " +
-                  s"constraint $n ($sql)")
-            }
-            writeDataFiles(newRows, dir, tblSchema, sconf, tblColmap)
+            writeGatedDataFiles(newRows.select(col("*") +:
+              checks.zipWithIndex.map { case ((_, sql), i) =>
+                not(coalesce(expr(sql), lit(true))).as(s"__gdx_chk$i")
+              }: _*), dir, tblSchema, sconf, tblColmap, "", gated = true)
         }
-      val newDvs = writeDvSidecars(
-        ann.filter(col("__m") >= 0 || col("__b") >= 0)
-          .select("_file", "_pos"), dir, dvByName, sconf)
-      val dvFor = newDvs.map(r => r._1 -> r._2).toMap
+      // every matched target position (when a matched clause exists)
+      // and every NOT MATCHED BY SOURCE one a clause applies to, with
+      // its action: a position seen twice is a target row matched by
+      // more than one source row, whichever clause applies
+      val dvRows =
+        (if (matched.nonEmpty) tPresent && sPresent else lit(false)) ||
+          col("__b") >= 0
+      val newDvs = writeDvSidecars(ann.filter(dvRows).select(col("_file"),
+        col("_pos"), when(updFlag, 1)
+          .when(col("__m") >= 0 || col("__b") >= 0, 2).otherwise(0)),
+        dir, dvByName, sconf)
+      // refusals decide after both writes and before the publish: the
+      // files written so far are unreferenced orphans for [[vacuum]]
+      if (newDvs.repeated) throw new GdxMergeCardinalityException(
+        "gdx merge: the ON condition matched a target row to more " +
+          "than one source row — an UPDATE/DELETE would be ambiguous")
+      if (gate(0) > 0) throw new IllegalArgumentException(
+        s"gdx merge: ${gate(0)} merged row(s) have a NULL key " +
+          s"(${tblSchema.fields.head.name}) — the key column is required")
+      checks.zipWithIndex.foreach { case ((n, sql), i) =>
+        val bad = gate(i + 1)
+        if (bad > 0) throw new GdxConstraintViolationException(
+          s"gdx merge: $bad merged row(s) would violate CHECK " +
+            s"constraint $n ($sql)")
+      }
+      if (rewrittenEntries.isEmpty && newDvs.sidecars.isEmpty)
+        return (readV, 0L, 0L, 0L)
+      val (nUpd, nDel) = (newDvs.updated, newDvs.deleted)
+      val nIns = rewrittenEntries.flatMap(_.stats).map(_.rows).sum - nUpd
+      val dvFor = newDvs.sidecars.toMap
       val updated = carried ++ cands.map(e =>
         dvFor.get(e.name).map(d => e.copy(dv = Some(d))).getOrElse(e)) ++
         rewrittenEntries
@@ -4823,7 +4874,25 @@ object GdxSource {
                              sconf: SerializableHadoopConf,
                              colmap: Option[Colmap] = None,
                              namePrefix: String = "")
-      : Seq[GdxFileEntry] = {
+      : Seq[GdxFileEntry] =
+    writeGatedDataFiles(rows, dirStr, tblSchema, sconf, colmap,
+      namePrefix, gated = false)._1
+
+  /** [[writeDataFiles]], optionally gated. A `gated` write's rows carry
+    * one trailing boolean column per CHECK constraint after the
+    * `tblSchema` columns, true where the row violates it. The writer
+    * counts those flags and NULL keys, never writes the flag columns,
+    * and skips a NULL-key row (the line format needs a key). Returns
+    * the entries and the gate counts: NULL keys first, then one
+    * violation count per CHECK column (empty when not gated). Any
+    * non-zero count must refuse the publish; the files are then
+    * unreferenced orphans. */
+  private def writeGatedDataFiles(rows: org.apache.spark.sql.DataFrame,
+                                  dirStr: String, tblSchema: StructType,
+                                  sconf: SerializableHadoopConf,
+                                  colmap: Option[Colmap],
+                                  namePrefix: String, gated: Boolean)
+      : (Seq[GdxFileEntry], Array[Long]) = {
     val types = tblSchema.fields.map(_.dataType)
     // shredded columns re-derive from their variant source before the
     // rows render (generated-always — a rewrite can never drift them)
@@ -4836,8 +4905,11 @@ object GdxSource {
     // v..v range on these stats is what keeps updated rows PRUNABLE —
     // without them every p = x query would plan every upd file forever
     val lanes: Array[StatLane] = statLanes(tblSchema)
-    rows2.rdd.mapPartitions { it =>
-      if (!it.hasNext) Iterator.empty
+    val first = tblSchema.length
+    val nChecks = rows.columns.length - first
+    val nGates = if (gated) nChecks + 1 else 0
+    val written = rows2.rdd.mapPartitions { all =>
+      if (!all.hasNext) Iterator.empty
       else {
         // a `col=key/` prefix keeps a partitioned rewrite INSIDE its
         // directory, so the name still proves its key (SPJ, slices)
@@ -4849,6 +4921,15 @@ object GdxSource {
           counter, "UTF-8"))
         var n = 0L; var mn = Long.MaxValue; var mx = Long.MinValue
         val acc = new ExtStatAcc(lanes.length, lanes.map(_.kind))
+        val gate = new Array[Long](nGates)
+        val it = if (!gated) all else all.filter { r =>
+          var c = 0
+          while (c < nChecks) {
+            if (r.getBoolean(first + c)) gate(c + 1) += 1
+            c += 1
+          }
+          if (r.isNullAt(0)) { gate(0) += 1; false } else true
+        }
         try it.foreach { r =>
           val sb = new java.lang.StringBuilder
           var pSlot = 0
@@ -4871,13 +4952,17 @@ object GdxSource {
             e += 1
           }
         } finally out.close()
+        GdxSource.failOnWriteError(out, p)
         val ext = acc.result(e => lanes(e).name)
-        Iterator((name, n, mn, mx, ext, counter.count))
+        Iterator((name, n, mn, mx, ext, counter.count, gate))
       }
-    }.collect().toSeq.map { case (name, n, mn, mx, ext, bytes) =>
+    }.collect().toSeq
+    val gates = new Array[Long](nGates)
+    written.foreach(w => w._7.indices.foreach(i => gates(i) += w._7(i)))
+    (written.map { case (name, n, mn, mx, ext, bytes, _) =>
       GdxFileEntry(name, Some(GdxFileStats(n, mn, mx, ext,
         Map.empty, Some(bytes))), enc = Some(EscCodec))
-    }
+    }, gates)
   }
 
   /** SHALLOW CLONE: a new table whose first manifest references the
@@ -8693,6 +8778,7 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
     val files = Seq.newBuilder[(String, GdxFileStats)]
     eachSink { s =>
       s.out.close()
+      GdxSource.failOnWriteError(s.out, s.target)
       if (s.rows > 0) {
         val fs = s.target.getFileSystem(conf.conf)
         val bp = new Path(path, s.name + GdxBloom.Suffix)

@@ -24,6 +24,36 @@ class GdxMergeGeneralSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getString(1),
         if (r.isNullAt(2)) null else r.getLong(2))).toSeq
 
+  /** Runs a MERGE that must be refused AFTER its writes and before its
+    * publish: the versions and rows stay as they were, the new data and
+    * DV files (`upd-*`, `dv-*`) exist but no committed snapshot
+    * references them, and vacuum's unreferenced-file sweep deletes
+    * every one. Returns the refusal. */
+  private def refusedAfterWrites(dir: String, tbl: String)
+                                (merge: => Any): Throwable = {
+    import graft.sources.GdxSource
+    val conf = GdxSource.driverConf()
+    def written(): Set[String] = new java.io.File(dir).listFiles()
+      .map(_.getName)
+      .filter(n => n.startsWith("upd-") || n.startsWith("dv-")).toSet
+    val versions = GdxSource.listVersions(dir, conf)
+    val rowsBefore = rows(tbl)
+    val filesBefore = written()
+    val e = intercept[Exception](merge)
+    assert(GdxSource.listVersions(dir, conf) === versions)
+    assert(rows(tbl) === rowsBefore)
+    val orphans = written() -- filesBefore
+    assert(orphans.nonEmpty, "refused before writing anything")
+    val referenced = versions.flatMap(v =>
+      GdxSource.committedEntries(dir, conf, v))
+      .flatMap(f => f.name +: f.dv.toSeq).toSet
+    assert(orphans.intersect(referenced).isEmpty, orphans)
+    GdxSource.vacuum(dir, conf, keepLast = versions.size,
+      sweepOrphanHours = Some(0))
+    assert(written() === filesBefore)
+    e
+  }
+
   test("full clause matrix: conditional update/delete/insert + NMBS") {
     val dir = freshDir("matrix")
     s.sql(s"""CREATE TABLE gm_t (k BIGINT, v STRING, w BIGINT)
@@ -87,16 +117,52 @@ class GdxMergeGeneralSpec extends SparkSuite {
       s.sql("INSERT INTO gm_dup VALUES (1,'a',1)")
       s.sql("""CREATE OR REPLACE TEMP VIEW gm_dsrc AS SELECT * FROM VALUES
         (1, 'x', 1L), (1, 'y', 2L) AS t(k, nv, nw)""")
-      val e = intercept[Exception](s.sql(
+      // the images land first; the DV write finds the repeated target
+      // position, and nothing is committed
+      val e = refusedAfterWrites(dir, "gm_dup")(s.sql(
         """MERGE INTO gm_dup t USING gm_dsrc s ON t.k = s.k
           WHEN MATCHED THEN UPDATE SET v = s.nv"""))
       assert(Iterator.iterate(e: Throwable)(_.getCause)
         .takeWhile(_ != null).take(8).exists(
           _.isInstanceOf[graft.sources.GdxMergeCardinalityException]),
         e.getMessage)
-      // and nothing committed
       assert(rows("gm_dup") === Seq((1L, "a", 1L)))
+      // the rule holds whichever clause applies, and when none does
+      // (the unmatched k=5 is inserted, so the writes are not empty)
+      s.sql("""CREATE OR REPLACE TEMP VIEW gm_dsrc2 AS SELECT * FROM VALUES
+        (1, 'x', 1L), (1, 'y', 2L), (5, 'z', 3L) AS t(k, nv, nw)""")
+      val e2 = refusedAfterWrites(dir, "gm_dup")(s.sql(
+        """MERGE INTO gm_dup t USING gm_dsrc2 s ON t.k = s.k
+          WHEN MATCHED AND s.nw > 5 THEN DELETE
+          WHEN NOT MATCHED THEN INSERT (k, v, w) VALUES (s.k, s.nv, s.nw)"""))
+      assert(Iterator.iterate(e2)(_.getCause)
+        .takeWhile(_ != null).take(8).exists(
+          _.isInstanceOf[graft.sources.GdxMergeCardinalityException]),
+        e2.getMessage)
     } finally s.sql("DROP TABLE IF EXISTS gm_dup")
+  }
+
+  test("a 2-row upsert MERGE into a multi-file table runs at most 7 " +
+      "Spark jobs") {
+    val dir = freshDir("jobs")
+    s.sql(s"""CREATE TABLE gm_jobs (k BIGINT, v STRING, w BIGINT)
+      USING $fmt OPTIONS (path '$dir')""")
+    try {
+      s.sql("INSERT INTO gm_jobs VALUES (1,'a',1),(2,'b',1)")
+      s.sql("INSERT INTO gm_jobs VALUES (3,'c',1),(4,'d',1)")
+      s.sql("INSERT INTO gm_jobs VALUES (5,'e',1),(6,'f',1)")
+      s.sql("""CREATE OR REPLACE TEMP VIEW gm_jsrc AS SELECT * FROM VALUES
+        (3L, 'c2', 2L), (9L, 'i', 2L) AS t(k, v, w)""")
+      val (m, jobs) = jobsDuring(s.sql(
+        """MERGE INTO gm_jobs t USING gm_jsrc s ON t.k = s.k
+          WHEN MATCHED AND s.w >= t.w THEN UPDATE SET *
+          WHEN NOT MATCHED THEN INSERT *""").collect().head)
+      assert((m.getLong(1), m.getLong(2), m.getLong(3)) === ((1L, 1L, 0L)))
+      assert(jobs.size <= 7, jobs.mkString("\n"))
+      assert(rows("gm_jobs") === Seq((1L, "a", 1L), (2L, "b", 1L),
+        (3L, "c2", 2L), (4L, "d", 1L), (5L, "e", 1L), (6L, "f", 1L),
+        (9L, "i", 2L)))
+    } finally s.sql("DROP TABLE IF EXISTS gm_jobs")
   }
 
   test("assignments are simultaneous: SET v = w-style swap via source") {
@@ -124,7 +190,8 @@ class GdxMergeGeneralSpec extends SparkSuite {
       s.sql("ALTER TABLE gm_chk ADD CONSTRAINT w_pos CHECK (w > 0)")
       s.sql("""CREATE OR REPLACE TEMP VIEW gm_csrc AS
         SELECT * FROM VALUES (1, -5L) AS t(k, nw)""")
-      val e = intercept[Exception](s.sql(
+      // the violating image and the DV are written, then refused
+      val e = refusedAfterWrites(dir, "gm_chk")(s.sql(
         """MERGE INTO gm_chk t USING gm_csrc s ON t.k = s.k
           WHEN MATCHED THEN UPDATE SET w = s.nw"""))
       assert(Iterator.iterate(e: Throwable)(_.getCause)
@@ -258,12 +325,14 @@ class GdxMergeGeneralSpec extends SparkSuite {
       // a NULL key in a merged image is refused, nothing committed
       s.sql("""CREATE OR REPLACE TEMP VIEW gm_e2src AS
         SELECT * FROM VALUES (2L) AS t(k)""")
-      val e = intercept[Exception](s.sql(
+      val e = refusedAfterWrites(dir, "gm_edge")(s.sql(
         """MERGE INTO gm_edge t USING gm_e2src s ON t.k = s.k
           WHEN MATCHED THEN UPDATE SET k = NULL"""))
-      assert(Iterator.iterate(e: Throwable)(_.getCause)
-        .takeWhile(_ != null).take(8)
-        .exists(_.getMessage != null), e.getMessage)
+      assert(Iterator.iterate(e)(_.getCause)
+        .takeWhile(_ != null).take(8).exists(c =>
+          c.isInstanceOf[IllegalArgumentException] &&
+            c.getMessage.contains("1 merged row(s) have a NULL key (k)")),
+        e.getMessage)
       assert(rows("gm_edge").map(_._1) === Seq(2L, 11L))
     } finally s.sql("DROP TABLE IF EXISTS gm_edge")
   }

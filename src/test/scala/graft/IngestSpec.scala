@@ -64,20 +64,57 @@ class IngestSpec extends SparkSuite {
 
   test("report fan-out: JSON document + CSV files") {
     val rates = Seq(
+      ("USD", java.sql.Date.valueOf("2025-09-18"), 41.7),
       ("USD", java.sql.Date.valueOf("2025-09-19"), 41.5),
-      ("EUR", java.sql.Date.valueOf("2025-09-19"), 48.5))
+      ("EUR", java.sql.Date.valueOf("2025-09-19"), 48.5),
+      // no row within 365 days of asOf: NULL year_min/year_max
+      ("GBP", java.sql.Date.valueOf("2023-01-10"), 55.25))
       .toDF("cc", "exchangedate", "rate")
     val per = CurrencyPipeline.reportPerCurrency(rates,
-      java.sql.Date.valueOf("2025-09-19"))
-    val json = ReportSinks.reportJson(CurrencyPipeline.reportStruct(per))
-    assert(json.contains("\"usd\"") && json.contains("\"last\":41.5"))
-    val out = tmpDir()
-    ReportSinks.writeCsvReports(per, out)
-    val usdCsv = new java.io.File(s"$out/usd_report").listFiles()
-      .filter(_.getName.endsWith(".csv"))
-    assert(usdCsv.nonEmpty)
-    val lines = scala.io.Source.fromFile(usdCsv.head).getLines().toSeq
-    assert(lines.head.startsWith("cc,") && lines(1).startsWith("USD,"))
+      java.sql.Date.valueOf("2025-09-19")).cache()
+    try {
+      per.count()
+      val json = ReportSinks.reportJson(CurrencyPipeline.reportStruct(per))
+      assert(json.contains("\"usd\"") && json.contains("\"last\":41.5"))
+      val gbp = per.filter(col("cc") === "GBP").head()
+      assert(gbp.isNullAt(gbp.fieldIndex("year_min")) &&
+        gbp.isNullAt(gbp.fieldIndex("year_max")))
+      assert(per.filter(col("cc") === "USD").head()
+        .getAs[Double]("change_month") < 0)
+      val out = tmpDir()
+      val (_, jobs) = jobsDuring(ReportSinks.writeCsvReports(per, out))
+      assert(jobs.size === 1, jobs.mkString("\n"))
+      // the caller's cached frame stays cached
+      assert(per.storageLevel.useMemory)
+      // each driver-written file reads exactly as Spark's own CSV
+      // writer renders the same rows
+      def csvText(dir: String): (Seq[String], String) = {
+        val files = new java.io.File(dir).listFiles()
+          .filterNot(f => f.getName.startsWith(".") ||
+            f.getName.startsWith("_"))
+        (files.map(_.getName).toSeq, new String(java.nio.file.Files
+          .readAllBytes(files.head.toPath), "UTF-8"))
+      }
+      val ref = tmpDir()
+      def sparkCsv(df: org.apache.spark.sql.DataFrame, name: String) = {
+        df.coalesce(1).write.option("header", "true").csv(s"$ref/$name")
+        csvText(s"$ref/$name")._2
+      }
+      Seq("USD", "EUR", "GBP").foreach { cc =>
+        val (names, text) = csvText(s"$out/${cc.toLowerCase}_report")
+        assert(names === Seq("part-00000.csv"))
+        assert(text === sparkCsv(per.filter(col("cc") === cc), cc))
+      }
+      assert(csvText(s"$out/usd_report")._2.linesIterator.toSeq(1)
+        .startsWith("USD,41.5,2025-09-19,-0.2"))
+      assert(csvText(s"$out/general_report")._2 === sparkCsv(
+        per.agg(countDistinct(col("cc")).as("num_currencies")), "general"))
+      assert(csvText(s"$out/general_report")._2 === "num_currencies\n3\n")
+      // a second run replaces each directory whole
+      ReportSinks.writeCsvReports(per.filter(col("cc") =!= "GBP"), out)
+      assert(csvText(s"$out/general_report")._2 === "num_currencies\n2\n")
+      assert(csvText(s"$out/usd_report")._1 === Seq("part-00000.csv"))
+    } finally per.unpersist()
   }
 
   test("K10 chart sink: renders a decodable PNG with plotted series") {

@@ -15,4 +15,26 @@ trait SparkSuite extends AnyFunSuite {
     .getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** `body`'s result and the call site of every Spark job it submitted,
+    * counted by a listener's `onJobStart` (the listener bus is drained
+    * before and after, so no job is missed or borrowed). */
+  def jobsDuring[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sites.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("callSite.short")))
+          .getOrElse(s"job ${e.jobId}"))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (r, sites.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }
