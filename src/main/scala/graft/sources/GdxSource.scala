@@ -18,6 +18,7 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan,
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import scala.util.control.NonFatal
 
 /** DataSourceV2 digest-index store ("GDX") — the connector tier the
   * engine's dedup/index workflows want AND the two DSv2 capabilities the
@@ -4271,13 +4272,15 @@ object GdxSource {
     * max(spark.sql.files.openCostInBytes, totalCost/parallelism))`
     * where each file costs its manifest-carried size (`b:`; an
     * unknown size counts as the max split — it gets its own
-    * partition) plus the open cost. Small tables therefore keep one
-    * file per task (the per-core cap undercuts any file, preserving
-    * full parallelism); the regime this exists for is 100M surviving
-    * small files, where per-file partitions would mean 100M tasks and
-    * driver-side partition objects — groups bound both by BYTES, not
-    * file count. Files pack in name order (the manifest's canonical
-    * order), so a group's rows stream file-after-file with no reorder. */
+    * partition) plus the open cost. Every file adds the open cost, so
+    * the total is at least `files × openCost` and the target is at
+    * most `totalCost/parallelism`: while there are at least as many
+    * files as cores, packing never plans fewer partitions than cores
+    * (a 12-file table plans 12 tasks on 32 cores and 4 on 4). Past
+    * that, groups bound by BYTES, not file count — 100M surviving
+    * small files plan as task-sized groups, not 100M tasks. Files pack
+    * in name order (the manifest's canonical order), so a group's rows
+    * stream file-after-file with no reorder. */
   private[graft] def packFilePartitions(
       files: Seq[(GdxFilePartition, Option[Long])])
       : Array[org.apache.spark.sql.connector.read.InputPartition] = {
@@ -4286,7 +4289,7 @@ object GdxSource {
     val openCost = conf.filesOpenCostInBytes
     val parallelism =
       try SparkSession.active.sparkContext.defaultParallelism
-      catch { case _: Exception => 1 }
+      catch { case NonFatal(_) => 1 }
     val totalCost = files.map { case (_, sz) =>
       sz.getOrElse(maxBytes) + openCost }.sum
     val target = math.min(maxBytes,
@@ -4582,9 +4585,11 @@ object GdxSource {
     * Delta/ANSI ambiguous-merge error) instead of applying an
     * arbitrary winner.
     *
-    * Jobs: the source-key pre-scan, the join, the image write and the
-    * DV write. The ambiguity check, the NULL-key/CHECK gate and the
-    * inserted/updated/deleted counts ride the two writes, so every
+    * Jobs: the source-key pre-scan (one pass), the join (one broadcast
+    * job when the target's manifest bytes fit the broadcast threshold),
+    * the image write and the DV write. The ambiguity check, the
+    * NULL-key/CHECK gate and the inserted/updated/deleted counts ride
+    * the two writes, so every
     * refusal is decided after them and before the publish; the files
     * already written are unreferenced orphans for [[vacuum]].
     *
@@ -4657,13 +4662,24 @@ object GdxSource {
             (pruneKeySql.isEmpty && staticLo.isEmpty && staticHi.isEmpty))
           (entries, Seq.empty[GdxFileEntry])
         else {
+          // one job: each partition folds its keys' min/max and the
+          // driver merges them (an aggregate is two jobs under AQE).
+          // An empty/all-NULL source key set matches nothing: the fold
+          // stays at the inverted window, which carries every file
           val srcWin: Option[(Long, Long)] = pruneKeySql.map { keySql =>
-            val mm = src.agg(min(expr(keySql)).cast("long").as("lo"),
-              max(expr(keySql)).cast("long").as("hi")).head()
-            // an empty/all-NULL source key set matches nothing:
-            // an inverted window carries every file
-            if (mm.isNullAt(0)) (Long.MaxValue, Long.MinValue)
-            else (mm.getLong(0), mm.getLong(1))
+            src.select(expr(keySql).cast("long")).rdd.mapPartitions { rs =>
+              var lo = Long.MaxValue; var hi = Long.MinValue
+              rs.foreach { r =>
+                if (!r.isNullAt(0)) {
+                  val k = r.getLong(0)
+                  if (k < lo) lo = k
+                  if (k > hi) hi = k
+                }
+              }
+              Iterator((lo, hi))
+            }.collect().foldLeft((Long.MaxValue, Long.MinValue)) {
+              case ((lo, hi), (l, h)) => (math.min(lo, l), math.max(hi, h))
+            }
           }
           val lo = math.max(staticLo.getOrElse(Long.MinValue),
             srcWin.map(_._1).getOrElse(Long.MinValue))
@@ -4811,7 +4827,10 @@ object GdxSource {
     * one task per file, already-DV'd positions skipped, fields parsed
     * under the snapshot's full schema (missing trailing fields = NULL,
     * pre-evolution files). The substrate DELETE/UPDATE predicates run
-    * on. */
+    * on, and MERGE's target. Its plan's size statistics are the
+    * entries' manifest bytes, so the planner broadcasts a small target
+    * at planning time instead of shuffling both join sides for AQE to
+    * convert; with any entry's size unrecorded it keeps no stats. */
   private def liveFrame(spark: SparkSession, dirStr: String,
                         entries: Seq[GdxFileEntry],
                         tblSchema: StructType,
@@ -4861,7 +4880,17 @@ object GdxSource {
           def next(): org.apache.spark.sql.Row = it.next()
         }
       }
-    spark.createDataFrame(rdd, liveSchema)
+    val df = spark.createDataFrame(rdd, liveSchema)
+    val sizes = entries.map(_.stats.flatMap(_.bytes))
+    org.apache.spark.sql.graft.ColumnBridge.analyzed(df) match {
+      case l: org.apache.spark.sql.execution.LogicalRDD
+          if sizes.forall(_.isDefined) =>
+        org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, l.copy()(
+          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+          Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(
+            BigInt(sizes.flatten.sum))), None))
+      case _ => df
+    }
   }
 
   /** Write `rows` (in `tblSchema` column order) as GDX line files, one
@@ -7301,8 +7330,10 @@ class GdxScan(path: String, version: Int, pushed: Array[Filter], limit: Int,
 
   // the snapshot's manifest entries and the zone-map-surviving subset,
   // resolved once at planning time. The resolved version is shared
-  // with the stats drift guard, so a scan pays ONE version resolution
-  // per plan, not two.
+  // with the header reads (slot map, partition spec) and the stats
+  // drift guard, so a scan pays ONE version resolution per plan, and a
+  // commit landing mid-plan (a DROP COLUMN rewrites the slot map)
+  // cannot pair one snapshot's files with another's layout.
   private lazy val resolvedVersion: Int =
     if (version >= 0) version
     else GdxSource.latestDecidedVersion(path, GdxSource.driverConf())
@@ -7613,33 +7644,20 @@ class GdxScan(path: String, version: Int, pushed: Array[Filter], limit: Int,
         if (keyed) partKeyOf(partitionSpec.get.render, e.name) else None,
         bucketed = keyed && bucketed,
         esc = e.escaped))
-      // BIN-PACK files into scan partitions (Spark's own FilePartition
-      // formula: maxSplit = min(maxPartitionBytes, max(openCost,
-      // totalBytes/parallelism)), sizes from the manifest's `b:`
-      // overlay) — one InputPartition per file is the hidden
-      // scheduling bottleneck at the 100M-file regime (a million
-      // surviving small files would otherwise mean a million tasks).
-      // Small tables keep full parallelism (the per-core cap shrinks
-      // the split target below any file), keyed SPJ scans must keep
-      // their per-file partition keys, and the partial-aggregate
-      // reader folds per PARTITION, so groups are fine there too —
-      // but it reports through `required = table schema`, so keep its
-      // historical per-file shape for plan-audit stability.
-      // packing engages only past a FILE-COUNT threshold (4 waves of
-      // tasks, floor 64): below it the historical one-file-per-task
-      // shape keeps small tables at full parallelism and keeps task
-      // boundaries aligned with file boundaries for plan audits; the
-      // regime packing exists for — hundreds of thousands of
-      // surviving small files — is far past it
-      val packPast = math.max(
-        4 * (try SparkSession.active.sparkContext.defaultParallelism
-             catch { case _: Exception => 1 }), 64)
-      if (keyed || aggOps.isDefined || perFile.length <= packPast)
+      // BIN-PACK files into scan partitions by the BYTES the manifest
+      // records (`b:`), at every file count: a task per small file
+      // pays a task's fixed cost to read a few KB, and at the 100M-file
+      // regime a partition per file would mean 100M tasks. The per-file
+      // open cost keeps at least one partition per core while there
+      // are that many files (see [[GdxSource.packFilePartitions]]).
+      // Keyed SPJ scans keep their per-file partition keys, and the
+      // partial-aggregate reader reports through `required = table
+      // schema`, so both stay one file per partition.
+      if (keyed || aggOps.isDefined)
         perFile.map(p => p: InputPartition).toArray
-      else {
-        val sizes = kept.map(_.stats.flatMap(_.bytes))
-        GdxSource.packFilePartitions(perFile.zip(sizes))
-      }
+      else
+        GdxSource.packFilePartitions(
+          perFile.zip(kept.map(_.stats.flatMap(_.bytes))))
     }
 
   // slot-positioned view of the logical schema: readers resolve
@@ -7649,10 +7667,11 @@ class GdxScan(path: String, version: Int, pushed: Array[Filter], limit: Int,
   // `entries`) — planning may call the factory/attribute hooks several
   // times and each manifest read is driver-side filesystem I/O.
   private lazy val slotSchema: StructType =
-    GdxSource.physicalized(tableSchema,
-      GdxSource.committedColmap(path, GdxSource.driverConf(), version))
+    GdxSource.physicalized(tableSchema, GdxSource.committedColmap(path,
+      GdxSource.driverConf(), resolvedVersion))
   private lazy val partitionRaw: Option[String] =
-    GdxSource.committedPartitionCol(path, GdxSource.driverConf(), version)
+    GdxSource.committedPartitionCol(path, GdxSource.driverConf(),
+      resolvedVersion)
   private lazy val partitionCol: Option[String] =
     partitionRaw.map(GdxSource.partHeadOf)
   private lazy val partitionSpec: Option[GdxSource.GdxPartSpec] =
@@ -7694,7 +7713,7 @@ class GdxScan(path: String, version: Int, pushed: Array[Filter], limit: Int,
     val bytes = planned.map { e =>
       e.stats.flatMap(_.bytes).getOrElse(
         try fs.getFileStatus(GdxSource.entryPath(path, e.name)).getLen
-        catch { case _: Exception => 0L })
+        catch { case NonFatal(_) => 0L })
     }.sum
     val rows = planned.flatMap(_.stats).map(_.rows).sum
     // ANALYZE sidecar → DSv2 column statistics: Spark's

@@ -57,6 +57,35 @@ class GdxColmapSpec extends SparkSuite {
     assert(read(dir).agg(sum("weight")).head.getLong(0) === 120L)
   }
 
+  test("a planned latest scan decodes by its own snapshot's layout when " +
+      "a column change commits before its read") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField,
+      StructType}
+    val dir = freshDir("pin")
+    buildEvolved(dir) // v3: (k, v, w), identity layout
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("v", StringType), StructField("w", LongType)))
+    val scan = new graft.sources.GdxScan(dir, -1, Array.empty, -1, None,
+      required = schema, tableSchema = schema)
+    val parts = scan.planInputPartitions()
+    // v4 drops w, v5 adds x in a fresh slot: the latest layout now maps
+    // the third logical field to physical slot 3, which v3's files lack
+    GdxSource.dropColumn(spark, dir, "w")
+    GdxSource.addColumn(dir, "x", LongType)
+    val factory = scan.createReaderFactory()
+    val got = parts.toSeq.flatMap { p =>
+      val r = factory.createReader(p)
+      try Iterator.continually(r).takeWhile(_.next()).map { rr =>
+        val row = rr.get()
+        (row.getLong(0), row.getUTF8String(1).toString,
+          if (row.isNullAt(2)) None else Some(row.getLong(2)))
+      }.toList
+      finally r.close()
+    }
+    assert(got.sortBy(_._1) === Seq((1L, "a", None), (2L, "b", None),
+      (3L, "c", Some(30L)), (4L, "d", Some(40L))))
+  }
+
   test("drop is metadata-only; the slot is never reused by add") {
     val dir = freshDir("drop")
     buildEvolved(dir)

@@ -142,7 +142,7 @@ class GdxMergeGeneralSpec extends SparkSuite {
     } finally s.sql("DROP TABLE IF EXISTS gm_dup")
   }
 
-  test("a 2-row upsert MERGE into a multi-file table runs at most 7 " +
+  test("a 2-row upsert MERGE into a multi-file table runs at most 4 " +
       "Spark jobs") {
     val dir = freshDir("jobs")
     s.sql(s"""CREATE TABLE gm_jobs (k BIGINT, v STRING, w BIGINT)
@@ -158,7 +158,10 @@ class GdxMergeGeneralSpec extends SparkSuite {
           WHEN MATCHED AND s.w >= t.w THEN UPDATE SET *
           WHEN NOT MATCHED THEN INSERT *""").collect().head)
       assert((m.getLong(1), m.getLong(2), m.getLong(3)) === ((1L, 1L, 0L)))
-      assert(jobs.size <= 7, jobs.mkString("\n"))
+      // the one-pass source-key window, the broadcast of the small
+      // target (its manifest bytes are the join's size statistics),
+      // the image write and the DV write
+      assert(jobs.size <= 4, jobs.mkString("\n"))
       assert(rows("gm_jobs") === Seq((1L, "a", 1L), (2L, "b", 1L),
         (3L, "c2", 2L), (4L, "d", 1L), (5L, "e", 1L), (6L, "f", 1L),
         (9L, "i", 2L)))

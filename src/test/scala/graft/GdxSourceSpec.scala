@@ -18,6 +18,26 @@ class GdxSourceSpec extends SparkSuite with PruneAuditHelper {
   private def read(dir: String) =
     spark.read.format("graft.sources.GdxSource").option("path", dir).load()
 
+  /** The data files `df`'s scan plans, flattened from the physical
+    * plan's BatchScanExec input partitions (a packed group lists each
+    * of its files): the file-skipping probe, whatever the number of
+    * files each task reads. */
+  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    scanPartitions(df).flatMap(filesOf)
+
+  private def filesOf(ip: org.apache.spark.sql.connector.read.InputPartition)
+      : Seq[String] = ip match {
+    case sources.GdxFileGroupPartition(fs) => fs.map(_.file)
+    case f: sources.GdxFilePartition      => Seq(f.file)
+  }
+
+  private def scanPartitions(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.connector.read.InputPartition] =
+    df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b
+    }.flatMap(_.inputPartitions)
+
   /** `MERGE ... ON t.k = s.k WHEN MATCHED THEN UPDATE SET * WHEN NOT
     * MATCHED THEN INSERT *` through mergeGeneral; returns the version. */
   private def upsert(dir: String, rows: Seq[(Long, String)]): Int = {
@@ -126,7 +146,7 @@ class GdxSourceSpec extends SparkSuite with PruneAuditHelper {
     assert(agg.queryExecution.executedPlan.toString
       .contains("COMPLETE(manifest)"))
     assert(agg.collect().head.toSeq === Seq(12L, 1L, 12L))
-    assert(read(dir).filter(col("k") === 7).rdd.getNumPartitions === 1)
+    assert(plannedFiles(read(dir).filter(col("k") === 7)).size === 1)
   }
 
   test("vacuum materializes the oldest retained delta before dropping " +
@@ -154,7 +174,7 @@ class GdxSourceSpec extends SparkSuite with PruneAuditHelper {
     assert(at(4) === (1L to 4L).map(i => (i, s"r$i")).toSet)
     assert(at(5) === (1L to 5L).map(i => (i, s"r$i")).toSet)
     // stats survive the checkpoint rewrite: point read plans one file
-    assert(read(dir).filter(col("k") === 3).rdd.getNumPartitions === 1)
+    assert(plannedFiles(read(dir).filter(col("k") === 3)).size === 1)
     // a dropped version is a loud error, not an empty read
     intercept[Exception] { at(2) }
   }
@@ -170,12 +190,12 @@ class GdxSourceSpec extends SparkSuite with PruneAuditHelper {
     val want = (1L to 100L).map(i => (i, s"r$i")).toSet
     assert(read(dir).as[(Long, String)].collect().toSet === want,
       "compaction must preserve every row")
-    assert(read(dir).rdd.getNumPartitions === 2,
+    assert(plannedFiles(read(dir)).size === 2,
       "the live snapshot plans the compacted files")
     // pre-compaction snapshot still time-travels (its files untouched)
     val v1 = spark.read.format("graft.sources.GdxSource")
       .option("path", dir).option("version", "1").load()
-    assert(v1.rdd.getNumPartitions === 8)
+    assert(plannedFiles(v1).size === 8)
     assert(v1.as[(Long, String)].collect().toSet === want)
     // vacuum then reclaims the 8 small files
     assert(graft.sources.GdxSource.vacuum(dir, conf, keepLast = 1) === 8)
@@ -244,12 +264,11 @@ class GdxSourceSpec extends SparkSuite with PruneAuditHelper {
     assert(names() === Seq("a", "b", "legacy"))
   }
 
-  test("scan partitions BIN-PACK many small files per task (Spark's " +
-      "FilePartition formula); small tables keep one file per task " +
-      "and results are identical either way") {
+  test("scan partitions BIN-PACK small files by bytes at every file " +
+      "count (Spark's FilePartition formula); rows, their order and a " +
+      "pushed LIMIT are unchanged") {
     val dir = freshDir("binpack")
     val conf = graft.sources.GdxSource.driverConf()
-    val thr = math.max(4 * spark.sparkContext.defaultParallelism, 64)
     // AQE's partition coalescing would merge the tiny write shuffles
     // and undershoot the intended file count — pin it off for the
     // fixture writes (a clone: never the shared session)
@@ -258,47 +277,46 @@ class GdxSourceSpec extends SparkSuite with PruneAuditHelper {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StringType,
       StructField, StructType}
-    def write(lo: Long, hi: Long, parts: Int): Unit =
-      w.createDataFrame(
-        w.sparkContext.parallelize(
-          (lo to hi).map(i => Row(i, s"r$i")), parts),
-        StructType(Seq(StructField("k", LongType),
-          StructField("v", StringType))))
-        .write.format("graft.sources.GdxSource")
-        .option("path", dir).mode("append").save()
-    // AT the threshold: one file per task (the historical shape every
-    // other spec pins — small tables keep full parallelism)
-    write(1L, thr.toLong, thr)
-    assert(graft.sources.GdxSource
-      .committedEntries(dir, conf).size === thr)
-    assert(read(dir).rdd.getNumPartitions === thr)
-    // PAST it: files bin-pack by bytes (Spark's FilePartition
-    // formula), and a task reads several files through one chained
-    // reader with identical answers
-    val n = thr + 16
-    write(thr.toLong + 1, n.toLong, 16)
-    val grouped = read(dir)
-    val nGrouped = grouped.rdd.getNumPartitions
-    assert(nGrouped < n && nGrouped > 0,
-      s"expected grouped partitions, got $nGrouped of $n files")
-    assert(grouped.as[(Long, String)].collect().toSet ===
-      (1L to n.toLong).map(i => (i, s"r$i")).toSet)
-    // pushed limit is honored across a group's file chain
-    assert(grouped.limit(10).collect().length === 10)
+    w.createDataFrame(
+      w.sparkContext.parallelize((1L to 120L).map(i => Row(i, s"r$i")), 12),
+      StructType(Seq(StructField("k", LongType),
+        StructField("v", StringType))))
+      .write.format("graft.sources.GdxSource")
+      .option("path", dir).mode("append").save()
+    val entries = graft.sources.GdxSource.committedEntries(dir, conf)
+    assert(entries.size === 12)
+    // a 12-file table on local[4]: at most one partition per core,
+    // every file still planned exactly once
+    val all = read(dir)
+    val parts = scanPartitions(all)
+    assert(parts.nonEmpty &&
+      parts.size <= spark.sparkContext.defaultParallelism,
+      s"expected packed partitions, got ${parts.size} for 12 files")
+    assert(plannedFiles(all).sorted === entries.map(e =>
+      graft.sources.GdxSource.entryPath(dir, e.name).toString).sorted)
+    // the scan streams files in manifest name order and each file's
+    // lines in order, as one file per task did
+    val fileOrder = entries.sortBy(_.name).flatMap { e =>
+      val src = scala.io.Source.fromFile(new java.io.File(dir, e.name))
+      try src.getLines().map(_.split("\t")(0).toLong).toList
+      finally src.close()
+    }
+    val rows = all.as[(Long, String)].collect().toSeq
+    assert(rows.map(_._1) === fileOrder)
+    assert(rows.toSet === (1L to 120L).map(i => (i, s"r$i")).toSet)
+    // a pushed LIMIT that ends past the first file of a group (10
+    // rows a file) returns the same prefix
+    val limited = read(dir).limit(25)
+    assert(limited.queryExecution.executedPlan.toString.contains("limit=25"))
+    assert(limited.as[(Long, String)].collect().toSeq === rows.take(25))
     // zone-map pruning composes: a point read still plans one file
-    assert(read(dir).filter(col("k") === 7).rdd.getNumPartitions === 1)
+    assert(plannedFiles(read(dir).filter(col("k") === 7)).size === 1)
   }
 
   test("packFilePartitions: unknown sizes get their own partition, " +
       "big files stay singletons, tiny files fill bins by bytes") {
-    import graft.sources.{GdxFilePartition, GdxFileGroupPartition,
-      GdxSource}
+    import graft.sources.{GdxFilePartition, GdxSource}
     def p(n: Int) = GdxFilePartition(s"f$n")
-    def filesOf(ip: org.apache.spark.sql.connector.read.InputPartition)
-        : Seq[String] = ip match {
-      case GdxFileGroupPartition(fs) => fs.map(_.file)
-      case f: GdxFilePartition      => Seq(f.file)
-    }
     val s = Sessions.pinned(spark,
       "spark.sql.files.maxPartitionBytes" -> (100L * 1024 * 1024).toString,
       "spark.sql.files.openCostInBytes" -> (4L * 1024 * 1024).toString)
@@ -329,12 +347,12 @@ class GdxSourceSpec extends SparkSuite with PruneAuditHelper {
       .repartitionByRange(10, col("k"))
       .write.format("graft.sources.GdxSource")
       .option("path", dir).mode("append").save()
-    assert(read(dir).rdd.getNumPartitions === 10)
+    assert(plannedFiles(read(dir)).size === 10)
     val narrow = read(dir).filter(col("k") >= 150 && col("k") <= 160)
-    assert(narrow.rdd.getNumPartitions <= 2,
+    assert(plannedFiles(narrow).size <= 2,
       "only files whose [min,max] overlaps [150,160] may be planned")
     assert(narrow.count() === 11, "pruning must not lose rows")
-    assert(read(dir).filter(col("k") > 5000).rdd.getNumPartitions === 0,
+    assert(plannedFiles(read(dir).filter(col("k") > 5000)).isEmpty,
       "a range beyond every zone map plans nothing")
   }
 
@@ -342,7 +360,7 @@ class GdxSourceSpec extends SparkSuite with PruneAuditHelper {
     val dir = freshDir("emptyf")
     write(dir, Seq((5L, "x"))) // repartition(2) leaves one empty file
     val df = read(dir).filter(col("k") === 5)
-    assert(df.rdd.getNumPartitions === 1)
+    assert(plannedFiles(df).size === 1)
     assert(df.count() === 1)
   }
 
@@ -401,7 +419,7 @@ class GdxSourceSpec extends SparkSuite with PruneAuditHelper {
       new java.io.File(dir, s".${mf.getName}.crc").delete()
     }
     val df = read(dir).filter(col("k") <= 5)
-    assert(df.rdd.getNumPartitions === 2, "no stats -> no pruning")
+    assert(plannedFiles(df).size === 2, "no stats -> no pruning")
     assert(df.count() === 5)
     val agg = read(dir).agg(count(lit(1)))
     assert(!agg.queryExecution.executedPlan.toString.contains("COMPLETE"),

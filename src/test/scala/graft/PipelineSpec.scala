@@ -149,6 +149,36 @@ class PipelineSpec extends SparkSuite {
     assert(txt.contains("USD: 24.50 UAH"), txt)
   }
 
+  test("reportPerCurrency over a 12-file GDX history scans in at most " +
+      "4 tasks on local[4]") {
+    val dir = java.nio.file.Files.createTempDirectory("gdx_report").toString
+    // one file per partition: no shuffle between the RDD and the write,
+    // and AQE's coalescing pinned off on a clone of the session
+    val w = Sessions.pinned(spark,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val rows = for {
+      d <- 0 until 120
+      (cc, i) <- Seq("USD", "EUR").zipWithIndex
+    } yield (d * 2L + i, cc, java.sql.Date.valueOf(
+      java.time.LocalDate.of(2025, 1, 1).plusDays(d.toLong)), 40.0 + d / 10.0)
+    w.createDataFrame(w.sparkContext.parallelize(rows, 12))
+      .toDF("k", "cc", "exchangedate", "rate")
+      .write.format("graft.sources.GdxSource")
+      .option("path", dir).mode("append").save()
+    assert(graft.sources.GdxSource.committedEntries(dir,
+      graft.sources.GdxSource.driverConf()).size === 12)
+    val rates = spark.read.format("graft.sources.GdxSource")
+      .option("path", dir).load()
+    val (n, stages) = stagesDuring(
+      reportPerCurrency(rates, day("2025-04-30")).count())
+    assert(n === 2L)
+    // the scan stage: the one whose lineage holds the DSv2 scan RDD
+    val scans = stages.filter(_.rddInfos.exists(_.name == "DataSourceRDD"))
+    assert(scans.nonEmpty, stages.map(_.name))
+    assert(scans.map(_.numTasks).sum <= 4,
+      scans.map(st => s"${st.name}: ${st.numTasks} tasks"))
+  }
+
   test("flagship entry returns rows (driver t1 analog)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

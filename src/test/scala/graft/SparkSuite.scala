@@ -37,4 +37,27 @@ trait SparkSuite extends AnyFunSuite {
       (r, sites.toArray(Array.empty[String]).toSeq)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** `body`'s result and every stage it ran, as the listener saw each
+    * one complete. A stage an earlier job already ran is skipped, never
+    * completed, so it is not counted again. Drained like [[jobsDuring]]. */
+  def stagesDuring[T](body: => T)
+      : (T, Seq[org.apache.spark.scheduler.StageInfo]) = {
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    val stages = new java.util.concurrent
+      .ConcurrentLinkedQueue[org.apache.spark.scheduler.StageInfo]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stages.add(e.stageInfo)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (r, stages.toArray(Array.empty[org.apache.spark.scheduler.StageInfo])
+        .toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }
