@@ -26,6 +26,10 @@ object Verify {
       case None        => SparkEntry.queries
     }
     selected.foreach { case (name, fn) =>
+      // an earlier run's dump must not stand in for a query that fails
+      // before its write: gone, it reads as MISSING
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

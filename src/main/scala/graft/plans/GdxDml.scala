@@ -15,10 +15,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 /** SQL DML FRONT DOOR for the GDX table format — `DELETE FROM` /
   * `UPDATE` / `MERGE INTO` statements over a catalog table whose
   * provider is GdxSource, routed to the engine's transactional row-level
-  * operations ([[graft.sources.GdxSource.delete]] — deletion vectors,
-  * [[graft.sources.GdxSource.update]] — DV + rewrite in one commit,
-  * [[graft.sources.GdxSource.mergeGeneral]] — DV + new files in one
-  * commit).
+  * operations ([[graft.sources.GdxSource.delete]],
+  * [[graft.sources.GdxSource.update]] and
+  * [[graft.sources.GdxSource.mergeGeneral]]). All three run on one
+  * engine — DVs on the changed rows plus new files for their images,
+  * in one commit — UPDATE and DELETE as target-only statements, so
+  * they share MERGE's casts, NULL-key/CHECK refusals and commit loop.
   *
   * Spark's parser already produces the standard resolved plans
   * (`DeleteFromTable`/`UpdateTable`/`MergeIntoTable`); this post-hoc

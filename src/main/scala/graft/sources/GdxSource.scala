@@ -95,16 +95,22 @@ import scala.util.control.NonFatal
   *    listing diffs or notification service. `maxVersionsPerTrigger`
   *    bounds each micro-batch (admission control), and AvailableNow
   *    pins its drain target at query start.
-  *  - **MERGE + row-level DELETE**: [[GdxSource.mergeGeneral]] runs
-  *    every MERGE as deletion vectors on the matched rows plus new
-  *    files for their images, scoped by zone maps and published as
-  *    one exclusive manifest claim — a lost race re-reads and retries
-  *    instead of silently erasing a concurrent commit;
-  *    [[GdxSource.delete]] subtracts rows
-  *    via `.dvx` deletion-vector sidecars — no data file rewritten,
+  *  - **MERGE, UPDATE and DELETE on one engine**:
+  *    [[GdxSource.mergeGeneral]] runs every MERGE as deletion vectors
+  *    on the matched rows plus new files for their images, scoped by
+  *    zone maps; [[GdxSource.update]] and [[GdxSource.delete]] run on
+  *    the same engine as target-only statements. Rows leave through
+  *    `.dvx` deletion-vector sidecars — no data file rewritten,
   *    [[GdxSource.compact]] purges DVs, [[GdxSource.vacuum]] reaps
   *    superseded sidecars, metadata-only aggregates stand down while a
   *    DV is present.
+  *  - **One commit loop**: every full-manifest writer (MERGE,
+  *    UPDATE/DELETE, small-file and clustered compaction, RESTORE,
+  *    schema, layout and constraint changes) publishes through
+  *    `commitNext` — one
+  *    exclusive manifest claim at the decided head + 1; a lost race
+  *    re-reads and retries instead of silently erasing a concurrent
+  *    commit.
   *  - **Schema evolution** (append-only): the snapshot schema lives in
   *    the manifest (`#schema` header); [[GdxSource.addColumn]] is one
   *    metadata-only commit, readers null-fill pre-evolution files, and
@@ -3081,6 +3087,39 @@ object GdxSource {
     } finally if (fs.exists(tmp)) fs.delete(tmp, false)
   }
 
+  /** The full-manifest commit loop every GDX writer shares (MERGE,
+    * UPDATE/DELETE, small-file and clustered compaction, RESTORE,
+    * schema/layout/constraint changes): read the decided head `readV` (a stale transaction
+    * claim there is decided first), let `build(readV)` compute the
+    * statement against that snapshot, and publish its manifest lines
+    * at `readV + 1` under CAS, mirrored to `_manifest`. `build`
+    * returns `Left(result)` when nothing needs committing, else
+    * `Right((lines, result))`. A lost race recomputes on the advanced
+    * snapshot (whatever the lost attempt wrote stays an unreferenced
+    * orphan for [[vacuum]]); when `maxRetries` retries lose too, the
+    * statement fails with [[GdxConcurrentModificationException]]. */
+  private def commitNext[R](dir: String, op: String, maxRetries: Int)
+      (build: Int => Either[R, (Seq[String], R)]): R = {
+    val conf = driverConf()
+    val fs = new Path(dir).getFileSystem(conf)
+    @scala.annotation.tailrec
+    def attempt(lost: Int): R = {
+      val readV = decidedHead(dir, conf)
+      build(readV) match {
+        case Left(r) => r
+        case Right((lines, r)) if publishExclusive(fs, conf,
+            manifestFor(dir, readV + 1), lines) =>
+          writeLines(fs, manifest(dir), lines)
+          r
+        case _ if lost >= maxRetries =>
+          throw new GdxConcurrentModificationException(
+            s"gdx $op: lost the publish race ${lost + 1} times on $dir")
+        case _ => attempt(lost + 1)
+      }
+    }
+    attempt(0)
+  }
+
   /** ChecksumFileSystem sidecar for a local path. The NIO fast paths
     * below write CONTENT without Hadoop's checksum layer; any crc that
     * no longer matches must go (readers verify only when a crc exists,
@@ -3552,12 +3591,8 @@ object GdxSource {
     val sconf = new SerializableHadoopConf(conf0)
     val base = new Path(dir)
     val fs = base.getFileSystem(conf0)
-    var attempt = 0
-    while (true) {
-      val vs = listVersions(dir, conf0)
-      require(vs.nonEmpty, s"gdx compactSmall: no snapshot under $dir")
-      decideStaleTxn(dir, conf0, vs.max) // claim-aware maintenance
-      val readV = vs.max
+    commitNext(dir, "compactSmall", maxRetries) { readV =>
+      require(readV > 0, s"gdx compactSmall: no snapshot under $dir")
       val entries = committedEntries(dir, conf0, readV)
       // ONE manifest read supplies every header (a delta manifest
       // carries them too); committedEntries above still resolves the
@@ -3635,33 +3670,23 @@ object GdxSource {
       }
       val rewriteSet = groups.flatMap(_._2)
       val before = entries.size
-      if (rewriteSet.isEmpty) return (before, before)
-      val rewritten = groups.sortBy(_._1).flatMap {
-        case (prefix, es, bins) =>
-          writeDataFiles(
-            liveFrame(spark, dir, es, tblSchema, sconf, tblColmap)
-              .drop("_file", "_pos").coalesce(bins),
-            dir, tblSchema, sconf, tblColmap, prefix)
+      if (rewriteSet.isEmpty) Left((before, before))
+      else {
+        val rewritten = groups.sortBy(_._1).flatMap {
+          case (prefix, es, bins) =>
+            writeDataFiles(
+              liveFrame(spark, dir, es, tblSchema, sconf, tblColmap)
+                .drop("_file", "_pos").coalesce(bins),
+              dir, tblSchema, sconf, tblColmap, prefix)
+        }
+        val rewriteNames = rewriteSet.map(_.name).toSet
+        val updated = entries.filterNot(e => rewriteNames(e.name)) ++
+          rewritten
+        Right((headerLines(tblSchema, md.checks, tblColmap,
+          md.partitionCol) ++ updated.sortBy(_.name).map(_.manifestLine),
+          (before, updated.size)))
       }
-      val rewriteNames = rewriteSet.map(_.name).toSet
-      val updated = entries.filterNot(e => rewriteNames(e.name)) ++
-        rewritten
-      val lines = headerLines(tblSchema, md.checks, tblColmap,
-        md.partitionCol) ++
-        updated.sortBy(_.name).map(_.manifestLine)
-      if (publishExclusive(fs, conf0, manifestFor(dir, readV + 1), lines)) {
-        writeLines(fs, manifest(dir), lines)
-        return (before, updated.size)
-      }
-      // lost the race; orphan rewrites await vacuum. A stale txn claim
-      // is decided before retrying (same invariant as commitFiles)
-      decideStaleTxn(dir, conf0, readV + 1)
-      attempt += 1
-      if (attempt > maxRetries) throw new GdxConcurrentModificationException(
-        s"gdx compactSmall: lost the publish race $maxRetries times " +
-          s"on $dir")
     }
-    (-1, -1) // unreachable
   }
 
   /** The `<partitionCol> = <n>` / `<partitionCol> IN (n, ...)` slice
@@ -3759,8 +3784,9 @@ object GdxSource {
     * (it would survive only in history). So the rewrite pins its READ to
     * the version it observed, publishes with a CAS
     * (`expectedBaseVersion`), and on a lost race recomputes against the
-    * advanced snapshot — the same loop [[mergeGeneral]]/[[delete]]
-    * run, and the conflict check Delta's OPTIMIZE performs. `body`
+    * advanced snapshot — [[commitNext]]'s contract, kept here by the
+    * DSv2 write's CAS, and the conflict check Delta's OPTIMIZE
+    * performs. `body`
     * returns None for a no-op (already at/under target), or
     * (files_before, rewritten frame) to publish. */
   private def rewriteWithCas(dir: String, maxRetries: Int = 10)
@@ -4152,12 +4178,8 @@ object GdxSource {
     val sconf = new SerializableHadoopConf(conf0)
     val base = new Path(dir)
     val fs = base.getFileSystem(conf0)
-    var attempt = 0
-    while (true) {
-      val vs = listVersions(dir, conf0)
-      require(vs.nonEmpty, s"gdx optimize: no snapshot under $dir")
-      decideStaleTxn(dir, conf0, vs.max)
-      val readV = vs.max
+    commitNext(dir, "optimize", maxRetries = 10) { readV =>
+      require(readV > 0, s"gdx optimize: no snapshot under $dir")
       val entries = committedEntries(dir, conf0, readV)
       val md = readManifest(fs, manifestFor(dir, readV))
       val tblSchema = md.schema.getOrElse(schema)
@@ -4196,47 +4218,39 @@ object GdxSource {
           rangeless else Nil)
       val rewriteNames = (over ++ unproven).map(_.name).toSet
       val rewriteSet = entries.filter(e => rewriteNames(e.name))
-      if (rewriteSet.isEmpty) return (before, before)
-      // output-file budget proportional to the rewritten share, so a
-      // small delta recluster emits delta-sized files, not 1/target
-      // of the table per file
-      val totalRows = entries.flatMap(_.stats).map(_.rows).sum
-      val subsetRows = rewriteSet.flatMap(_.stats).map(_.rows).sum
-      val bins =
-        if (totalRows <= 0 || rewriteSet.exists(_.stats.isEmpty)) target
-        else math.max(1, math.min(target.toLong,
-          (target * subsetRows + totalRows - 1) / totalRows).toInt)
-      // one generation tag per rewrite: the output files are pairwise
-      // lex-disjoint by construction, and the tag carries that proof
-      // into future closures (see [[clusterOverlapClosure]]). The tag
-      // EMBEDS the canonical cluster-column spec it was proven under
-      // (`<uuid>@<col+col>`), so the exemption self-invalidates when
-      // the declared columns change.
-      val genTag = java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12) + "@" + genClusterSpec(byC)
-      val rewritten = writeDataFiles(
-        liveFrame(spark, dir, rewriteSet, tblSchema, sconf, tblColmap)
-          .drop("_file", "_pos")
-          .repartitionByRange(bins, byC.map(col): _*)
-          .sortWithinPartitions(byC.map(col): _*),
-        dir, tblSchema, sconf, tblColmap)
-        .map(_.copy(gen = Some(genTag)))
-      val updated = entries.filterNot(e => rewriteNames(e.name)) ++
-        rewritten
-      val lines = headerLines(tblSchema, md.checks, tblColmap,
-        md.partitionCol) ++
-        updated.sortBy(_.name).map(_.manifestLine)
-      if (publishExclusive(fs, conf0, manifestFor(dir, readV + 1),
-          lines)) {
-        writeLines(fs, manifest(dir), lines)
-        return (before, updated.size)
+      if (rewriteSet.isEmpty) Left((before, before))
+      else {
+        // output-file budget proportional to the rewritten share, so a
+        // small delta recluster emits delta-sized files, not 1/target
+        // of the table per file
+        val totalRows = entries.flatMap(_.stats).map(_.rows).sum
+        val subsetRows = rewriteSet.flatMap(_.stats).map(_.rows).sum
+        val bins =
+          if (totalRows <= 0 || rewriteSet.exists(_.stats.isEmpty)) target
+          else math.max(1, math.min(target.toLong,
+            (target * subsetRows + totalRows - 1) / totalRows).toInt)
+        // one generation tag per rewrite: the output files are pairwise
+        // lex-disjoint by construction, and the tag carries that proof
+        // into future closures (see [[clusterOverlapClosure]]). The tag
+        // EMBEDS the canonical cluster-column spec it was proven under
+        // (`<uuid>@<col+col>`), so the exemption self-invalidates when
+        // the declared columns change.
+        val genTag = java.util.UUID.randomUUID().toString
+          .replace("-", "").take(12) + "@" + genClusterSpec(byC)
+        val rewritten = writeDataFiles(
+          liveFrame(spark, dir, rewriteSet, tblSchema, sconf, tblColmap)
+            .drop("_file", "_pos")
+            .repartitionByRange(bins, byC.map(col): _*)
+            .sortWithinPartitions(byC.map(col): _*),
+          dir, tblSchema, sconf, tblColmap)
+          .map(_.copy(gen = Some(genTag)))
+        val updated = entries.filterNot(e => rewriteNames(e.name)) ++
+          rewritten
+        Right((headerLines(tblSchema, md.checks, tblColmap,
+          md.partitionCol) ++ updated.sortBy(_.name).map(_.manifestLine),
+          (before, updated.size)))
       }
-      decideStaleTxn(dir, conf0, readV + 1)
-      attempt += 1
-      if (attempt > 10) throw new GdxConcurrentModificationException(
-        s"gdx optimize: lost the publish race 10 times on $dir")
     }
-    (-1, -1) // unreachable
   }
 
   /** Bloom-sidecar point-lookup pruning: for every pushed
@@ -4334,24 +4348,30 @@ object GdxSource {
     * rewrite; [[compact]] later rewrites DV-carrying files clean, and
     * [[vacuum]] reaps superseded sidecars.
     *
-    * Execution shape: one distributed pass — a task per candidate file
-    * parses its lines (already-deleted positions skipped), the Catalyst
-    * `condition` filters them, and surviving (file, position) pairs
-    * aggregate per file; DV sidecars are written executor-side (UUID
-    * names: a retried task leaves an unreferenced orphan, never a
-    * clobbered committed sidecar). Zone maps pre-prune: files whose
-    * k-range cannot intersect a k-only condition never even get a task.
-    * The commit is a FULL manifest publish at `readVersion + 1` under
-    * CAS — a concurrent commit surfaces as conflict and the delete
-    * recomputes, same serializable loop as [[mergeGeneral]]. Time
-    * travel to the pre-delete snapshot still sees every row (DVs are
-    * new files; nothing is rewritten). Returns (committed version,
-    * rows deleted); a no-match delete publishes nothing and returns
-    * the current version with 0. */
+    * Runs on [[mergeGeneral]]'s engine as a target-only statement: no
+    * source and no join, one NOT-MATCHED-BY-SOURCE-style DELETE clause
+    * (`condition`) tested against every live row. Execution shape: one
+    * job — a task per group of live files parses their lines
+    * (already-deleted positions skipped; every live file is planned,
+    * zone maps do not pre-prune a DELETE), the Catalyst `condition`
+    * filters them, and the DV write groups the matched positions by
+    * file and writes the sidecars executor-side (UUID names: a retried
+    * task leaves an unreferenced orphan, never a clobbered committed
+    * sidecar). The commit is a FULL manifest publish at
+    * `readVersion + 1` under CAS ([[commitNext]]) — a concurrent
+    * commit surfaces as conflict and the delete recomputes. A delete
+    * removing ≥ 25% of the analyzed rows clears the ANALYZE sidecar
+    * ([[decayColStats]]). Time travel to the pre-delete snapshot still
+    * sees every row (DVs are new files; nothing is rewritten). Returns
+    * (committed version, rows deleted); a no-match delete publishes
+    * nothing and returns the current version with 0. */
   def delete(spark: SparkSession, dir: String,
              condition: org.apache.spark.sql.Column,
-             maxRetries: Int = 10): (Int, Long) =
-    mutateWithDvs(spark, dir, condition, rewrite = None, maxRetries)
+             maxRetries: Int = 10): (Int, Long) = {
+    val (v, _, _, deleted) = runMerge(spark, dir, "delete", None,
+      Seq(MergeArm(Some(condition), None)), maxRetries)
+    (v, deleted)
+  }
 
   /** Row-level UPDATE: rows matching `condition` are DV'd out of their
     * files and their updated versions land in fresh data files — BOTH
@@ -4359,132 +4379,22 @@ object GdxSource {
     * sees either every pre-update row or every post-update row, never
     * a torn mix (the Delta UPDATE-with-deletion-vectors shape). `set`
     * maps column name → new-value Column (may reference any snapshot
-    * column); untouched columns carry over. Cost at 100 TB: one
-    * zone-map-scoped scan of candidate files + data files proportional
-    * to MATCHED rows, never a table rewrite. Same CAS/retry contract
-    * as [[delete]]. Returns (committed version, rows updated). */
+    * column; every value reads the OLD row, so `v = w, w = v` swaps);
+    * untouched columns carry over. The engine, its refusals and its
+    * CAS loop are [[mergeGeneral]]'s, as for [[delete]]: values are
+    * cast to their column's type, an unknown SET column raises
+    * IllegalArgumentException before any work, and a NULL key or a
+    * CHECK violation refuses the statement after its two writes and
+    * before its publish (nothing committed). Cost at 100 TB: one scan
+    * of the live files + data files proportional to MATCHED rows,
+    * never a table rewrite. Returns (committed version, rows updated). */
   def update(spark: SparkSession, dir: String,
              condition: org.apache.spark.sql.Column,
              set: Map[String, org.apache.spark.sql.Column],
-             maxRetries: Int = 10): (Int, Long) =
-    mutateWithDvs(spark, dir, condition, rewrite = Some(set), maxRetries)
-
-  /** Shared engine for DELETE (rewrite = None) and UPDATE (rewrite =
-    * Some(set)): scan candidates under the snapshot's full schema,
-    * write DV sidecars for matched positions, optionally write the
-    * rewritten rows as new data files, publish one full manifest under
-    * CAS. */
-  private def mutateWithDvs(spark: SparkSession, dir: String,
-                            condition: org.apache.spark.sql.Column,
-                            rewrite: Option[
-                              Map[String, org.apache.spark.sql.Column]],
-                            maxRetries: Int): (Int, Long) = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val conf0 = driverConf()
-    val sconf = new SerializableHadoopConf(conf0)
-    var attempt = 0
-    while (true) {
-      val readV = decidedHead(dir, conf0)
-      val entries = committedEntries(dir, conf0,
-        if (readV > 0) readV else -1)
-      if (entries.isEmpty) return (readV, 0L)
-      val dvByName = entries.map(e => e.name -> e.dv).toMap
-      val dirStr = dir
-      val tblSchema = committedSchema(dir, conf0,
-        if (readV > 0) readV else -1)
-      val tblColmap = committedColmap(dir, conf0,
-        if (readV > 0) readV else -1)
-      val live = liveFrame(spark, dirStr, entries, tblSchema, sconf,
-        tblColmap)
-      // DELETE consumes the matched frame exactly once (the DV write),
-      // so checkpointing it first is a full-width extra job per
-      // statement; UPDATE's matched rows feed three consumers (DV
-      // write, constraint probe, rewrite), where one materialization
-      // still wins and keeps the consumers consistent under retries.
-      // The UPDATE checkpoint is LAZY: the DV-sidecar write is the
-      // first consumer and drains every partition (a shuffle by file
-      // over the full matched set), so it doubles as the materializing job —
-      // the eager form paid a separate full-width line-parse job per
-      // UPDATE statement for the same blocks.
-      val matched =
-        if (rewrite.isEmpty) live.filter(condition)
-        else live.filter(condition).localCheckpoint(eager = false)
-      val newDvs = writeDvSidecars(
-        matched.select(col("_file"), col("_pos"), lit(2).as("_act")),
-        dirStr, dvByName, sconf)
-      if (newDvs.sidecars.isEmpty) return (readV, 0L)
-      // UPDATE: the matched rows, with `set` applied, land as fresh
-      // data files (same line format, written executor-side with UUID
-      // names — a lost CAS leaves only vacuumable orphans)
-      val rewrittenEntries: Seq[GdxFileEntry] = rewrite match {
-        case None => Seq.empty
-        case Some(set) =>
-          // SQL UPDATE semantics: every SET expression is evaluated
-          // against the OLD row — simultaneous assignment, so
-          // `SET v = w, w = v` SWAPS. All assignments therefore land
-          // in ONE select over the matched snapshot rows; a
-          // sequential withColumn chain would feed each assignment
-          // the previous one's output (and make >4-assignment results
-          // depend on Map iteration order)
-          val byName = set.map { case (k, c) =>
-            k.toLowerCase(java.util.Locale.ROOT) -> c }
-          val unknown = byName.keySet.diff(tblSchema.fieldNames
-            .map(_.toLowerCase(java.util.Locale.ROOT)).toSet)
-          require(unknown.isEmpty, "gdx update: SET references " +
-            s"unknown column(s) ${unknown.mkString(",")}")
-          val updatedRows = matched.drop("_file", "_pos").select(
-            tblSchema.fieldNames.map { f =>
-              byName.get(f.toLowerCase(java.util.Locale.ROOT))
-                .map(_.as(f)).getOrElse(col(f))
-            }: _*)
-          // UPDATE's rewrite path must enforce CHECK constraints like
-          // every other write: ALL constraints are validated in one
-          // aggregate job over the rewritten (matched) rows before any
-          // file lands — a violation aborts with nothing committed
-          // (SQL semantics, NULL passes)
-          val checks = committedConstraints(dirStr, conf0)
-          if (checks.nonEmpty) {
-            val aggs = checks.map { case (n, sql) =>
-              count(when(not(coalesce(expr(sql), lit(true))), 1)).as(n) }
-            val counts = updatedRows.agg(aggs.head, aggs.tail: _*).head()
-            checks.zipWithIndex.foreach { case ((n, sql), i) =>
-              val bad = counts.getLong(i)
-              if (bad > 0) throw new GdxConstraintViolationException(
-                s"gdx update: $bad updated row(s) would violate CHECK " +
-                  s"constraint $n ($sql)")
-            }
-          }
-          writeDataFiles(updatedRows, dirStr, tblSchema, sconf,
-            tblColmap)
-      }
-      val dvFor = newDvs.sidecars.toMap
-      val updated = entries.map(e =>
-        dvFor.get(e.name).map(d => e.copy(dv = Some(d))).getOrElse(e)) ++
-        rewrittenEntries
-      // CAS publish of the full manifest at readV + 1 (schema and
-      // constraints carried)
-      val lines = headerLines(tblSchema,
-        committedConstraints(dirStr, conf0), tblColmap,
-        committedPartitionCol(dirStr, conf0)) ++
-        updated.sortBy(_.name).map(_.manifestLine)
-      val base = new Path(dir)
-      val fs = base.getFileSystem(conf0)
-      val published = publishExclusive(fs, conf0,
-        manifestFor(dir, readV + 1), lines)
-      if (published) {
-        writeLines(fs, manifest(dir), lines)
-        val touched = newDvs.deleted
-        // only a DELETE removes rows (UPDATE rewrites them 1:1) —
-        // a large one invalidates the ANALYZE sidecar
-        if (rewrite.isEmpty) decayColStats(dirStr, conf0, touched)
-        return (readV + 1, touched)
-      }
-      attempt += 1 // lost the race; orphan sidecars/files await vacuum
-      if (attempt > maxRetries) throw new GdxConcurrentModificationException(
-        s"gdx delete/update: lost the publish race $maxRetries times on $dir")
-    }
-    (-1, -1L) // unreachable
+             maxRetries: Int = 10): (Int, Long) = {
+    val (v, _, updated, _) = runMerge(spark, dir, "update", None,
+      Seq(MergeArm(Some(condition), Some(set.toSeq))), maxRetries)
+    (v, updated)
   }
 
   /** [[writeDvSidecars]]'s outcome: the new sidecar of every file
@@ -4559,10 +4469,11 @@ object GdxSource {
   }
 
   /** GENERAL MERGE — the full ANSI/Delta clause matrix over a GDX
-    * table, built on the same DV + rewrite + CAS substrate as
-    * [[update]]/[[delete]] (reference analogue: the refresh-upsert in
+    * table (reference analogue: the refresh-upsert in
     * `/root/reference/src/transform.py:31-38`, generalized to the
     * conditional multi-clause statement a warehouse MERGE provides).
+    * Its engine ([[runMerge]]) is also the one [[update]] and
+    * [[delete]] run on, as target-only statements.
     *
     * `source` must arrive with every column renamed `__s_<name>`;
     * `onSql` and each clause's condition/assignment-value SQL reference
@@ -4577,13 +4488,15 @@ object GdxSource {
     * (INSERT), target-only rows walk `notMatchedBySource`; a row whose
     * branch has no applicable clause is untouched. An applied UPDATE
     * or DELETE removes the old image via a deletion-vector position;
-    * UPDATE and INSERT images land in fresh data files; BOTH sides
-    * publish in ONE CAS'd manifest commit, so readers see the entire
-    * merge or none of it, and time travel to the pre-merge snapshot
-    * still sees every original row. A target row matched by MORE THAN
-    * ONE source row raises [[GdxMergeCardinalityException]] (the
-    * Delta/ANSI ambiguous-merge error) instead of applying an
-    * arbitrary winner.
+    * UPDATE and INSERT images land in fresh data files, each value
+    * cast to its column's type; BOTH sides publish in ONE CAS'd
+    * manifest commit, so readers see the entire merge or none of it,
+    * and time travel to the pre-merge snapshot still sees every
+    * original row. A target row matched by MORE THAN ONE source row
+    * raises [[GdxMergeCardinalityException]] (the Delta/ANSI
+    * ambiguous-merge error) instead of applying an arbitrary winner.
+    * DELETE clauses removing ≥ 25% of the analyzed rows clear the
+    * ANALYZE sidecar, as a [[delete]] does.
     *
     * Jobs: the source-key pre-scan (one pass), the join (one broadcast
     * job when the target's manifest bytes fit the broadcast threshold),
@@ -4613,6 +4526,46 @@ object GdxSource {
                    maxRetries: Int = 10,
                    staticLo: Option[Long] = None,
                    staticHi: Option[Long] = None): (Int, Long, Long, Long) = {
+    import org.apache.spark.sql.functions.expr
+    def arms(clauses: Seq[GdxMergeClause]): Seq[MergeArm] = clauses.map(c =>
+      MergeArm(c.condSql.map(expr), c.assigns.map(_.map {
+        case (k, v) => k -> expr(v) })))
+    runMerge(spark, dir, "merge", Some(MergeSource(source, expr(onSql),
+      arms(matched), arms(notMatched), pruneKeySql.map(expr), staticLo,
+      staticHi)), arms(notMatchedBySource), maxRetries)
+  }
+
+  /** One clause of [[runMerge]]'s matrix as Columns: a
+    * [[GdxMergeClause]] parsed, or an UPDATE/DELETE statement's own
+    * condition and SET. `assigns` None is a DELETE. */
+  private final case class MergeArm(cond: Option[org.apache.spark.sql.Column],
+      assigns: Option[Seq[(String, org.apache.spark.sql.Column)]])
+
+  /** A MERGE's source side for [[runMerge]]: the `__s_`-renamed source
+    * rows, the ON condition, the MATCHED and NOT MATCHED clauses, and
+    * the zone-map pruning hints (see [[mergeGeneral]]). */
+  private final case class MergeSource(rows: org.apache.spark.sql.DataFrame,
+      on: org.apache.spark.sql.Column, matched: Seq[MergeArm],
+      notMatched: Seq[MergeArm],
+      pruneKey: Option[org.apache.spark.sql.Column],
+      staticLo: Option[Long], staticHi: Option[Long])
+
+  /** The one row-change engine: [[mergeGeneral]] with `source`, and
+    * [[update]]/[[delete]] as TARGET-ONLY statements (`source` None —
+    * no join; every live row takes the NOT MATCHED BY SOURCE branch,
+    * and the clauses name the table's own columns instead of
+    * `__t_<col>`). Classifies each row by its first applicable clause,
+    * writes the UPDATE/INSERT images (gated: NULL keys and CHECK
+    * violations counted by the writer) and the action-coded DVs,
+    * refuses in a fixed order (ambiguous match, NULL key, CHECK) after
+    * both writes, and publishes through [[commitNext]]; a publish
+    * that deleted rows decays the ANALYZE sidecar. `op` names the
+    * statement in its errors. Returns (version, inserted, updated,
+    * deleted). */
+  private def runMerge(spark: SparkSession, dir: String, op: String,
+                       source: Option[MergeSource],
+                       notMatchedBySource: Seq[MergeArm],
+                       maxRetries: Int): (Int, Long, Long, Long) = {
     import org.apache.spark.sql.functions._
     val conf0 = driverConf()
     val sconf = new SerializableHadoopConf(conf0)
@@ -4628,12 +4581,16 @@ object GdxSource {
     // column: the DML rule prefixes source columns `__s_<name>`, so a
     // source column would have to be literally named "_gdx_present"
     // to land on `__s__gdx_present` — still distinct from this
-    val src = source.localCheckpoint(eager = false)
-      .withColumn("__gdx_s_present", lit(true))
+    val src = source.map(ms => ms.copy(rows = ms.rows
+      .localCheckpoint(eager = false)
+      .withColumn("__gdx_s_present", lit(true))))
+    val matched = src.toSeq.flatMap(_.matched)
+    val notMatched = src.toSeq.flatMap(_.notMatched)
+    // a MERGE's clauses name the target's columns `__t_<col>`
+    val tPre = if (source.isDefined) "__t_" else ""
+    val arms = matched ++ notMatched ++ notMatchedBySource
     val root = java.util.Locale.ROOT
-    var attempt = 0
-    while (true) {
-      val readV = decidedHead(dir, conf0)
+    val (v, ins, upd, del) = commitNext(dir, op, maxRetries) { readV =>
       val ver = if (readV > 0) readV else -1
       val entries = committedEntries(dir, conf0, ver)
       val tblSchema = committedSchema(dir, conf0, ver)
@@ -4642,10 +4599,9 @@ object GdxSource {
       // refuse assignment targets outside the snapshot schema loudly,
       // before any work
       val known = tblSchema.fieldNames.map(_.toLowerCase(root)).toSet
-      (matched ++ notMatched ++ notMatchedBySource)
-        .flatMap(_.assigns.getOrElse(Seq.empty)).map(_._1.toLowerCase(root))
+      arms.flatMap(_.assigns.getOrElse(Seq.empty)).map(_._1.toLowerCase(root))
         .find(!known.contains(_)).foreach(c => throw new IllegalArgumentException(
-          s"gdx merge: assignment references unknown column $c"))
+          s"gdx $op: assignment references unknown column $c"))
       // zone-map file pruning: a merge with no NOT-MATCHED-BY-SOURCE
       // branch (NMBS must test EVERY live row) may scope the target
       // scan by the intersection of two key windows — the SOURCE-KEY
@@ -4657,17 +4613,16 @@ object GdxSource {
       // MERGE touches the day's files, not the decade's. Stats-less
       // legacy files always stay candidates (absence means "cannot
       // prune", never "skip").
-      val (cands, carried) =
-        if (notMatchedBySource.nonEmpty ||
-            (pruneKeySql.isEmpty && staticLo.isEmpty && staticHi.isEmpty))
-          (entries, Seq.empty[GdxFileEntry])
-        else {
+      val (cands, carried) = src match {
+        case Some(ms) if notMatchedBySource.isEmpty &&
+            (ms.pruneKey.isDefined || ms.staticLo.isDefined ||
+              ms.staticHi.isDefined) =>
           // one job: each partition folds its keys' min/max and the
           // driver merges them (an aggregate is two jobs under AQE).
           // An empty/all-NULL source key set matches nothing: the fold
           // stays at the inverted window, which carries every file
-          val srcWin: Option[(Long, Long)] = pruneKeySql.map { keySql =>
-            src.select(expr(keySql).cast("long")).rdd.mapPartitions { rs =>
+          val srcWin: Option[(Long, Long)] = ms.pruneKey.map { key =>
+            ms.rows.select(key.cast("long")).rdd.mapPartitions { rs =>
               var lo = Long.MaxValue; var hi = Long.MinValue
               rs.foreach { r =>
                 if (!r.isNullAt(0)) {
@@ -4681,51 +4636,62 @@ object GdxSource {
               case ((lo, hi), (l, h)) => (math.min(lo, l), math.max(hi, h))
             }
           }
-          val lo = math.max(staticLo.getOrElse(Long.MinValue),
+          val lo = math.max(ms.staticLo.getOrElse(Long.MinValue),
             srcWin.map(_._1).getOrElse(Long.MinValue))
-          val hi = math.min(staticHi.getOrElse(Long.MaxValue),
+          val hi = math.min(ms.staticHi.getOrElse(Long.MaxValue),
             srcWin.map(_._2).getOrElse(Long.MaxValue))
           entries.partition(e =>
             e.stats.forall(s => s.minK <= hi && s.maxK >= lo))
-        }
+        case _ => (entries, Seq.empty[GdxFileEntry])
+      }
       val dvByName = cands.map(e => e.name -> e.dv).toMap
-      val target = liveFrame(spark, dir, cands, tblSchema, sconf,
-        tblColmap)
-        .select(col("_file") +: col("_pos") +:
-          tblSchema.fieldNames.map(f => col(f).as("__t_" + f)): _*)
-      val tPresent = col("_file").isNotNull
-      val sPresent = coalesce(col("__gdx_s_present"), lit(false))
-      // index of the first applicable clause of a branch (-1 = none):
-      // a chained when is first-match by construction — clause order
-      // IS the statement's clause order
-      def firstMatch(clauses: Seq[GdxMergeClause])
-          : org.apache.spark.sql.Column =
-        clauses.zipWithIndex
-          .foldRight(lit(-1): org.apache.spark.sql.Column) {
-          case ((c, i), rest) =>
-            when(c.condSql.map(expr(_)).getOrElse(lit(true)), lit(i))
-              .otherwise(rest)
-        }
-      // one materialization of the joined + classified frame; both
-      // writes below (images, then DVs) scan it. The
-      // join keeps only the sides the clause matrix can touch: a
+      val live = liveFrame(spark, dir, cands, tblSchema, sconf, tblColmap)
+      // the join keeps only the sides the clause matrix can touch: a
       // matched-only merge never materializes the unmatched bulk of a
       // large target (inner), INSERT-bearing merges keep unmatched
       // source rows (right), NOT MATCHED BY SOURCE must see every
       // live target row (left/full) — semantics identical, the
       // checkpointed row set is what shrinks
-      val joinType = (notMatched.nonEmpty, notMatchedBySource.nonEmpty) match {
-        case (true, true)   => "full_outer"
-        case (true, false)  => "right_outer"
-        case (false, true)  => "left_outer"
-        case (false, false) => "inner"
+      val (joined, tPresent, sPresent) = src match {
+        case Some(ms) =>
+          val joinType =
+            (notMatched.nonEmpty, notMatchedBySource.nonEmpty) match {
+              case (true, true)   => "full_outer"
+              case (true, false)  => "right_outer"
+              case (false, true)  => "left_outer"
+              case (false, false) => "inner"
+            }
+          (live.select(col("_file") +: col("_pos") +: tblSchema.fieldNames
+            .map(f => col(f).as(tPre + f)): _*).join(ms.rows, ms.on, joinType),
+            col("_file").isNotNull,
+            coalesce(col("__gdx_s_present"), lit(false)))
+        case None => (live, lit(true), lit(false))
       }
-      // LAZY checkpoint: the image write below is its first consumer
-      // and drains every partition (a union of whole-frame filters, no
+      // index of the first applicable clause of a branch (-1 = none):
+      // a chained when is first-match by construction — clause order
+      // IS the statement's clause order
+      def firstMatch(clauses: Seq[MergeArm]): org.apache.spark.sql.Column =
+        clauses.zipWithIndex
+          .foldRight(lit(-1): org.apache.spark.sql.Column) {
+          case ((c, i), rest) =>
+            when(c.cond.getOrElse(lit(true)), lit(i)).otherwise(rest)
+        }
+      // every matched target position (when a matched clause exists)
+      // and every NOT MATCHED BY SOURCE one a clause applies to, with
+      // its action: a position seen twice is a target row matched by
+      // more than one source row, whichever clause applies
+      val dvRows =
+        (if (matched.nonEmpty) tPresent && sPresent else lit(false)) ||
+          col("__b") >= 0
+      // only the rows a write reads: every matched position (the DV
+      // write checks ambiguity on all of them) and every row a clause
+      // applies to. With images to write, one LAZY
+      // checkpoint: the image write below is its first consumer and
+      // drains every partition (a union of whole-frame filters, no
       // limits), so it doubles as the materializing job and the DV
-      // write reads the cached blocks; with no image clause the DV
-      // write is the first consumer and drains every partition itself.
-      val ann = target.join(src, expr(onSql), joinType)
+      // write reads the cached blocks; without images the DV write is
+      // the only consumer and reads the classified rows directly.
+      val acted = joined
         .withColumn("__m",
           when(tPresent && sPresent, firstMatch(matched)).otherwise(-1))
         .withColumn("__n",
@@ -4733,18 +4699,19 @@ object GdxSource {
         .withColumn("__b",
           when(tPresent && !sPresent, firstMatch(notMatchedBySource))
             .otherwise(-1))
-        .localCheckpoint(eager = false)
-      val mUpd = matched.zipWithIndex.collect {
-        case (c, i) if c.assigns.isDefined => i }
-      val bUpd = notMatchedBySource.zipWithIndex.collect {
-        case (c, i) if c.assigns.isDefined => i }
-      def inIdx(c: org.apache.spark.sql.Column, idx: Seq[Int])
-          : org.apache.spark.sql.Column =
+        .filter(dvRows || col("__n") >= 0)
+      val ann = if (arms.forall(_.assigns.isEmpty)) acted
+        else acted.localCheckpoint(eager = false)
+      def inIdx(c: org.apache.spark.sql.Column, clauses: Seq[MergeArm])
+          : org.apache.spark.sql.Column = {
+        val idx = clauses.indices.filter(clauses(_).assigns.isDefined)
         if (idx.isEmpty) lit(false) else idx.map(c === _).reduce(_ || _)
-      val updFlag = inIdx(col("__m"), mUpd) || inIdx(col("__b"), bUpd)
+      }
+      val updFlag = inIdx(col("__m"), matched) ||
+        inIdx(col("__b"), notMatchedBySource)
       // new row images, schema order: SQL simultaneous-assignment
-      // semantics — every value evaluates against the OLD joined row
-      def images(clauses: Seq[GdxMergeClause], act: String,
+      // semantics — every value evaluates against the OLD row
+      def images(clauses: Seq[MergeArm], act: String,
                  fallback: StructField => org.apache.spark.sql.Column)
           : Seq[org.apache.spark.sql.DataFrame] =
         clauses.zipWithIndex.collect {
@@ -4753,14 +4720,14 @@ object GdxSource {
               case (k, v) => k.toLowerCase(root) -> v }.toMap
             ann.filter(col(act) === i).select(tblSchema.fields.map { f =>
               byName.get(f.name.toLowerCase(root))
-                .map(sql => expr(sql).cast(f.dataType).as(f.name))
+                .map(_.cast(f.dataType).as(f.name))
                 .getOrElse(fallback(f).as(f.name))
             }.toSeq: _*)
         }
       val imgs =
-        images(matched, "__m", f => col("__t_" + f.name)) ++
+        images(matched, "__m", f => col(tPre + f.name)) ++
         images(notMatched, "__n", f => lit(null).cast(f.dataType)) ++
-        images(notMatchedBySource, "__b", f => col("__t_" + f.name))
+        images(notMatchedBySource, "__b", f => col(tPre + f.name))
       // the write gates itself: NULL keys (the line format requires
       // a key) and one violation flag per CHECK constraint ride each
       // image as trailing columns the writer counts and never writes
@@ -4774,13 +4741,6 @@ object GdxSource {
                 not(coalesce(expr(sql), lit(true))).as(s"__gdx_chk$i")
               }: _*), dir, tblSchema, sconf, tblColmap, "", gated = true)
         }
-      // every matched target position (when a matched clause exists)
-      // and every NOT MATCHED BY SOURCE one a clause applies to, with
-      // its action: a position seen twice is a target row matched by
-      // more than one source row, whichever clause applies
-      val dvRows =
-        (if (matched.nonEmpty) tPresent && sPresent else lit(false)) ||
-          col("__b") >= 0
       val newDvs = writeDvSidecars(ann.filter(dvRows).select(col("_file"),
         col("_pos"), when(updFlag, 1)
           .when(col("__m") >= 0 || col("__b") >= 0, 2).otherwise(0)),
@@ -4791,36 +4751,31 @@ object GdxSource {
         "gdx merge: the ON condition matched a target row to more " +
           "than one source row — an UPDATE/DELETE would be ambiguous")
       if (gate(0) > 0) throw new IllegalArgumentException(
-        s"gdx merge: ${gate(0)} merged row(s) have a NULL key " +
+        s"gdx $op: ${gate(0)} ${op}d row(s) have a NULL key " +
           s"(${tblSchema.fields.head.name}) — the key column is required")
       checks.zipWithIndex.foreach { case ((n, sql), i) =>
         val bad = gate(i + 1)
         if (bad > 0) throw new GdxConstraintViolationException(
-          s"gdx merge: $bad merged row(s) would violate CHECK " +
+          s"gdx $op: $bad ${op}d row(s) would violate CHECK " +
             s"constraint $n ($sql)")
       }
       if (rewrittenEntries.isEmpty && newDvs.sidecars.isEmpty)
-        return (readV, 0L, 0L, 0L)
-      val (nUpd, nDel) = (newDvs.updated, newDvs.deleted)
-      val nIns = rewrittenEntries.flatMap(_.stats).map(_.rows).sum - nUpd
-      val dvFor = newDvs.sidecars.toMap
-      val updated = carried ++ cands.map(e =>
-        dvFor.get(e.name).map(d => e.copy(dv = Some(d))).getOrElse(e)) ++
-        rewrittenEntries
-      val lines = headerLines(tblSchema, checks, tblColmap,
-        committedPartitionCol(dir, conf0, ver)) ++
-        updated.sortBy(_.name).map(_.manifestLine)
-      val base = new Path(dir)
-      val fs = base.getFileSystem(conf0)
-      if (publishExclusive(fs, conf0, manifestFor(dir, readV + 1), lines)) {
-        writeLines(fs, manifest(dir), lines)
-        return (readV + 1, nIns, nUpd, nDel)
+        Left((readV, 0L, 0L, 0L))
+      else {
+        val (nUpd, nDel) = (newDvs.updated, newDvs.deleted)
+        val nIns = rewrittenEntries.flatMap(_.stats).map(_.rows).sum - nUpd
+        val dvFor = newDvs.sidecars.toMap
+        val updated = carried ++ cands.map(e =>
+          dvFor.get(e.name).map(d => e.copy(dv = Some(d))).getOrElse(e)) ++
+          rewrittenEntries
+        Right((headerLines(tblSchema, checks, tblColmap,
+          committedPartitionCol(dir, conf0, ver)) ++
+          updated.sortBy(_.name).map(_.manifestLine),
+          (readV + 1, nIns, nUpd, nDel)))
       }
-      attempt += 1 // lost the race; orphan sidecars/files await vacuum
-      if (attempt > maxRetries) throw new GdxConcurrentModificationException(
-        s"gdx merge: lost the publish race $maxRetries times on $dir")
     }
-    (-1, -1L, -1L, -1L) // unreachable
+    decayColStats(dir, conf0, del)
+    (v, ins, upd, del)
   }
 
   /** The snapshot's LIVE rows as a DataFrame of (_file, _pos, cols...):
@@ -5166,7 +5121,6 @@ object GdxSource {
   def restoreSnapshot(dir: String, version: Int,
                       maxRetries: Int = 10): Int = {
     val conf = driverConf()
-    val fs = new Path(dir).getFileSystem(conf)
     val entries = committedEntries(dir, conf, version) // loud if dropped
     val schemaAt = committedSchema(dir, conf, version)
     // the restored snapshot's OWN constraints and column mapping come
@@ -5176,18 +5130,7 @@ object GdxSource {
       committedColmap(dir, conf, version),
       committedPartitionCol(dir, conf, version)) ++
       entries.map(_.manifestLine)
-    var attempt = 0
-    while (true) {
-      val v = (listVersions(dir, conf) :+ 0).max + 1
-      if (publishExclusive(fs, conf, manifestFor(dir, v), lines)) {
-        writeLines(fs, manifest(dir), lines)
-        return v
-      }
-      attempt += 1
-      if (attempt > maxRetries) throw new GdxConcurrentModificationException(
-        s"gdx restore: lost the publish race $maxRetries times on $dir")
-    }
-    -1 // unreachable
+    commitNext(dir, "restore", maxRetries)(readV => Right((lines, readV + 1)))
   }
 
   /** DESCRIBE HISTORY: one row per retained snapshot — version, commit
@@ -5567,19 +5510,14 @@ object GdxSource {
     * Existing files' rows read as NULL for the new column; subsequent
     * writes must carry it. Append-only by construction: the classic
     * (k, v) prefix — and with it zone maps, pushdown, and metadata
-    * aggregates — survives every evolution. CAS + retry, same loop as
-    * [[delete]]. Returns the committed version. */
+    * aggregates — survives every evolution. CAS + retry through
+    * [[commitNext]]. Returns the committed version. */
   def addColumn(dir: String, name: String, dataType: DataType,
                 maxRetries: Int = 10,
                 default: Option[String] = None): Int = {
     val conf = driverConf()
-    val fs = new Path(dir).getFileSystem(conf)
-    var attempt = 0
-    while (true) {
-      val vs = listVersions(dir, conf)
-      require(vs.nonEmpty, s"gdx addColumn: no snapshot under $dir")
-      decideStaleTxn(dir, conf, vs.max) // claim-aware maintenance
-      val readV = vs.max
+    commitNext(dir, "addColumn", maxRetries) { readV =>
+      require(readV > 0, s"gdx addColumn: no snapshot under $dir")
       val cur = committedSchema(dir, conf, readV)
       require(!cur.fieldNames.contains(name),
         s"gdx addColumn: column $name already exists")
@@ -5599,15 +5537,8 @@ object GdxSource {
         committedConstraints(dir, conf, readV), colmap,
         committedPartitionCol(dir, conf, readV)) ++
         committedEntries(dir, conf, readV).map(_.manifestLine)
-      if (publishExclusive(fs, conf, manifestFor(dir, readV + 1), lines)) {
-        writeLines(fs, manifest(dir), lines)
-        return readV + 1
-      }
-      attempt += 1
-      if (attempt > maxRetries) throw new GdxConcurrentModificationException(
-        s"gdx addColumn: lost the publish race $maxRetries times on $dir")
+      Right((lines, readV + 1))
     }
-    -1 // unreachable
   }
 
   /** ADD A NESTED FIELD to an existing struct column — a METADATA-ONLY
@@ -5626,16 +5557,11 @@ object GdxSource {
   def addNestedField(dir: String, path: String, fieldName: String,
                      dataType: DataType, maxRetries: Int = 10): Int = {
     val conf = driverConf()
-    val fs = new Path(dir).getFileSystem(conf)
     val parts = path.split('.')
     require(parts.nonEmpty && fieldName.nonEmpty,
       "gdx addNestedField: empty path or field name")
-    var attempt = 0
-    while (true) {
-      val vs = listVersions(dir, conf)
-      require(vs.nonEmpty, s"gdx addNestedField: no snapshot under $dir")
-      decideStaleTxn(dir, conf, vs.max) // claim-aware maintenance
-      val readV = vs.max
+    commitNext(dir, "addNestedField", maxRetries) { readV =>
+      require(readV > 0, s"gdx addNestedField: no snapshot under $dir")
       val cur = committedSchema(dir, conf, readV)
       def grow(st: StructType, depth: Int): StructType =
         if (depth == parts.length) {
@@ -5683,15 +5609,8 @@ object GdxSource {
         committedColmap(dir, conf, readV),
         committedPartitionCol(dir, conf, readV)) ++
         committedEntries(dir, conf, readV).map(_.manifestLine)
-      if (publishExclusive(fs, conf, manifestFor(dir, readV + 1), lines)) {
-        writeLines(fs, manifest(dir), lines)
-        return readV + 1
-      }
-      attempt += 1
-      if (attempt > maxRetries) throw new GdxConcurrentModificationException(
-        s"gdx addNestedField: lost the publish race $maxRetries times")
+      Right((lines, readV + 1))
     }
-    -1 // unreachable
   }
 
   /** RENAME A NESTED FIELD — metadata-only like the top-level rename,
@@ -5708,17 +5627,12 @@ object GdxSource {
   def renameNestedField(dir: String, path: String, to: String,
                         maxRetries: Int = 10): Int = {
     val conf = driverConf()
-    val fs = new Path(dir).getFileSystem(conf)
     val parts = path.split('.')
     require(parts.length >= 2,
       s"gdx renameNestedField: '$path' does not address a nested " +
         "field (use renameColumn for top-level columns)")
-    var attempt = 0
-    while (true) {
-      val vs = listVersions(dir, conf)
-      require(vs.nonEmpty, s"gdx renameNestedField: no snapshot under $dir")
-      decideStaleTxn(dir, conf, vs.max)
-      val readV = vs.max
+    val v = commitNext(dir, "renameNestedField", maxRetries) { readV =>
+      require(readV > 0, s"gdx renameNestedField: no snapshot under $dir")
       val cur = committedSchema(dir, conf, readV)
       def rename(st: StructType, depth: Int): StructType = {
         val i = st.fieldNames.indexWhere(
@@ -5759,17 +5673,11 @@ object GdxSource {
         committedColmap(dir, conf, readV),
         committedPartitionCol(dir, conf, readV)) ++
         committedEntries(dir, conf, readV).map(_.manifestLine)
-      if (publishExclusive(fs, conf, manifestFor(dir, readV + 1), lines)) {
-        writeLines(fs, manifest(dir), lines)
-        reconcileClusterSidecar(dir, path,
-          Some((parts.dropRight(1) :+ to).mkString(".")))
-        return readV + 1
-      }
-      attempt += 1
-      if (attempt > maxRetries) throw new GdxConcurrentModificationException(
-        s"gdx renameNestedField: lost the publish race $maxRetries times")
+      Right((lines, readV + 1))
     }
-    -1 // unreachable
+    reconcileClusterSidecar(dir, path,
+      Some((parts.dropRight(1) :+ to).mkString(".")))
+    v
   }
 
   /** PARTITION-SPEC EVOLUTION — change the table's layout without
@@ -5797,14 +5705,8 @@ object GdxSource {
       s"gdx evolvePartitionSpec: '$newSpec' is one spec, not a history")
     val ns = parsePartSpec(newSpec)
     val conf = driverConf()
-    val fs = new Path(dir).getFileSystem(conf)
-    var attempt = 0
-    while (true) {
-      val vs = listVersions(dir, conf)
-      require(vs.nonEmpty, s"gdx evolvePartitionSpec: no snapshot " +
-        s"under $dir")
-      decideStaleTxn(dir, conf, vs.max) // claim-aware maintenance
-      val readV = vs.max
+    val v = commitNext(dir, "evolvePartitionSpec", maxRetries) { readV =>
+      require(readV > 0, s"gdx evolvePartitionSpec: no snapshot under $dir")
       val cur = committedSchema(dir, conf, readV)
       val f = cur.fields.find(_.name.equalsIgnoreCase(ns.col))
         .getOrElse(throw new IllegalArgumentException(
@@ -5825,19 +5727,12 @@ object GdxSource {
         committedConstraints(dir, conf, readV),
         committedColmap(dir, conf, readV), Some(newRaw)) ++
         committedEntries(dir, conf, readV).map(_.manifestLine)
-      if (publishExclusive(fs, conf, manifestFor(dir, readV + 1), lines)) {
-        writeLines(fs, manifest(dir), lines)
-        // a partition spec and a CLUSTER BY cannot coexist (setClusterBy
-        // refuses partitioned tables; guard the reverse order too)
-        clearClusterBy(dir)
-        return readV + 1
-      }
-      attempt += 1
-      if (attempt > maxRetries) throw new GdxConcurrentModificationException(
-        s"gdx evolvePartitionSpec: lost the publish race $maxRetries " +
-          s"times on $dir")
+      Right((lines, readV + 1))
     }
-    -1 // unreachable
+    // a partition spec and a CLUSTER BY cannot coexist (setClusterBy
+    // refuses partitioned tables; guard the reverse order too)
+    clearClusterBy(dir)
+    v
   }
 
   /** Constraints whose expression references `col` — rename/drop must
@@ -5918,13 +5813,8 @@ object GdxSource {
       !to.contains(':') && !to.contains(','),
       s"gdx renameColumn: invalid target name '$to'")
     val conf = driverConf()
-    val fs = new Path(dir).getFileSystem(conf)
-    var attempt = 0
-    while (true) {
-      val vs = listVersions(dir, conf)
-      require(vs.nonEmpty, s"gdx renameColumn: no snapshot under $dir")
-      decideStaleTxn(dir, conf, vs.max) // claim-aware maintenance
-      val readV = vs.max
+    val v = commitNext(dir, "renameColumn", maxRetries) { readV =>
+      require(readV > 0, s"gdx renameColumn: no snapshot under $dir")
       val cur = committedSchema(dir, conf, readV)
       require(!cur.fieldNames.exists(_.equalsIgnoreCase(to)),
         s"gdx renameColumn: column $to already exists")
@@ -5937,16 +5827,10 @@ object GdxSource {
         committedColmap(dir, conf, readV),
         partRawWithout(dir, conf, readV, from)) ++
         committedEntries(dir, conf, readV).map(_.manifestLine)
-      if (publishExclusive(fs, conf, manifestFor(dir, readV + 1), lines)) {
-        writeLines(fs, manifest(dir), lines)
-        reconcileClusterSidecar(dir, from, Some(to))
-        return readV + 1
-      }
-      attempt += 1
-      if (attempt > maxRetries) throw new GdxConcurrentModificationException(
-        s"gdx renameColumn: lost the publish race $maxRetries times")
+      Right((lines, readV + 1))
     }
-    -1 // unreachable
+    reconcileClusterSidecar(dir, from, Some(to))
+    v
   }
 
   /** DROP COLUMN — a METADATA-ONLY commit: the field leaves `#schema`
@@ -5960,13 +5844,8 @@ object GdxSource {
   def dropColumn(spark: SparkSession, dir: String, name: String,
                  maxRetries: Int = 10): Int = {
     val conf = driverConf()
-    val fs = new Path(dir).getFileSystem(conf)
-    var attempt = 0
-    while (true) {
-      val vs = listVersions(dir, conf)
-      require(vs.nonEmpty, s"gdx dropColumn: no snapshot under $dir")
-      decideStaleTxn(dir, conf, vs.max) // claim-aware maintenance
-      val readV = vs.max
+    val v = commitNext(dir, "dropColumn", maxRetries) { readV =>
+      require(readV > 0, s"gdx dropColumn: no snapshot under $dir")
       val cur = committedSchema(dir, conf, readV)
       val (idx, _) = mappableColumn(spark, dir, readV, conf,
         "dropColumn", name)
@@ -5981,16 +5860,10 @@ object GdxSource {
         committedConstraints(dir, conf, readV), Some(newColmap),
         partRawWithout(dir, conf, readV, name)) ++
         committedEntries(dir, conf, readV).map(_.manifestLine)
-      if (publishExclusive(fs, conf, manifestFor(dir, readV + 1), lines)) {
-        writeLines(fs, manifest(dir), lines)
-        reconcileClusterSidecar(dir, name, None)
-        return readV + 1
-      }
-      attempt += 1
-      if (attempt > maxRetries) throw new GdxConcurrentModificationException(
-        s"gdx dropColumn: lost the publish race $maxRetries times")
+      Right((lines, readV + 1))
     }
-    -1 // unreachable
+    reconcileClusterSidecar(dir, name, None)
+    v
   }
 
   /** DROP A NESTED FIELD — ERA-CORRECT BY REWRITE. Struct cells are
@@ -6114,13 +5987,8 @@ object GdxSource {
       "gdx addConstraint: expression must be a single line " +
         "(manifest header format)")
     val conf = driverConf()
-    val fs = new Path(dir).getFileSystem(conf)
-    var attempt = 0
-    while (true) {
-      val vs = listVersions(dir, conf)
-      require(vs.nonEmpty, s"gdx addConstraint: no snapshot under $dir")
-      decideStaleTxn(dir, conf, vs.max) // claim-aware maintenance
-      val readV = vs.max
+    commitNext(dir, "addConstraint", maxRetries) { readV =>
+      require(readV > 0, s"gdx addConstraint: no snapshot under $dir")
       val cur = committedConstraints(dir, conf, readV)
       require(!cur.exists(_._1 == name),
         s"gdx addConstraint: constraint $name already exists")
@@ -6141,15 +6009,8 @@ object GdxSource {
         committedColmap(dir, conf, readV),
         committedPartitionCol(dir, conf, readV)) ++
         committedEntries(dir, conf, readV).map(_.manifestLine)
-      if (publishExclusive(fs, conf, manifestFor(dir, readV + 1), lines)) {
-        writeLines(fs, manifest(dir), lines)
-        return readV + 1
-      }
-      attempt += 1
-      if (attempt > maxRetries) throw new GdxConcurrentModificationException(
-        s"gdx addConstraint: lost the publish race $maxRetries times")
+      Right((lines, readV + 1))
     }
-    -1 // unreachable
   }
 
   /** Drop a CHECK constraint — one metadata commit. Returns the
@@ -6157,13 +6018,8 @@ object GdxSource {
   def dropConstraint(dir: String, name: String,
                      maxRetries: Int = 10): Int = {
     val conf = driverConf()
-    val fs = new Path(dir).getFileSystem(conf)
-    var attempt = 0
-    while (true) {
-      val vs = listVersions(dir, conf)
-      require(vs.nonEmpty, s"gdx dropConstraint: no snapshot under $dir")
-      decideStaleTxn(dir, conf, vs.max) // claim-aware maintenance
-      val readV = vs.max
+    commitNext(dir, "dropConstraint", maxRetries) { readV =>
+      require(readV > 0, s"gdx dropConstraint: no snapshot under $dir")
       val cur = committedConstraints(dir, conf, readV)
       require(cur.exists(_._1 == name),
         s"gdx dropConstraint: no constraint named $name")
@@ -6172,15 +6028,8 @@ object GdxSource {
         committedColmap(dir, conf, readV),
         committedPartitionCol(dir, conf, readV)) ++
         committedEntries(dir, conf, readV).map(_.manifestLine)
-      if (publishExclusive(fs, conf, manifestFor(dir, readV + 1), lines)) {
-        writeLines(fs, manifest(dir), lines)
-        return readV + 1
-      }
-      attempt += 1
-      if (attempt > maxRetries) throw new GdxConcurrentModificationException(
-        s"gdx dropConstraint: lost the publish race $maxRetries times")
+      Right((lines, readV + 1))
     }
-    -1 // unreachable
   }
 
   /** A CAPTURED constraint set, compiled against the WRITE schema

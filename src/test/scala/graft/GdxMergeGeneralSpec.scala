@@ -448,4 +448,84 @@ class GdxMergeGeneralSpec extends SparkSuite {
         (4L, "D", 0.7, 41L)))
     } finally s.sql("DROP TABLE IF EXISTS gm_st")
   }
+
+  test("UPDATE refuses a NULL key like MERGE does: the API and SQL " +
+      "UPDATE name the key column and commit nothing") {
+    import graft.sources.GdxSource
+    import org.apache.spark.sql.functions.{col, lit}
+    val dir = freshDir("updnull")
+    s.sql(s"""CREATE TABLE gm_un (k BIGINT, v STRING, w BIGINT)
+      USING $fmt OPTIONS (path '$dir')""")
+    try {
+      s.sql("INSERT INTO gm_un VALUES (1,'a',1),(2,'b',2)")
+      def namesKey(e: Throwable): Boolean = Iterator.iterate(e)(_.getCause)
+        .takeWhile(_ != null).take(8).exists(c =>
+          c.isInstanceOf[IllegalArgumentException] &&
+            c.getMessage.contains("1 updated row(s) have a NULL key (k)"))
+      val api = refusedAfterWrites(dir, "gm_un")(GdxSource.update(s, dir,
+        col("k") === 2L, Map("k" -> lit(null).cast("long"))))
+      assert(namesKey(api), api.getMessage)
+      val sql = refusedAfterWrites(dir, "gm_un")(
+        s.sql("UPDATE gm_un SET k = NULL WHERE k = 1"))
+      assert(namesKey(sql), sql.getMessage)
+      assert(rows("gm_un") === Seq((1L, "a", 1L), (2L, "b", 2L)))
+    } finally s.sql("DROP TABLE IF EXISTS gm_un")
+  }
+
+  test("UPDATE casts SET values to the column type, as MERGE's SET " +
+      "does") {
+    import graft.sources.GdxSource
+    import org.apache.spark.sql.functions.{col, lit}
+    val dir = freshDir("updcast")
+    s.sql(s"""CREATE TABLE gm_uc (k BIGINT, v STRING, w BIGINT)
+      USING $fmt OPTIONS (path '$dir')""")
+    try {
+      s.sql("INSERT INTO gm_uc VALUES (1,'a',1),(2,'b',2),(3,'c',3)")
+      // an INT literal into STRING v and into BIGINT w
+      assert(GdxSource.update(s, dir, col("k") === 1L,
+        Map("v" -> lit(5)))._2 === 1L)
+      assert(GdxSource.update(s, dir, col("k") === 2L,
+        Map("w" -> lit(7)))._2 === 1L)
+      s.sql("""CREATE OR REPLACE TEMP VIEW gm_ucsrc AS
+        SELECT * FROM VALUES (3L) AS t(k)""")
+      s.sql("""MERGE INTO gm_uc t USING gm_ucsrc s ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET v = 5""")
+      assert(rows("gm_uc") === Seq((1L, "5", 1L), (2L, "b", 7L),
+        (3L, "5", 3L)))
+    } finally s.sql("DROP TABLE IF EXISTS gm_uc")
+  }
+
+  test("DELETE runs in 1 Spark job and UPDATE in 2, a CHECK riding " +
+      "UPDATE's image write") {
+    val dir = freshDir("dmljobs")
+    s.sql(s"""CREATE TABLE gm_dj (k BIGINT, v STRING, w BIGINT)
+      USING $fmt OPTIONS (path '$dir')""")
+    try {
+      s.sql("INSERT INTO gm_dj VALUES (1,'a',1),(2,'b',1)")
+      s.sql("INSERT INTO gm_dj VALUES (3,'c',1),(4,'d',1)")
+      s.sql("INSERT INTO gm_dj VALUES (5,'e',1),(6,'f',1)")
+      // warm: one statement of each shape before counting
+      s.sql("UPDATE gm_dj SET w = w + 1 WHERE k = 1").collect()
+      s.sql("DELETE FROM gm_dj WHERE k = 99").collect()
+      // the DV write
+      val (d, dJobs) = jobsDuring(
+        s.sql("DELETE FROM gm_dj WHERE k = 2").collect().head)
+      assert(d.getLong(1) === 1L)
+      assert(dJobs.size <= 1, dJobs.mkString("\n"))
+      // the image write, then the DV write
+      val (u, uJobs) = jobsDuring(
+        s.sql("UPDATE gm_dj SET v = 'x' WHERE k >= 5").collect().head)
+      assert(u.getLong(1) === 2L)
+      assert(uJobs.size <= 2, uJobs.mkString("\n"))
+      // the constraint's violation flags ride the image write: no
+      // separate aggregate job
+      s.sql("ALTER TABLE gm_dj ADD CONSTRAINT w_pos CHECK (w > 0)")
+      val (c, cJobs) = jobsDuring(
+        s.sql("UPDATE gm_dj SET w = w + 1 WHERE k = 3").collect().head)
+      assert(c.getLong(1) === 1L)
+      assert(cJobs.size <= 2, cJobs.mkString("\n"))
+      assert(rows("gm_dj") === Seq((1L, "a", 2L), (3L, "c", 2L),
+        (4L, "d", 1L), (5L, "x", 1L), (6L, "x", 1L)))
+    } finally s.sql("DROP TABLE IF EXISTS gm_dj")
+  }
 }

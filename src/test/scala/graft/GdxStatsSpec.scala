@@ -214,6 +214,18 @@ class GdxStatsSpec extends SparkSuite {
     assert(est.isEmpty || est.get.toLong >= 400L,
       s"stale NDV still steering the estimate: $est")
 
+    // a MERGE's DELETE clauses decay it by the same rule: 20 of 40
+    // analyzed rows deleted clears it
+    val dirM = freshDir("mergedecay")
+    seed(dirM, 40)
+    GdxSource.analyzeTable(spark, dirM)
+    val (_, _, _, merged) = GdxSource.mergeGeneral(spark, dirM,
+      spark.range(20L).select(col("id").as("__s_k")), "__t_k = __s_k",
+      matched = Seq(graft.sources.GdxMergeClause(None, None)),
+      notMatched = Nil, notMatchedBySource = Nil)
+    assert(merged === 20L)
+    assert(GdxSource.readColStats(dirM, conf).isEmpty)
+
     // version-drift guard: the sidecar stops serving once the
     // snapshot moves past the configured ceiling
     val dir2 = freshDir("drift")
