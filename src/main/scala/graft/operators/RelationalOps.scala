@@ -3665,13 +3665,15 @@ object RelationalOps extends QueryModule {
     // load — a fact APPEND, a dimension LWW MERGE, and a dimension
     // DELETE staged in ONE `BEGIN TRANSACTION ... COMMIT` block and
     // published as the format's single-PUT decision. A table with a
-    // staged mutation commits as a conflict-checked restatement of its
-    // BASIS snapshot (the version current when the mutation was first
-    // staged): the second block pins the abort path — a concurrent
-    // writer moves the dimension past the basis, COMMIT throws
-    // GdxConcurrentModificationException, NEITHER table shows the
-    // transaction, the concurrent row survives, and ROLLBACK closes
-    // the failed transaction cleanly (`conflict_aborts`). Staged ops
+    // staged mutation commits as a conflict-checked DV commit at
+    // basis + 1 over the transaction's entry list (the BASIS being the
+    // version current when the mutation was first staged; each staged
+    // statement runs on the plain DML engine): the second block pins
+    // the abort path — a concurrent writer moves the dimension past
+    // the basis, COMMIT throws GdxConcurrentModificationException,
+    // NEITHER table shows the transaction, the concurrent row
+    // survives, and ROLLBACK closes the failed transaction cleanly
+    // (`conflict_aborts`). Staged ops
     // apply in stage order over the transaction-local view (the
     // DELETE sees the MERGE's rows), and nothing staged is visible
     // anywhere before COMMIT (`invisible_before`). At 100 TB this is
@@ -3738,9 +3740,10 @@ object RelationalOps extends QueryModule {
         c.sql("ROLLBACK") // the failed COMMIT left the txn open
         // third transaction: the GENERAL WHEN-matrix stages too —
         // conditional MATCHED DELETE + MATCHED UPDATE + NOT MATCHED
-        // INSERT fold onto the basis as one conflict-checked
-        // restatement — and SAVEPOINT/ROLLBACK TO discard exactly the
-        // staged suffix (the poison UPDATE), keeping the merge
+        // INSERT commit as a DV commit at basis + 1 over the
+        // transaction's entry list — and SAVEPOINT/ROLLBACK TO discard
+        // exactly the staged suffix (the poison UPDATE), keeping the
+        // merge
         c.sql("BEGIN TRANSACTION")
         c.sql(s"""MERGE INTO $cat.lab.dim t
           USING (SELECT k, v FROM global_temp.${view}_c

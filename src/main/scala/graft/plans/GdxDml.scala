@@ -339,12 +339,14 @@ case class GdxMergeGeneralCommand(path: String, source: LogicalPlan,
   override def run(spark: SparkSession): Seq[Row] = {
     val raw = ColumnBridge.ofRows(spark, source)
     if (GdxSqlTxn.isOpen(spark)) {
-      // stage the WHEN matrix: folded onto the transaction's basis at
-      // COMMIT as a conflict-checked restatement (GdxSqlTxn); the
-      // metrics are unknowable until the one decision lands
+      // stage the WHEN matrix: at COMMIT it runs on the same engine
+      // over the transaction's entry list, a conflict-checked DV commit
+      // at basis + 1 (GdxSqlTxn); the metrics are unknowable until the
+      // one decision lands
       GdxSqlTxn.stageMergeGeneral(spark, path,
         if (table.nonEmpty) table else path, raw, onSql,
-        matched, notMatched, notMatchedBySource)
+        matched, notMatched, notMatchedBySource, pruneKey, staticLo,
+        staticHi)
       return Seq(Row(-1L, -1L, -1L, -1L))
     }
     val src = raw.toDF(raw.columns.map("__s_" + _).toSeq: _*)

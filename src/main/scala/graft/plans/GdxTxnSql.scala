@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** SQL FRONT DOOR for MULTI-TABLE TRANSACTIONS — the warehouse
@@ -39,13 +40,18 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *    RESOLVED TO ITS SNAPSHOT AT STAGE TIME ([[GdxSqlTxn
   *    .pinSnapshots]]) — a source mutated between stage and COMMIT
   *    does not change what commits.
-  *  - A staged MUTATION (DELETE/MERGE) reads its target at the
-  *    version current when it was first staged (the transaction's
-  *    BASIS for that table) and the transaction commits as a full
-  *    restatement of that table, CONFLICT-CHECKED: a concurrent
-  *    commit that moved the table past the basis aborts the whole
-  *    transaction loudly (GdxConcurrentModificationException) — no
-  *    writer's rows are ever silently erased. Pure-INSERT tables
+  *  - A staged MUTATION (DELETE/UPDATE/MERGE) reads its target at
+  *    the version current when it was first staged (the
+  *    transaction's BASIS for that table), and the table commits as
+  *    a DV commit at basis + 1 over the transaction's entry list: at
+  *    COMMIT each staged statement runs on the one row-change engine
+  *    ([[graft.sources.GdxSource.rowChange]] — the plain statements'
+  *    pruning, deletion vectors, gated image write and refusals) over
+  *    the entries the statements before it left, so untouched files
+  *    are carried by reference. The claim is CONFLICT-CHECKED: a
+  *    concurrent commit that moved the table past the basis aborts
+  *    the whole transaction loudly (GdxConcurrentModificationException)
+  *    — no writer's rows are ever silently erased. Pure-INSERT tables
   *    stage as appends and stay conflict-free (appends commute).
   *  - Within the transaction, staged statements apply IN STAGE ORDER
   *    over the transaction-local view of each table (an INSERT staged
@@ -81,27 +87,12 @@ object GdxSqlTxn {
   }
   private[plans] final case class StagedInsert(dir: String, table: String,
       plan: LogicalPlan) extends Staged
-  private[plans] final case class StagedDelete(dir: String, table: String,
-      condSql: String) extends Staged
-  /** `UPDATE ... SET ... WHERE ...`, staged: SQL simultaneous-
-    * assignment semantics — every SET expression evaluates against
-    * the PRE-update row, so `SET v = w, w = v` swaps (the same
-    * contract the non-staged UPDATE's one-select rewrite keeps). */
-  private[plans] final case class StagedUpdate(dir: String, table: String,
-      condSql: String, set: Seq[(String, String)]) extends Staged
-  /** A MERGE (the WHEN-matrix), staged: `plan` is the
-    * (snapshot-pinned, un-prefixed) source frame; the clause SQL
-    * references `__t_<col>`/`__s_<col>` names exactly as
-    * [[graft.sources.GdxSource.mergeGeneral]]'s matrix does. At COMMIT
-    * the matrix folds onto the transaction-local view as a
-    * RESTATEMENT (first-match clause order, SQL simultaneous-
-    * assignment images, ambiguous-match abort) — DV mechanics are the
-    * non-staged path's optimization, not part of the semantics. */
-  private[plans] final case class StagedMergeGeneral(dir: String,
-      table: String, plan: LogicalPlan, onSql: String,
-      matched: Seq[graft.sources.GdxMergeClause],
-      notMatched: Seq[graft.sources.GdxMergeClause],
-      notMatchedBySource: Seq[graft.sources.GdxMergeClause])
+  /** A staged DELETE, UPDATE or MERGE: `change` builds its statement
+    * for the row-change engine at COMMIT. It closes over SQL text and
+    * snapshot-pinned plans only, never a DataFrame (see Scope
+    * discipline above). */
+  private[plans] final case class StagedChange(dir: String, table: String,
+      change: SparkSession => graft.sources.GdxSource.RowChange)
       extends Staged
 
   private final class Scope {
@@ -164,206 +155,90 @@ object GdxSqlTxn {
     ()
   }
 
-  private[plans] def stageDelete(s: SparkSession, dir: String,
-                                 table: String, condSql: String): Unit = {
+  /** Stage a DELETE, UPDATE or MERGE of `dir`: its assignment targets
+    * are checked against the committed schema now (a typo fails the
+    * statement when issued, not at COMMIT), and the table's basis is
+    * pinned by its first mutation. */
+  private def stageChange(s: SparkSession, dir: String, table: String,
+                          op: String, targets: Seq[String])(
+      change: SparkSession => graft.sources.GdxSource.RowChange): Unit = {
     val sc = scopeOf(s)
-    sc.basis.getOrElseUpdate(dir, graft.sources.GdxSource
-      .latestDecidedVersion(dir, graft.sources.GdxSource.driverConf()))
-    sc.ops += StagedDelete(dir, table, condSql)
+    val gdx = graft.sources.GdxSource
+    gdx.checkAssignTargets(op, targets,
+      gdx.committedSchema(dir, gdx.driverConf()))
+    sc.basis.getOrElseUpdate(dir,
+      gdx.latestDecidedVersion(dir, gdx.driverConf()))
+    sc.ops += StagedChange(dir, table, change)
     ()
   }
 
+  private[plans] def stageDelete(s: SparkSession, dir: String,
+                                 table: String, condSql: String): Unit =
+    stageChange(s, dir, table, "delete", Nil)(_ =>
+      graft.sources.GdxSource.RowChange.delete(expr(condSql)))
+
+  /** `UPDATE ... SET ... WHERE ...`, staged: SQL simultaneous-
+    * assignment semantics — every SET expression evaluates against
+    * the PRE-update row, so `SET v = w, w = v` swaps. */
   private[plans] def stageUpdate(s: SparkSession, dir: String,
                                  table: String, condSql: String,
-                                 set: Seq[(String, String)]): Unit = {
-    val sc = scopeOf(s)
-    // validate SET targets against the COMMITTED schema at stage time
-    // (mirrors the non-staged UPDATE's unknown-column require): a typo
-    // must fail the statement when issued, not stage a silent no-op
-    // that still commits a version-bumping restatement
-    val sch = graft.sources.GdxSource.committedSchema(dir,
-      graft.sources.GdxSource.driverConf())
-    val known = sch.fieldNames
-      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    val unknown = set.map(_._1)
-      .filterNot(k => known(k.toLowerCase(java.util.Locale.ROOT)))
-    require(unknown.isEmpty, "gdx txn: UPDATE SET references " +
-      s"unknown column(s) ${unknown.mkString(",")} of $table " +
-      s"(schema: ${sch.fieldNames.mkString(",")})")
-    sc.basis.getOrElseUpdate(dir, graft.sources.GdxSource
-      .latestDecidedVersion(dir, graft.sources.GdxSource.driverConf()))
-    sc.ops += StagedUpdate(dir, table, condSql, set)
-    ()
-  }
+                                 set: Seq[(String, String)]): Unit =
+    stageChange(s, dir, table, "update", set.map(_._1))(_ =>
+      graft.sources.GdxSource.RowChange.update(expr(condSql),
+        set.map { case (k, e) => k -> expr(e) }))
 
+  /** A MERGE (the WHEN-matrix), staged: `source` is pinned to its
+    * stage-time snapshots and kept as a plan; the clause SQL references
+    * `__t_<col>`/`__s_<col>` names and the pruning hints are the plain
+    * MERGE's ([[graft.sources.GdxSource.mergeGeneral]]). */
   private[plans] def stageMergeGeneral(s: SparkSession, dir: String,
       table: String, source: DataFrame, onSql: String,
       matched: Seq[graft.sources.GdxMergeClause],
       notMatched: Seq[graft.sources.GdxMergeClause],
-      notMatchedBySource: Seq[graft.sources.GdxMergeClause]): Unit = {
-    val sc = scopeOf(s)
-    // stage-time validation, mirroring mergeGeneral's own: assignment
-    // targets must exist in the committed schema
-    val sch = graft.sources.GdxSource.committedSchema(dir,
-      graft.sources.GdxSource.driverConf())
-    val known = sch.fieldNames
-      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    (matched ++ notMatched ++ notMatchedBySource)
-      .flatMap(_.assigns.getOrElse(Seq.empty))
-      .map(_._1.toLowerCase(java.util.Locale.ROOT))
-      .find(!known.contains(_)).foreach(c =>
-        throw new IllegalArgumentException(
-          s"gdx txn: MERGE assignment references unknown column $c " +
-            s"of $table (schema: ${sch.fieldNames.mkString(",")})"))
-    sc.basis.getOrElseUpdate(dir, graft.sources.GdxSource
-      .latestDecidedVersion(dir, graft.sources.GdxSource.driverConf()))
-    sc.ops += StagedMergeGeneral(dir, table,
-      pinSnapshots(source.queryExecution.analyzed), onSql,
-      matched, notMatched, notMatchedBySource)
-    ()
+      notMatchedBySource: Seq[graft.sources.GdxMergeClause],
+      pruneKey: Option[String], staticLo: Option[Long],
+      staticHi: Option[Long]): Unit = {
+    val plan = pinSnapshots(source.queryExecution.analyzed)
+    stageChange(s, dir, table, "merge",
+      (matched ++ notMatched ++ notMatchedBySource)
+        .flatMap(_.assigns.getOrElse(Seq.empty)).map(_._1)) { spark =>
+      val raw = org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, plan)
+      graft.sources.GdxSource.RowChange.merge(
+        raw.toDF(raw.columns.map("__s_" + _).toSeq: _*), onSql, matched,
+        notMatched, notMatchedBySource, pruneKey, staticLo, staticHi)
+    }
   }
 
   /** PEEK the open scope and fold each table's staged operations into
-    * one prepared write — the scope is NOT closed here (see
+    * one transaction part — the scope is NOT closed here (see
     * [[GdxCommitTxnCommand]]: a failed commit must leave ROLLBACK a
-    * transaction to roll back). Pure-INSERT tables fold to an append;
-    * any staged mutation makes the table's write a full restatement
-    * of its basis snapshot with the ops applied in stage order,
-    * conflict-checked against the basis at commit time. */
+    * transaction to roll back). The ops fold in stage order over an
+    * entry list: an INSERT appends its gated files, a DELETE, UPDATE
+    * or MERGE runs the row-change engine over the current list. A
+    * pure-INSERT table's list starts empty and claims as an append;
+    * any staged mutation starts it from the basis snapshot's entries
+    * and makes the table's part a full manifest, claimed at basis + 1
+    * under the conflict check. */
   private[plans] def prepareWrites(spark: SparkSession)
-      : Seq[(String, graft.sources.GdxSource.GdxTxnWrite)] = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
+      : Seq[(String, graft.sources.GdxSource.TxnPart)] = {
     val sc = scopeOf(spark)
     val gdx = graft.sources.GdxSource
     val bridge = org.apache.spark.sql.graft.ColumnBridge
     sc.ops.map(_.dir).distinct.toSeq.map { dir =>
       val ops = sc.ops.filter(_.dir == dir).toSeq
-      val hasMutation = ops.exists(!_.isInstanceOf[StagedInsert])
       val basis = sc.basis.get(dir)
-      var df: DataFrame =
-        if (!hasMutation) null
-        else {
-          val rd = spark.read.format("graft.sources.GdxSource")
-            .option("path", dir)
-          basis.filter(_ > 0).fold(rd)(b =>
-            rd.option("version", b.toString)).load()
+      ops.head.table -> gdx.TxnPart(dir, basis.isDefined,
+          basis.getOrElse(-1), { snap =>
+        val start = if (basis.isDefined) snap.entries else Seq.empty
+        val (entries, deleted) = ops.foldLeft((start, 0L)) {
+          case ((cur, del), StagedInsert(_, _, p)) =>
+            (cur ++ gdx.insertFiles(dir, snap, bridge.ofRows(spark, p)), del)
+          case ((cur, del), StagedChange(_, _, change)) =>
+            gdx.rowChange(spark, dir, snap.copy(entries = cur), change(spark))
+              .fold((cur, del))(r => (r.entries, del + r.deleted))
         }
-      ops.foreach {
-        case StagedInsert(_, _, p) =>
-          val r = bridge.ofRows(spark, p)
-          df = if (df == null) r else df.unionByName(r)
-        case StagedDelete(_, _, cond) =>
-          // SQL DELETE semantics: rows whose predicate is NULL survive
-          df = df.filter(not(coalesce(expr(cond), lit(false))))
-        case StagedUpdate(_, _, cond, set) =>
-          // simultaneous assignment over the txn-local view: ALL
-          // assignments land in ONE select against the pre-update row
-          val byName = set.map { case (k, e) =>
-            k.toLowerCase(java.util.Locale.ROOT) -> e }.toMap
-          val hit = coalesce(expr(cond), lit(false))
-          df = df.select(df.columns.map { c =>
-            byName.get(c.toLowerCase(java.util.Locale.ROOT)) match {
-              case Some(e) =>
-                org.apache.spark.sql.functions
-                  .when(hit, expr(e)).otherwise(col(s"`$c`"))
-                  .cast(df.schema(c).dataType).as(c)
-              case None => col(s"`$c`")
-            }
-          }.toSeq: _*)
-        case StagedMergeGeneral(_, _, p, onSql, matched, notMatched,
-            nmbs) =>
-          import org.apache.spark.sql.functions.{monotonically_increasing_id,
-            when, count}
-          val raw = bridge.ofRows(spark, p)
-          val src = raw.toDF(raw.columns.map("__s_" + _).toSeq: _*)
-            .withColumn("__gdx_s_present", lit(true))
-          val schema = df.schema
-          val cols = df.columns.toSeq
-          // row identity for the ambiguity check: assigned BEFORE the
-          // join, pinned by the checkpoint below
-          val tgt = df.select(cols.map(c =>
-              col(s"`$c`").as("__t_" + c)): _*)
-            .withColumn("__gdx_t_present", lit(true))
-            .withColumn("__gdx_rid", monotonically_increasing_id())
-          val tP = coalesce(col("__gdx_t_present"), lit(false))
-          val sP = coalesce(col("__gdx_s_present"), lit(false))
-          def firstMatch(cs: Seq[graft.sources.GdxMergeClause])
-              : org.apache.spark.sql.Column =
-            cs.zipWithIndex
-              .foldRight(lit(-1): org.apache.spark.sql.Column) {
-              case ((c, i), rest) =>
-                when(c.condSql.map(expr(_)).getOrElse(lit(true)), lit(i))
-                  .otherwise(rest)
-            }
-          // the target side must ALWAYS survive the join whole: this
-          // is a RESTATEMENT, so an unmatched target row that an inner
-          // join dropped would be silently deleted (the non-staged
-          // path carries unmatched rows by leaving their files alone —
-          // here the frame itself is the table)
-          val joinType =
-            if (notMatched.nonEmpty) "full_outer" else "left_outer"
-          val annRaw = tgt.join(src, expr(onSql), joinType)
-            .withColumn("__m",
-              when(tP && sP, firstMatch(matched)).otherwise(-1))
-            .withColumn("__n",
-              when(!tP && sP, firstMatch(notMatched)).otherwise(-1))
-            .withColumn("__b",
-              when(tP && !sP, firstMatch(nmbs)).otherwise(-1))
-          // With matched clauses the ambiguity check must run anyway, so
-          // it doubles as the checkpoint's materializing action (lazy
-          // checkpoint + one full-aggregate count, which drains every
-          // partition into the block store) — the eager checkpoint paid
-          // a separate job for the same materialization. No limit(1):
-          // a local limit would stop each partition's scan early and
-          // leave the checkpoint blocks partial.
-          val ann =
-            if (matched.isEmpty) annRaw.localCheckpoint()
-            else {
-              val ck = annRaw.localCheckpoint(eager = false)
-              val dup = ck.filter(tP && sP)
-                .groupBy("__gdx_rid").agg(count(lit(1)).as("__c"))
-                .filter(col("__c") > 1).count()
-              if (dup > 0)
-                throw new graft.sources.GdxMergeCardinalityException(
-                  "gdx txn merge: the ON condition matched a target row " +
-                    "to more than one source row — an UPDATE/DELETE " +
-                    "would be ambiguous")
-              ck
-            }
-          val root = java.util.Locale.ROOT
-          def images(cs: Seq[graft.sources.GdxMergeClause], act: String,
-              fallback: String => org.apache.spark.sql.Column)
-              : Seq[DataFrame] =
-            cs.zipWithIndex.collect {
-              case (cl, i) if cl.assigns.isDefined =>
-                val byName = cl.assigns.get.map {
-                  case (k, v) => k.toLowerCase(root) -> v }.toMap
-                ann.filter(col(act) === i).select(cols.map { c =>
-                  byName.get(c.toLowerCase(root))
-                    .map(sql => expr(sql)
-                      .cast(schema(c).dataType).as(c))
-                    .getOrElse(fallback(c).as(c))
-                }: _*)
-            }
-          // untouched target rows carry forward; clause-hit rows
-          // rewrite to their images; DELETE clauses (assigns = None)
-          // contribute nothing. Dedupe by row id: a target row matched
-          // by several source rows with NO applicable matched clause
-          // appears once per match in `ann` but must restate ONCE
-          // (legal only while `matched` is empty — otherwise the
-          // cardinality check above already aborted).
-          val keep = ann.filter(tP && col("__m") < 0 && col("__b") < 0)
-            .dropDuplicates("__gdx_rid")
-            .select(cols.map(c => col("__t_" + c).as(c)): _*)
-          df = (keep +:
-            (images(matched, "__m", c => col("__t_" + c)) ++
-             images(notMatched, "__n",
-               c => lit(null).cast(schema(c).dataType)) ++
-             images(nmbs, "__b", c => col("__t_" + c))))
-            .reduce(_.unionByName(_))
-      }
-      ops.head.table -> gdx.GdxTxnWrite(dir, df, overwrite = hasMutation,
-        expectedBase = if (hasMutation) basis.getOrElse(-1) else -1)
+        (entries, Some(deleted))
+      })
     }
   }
 
@@ -455,13 +330,12 @@ case class GdxCommitTxnCommand() extends LeafRunnableCommand {
         StructField("table", StringType, nullable = false),
         StructField("version", LongType, nullable = false))))
   override def run(spark: SparkSession): Seq[Row] = {
-    val writes = GdxSqlTxn.prepareWrites(spark)
-    if (writes.isEmpty) { GdxSqlTxn.close(spark); return Seq.empty }
-    val gdx = graft.sources.GdxSource
-    val versions = gdx.prepareTransaction(spark, writes.map(_._2))
+    val parts = GdxSqlTxn.prepareWrites(spark)
+    if (parts.isEmpty) { GdxSqlTxn.close(spark); return Seq.empty }
+    val versions = graft.sources.GdxSource.prepareParts(parts.map(_._2))
       .commit()
     GdxSqlTxn.close(spark)
-    val names = writes.map(w => w._2.dir -> w._1).toMap
+    val names = parts.map(p => p._2.dir -> p._1).toMap
     versions.map { case (dir, v) => Row(names(dir), v.toLong) }
   }
 }
@@ -536,7 +410,7 @@ case class GdxTxnInsertCommand(table: Seq[String], colList: Option[String],
     val src = org.apache.spark.sql.graft.ColumnBridge
       .ofRows(spark, GdxTimeTravel.stash(delegate.parsePlan(sourceSql)))
     val tblSchema = gdx.committedSchema(path, gdx.driverConf())
-    import org.apache.spark.sql.functions.{col, expr, lit}
+    import org.apache.spark.sql.functions.{col, lit}
     def lower(s: String) = s.toLowerCase(java.util.Locale.ROOT)
     val aligned = colList match {
       case None =>

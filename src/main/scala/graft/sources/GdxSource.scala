@@ -3674,10 +3674,10 @@ object GdxSource {
       else {
         val rewritten = groups.sortBy(_._1).flatMap {
           case (prefix, es, bins) =>
-            writeDataFiles(
+            writeGatedDataFiles(
               liveFrame(spark, dir, es, tblSchema, sconf, tblColmap)
                 .drop("_file", "_pos").coalesce(bins),
-              dir, tblSchema, sconf, tblColmap, prefix)
+              dir, tblSchema, sconf, tblColmap, prefix, gated = false)._1
         }
         val rewriteNames = rewriteSet.map(_.name).toSet
         val updated = entries.filterNot(e => rewriteNames(e.name)) ++
@@ -4237,12 +4237,12 @@ object GdxSource {
         // the declared columns change.
         val genTag = java.util.UUID.randomUUID().toString
           .replace("-", "").take(12) + "@" + genClusterSpec(byC)
-        val rewritten = writeDataFiles(
+        val rewritten = writeGatedDataFiles(
           liveFrame(spark, dir, rewriteSet, tblSchema, sconf, tblColmap)
             .drop("_file", "_pos")
             .repartitionByRange(bins, byC.map(col): _*)
             .sortWithinPartitions(byC.map(col): _*),
-          dir, tblSchema, sconf, tblColmap)
+          dir, tblSchema, sconf, tblColmap, "", gated = false)._1
           .map(_.copy(gen = Some(genTag)))
         val updated = entries.filterNot(e => rewriteNames(e.name)) ++
           rewritten
@@ -4368,8 +4368,8 @@ object GdxSource {
   def delete(spark: SparkSession, dir: String,
              condition: org.apache.spark.sql.Column,
              maxRetries: Int = 10): (Int, Long) = {
-    val (v, _, _, deleted) = runMerge(spark, dir, "delete", None,
-      Seq(MergeArm(Some(condition), None)), maxRetries)
+    val (v, _, _, deleted) =
+      runMerge(spark, dir, RowChange.delete(condition), maxRetries)
     (v, deleted)
   }
 
@@ -4392,8 +4392,8 @@ object GdxSource {
              condition: org.apache.spark.sql.Column,
              set: Map[String, org.apache.spark.sql.Column],
              maxRetries: Int = 10): (Int, Long) = {
-    val (v, _, updated, _) = runMerge(spark, dir, "update", None,
-      Seq(MergeArm(Some(condition), Some(set.toSeq))), maxRetries)
+    val (v, _, updated, _) =
+      runMerge(spark, dir, RowChange.update(condition, set.toSeq), maxRetries)
     (v, updated)
   }
 
@@ -4472,7 +4472,7 @@ object GdxSource {
     * table (reference analogue: the refresh-upsert in
     * `/root/reference/src/transform.py:31-38`, generalized to the
     * conditional multi-clause statement a warehouse MERGE provides).
-    * Its engine ([[runMerge]]) is also the one [[update]] and
+    * Its engine ([[rowChange]]) is also the one [[update]] and
     * [[delete]] run on, as target-only statements.
     *
     * `source` must arrive with every column renamed `__s_<name>`;
@@ -4525,257 +4525,324 @@ object GdxSource {
                    pruneKeySql: Option[String] = None,
                    maxRetries: Int = 10,
                    staticLo: Option[Long] = None,
-                   staticHi: Option[Long] = None): (Int, Long, Long, Long) = {
-    import org.apache.spark.sql.functions.expr
-    def arms(clauses: Seq[GdxMergeClause]): Seq[MergeArm] = clauses.map(c =>
-      MergeArm(c.condSql.map(expr), c.assigns.map(_.map {
-        case (k, v) => k -> expr(v) })))
-    runMerge(spark, dir, "merge", Some(MergeSource(source, expr(onSql),
-      arms(matched), arms(notMatched), pruneKeySql.map(expr), staticLo,
-      staticHi)), arms(notMatchedBySource), maxRetries)
-  }
+                   staticHi: Option[Long] = None): (Int, Long, Long, Long) =
+    runMerge(spark, dir, RowChange.merge(source, onSql, matched, notMatched,
+      notMatchedBySource, pruneKeySql, staticLo, staticHi), maxRetries)
 
-  /** One clause of [[runMerge]]'s matrix as Columns: a
+  /** One clause of [[rowChange]]'s matrix as Columns: a
     * [[GdxMergeClause]] parsed, or an UPDATE/DELETE statement's own
     * condition and SET. `assigns` None is a DELETE. */
-  private final case class MergeArm(cond: Option[org.apache.spark.sql.Column],
+  private[graft] final case class MergeArm(
+      cond: Option[org.apache.spark.sql.Column],
       assigns: Option[Seq[(String, org.apache.spark.sql.Column)]])
 
-  /** A MERGE's source side for [[runMerge]]: the `__s_`-renamed source
+  /** A MERGE's source side for [[rowChange]]: the `__s_`-renamed source
     * rows, the ON condition, the MATCHED and NOT MATCHED clauses, and
     * the zone-map pruning hints (see [[mergeGeneral]]). */
-  private final case class MergeSource(rows: org.apache.spark.sql.DataFrame,
+  private[graft] final case class MergeSource(
+      rows: org.apache.spark.sql.DataFrame,
       on: org.apache.spark.sql.Column, matched: Seq[MergeArm],
       notMatched: Seq[MergeArm],
       pruneKey: Option[org.apache.spark.sql.Column],
       staticLo: Option[Long], staticHi: Option[Long])
 
-  /** The one row-change engine: [[mergeGeneral]] with `source`, and
-    * [[update]]/[[delete]] as TARGET-ONLY statements (`source` None —
-    * no join; every live row takes the NOT MATCHED BY SOURCE branch,
-    * and the clauses name the table's own columns instead of
-    * `__t_<col>`). Classifies each row by its first applicable clause,
-    * writes the UPDATE/INSERT images (gated: NULL keys and CHECK
-    * violations counted by the writer) and the action-coded DVs,
-    * refuses in a fixed order (ambiguous match, NULL key, CHECK) after
-    * both writes, and publishes through [[commitNext]]; a publish
-    * that deleted rows decays the ANALYZE sidecar. `op` names the
-    * statement in its errors. Returns (version, inserted, updated,
-    * deleted). */
-  private def runMerge(spark: SparkSession, dir: String, op: String,
-                       source: Option[MergeSource],
-                       notMatchedBySource: Seq[MergeArm],
-                       maxRetries: Int): (Int, Long, Long, Long) = {
-    import org.apache.spark.sql.functions._
-    val conf0 = driverConf()
-    val sconf = new SerializableHadoopConf(conf0)
-    // materialized once: every retry and every downstream pass below
-    // must see the same source rows (a lazy source re-scanning a live
-    // table across a CAS retry would tear the statement's snapshot).
-    // LAZY checkpoint: the first consuming job (the source-key min/max
-    // pre-scan, or the joined frame's own materializing aggregate —
-    // every path below drains the source fully) caches the blocks, so
-    // no separate materialization job runs; the snapshot is pinned from
-    // that first action on, which is still before any manifest publish.
-    // presence marker name can never collide with a renamed user
-    // column: the DML rule prefixes source columns `__s_<name>`, so a
-    // source column would have to be literally named "_gdx_present"
-    // to land on `__s__gdx_present` — still distinct from this
-    val src = source.map(ms => ms.copy(rows = ms.rows
-      .localCheckpoint(eager = false)
-      .withColumn("__gdx_s_present", lit(true))))
-    val matched = src.toSeq.flatMap(_.matched)
-    val notMatched = src.toSeq.flatMap(_.notMatched)
-    // a MERGE's clauses name the target's columns `__t_<col>`
-    val tPre = if (source.isDefined) "__t_" else ""
-    val arms = matched ++ notMatched ++ notMatchedBySource
+  /** A statement for the one row-change engine ([[rowChange]]): a
+    * MERGE (`source` defined), or an UPDATE/DELETE as a TARGET-ONLY
+    * statement (`source` None — no join; every live row takes the NOT
+    * MATCHED BY SOURCE branch, and the clauses name the table's own
+    * columns instead of `__t_<col>`). `op` names it in its errors. */
+  private[graft] final case class RowChange(op: String,
+      source: Option[MergeSource], notMatchedBySource: Seq[MergeArm])
+
+  private[graft] object RowChange {
+    def delete(condition: org.apache.spark.sql.Column): RowChange =
+      RowChange("delete", None, Seq(MergeArm(Some(condition), None)))
+    def update(condition: org.apache.spark.sql.Column,
+               set: Seq[(String, org.apache.spark.sql.Column)]): RowChange =
+      RowChange("update", None, Seq(MergeArm(Some(condition), Some(set))))
+    /** [[mergeGeneral]]'s statement. The source is materialized once,
+      * so every CAS retry and every pass sees the same rows; lazily, so
+      * its first consuming job caches the blocks. The presence marker
+      * cannot collide with a renamed (`__s_<name>`) user column. */
+    def merge(source: org.apache.spark.sql.DataFrame, onSql: String,
+              matched: Seq[GdxMergeClause],
+              notMatched: Seq[GdxMergeClause],
+              notMatchedBySource: Seq[GdxMergeClause],
+              pruneKeySql: Option[String], staticLo: Option[Long],
+              staticHi: Option[Long]): RowChange = {
+      import org.apache.spark.sql.functions.{expr, lit}
+      def arms(clauses: Seq[GdxMergeClause]): Seq[MergeArm] =
+        clauses.map(c => MergeArm(c.condSql.map(expr), c.assigns.map(_.map {
+          case (k, v) => k -> expr(v) })))
+      RowChange("merge", Some(MergeSource(source
+        .localCheckpoint(eager = false)
+        .withColumn("__gdx_s_present", lit(true)), expr(onSql),
+        arms(matched), arms(notMatched), pruneKeySql.map(expr), staticLo,
+        staticHi)), arms(notMatchedBySource))
+    }
+  }
+
+  /** A table's committed state at one version: what [[rowChange]]
+    * computes a statement against, and the header block a commit built
+    * on it restates. */
+  private[graft] final case class TableSnapshot(entries: Seq[GdxFileEntry],
+      schema: StructType, colmap: Option[Colmap],
+      checks: Seq[(String, String)], partitionCol: Option[String]) {
+    def headers: Seq[String] =
+      headerLines(schema, checks, colmap, partitionCol)
+  }
+
+  /** The snapshot at version `v` (the latest for `v` ≤ 0). */
+  private[graft] def snapshotAt(dir: String, conf: Configuration,
+                                v: Int): TableSnapshot = {
+    val ver = if (v > 0) v else -1
+    TableSnapshot(committedEntries(dir, conf, ver),
+      committedSchema(dir, conf, ver), committedColmap(dir, conf, ver),
+      committedConstraints(dir, conf, ver),
+      committedPartitionCol(dir, conf, ver))
+  }
+
+  /** Refuse assignment targets outside `schema`, before any work — the
+    * check [[rowChange]] runs, and a transaction runs when it stages an
+    * UPDATE or MERGE. */
+  private[graft] def checkAssignTargets(op: String, targets: Seq[String],
+                                        schema: StructType): Unit = {
     val root = java.util.Locale.ROOT
-    val (v, ins, upd, del) = commitNext(dir, op, maxRetries) { readV =>
-      val ver = if (readV > 0) readV else -1
-      val entries = committedEntries(dir, conf0, ver)
-      val tblSchema = committedSchema(dir, conf0, ver)
-      val tblColmap = committedColmap(dir, conf0, ver)
-      val checks = committedConstraints(dir, conf0, ver)
-      // refuse assignment targets outside the snapshot schema loudly,
-      // before any work
-      val known = tblSchema.fieldNames.map(_.toLowerCase(root)).toSet
-      arms.flatMap(_.assigns.getOrElse(Seq.empty)).map(_._1.toLowerCase(root))
-        .find(!known.contains(_)).foreach(c => throw new IllegalArgumentException(
-          s"gdx $op: assignment references unknown column $c"))
-      // zone-map file pruning: a merge with no NOT-MATCHED-BY-SOURCE
-      // branch (NMBS must test EVERY live row) may scope the target
-      // scan by the intersection of two key windows — the SOURCE-KEY
-      // pre-scan (one small min/max aggregate over the materialized
-      // source, for a key-equality ON conjunct) and the STATIC bounds
-      // the ON's literal range conjuncts pin. A file whose k-range
-      // misses the window can satisfy no conjunct set and is carried
-      // BY REFERENCE (never opened) — the range-scoped point-update
-      // MERGE touches the day's files, not the decade's. Stats-less
-      // legacy files always stay candidates (absence means "cannot
-      // prune", never "skip").
-      val (cands, carried) = src match {
-        case Some(ms) if notMatchedBySource.isEmpty &&
-            (ms.pruneKey.isDefined || ms.staticLo.isDefined ||
-              ms.staticHi.isDefined) =>
-          // one job: each partition folds its keys' min/max and the
-          // driver merges them (an aggregate is two jobs under AQE).
-          // An empty/all-NULL source key set matches nothing: the fold
-          // stays at the inverted window, which carries every file
-          val srcWin: Option[(Long, Long)] = ms.pruneKey.map { key =>
-            ms.rows.select(key.cast("long")).rdd.mapPartitions { rs =>
-              var lo = Long.MaxValue; var hi = Long.MinValue
-              rs.foreach { r =>
-                if (!r.isNullAt(0)) {
-                  val k = r.getLong(0)
-                  if (k < lo) lo = k
-                  if (k > hi) hi = k
-                }
-              }
-              Iterator((lo, hi))
-            }.collect().foldLeft((Long.MaxValue, Long.MinValue)) {
-              case ((lo, hi), (l, h)) => (math.min(lo, l), math.max(hi, h))
-            }
-          }
-          val lo = math.max(ms.staticLo.getOrElse(Long.MinValue),
-            srcWin.map(_._1).getOrElse(Long.MinValue))
-          val hi = math.min(ms.staticHi.getOrElse(Long.MaxValue),
-            srcWin.map(_._2).getOrElse(Long.MaxValue))
-          entries.partition(e =>
-            e.stats.forall(s => s.minK <= hi && s.maxK >= lo))
-        case _ => (entries, Seq.empty[GdxFileEntry])
-      }
-      val dvByName = cands.map(e => e.name -> e.dv).toMap
-      val live = liveFrame(spark, dir, cands, tblSchema, sconf, tblColmap)
-      // the join keeps only the sides the clause matrix can touch: a
-      // matched-only merge never materializes the unmatched bulk of a
-      // large target (inner), INSERT-bearing merges keep unmatched
-      // source rows (right), NOT MATCHED BY SOURCE must see every
-      // live target row (left/full) — semantics identical, the
-      // checkpointed row set is what shrinks
-      val (joined, tPresent, sPresent) = src match {
-        case Some(ms) =>
-          val joinType =
-            (notMatched.nonEmpty, notMatchedBySource.nonEmpty) match {
-              case (true, true)   => "full_outer"
-              case (true, false)  => "right_outer"
-              case (false, true)  => "left_outer"
-              case (false, false) => "inner"
-            }
-          (live.select(col("_file") +: col("_pos") +: tblSchema.fieldNames
-            .map(f => col(f).as(tPre + f)): _*).join(ms.rows, ms.on, joinType),
-            col("_file").isNotNull,
-            coalesce(col("__gdx_s_present"), lit(false)))
-        case None => (live, lit(true), lit(false))
-      }
-      // index of the first applicable clause of a branch (-1 = none):
-      // a chained when is first-match by construction — clause order
-      // IS the statement's clause order
-      def firstMatch(clauses: Seq[MergeArm]): org.apache.spark.sql.Column =
-        clauses.zipWithIndex
-          .foldRight(lit(-1): org.apache.spark.sql.Column) {
-          case ((c, i), rest) =>
-            when(c.cond.getOrElse(lit(true)), lit(i)).otherwise(rest)
-        }
-      // every matched target position (when a matched clause exists)
-      // and every NOT MATCHED BY SOURCE one a clause applies to, with
-      // its action: a position seen twice is a target row matched by
-      // more than one source row, whichever clause applies
-      val dvRows =
-        (if (matched.nonEmpty) tPresent && sPresent else lit(false)) ||
-          col("__b") >= 0
-      // only the rows a write reads: every matched position (the DV
-      // write checks ambiguity on all of them) and every row a clause
-      // applies to. With images to write, one LAZY
-      // checkpoint: the image write below is its first consumer and
-      // drains every partition (a union of whole-frame filters, no
-      // limits), so it doubles as the materializing job and the DV
-      // write reads the cached blocks; without images the DV write is
-      // the only consumer and reads the classified rows directly.
-      val acted = joined
-        .withColumn("__m",
-          when(tPresent && sPresent, firstMatch(matched)).otherwise(-1))
-        .withColumn("__n",
-          when(!tPresent && sPresent, firstMatch(notMatched)).otherwise(-1))
-        .withColumn("__b",
-          when(tPresent && !sPresent, firstMatch(notMatchedBySource))
-            .otherwise(-1))
-        .filter(dvRows || col("__n") >= 0)
-      val ann = if (arms.forall(_.assigns.isEmpty)) acted
-        else acted.localCheckpoint(eager = false)
-      def inIdx(c: org.apache.spark.sql.Column, clauses: Seq[MergeArm])
-          : org.apache.spark.sql.Column = {
-        val idx = clauses.indices.filter(clauses(_).assigns.isDefined)
-        if (idx.isEmpty) lit(false) else idx.map(c === _).reduce(_ || _)
-      }
-      val updFlag = inIdx(col("__m"), matched) ||
-        inIdx(col("__b"), notMatchedBySource)
-      // new row images, schema order: SQL simultaneous-assignment
-      // semantics — every value evaluates against the OLD row
-      def images(clauses: Seq[MergeArm], act: String,
-                 fallback: StructField => org.apache.spark.sql.Column)
-          : Seq[org.apache.spark.sql.DataFrame] =
-        clauses.zipWithIndex.collect {
-          case (cl, i) if cl.assigns.isDefined =>
-            val byName = cl.assigns.get.map {
-              case (k, v) => k.toLowerCase(root) -> v }.toMap
-            ann.filter(col(act) === i).select(tblSchema.fields.map { f =>
-              byName.get(f.name.toLowerCase(root))
-                .map(_.cast(f.dataType).as(f.name))
-                .getOrElse(fallback(f).as(f.name))
-            }.toSeq: _*)
-        }
-      val imgs =
-        images(matched, "__m", f => col(tPre + f.name)) ++
-        images(notMatched, "__n", f => lit(null).cast(f.dataType)) ++
-        images(notMatchedBySource, "__b", f => col(tPre + f.name))
-      // the write gates itself: NULL keys (the line format requires
-      // a key) and one violation flag per CHECK constraint ride each
-      // image as trailing columns the writer counts and never writes
-      val (rewrittenEntries, gate) =
-        imgs.reduceOption(_.unionByName(_)) match {
-          case None =>
-            (Seq.empty[GdxFileEntry], new Array[Long](checks.size + 1))
-          case Some(newRows) =>
-            writeGatedDataFiles(newRows.select(col("*") +:
-              checks.zipWithIndex.map { case ((_, sql), i) =>
-                not(coalesce(expr(sql), lit(true))).as(s"__gdx_chk$i")
-              }: _*), dir, tblSchema, sconf, tblColmap, "", gated = true)
-        }
-      val newDvs = writeDvSidecars(ann.filter(dvRows).select(col("_file"),
-        col("_pos"), when(updFlag, 1)
-          .when(col("__m") >= 0 || col("__b") >= 0, 2).otherwise(0)),
-        dir, dvByName, sconf)
-      // refusals decide after both writes and before the publish: the
-      // files written so far are unreferenced orphans for [[vacuum]]
-      if (newDvs.repeated) throw new GdxMergeCardinalityException(
-        "gdx merge: the ON condition matched a target row to more " +
-          "than one source row — an UPDATE/DELETE would be ambiguous")
-      if (gate(0) > 0) throw new IllegalArgumentException(
-        s"gdx $op: ${gate(0)} ${op}d row(s) have a NULL key " +
-          s"(${tblSchema.fields.head.name}) — the key column is required")
-      checks.zipWithIndex.foreach { case ((n, sql), i) =>
-        val bad = gate(i + 1)
-        if (bad > 0) throw new GdxConstraintViolationException(
-          s"gdx $op: $bad ${op}d row(s) would violate CHECK " +
-            s"constraint $n ($sql)")
-      }
-      if (rewrittenEntries.isEmpty && newDvs.sidecars.isEmpty)
-        Left((readV, 0L, 0L, 0L))
-      else {
-        val (nUpd, nDel) = (newDvs.updated, newDvs.deleted)
-        val nIns = rewrittenEntries.flatMap(_.stats).map(_.rows).sum - nUpd
-        val dvFor = newDvs.sidecars.toMap
-        val updated = carried ++ cands.map(e =>
-          dvFor.get(e.name).map(d => e.copy(dv = Some(d))).getOrElse(e)) ++
-          rewrittenEntries
-        Right((headerLines(tblSchema, checks, tblColmap,
-          committedPartitionCol(dir, conf0, ver)) ++
-          updated.sortBy(_.name).map(_.manifestLine),
-          (readV + 1, nIns, nUpd, nDel)))
+    val known = schema.fieldNames.map(_.toLowerCase(root)).toSet
+    targets.map(_.toLowerCase(root)).find(!known.contains(_)).foreach(c =>
+      throw new IllegalArgumentException(
+        s"gdx $op: assignment references unknown column $c"))
+  }
+
+  /** [[rowChange]]'s outcome: the snapshot's new entry list and the
+    * rows inserted, updated and deleted. */
+  private[graft] final case class RowChanges(entries: Seq[GdxFileEntry],
+      inserted: Long, updated: Long, deleted: Long)
+
+  /** [[mergeGeneral]], [[update]] and [[delete]]: [[rowChange]] against
+    * the head snapshot, published through [[commitNext]]; a publish
+    * that deleted rows decays the ANALYZE sidecar. Returns (version,
+    * inserted, updated, deleted). */
+  private def runMerge(spark: SparkSession, dir: String, stmt: RowChange,
+                       maxRetries: Int): (Int, Long, Long, Long) = {
+    val conf = driverConf()
+    val (v, ins, upd, del) = commitNext(dir, stmt.op, maxRetries) { readV =>
+      val snap = snapshotAt(dir, conf, readV)
+      rowChange(spark, dir, snap, stmt) match {
+        case None => Left((readV, 0L, 0L, 0L))
+        case Some(r) => Right((snap.headers ++
+          r.entries.sortBy(_.name).map(_.manifestLine),
+          (readV + 1, r.inserted, r.updated, r.deleted)))
       }
     }
-    decayColStats(dir, conf0, del)
+    decayColStats(dir, conf, del)
     (v, ins, upd, del)
+  }
+
+  /** The one row-change engine, without a publish: [[runMerge]] commits
+    * its result, and a transaction's COMMIT folds each staged DELETE,
+    * UPDATE and MERGE through it over the transaction's entry list.
+    * Against `snap`, classifies each live row by its first applicable
+    * clause, writes the UPDATE/INSERT images (gated: NULL keys and
+    * CHECK violations counted by the writer) and the action-coded DVs,
+    * and refuses in a fixed order (ambiguous match, NULL key, CHECK)
+    * after both writes; the files written so far are then unreferenced
+    * orphans for [[vacuum]]. Returns None when the statement changes
+    * nothing, else `snap`'s entries with the new DVs attached and the
+    * new files appended. */
+  private[graft] def rowChange(spark: SparkSession, dir: String,
+                               snap: TableSnapshot,
+                               stmt: RowChange): Option[RowChanges] = {
+    import org.apache.spark.sql.functions._
+    val sconf = new SerializableHadoopConf(driverConf())
+    val src = stmt.source
+    val matched = src.toSeq.flatMap(_.matched)
+    val notMatched = src.toSeq.flatMap(_.notMatched)
+    val notMatchedBySource = stmt.notMatchedBySource
+    // a MERGE's clauses name the target's columns `__t_<col>`
+    val tPre = if (src.isDefined) "__t_" else ""
+    val arms = matched ++ notMatched ++ notMatchedBySource
+    val root = java.util.Locale.ROOT
+    val tblSchema = snap.schema
+    checkAssignTargets(stmt.op,
+      arms.flatMap(_.assigns.getOrElse(Seq.empty)).map(_._1), tblSchema)
+    // zone-map file pruning: a merge with no NOT-MATCHED-BY-SOURCE
+    // branch (NMBS must test EVERY live row) may scope the target
+    // scan by the intersection of two key windows — the SOURCE-KEY
+    // pre-scan (one small min/max aggregate over the materialized
+    // source, for a key-equality ON conjunct) and the STATIC bounds
+    // the ON's literal range conjuncts pin. A file whose k-range
+    // misses the window can satisfy no conjunct set and is carried
+    // BY REFERENCE (never opened) — the range-scoped point-update
+    // MERGE touches the day's files, not the decade's. Stats-less
+    // legacy files always stay candidates (absence means "cannot
+    // prune", never "skip").
+    val (cands, carried) = src match {
+      case Some(ms) if notMatchedBySource.isEmpty &&
+          (ms.pruneKey.isDefined || ms.staticLo.isDefined ||
+            ms.staticHi.isDefined) =>
+        // one job: each partition folds its keys' min/max and the
+        // driver merges them (an aggregate is two jobs under AQE).
+        // An empty/all-NULL source key set matches nothing: the fold
+        // stays at the inverted window, which carries every file
+        val srcWin: Option[(Long, Long)] = ms.pruneKey.map { key =>
+          ms.rows.select(key.cast("long")).rdd.mapPartitions { rs =>
+            var lo = Long.MaxValue; var hi = Long.MinValue
+            rs.foreach { r =>
+              if (!r.isNullAt(0)) {
+                val k = r.getLong(0)
+                if (k < lo) lo = k
+                if (k > hi) hi = k
+              }
+            }
+            Iterator((lo, hi))
+          }.collect().foldLeft((Long.MaxValue, Long.MinValue)) {
+            case ((lo, hi), (l, h)) => (math.min(lo, l), math.max(hi, h))
+          }
+        }
+        val lo = math.max(ms.staticLo.getOrElse(Long.MinValue),
+          srcWin.map(_._1).getOrElse(Long.MinValue))
+        val hi = math.min(ms.staticHi.getOrElse(Long.MaxValue),
+          srcWin.map(_._2).getOrElse(Long.MaxValue))
+        snap.entries.partition(e =>
+          e.stats.forall(s => s.minK <= hi && s.maxK >= lo))
+      case _ => (snap.entries, Seq.empty[GdxFileEntry])
+    }
+    val dvByName = cands.map(e => e.name -> e.dv).toMap
+    val live = liveFrame(spark, dir, cands, tblSchema, sconf, snap.colmap)
+    // the join keeps only the sides the clause matrix can touch: a
+    // matched-only merge never materializes the unmatched bulk of a
+    // large target (inner), INSERT-bearing merges keep unmatched
+    // source rows (right), NOT MATCHED BY SOURCE must see every
+    // live target row (left/full) — semantics identical, the
+    // checkpointed row set is what shrinks
+    val (joined, tPresent, sPresent) = src match {
+      case Some(ms) =>
+        val joinType =
+          (notMatched.nonEmpty, notMatchedBySource.nonEmpty) match {
+            case (true, true)   => "full_outer"
+            case (true, false)  => "right_outer"
+            case (false, true)  => "left_outer"
+            case (false, false) => "inner"
+          }
+        (live.select(col("_file") +: col("_pos") +: tblSchema.fieldNames
+          .map(f => col(f).as(tPre + f)): _*).join(ms.rows, ms.on, joinType),
+          col("_file").isNotNull,
+          coalesce(col("__gdx_s_present"), lit(false)))
+      case None => (live, lit(true), lit(false))
+    }
+    // index of the first applicable clause of a branch (-1 = none):
+    // a chained when is first-match by construction — clause order
+    // IS the statement's clause order
+    def firstMatch(clauses: Seq[MergeArm]): org.apache.spark.sql.Column =
+      clauses.zipWithIndex
+        .foldRight(lit(-1): org.apache.spark.sql.Column) {
+        case ((c, i), rest) =>
+          when(c.cond.getOrElse(lit(true)), lit(i)).otherwise(rest)
+      }
+    // every matched target position (when a matched clause exists)
+    // and every NOT MATCHED BY SOURCE one a clause applies to, with
+    // its action: a position seen twice is a target row matched by
+    // more than one source row, whichever clause applies
+    val dvRows =
+      (if (matched.nonEmpty) tPresent && sPresent else lit(false)) ||
+        col("__b") >= 0
+    // only the rows a write reads: every matched position (the DV
+    // write checks ambiguity on all of them) and every row a clause
+    // applies to. With images to write, one LAZY
+    // checkpoint: the image write below is its first consumer and
+    // drains every partition (a union of whole-frame filters, no
+    // limits), so it doubles as the materializing job and the DV
+    // write reads the cached blocks; without images the DV write is
+    // the only consumer and reads the classified rows directly.
+    val acted = joined
+      .withColumn("__m",
+        when(tPresent && sPresent, firstMatch(matched)).otherwise(-1))
+      .withColumn("__n",
+        when(!tPresent && sPresent, firstMatch(notMatched)).otherwise(-1))
+      .withColumn("__b",
+        when(tPresent && !sPresent, firstMatch(notMatchedBySource))
+          .otherwise(-1))
+      .filter(dvRows || col("__n") >= 0)
+    val ann = if (arms.forall(_.assigns.isEmpty)) acted
+      else acted.localCheckpoint(eager = false)
+    def inIdx(c: org.apache.spark.sql.Column, clauses: Seq[MergeArm])
+        : org.apache.spark.sql.Column = {
+      val idx = clauses.indices.filter(clauses(_).assigns.isDefined)
+      if (idx.isEmpty) lit(false) else idx.map(c === _).reduce(_ || _)
+    }
+    val updFlag = inIdx(col("__m"), matched) ||
+      inIdx(col("__b"), notMatchedBySource)
+    // new row images, schema order: SQL simultaneous-assignment
+    // semantics — every value evaluates against the OLD row
+    def images(clauses: Seq[MergeArm], act: String,
+               fallback: StructField => org.apache.spark.sql.Column)
+        : Seq[org.apache.spark.sql.DataFrame] =
+      clauses.zipWithIndex.collect {
+        case (cl, i) if cl.assigns.isDefined =>
+          val byName = cl.assigns.get.map {
+            case (k, v) => k.toLowerCase(root) -> v }.toMap
+          ann.filter(col(act) === i).select(tblSchema.fields.map { f =>
+            byName.get(f.name.toLowerCase(root))
+              .map(_.cast(f.dataType).as(f.name))
+              .getOrElse(fallback(f).as(f.name))
+          }.toSeq: _*)
+      }
+    val imgs =
+      images(matched, "__m", f => col(tPre + f.name)) ++
+      images(notMatched, "__n", f => lit(null).cast(f.dataType)) ++
+      images(notMatchedBySource, "__b", f => col(tPre + f.name))
+    val (rewrittenEntries, gate) = imgs.reduceOption(_.unionByName(_)) match {
+      case None =>
+        (Seq.empty[GdxFileEntry], new Array[Long](snap.checks.size + 1))
+      case Some(newRows) => writeGated(newRows, dir, snap, sconf)
+    }
+    val newDvs = writeDvSidecars(ann.filter(dvRows).select(col("_file"),
+      col("_pos"), when(updFlag, 1)
+        .when(col("__m") >= 0 || col("__b") >= 0, 2).otherwise(0)),
+      dir, dvByName, sconf)
+    if (newDvs.repeated) throw new GdxMergeCardinalityException(
+      "gdx merge: the ON condition matched a target row to more " +
+        "than one source row — an UPDATE/DELETE would be ambiguous")
+    refuseGate(stmt.op, s"${stmt.op}d", gate, snap)
+    if (rewrittenEntries.isEmpty && newDvs.sidecars.isEmpty) None
+    else {
+      val (nUpd, nDel) = (newDvs.updated, newDvs.deleted)
+      val nIns = rewrittenEntries.flatMap(_.stats).map(_.rows).sum - nUpd
+      val dvFor = newDvs.sidecars.toMap
+      Some(RowChanges(carried ++ cands.map(e =>
+        dvFor.get(e.name).map(d => e.copy(dv = Some(d))).getOrElse(e)) ++
+        rewrittenEntries, nIns, nUpd, nDel))
+    }
+  }
+
+  /** `rows` (in `snap`'s column order) written as new data files, the
+    * write gating itself: NULL keys (the line format requires a key)
+    * and one violation flag per CHECK constraint ride each row as
+    * trailing columns the writer counts and never writes. Returns the
+    * entries and the gate counts for [[refuseGate]]. */
+  private def writeGated(rows: org.apache.spark.sql.DataFrame, dir: String,
+                         snap: TableSnapshot, sconf: SerializableHadoopConf)
+      : (Seq[GdxFileEntry], Array[Long]) = {
+    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
+    writeGatedDataFiles(rows.select(col("*") +:
+      snap.checks.zipWithIndex.map { case ((_, sql), i) =>
+        not(coalesce(expr(sql), lit(true))).as(s"__gdx_chk$i")
+      }: _*), dir, snap.schema, sconf, snap.colmap, "", gated = true)
+  }
+
+  /** Refuse a gated write's NULL keys, then its CHECK violations in
+    * constraint order; `what` names the rows ("updated", "inserted"). */
+  private def refuseGate(op: String, what: String, gate: Array[Long],
+                         snap: TableSnapshot): Unit = {
+    if (gate(0) > 0) throw new IllegalArgumentException(
+      s"gdx $op: ${gate(0)} $what row(s) have a NULL key " +
+        s"(${snap.schema.fields.head.name}) — the key column is required")
+    snap.checks.zipWithIndex.foreach { case ((n, sql), i) =>
+      if (gate(i + 1) > 0) throw new GdxConstraintViolationException(
+        s"gdx $op: ${gate(i + 1)} $what row(s) would violate CHECK " +
+          s"constraint $n ($sql)")
+    }
   }
 
   /** The snapshot's LIVE rows as a DataFrame of (_file, _pos, cols...):
@@ -4850,21 +4917,11 @@ object GdxSource {
 
   /** Write `rows` (in `tblSchema` column order) as GDX line files, one
     * per non-empty partition, executor-side with UUID names; returns
-    * the manifest entries (zone-map stats included). Used by UPDATE's
-    * rewrite half — the files become committed only when the caller's
-    * manifest publish wins. */
-  private def writeDataFiles(rows: org.apache.spark.sql.DataFrame,
-                             dirStr: String, tblSchema: StructType,
-                             sconf: SerializableHadoopConf,
-                             colmap: Option[Colmap] = None,
-                             namePrefix: String = "")
-      : Seq[GdxFileEntry] =
-    writeGatedDataFiles(rows, dirStr, tblSchema, sconf, colmap,
-      namePrefix, gated = false)._1
-
-  /** [[writeDataFiles]], optionally gated. A `gated` write's rows carry
-    * one trailing boolean column per CHECK constraint after the
-    * `tblSchema` columns, true where the row violates it. The writer
+    * the manifest entries (zone-map stats included) — the files become
+    * committed only when the caller's manifest publish wins. A `gated`
+    * write's rows carry one trailing boolean column per CHECK
+    * constraint after the `tblSchema` columns, true where the row
+    * violates it. The writer
     * counts those flags and NULL keys, never writes the flag columns,
     * and skips a NULL-key row (the line format needs a key). Returns
     * the entries and the gate counts: NULL keys first, then one
@@ -6182,13 +6239,16 @@ object GdxSource {
 
   // --------------------------------------- multi-table transactions
   /** One table's staged write inside a multi-table transaction:
-    * `rows` must match the table's current schema by name; `overwrite`
-    * stages a truncate (the new snapshot starts from these rows),
-    * otherwise an append. `expectedBase` (≥ 0) makes the write
+    * `rows` must match the table's current schema by name and type;
+    * `overwrite` stages a truncate (the new snapshot starts from these
+    * rows), otherwise an append. The rows are written gated, as a
+    * MERGE's images are: a NULL key or a CHECK violation refuses the
+    * transaction after the write. `expectedBase` (≥ 0) makes the write
     * CONFLICT-DETECTING: the claim must land on exactly that base
     * version or the whole transaction aborts loudly — the contract a
-    * non-commutative restatement (a staged MERGE/DELETE computed FROM
-    * the base snapshot) needs, where landing past a concurrent commit
+    * write computed FROM the base snapshot needs (a staged DELETE,
+    * UPDATE or MERGE commits deletion vectors at basis + 1 over the
+    * transaction's entry list), where landing past a concurrent commit
     * would silently erase its rows. Appends keep the default (-1):
     * they commute, so they land on whatever base is current. */
   case class GdxTxnWrite(dir: String,
@@ -6205,7 +6265,8 @@ object GdxSource {
     * transaction and table B does not. */
   final class GdxPreparedTxn private[GdxSource] (
       val id: String, decisionFile: Path,
-      val claims: Seq[(String, Int)]) {
+      val claims: Seq[(String, Int)],
+      removed: Seq[(String, Option[Long])]) {
     private def decide(verdict: String): Boolean = {
       val conf = driverConf()
       val fs = decisionFile.getFileSystem(conf)
@@ -6248,6 +6309,12 @@ object GdxSource {
             "before its commit - re-run it")
       settled = Some("commit")
       retire()
+      // stats hygiene, as after any commit: a replaced table's ANALYZE
+      // sidecar describes rows that are gone; deletions decay it
+      val conf = driverConf()
+      removed.foreach { case (dir, deleted) =>
+        deleted.fold(clearColStats(dir, conf))(decayColStats(dir, conf, _))
+      }
       claims
     }
     /** Abort every claim at once (idempotent; loses to a commit that
@@ -6262,6 +6329,17 @@ object GdxSource {
     }
   }
 
+  /** One table's part of a prepared transaction. `stage` runs in the
+    * part's turn — its files written and gated, then claimed, before
+    * the next table's are written — against the snapshot at
+    * `expectedBase` (the latest when < 1). It returns the entries to
+    * claim, the table's whole entry list when `full` (else a delta
+    * appended to whatever head the claim lands on), and the rows it
+    * deleted, None when it replaces the table. */
+  private[graft] final case class TxnPart(dir: String, full: Boolean,
+      expectedBase: Int,
+      stage: TableSnapshot => (Seq[GdxFileEntry], Option[Long]))
+
   /** PREPARE a multi-table transaction: stage each table's data files
     * and manifest, then claim each table's next version with a
     * redirect manifest (scaladoc at [[TxnHeader]]). Constraints are
@@ -6273,75 +6351,56 @@ object GdxSource {
     * then reaps the staged files); a crash after it leaves a fully
     * committed transaction readers resolve lazily. */
   def prepareTransaction(spark: SparkSession,
-                         writes: Seq[GdxTxnWrite]): GdxPreparedTxn = {
-    import org.apache.spark.sql.functions.{col, expr, not, coalesce, lit}
-    require(writes.nonEmpty, "gdx txn: no writes")
-    require(writes.map(_.dir).distinct.size == writes.size,
+                         writes: Seq[GdxTxnWrite]): GdxPreparedTxn =
+    prepareParts(writes.map(w => TxnPart(w.dir, w.overwrite,
+      w.expectedBase, snap => (insertFiles(w.dir, snap, w.rows),
+        if (w.overwrite) None else Some(0L)))))
+
+  /** [[prepareTransaction]] over [[TxnPart]]s: a SQL transaction's
+    * COMMIT claims its staged DML through here. */
+  private[graft] def prepareParts(parts: Seq[TxnPart]): GdxPreparedTxn = {
+    require(parts.nonEmpty, "gdx txn: no writes")
+    require(parts.map(_.dir).distinct.size == parts.size,
       "gdx txn: one write per table")
     val conf = driverConf()
     val id = java.util.UUID.randomUUID().toString.replace("-", "")
-    val headDir = new Path(writes.head.dir)
+    val headDir = new Path(parts.head.dir)
     val decisionFile = headDir.getFileSystem(conf)
       .makeQualified(new Path(headDir, s"_txndecision-$id"))
-    val sconf = new SerializableHadoopConf(conf)
+    val removed = Seq.newBuilder[(String, Option[Long])]
     // a staging failure on a LATER table must not strand the EARLIER
     // tables' already-published claims undecided: abort the whole
     // transaction (the decision file exists before any claim can
     // resolve it) and rethrow
-    def stageAll(): Seq[(String, Int)] = writes.map { w =>
-      val dir = w.dir
+    def stageAll(): Seq[(String, Int)] = parts.map { p =>
+      val dir = p.dir
       val fs = new Path(dir).getFileSystem(conf)
-      val tblSchema = committedSchema(dir, conf)
-      val tblColmap = committedColmap(dir, conf)
-      val checks = committedConstraints(dir, conf)
-      val partRaw = committedPartitionCol(dir, conf)
-      require(w.rows.columns.map(_.toLowerCase(java.util.Locale.ROOT))
-          .toSeq ==
-        tblSchema.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT))
-          .toSeq,
-        s"gdx txn: columns ${w.rows.columns.mkString(",")} do not match " +
-          s"$dir's schema ${tblSchema.fieldNames.mkString(",")}")
-      require(w.rows.schema.fields.map(_.dataType).toSeq ==
-          tblSchema.fields.map(_.dataType).toSeq,
-        s"gdx txn: column types ${w.rows.schema.simpleString} do not " +
-          s"match $dir's schema ${tblSchema.simpleString}")
-      val aligned = w.rows.select(tblSchema.fieldNames.map(col).toSeq: _*)
-      // CHECK constraints, SQL semantics (NULL passes), enforced at
-      // stage time — the decision PUT must never publish unvalidated
-      // rows
-      checks.foreach { case (n, sql) =>
-        if (aligned.filter(not(coalesce(expr(sql), lit(true))))
-            .limit(1).count() > 0)
-          throw new GdxConstraintViolationException(
-            s"gdx txn: rows for $dir violate CHECK constraint $n")
-      }
-      val staged = writeDataFiles(aligned, dir, tblSchema, sconf,
-        tblColmap)
-      val headers = headerLines(tblSchema, checks, tblColmap, partRaw)
+      val snap = snapshotAt(dir, conf, p.expectedBase)
+      val (staged, deleted) = p.stage(snap)
+      removed += dir -> deleted
+      val lines = staged.sortBy(_.name).map(_.manifestLine)
       // claim the next version; a stale foreign claim is decided first
       // (the same invariant every writer keeps)
       var claimed = -1
       var attempts = 0
       while (claimed < 0) {
         val base = decidedHead(dir, conf)
-        // a restatement computed FROM a basis snapshot must land ON
-        // it — a moved base means a concurrent commit this write
-        // would erase; abort the whole transaction (the catch below
-        // publishes the abort decision) instead
-        if (w.expectedBase >= 0 && base != w.expectedBase)
+        // a write computed FROM a basis snapshot must land ON it — a
+        // moved base means a concurrent commit this write would erase;
+        // abort the whole transaction (the catch below publishes the
+        // abort decision) instead
+        if (p.expectedBase >= 0 && base != p.expectedBase)
           throw new GdxConcurrentModificationException(
-            s"gdx txn: $dir moved from version ${w.expectedBase} to " +
+            s"gdx txn: $dir moved from version ${p.expectedBase} to " +
               s"$base while the transaction was staged - its " +
-              "restatement would erase the concurrent commit; " +
+              "write would erase the concurrent commit; " +
               "ROLLBACK and re-run the transaction")
         val v = base + 1
         val stageName = f"_txnstage-$v%08d-$id"
         val stageLines =
-          if (w.overwrite) headers ++
-            staged.sortBy(_.name).map(_.manifestLine)
-          else (DeltaHeader +: headers) ++
-            staged.sortBy(_.name).map(_.manifestLine)
-        val claimLines = (DeltaHeader +: headers) :+
+          if (p.full) snap.headers ++ lines
+          else (DeltaHeader +: snap.headers) ++ lines
+        val claimLines = (DeltaHeader +: snap.headers) :+
           s"#txn\t$decisionFile\t$stageName"
         writeLines(fs, new Path(dir, stageName), stageLines)
         if (publishExclusive(fs, conf, manifestFor(dir, v), claimLines))
@@ -6363,7 +6422,27 @@ object GdxSource {
           publishExclusive(dfs, conf, decisionFile, Seq("abort"))
           throw t
       }
-    new GdxPreparedTxn(id, decisionFile, claims)
+    new GdxPreparedTxn(id, decisionFile, claims, removed.result())
+  }
+
+  /** A transaction's INSERT rows written as new data files of `snap`'s
+    * table: the rows must match its schema by name and type, and the
+    * write is gated like [[rowChange]]'s images — a NULL key or a CHECK
+    * violation refuses after the write, the files then orphans for
+    * [[vacuum]]. Returns the new entries. */
+  private[graft] def insertFiles(dir: String, snap: TableSnapshot,
+                                 rows: org.apache.spark.sql.DataFrame)
+      : Seq[GdxFileEntry] = {
+    def shape(t: StructType) = t.fields.toSeq.map(f =>
+      (f.name.toLowerCase(java.util.Locale.ROOT), f.dataType))
+    require(shape(rows.schema) == shape(snap.schema),
+      s"gdx txn: columns ${rows.schema.simpleString} do not match " +
+        s"$dir's schema ${snap.schema.simpleString}")
+    val (entries, gate) = writeGated(rows.select(snap.schema.fieldNames
+      .map(org.apache.spark.sql.functions.col).toSeq: _*), dir, snap,
+      new SerializableHadoopConf(driverConf()))
+    refuseGate("txn", "inserted", gate, snap)
+    entries
   }
 
   /** Atomically commit one staged write per table — either every

@@ -9,7 +9,7 @@ import org.apache.spark.sql.AnalysisException
   * UPDATE/DELETE — with first-clause-wins ordering, ambiguous-match
   * refusal, one-commit atomicity, and zone-map file pruning. Runs on a
   * sibling session with GraftExtensions active (same SparkContext). */
-class GdxMergeGeneralSpec extends SparkSuite {
+class GdxMergeGeneralSpec extends SparkSuite with RefusalHelper {
 
   private lazy val s = org.apache.spark.sql.graft.ColumnBridge
     .sessionWithExtensions(spark, new GraftExtensions())
@@ -23,36 +23,6 @@ class GdxMergeGeneralSpec extends SparkSuite {
     s.sql(s"SELECT k, v, w FROM $tbl ORDER BY k").collect()
       .map(r => (r.getLong(0), r.getString(1),
         if (r.isNullAt(2)) null else r.getLong(2))).toSeq
-
-  /** Runs a MERGE that must be refused AFTER its writes and before its
-    * publish: the versions and rows stay as they were, the new data and
-    * DV files (`upd-*`, `dv-*`) exist but no committed snapshot
-    * references them, and vacuum's unreferenced-file sweep deletes
-    * every one. Returns the refusal. */
-  private def refusedAfterWrites(dir: String, tbl: String)
-                                (merge: => Any): Throwable = {
-    import graft.sources.GdxSource
-    val conf = GdxSource.driverConf()
-    def written(): Set[String] = new java.io.File(dir).listFiles()
-      .map(_.getName)
-      .filter(n => n.startsWith("upd-") || n.startsWith("dv-")).toSet
-    val versions = GdxSource.listVersions(dir, conf)
-    val rowsBefore = rows(tbl)
-    val filesBefore = written()
-    val e = intercept[Exception](merge)
-    assert(GdxSource.listVersions(dir, conf) === versions)
-    assert(rows(tbl) === rowsBefore)
-    val orphans = written() -- filesBefore
-    assert(orphans.nonEmpty, "refused before writing anything")
-    val referenced = versions.flatMap(v =>
-      GdxSource.committedEntries(dir, conf, v))
-      .flatMap(f => f.name +: f.dv.toSeq).toSet
-    assert(orphans.intersect(referenced).isEmpty, orphans)
-    GdxSource.vacuum(dir, conf, keepLast = versions.size,
-      sweepOrphanHours = Some(0))
-    assert(written() === filesBefore)
-    e
-  }
 
   test("full clause matrix: conditional update/delete/insert + NMBS") {
     val dir = freshDir("matrix")
@@ -119,7 +89,7 @@ class GdxMergeGeneralSpec extends SparkSuite {
         (1, 'x', 1L), (1, 'y', 2L) AS t(k, nv, nw)""")
       // the images land first; the DV write finds the repeated target
       // position, and nothing is committed
-      val e = refusedAfterWrites(dir, "gm_dup")(s.sql(
+      val e = refusedAfterWrites(Seq(dir), rows("gm_dup"))(s.sql(
         """MERGE INTO gm_dup t USING gm_dsrc s ON t.k = s.k
           WHEN MATCHED THEN UPDATE SET v = s.nv"""))
       assert(Iterator.iterate(e: Throwable)(_.getCause)
@@ -131,7 +101,7 @@ class GdxMergeGeneralSpec extends SparkSuite {
       // (the unmatched k=5 is inserted, so the writes are not empty)
       s.sql("""CREATE OR REPLACE TEMP VIEW gm_dsrc2 AS SELECT * FROM VALUES
         (1, 'x', 1L), (1, 'y', 2L), (5, 'z', 3L) AS t(k, nv, nw)""")
-      val e2 = refusedAfterWrites(dir, "gm_dup")(s.sql(
+      val e2 = refusedAfterWrites(Seq(dir), rows("gm_dup"))(s.sql(
         """MERGE INTO gm_dup t USING gm_dsrc2 s ON t.k = s.k
           WHEN MATCHED AND s.nw > 5 THEN DELETE
           WHEN NOT MATCHED THEN INSERT (k, v, w) VALUES (s.k, s.nv, s.nw)"""))
@@ -194,7 +164,7 @@ class GdxMergeGeneralSpec extends SparkSuite {
       s.sql("""CREATE OR REPLACE TEMP VIEW gm_csrc AS
         SELECT * FROM VALUES (1, -5L) AS t(k, nw)""")
       // the violating image and the DV are written, then refused
-      val e = refusedAfterWrites(dir, "gm_chk")(s.sql(
+      val e = refusedAfterWrites(Seq(dir), rows("gm_chk"))(s.sql(
         """MERGE INTO gm_chk t USING gm_csrc s ON t.k = s.k
           WHEN MATCHED THEN UPDATE SET w = s.nw"""))
       assert(Iterator.iterate(e: Throwable)(_.getCause)
@@ -328,7 +298,7 @@ class GdxMergeGeneralSpec extends SparkSuite {
       // a NULL key in a merged image is refused, nothing committed
       s.sql("""CREATE OR REPLACE TEMP VIEW gm_e2src AS
         SELECT * FROM VALUES (2L) AS t(k)""")
-      val e = refusedAfterWrites(dir, "gm_edge")(s.sql(
+      val e = refusedAfterWrites(Seq(dir), rows("gm_edge"))(s.sql(
         """MERGE INTO gm_edge t USING gm_e2src s ON t.k = s.k
           WHEN MATCHED THEN UPDATE SET k = NULL"""))
       assert(Iterator.iterate(e)(_.getCause)
@@ -462,10 +432,11 @@ class GdxMergeGeneralSpec extends SparkSuite {
         .takeWhile(_ != null).take(8).exists(c =>
           c.isInstanceOf[IllegalArgumentException] &&
             c.getMessage.contains("1 updated row(s) have a NULL key (k)"))
-      val api = refusedAfterWrites(dir, "gm_un")(GdxSource.update(s, dir,
-        col("k") === 2L, Map("k" -> lit(null).cast("long"))))
+      val api = refusedAfterWrites(Seq(dir), rows("gm_un"))(
+        GdxSource.update(s, dir, col("k") === 2L,
+          Map("k" -> lit(null).cast("long"))))
       assert(namesKey(api), api.getMessage)
-      val sql = refusedAfterWrites(dir, "gm_un")(
+      val sql = refusedAfterWrites(Seq(dir), rows("gm_un"))(
         s.sql("UPDATE gm_un SET k = NULL WHERE k = 1"))
       assert(namesKey(sql), sql.getMessage)
       assert(rows("gm_un") === Seq((1L, "a", 1L), (2L, "b", 2L)))

@@ -256,6 +256,20 @@ class GdxStatsSpec extends SparkSuite {
     assert(kServed(cbo))
   }
 
+  test("an overwriting transaction clears the ANALYZE sidecar, as " +
+      "TRUNCATE does") {
+    val dir = freshDir("txnow")
+    seed(dir, 40)
+    GdxSource.analyzeTable(spark, dir)
+    assert(GdxSource.readColStats(dir, conf).map(_.rowCount) === Some(40L))
+    GdxSource.transact(spark, Seq(GdxSource.GdxTxnWrite(dir,
+      spark.range(1).select(col("id").as("k"), lit("s1").as("status"),
+        lit(1.0).as("w"), lit(null).cast("date").as("d")),
+      overwrite = true)))
+    assert(read(spark, dir).count() === 1L)
+    assert(GdxSource.readColStats(dir, conf).isEmpty)
+  }
+
   test("min/max stop being served when the live column's type no " +
       "longer matches the analyzed one; ndv survives; vacuum keeps " +
       "the sidecar") {

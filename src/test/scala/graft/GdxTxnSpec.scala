@@ -10,7 +10,7 @@ import graft.sources.GdxSource
   * Undecided claims are invisible to readers and loud on explicit
   * pins; a blocked writer aborts a stale claim (first decision wins);
   * vacuum reaps an aborted transaction's staged files. */
-class GdxTxnSpec extends SparkSuite {
+class GdxTxnSpec extends SparkSuite with RefusalHelper {
   import spark.implicits._
 
   private val fmt = "graft.sources.GdxSource"
@@ -500,5 +500,116 @@ class GdxTxnSpec extends SparkSuite {
     assert(read(b).count() === 11L)
     assert(spark.read.format(fmt).option("path", a)
       .option("version", "1").load().count() === 10L)
+  }
+
+  /** A two-table transaction whose first staged statement, `bad` on
+    * `cat.lab.t` (keys 1, 2), must be refused at COMMIT after its
+    * writes, an INSERT into `cat.lab.u` staged after it: neither table
+    * gets a new version or changed rows, the orphans vacuum away, and
+    * ROLLBACK then closes the transaction. `prep` runs on t's directory
+    * before the transaction begins. Returns the refusal. */
+  private def stagedRefusal(cat: String, prep: String => Unit = _ => ())(
+      bad: String => String): Throwable = {
+    val (s, wh) = txnSession(cat)
+    s.sql(s"CREATE NAMESPACE $cat.lab")
+    s.sql(s"CREATE TABLE $cat.lab.t (k BIGINT, v STRING)")
+    s.sql(s"CREATE TABLE $cat.lab.u (k BIGINT, v STRING)")
+    s.sql(s"INSERT INTO $cat.lab.t VALUES (1, 'a'), (2, 'b')")
+    s.sql(s"INSERT INTO $cat.lab.u VALUES (1, 'x')")
+    prep(s"$wh/lab/t")
+    def rows = Seq("t", "u").map(n =>
+      s.table(s"$cat.lab.$n").orderBy("k").collect().toSeq)
+    s.sql("BEGIN TRANSACTION")
+    s.sql(bad(s"$cat.lab.t"))
+    s.sql(s"INSERT INTO $cat.lab.u VALUES (2, 'y')")
+    val e = refusedAfterWrites(Seq(s"$wh/lab/t", s"$wh/lab/u"), rows)(
+      s.sql("COMMIT"))
+    s.sql("ROLLBACK")
+    assert(!graft.plans.GdxSqlTxn.isOpen(s))
+    e
+  }
+
+  test("a staged UPDATE SET k = NULL refuses at COMMIT as the plain " +
+      "UPDATE does, naming the key column, and commits nothing") {
+    val e = stagedRefusal("gdx_txnr1")(t =>
+      s"UPDATE $t SET k = NULL WHERE k = 1")
+    assert(raised[IllegalArgumentException](e,
+      "gdx update: 1 updated row(s) have a NULL key (k)"), e.getMessage)
+  }
+
+  test("a staged UPDATE violating a CHECK refuses at COMMIT with the " +
+      "plain UPDATE's exception, counted inside its write") {
+    val e = stagedRefusal("gdx_txnr2",
+      dir => GdxSource.addConstraint(spark, dir, "pos", "k >= 0"))(t =>
+      s"UPDATE $t SET k = -5 WHERE k = 1")
+    assert(raised[graft.sources.GdxConstraintViolationException](e,
+      "gdx update: 1 updated row(s) would violate CHECK constraint pos"),
+      e.getMessage)
+  }
+
+  test("a staged ambiguous MERGE refuses at COMMIT with the plain " +
+      "MERGE's cardinality exception") {
+    val e = stagedRefusal("gdx_txnr3")(t =>
+      s"""MERGE INTO $t t
+        USING (SELECT * FROM VALUES (1L, 'p'), (1L, 'q') AS src(k, v)) s
+        ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET v = s.v""")
+    assert(raised[graft.sources.GdxMergeCardinalityException](e),
+      e.getMessage)
+  }
+
+  /** A catalog table `cat.lab.t` of keys 0, 2, …, 198 in two
+    * key-disjoint files (0..98 and 100..198); returns (session, dir). */
+  private def twoFileTable(cat: String) = {
+    val (s, wh) = txnSession(cat)
+    s.sql(s"CREATE NAMESPACE $cat.lab")
+    s.sql(s"CREATE TABLE $cat.lab.t (k BIGINT, v STRING)")
+    val dir = s"$wh/lab/t"
+    spark.range(0, 200, 2).select(col("id").as("k"),
+      concat(lit("v"), col("id")).as("v"))
+      .repartitionByRange(2, col("k"))
+      .write.format(fmt).option("path", dir).mode("append").save()
+    assert(GdxSource.committedEntries(dir, conf).size === 2)
+    (s, dir)
+  }
+
+  test("a staged 1-row DELETE commits one deletion vector: every basis " +
+      "file is kept by reference, none rewritten") {
+    val cat = "gdx_txndv"
+    val (s, dir) = twoFileTable(cat)
+    val before = GdxSource.committedEntries(dir, conf)
+    s.sql("BEGIN TRANSACTION")
+    s.sql(s"DELETE FROM $cat.lab.t WHERE k = 150")
+    s.sql("COMMIT")
+    val after = GdxSource.committedEntries(dir, conf)
+    assert(after.map(_.name) === before.map(_.name))
+    assert(after.count(_.dv.isDefined) === 1)
+    assert(s.table(s"$cat.lab.t").count() === 99L)
+    assert(s.table(s"$cat.lab.t").filter("k = 150").count() === 0L)
+  }
+
+  test("a staged MERGE prunes like the plain one: the file outside the " +
+      "source's key range keeps its entry, and COMMIT runs at most 4 " +
+      "Spark jobs") {
+    val cat = "gdx_txnmp"
+    val (s, dir) = twoFileTable(cat)
+    val high = GdxSource.committedEntries(dir, conf)
+      .find(_.stats.exists(_.minK >= 100)).get
+    s.sql("BEGIN TRANSACTION")
+    s.sql(s"""MERGE INTO $cat.lab.t t
+      USING (SELECT * FROM VALUES (10L, 'u10'), (11L, 'n11') AS src(k, v)) s
+      ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET *
+      WHEN NOT MATCHED THEN INSERT *""")
+    // the one-pass source-key window, the broadcast of the candidate
+    // file, the image write and the DV write — as the plain MERGE
+    val (_, jobs) = jobsDuring(s.sql("COMMIT").collect())
+    assert(jobs.size <= 4, jobs.mkString("\n"))
+    val after = GdxSource.committedEntries(dir, conf)
+    assert(after.find(_.name == high.name).map(_.manifestLine) ===
+      Some(high.manifestLine))
+    assert(s.table(s"$cat.lab.t").filter("k IN (10, 11)").orderBy("k")
+      .collect().map(_.getString(1)).toSeq === Seq("u10", "n11"))
+    assert(s.table(s"$cat.lab.t").count() === 101L)
   }
 }
