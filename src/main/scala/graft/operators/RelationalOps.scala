@@ -4291,7 +4291,7 @@ object RelationalOps extends QueryModule {
     // struct (/root/reference/src/analyze.py:142-160), one level
     // deeper.
     // C48 — REAL TEXT THROUGH THE TABLE FORMAT: the escape-era cell
-    // codec (GdxSource.escapeCell, the `e:` manifest era) proven on
+    // codec (GdxLineFormat.escapeCell, the `e:` manifest era) proven on
     // content no pre-escape GDX file could hold — commas, parens,
     // '=', backslashes, embedded newlines and a literal "\N" — in a
     // top-level text column, map keys AND values, and conversation

@@ -234,7 +234,7 @@ object GdxSqlTxn {
           case ((cur, del), StagedInsert(_, _, p)) =>
             (cur ++ gdx.insertFiles(dir, snap, bridge.ofRows(spark, p)), del)
           case ((cur, del), StagedChange(_, _, change)) =>
-            gdx.rowChange(spark, dir, snap.copy(entries = cur), change(spark))
+            gdx.rowChange(spark, dir, snap.withEntries(cur), change(spark))
               .fold((cur, del))(r => (r.entries, del + r.deleted))
         }
         (entries, Some(deleted))

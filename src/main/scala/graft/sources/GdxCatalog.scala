@@ -222,7 +222,7 @@ class GdxCatalog extends TableCatalog with SupportsNamespaces
           s"gdx catalog: DEFAULT NULL for ${f.name} is the column's " +
             "natural state - declare no default instead")
         GdxSource.withDefaultCell(f,
-          GdxSource.internalCellText(f.dataType, folded))
+          GdxLineFormat.internalCellText(f.dataType, folded))
       }
     })
 
@@ -399,7 +399,7 @@ class GdxCatalog extends TableCatalog with SupportsNamespaces
           require(lit.dataType == a.dataType,
             s"gdx catalog: DEFAULT literal type ${lit.dataType} does " +
               s"not match column type ${a.dataType}")
-          GdxSource.internalCellText(a.dataType, lit.value)
+          GdxLineFormat.internalCellText(a.dataType, lit.value)
         }
         GdxSource.addColumn(d, a.fieldNames.head, a.dataType,
           default = dflt)

@@ -15,6 +15,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.{streaming => wstreaming}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan,
   GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -141,9 +142,9 @@ import scala.util.control.NonFatal
   * Schema starts as (k BIGINT, v STRING) — a digest index (doc_id,
   * digest) or any key-value landing — and may evolve by appending
   * long/string/double columns. Encoding is tab-separated lines (`\N`
-  * for NULL); the point here is the PROTOCOL (manifest commit,
-  * pushdown), not the byte format. One input partition per committed
-  * file.
+  * for NULL), read and written only through [[GdxLineFormat]]; the
+  * point here is the PROTOCOL (manifest commit, pushdown), not the
+  * byte format.
   *
   * Usage:
   *   df.write.format("graft.sources.GdxSource").option("path", dir)
@@ -416,12 +417,12 @@ case class GdxFileEntry(name: String, stats: Option[GdxFileStats],
                         gen: Option[String] = None,
                         enc: Option[String] = None) {
   /** Whether this file's string cells are escape-encoded
-    * ([[GdxSource.escapeCell]]) — the per-FILE codec era. Files
+    * ([[GdxLineFormat.escapeCell]]) — the per-FILE codec era. Files
     * written before the escape layer carry no `e:` overlay and decode
     * raw (their vocabulary never allowed the escapable characters), so
     * a table freely mixes eras file-by-file; every rewrite re-encodes
     * under the current era. */
-  def escaped: Boolean = enc.contains(GdxSource.EscCodec)
+  def escaped: Boolean = enc.contains(GdxLineFormat.EscCodec)
   /** Manifest line: `name` | `name\trows\tmin\tmax` |
     * `name\trows\tmin\tmax\tdv` (`-` placeholders when a DV attaches
     * to a legacy stats-less entry). Extended per-column stats, when
@@ -459,7 +460,7 @@ case class GdxFileEntry(name: String, stats: Option[GdxFileStats],
     // non-recluster write) just means "prove it from the boxes".
     val g = gen.map(t => s"\tg:$t").getOrElse("")
     // codec ERA (`e:<v>`): proves this file's string cells are
-    // escape-encoded ([[GdxSource.escapeCell]]). Absence = the legacy
+    // escape-encoded ([[GdxLineFormat.escapeCell]]). Absence = the legacy
     // raw vocabulary (no escapable characters could be written), so
     // readers that predate the overlay only ever meet files they can
     // decode, and new readers decode each file under its own era.
@@ -509,9 +510,10 @@ object GdxSource {
     // matrix doesn't declare (arbitrary-depth traces, ragged metadata;
     // the role SQL:2023 JSON / Parquet VARIANT plays). Cells store the
     // value's canonical JSON rendering, escape-encoded like any string
-    // ([[escapeCell]] — arbitrary content is inert to the splitters),
-    // and decode through Spark's own parser back to a VariantVal, so
-    // `variant_get`/`try_variant_get` work directly over the scan.
+    // ([[GdxLineFormat.escapeCell]] — arbitrary content is inert to
+    // the splitters), and decode through Spark's own parser back to a
+    // VariantVal, so `variant_get`/`try_variant_get` work directly over
+    // the scan.
     // Fidelity contract is the JSON type system: a variant built by
     // parse_json round-trips exactly (the builder is deterministic);
     // one CAST from a native type normalizes through its JSON
@@ -764,7 +766,7 @@ object GdxSource {
   private[graft] def withDefaultCell(f: StructField,
                                      text: String): StructField = {
     require(!text.exists(c => c == '\t' || c == '\n' || c == '\r' ||
-        c == ',') && text != NullMarker && text.nonEmpty,
+        c == ',') && text != GdxLineFormat.NullMarker && text.nonEmpty,
       s"gdx: default for ${f.name} must be non-empty and free of " +
         "tab/newline/',' (schema-line encoding)")
     require(!f.metadata.contains(ShredOfKey),
@@ -776,7 +778,7 @@ object GdxSource {
         throw new IllegalArgumentException(
           s"gdx: DEFAULT is not supported for ${f.dataType.catalogString}")
       case dt =>
-        try parseInternalCell(dt, text) catch {
+        try GdxLineFormat.parseInternalCell(dt, text) catch {
           case e: Exception => throw new IllegalArgumentException(
             s"gdx: default '$text' is not a valid " +
               s"${dt.catalogString} cell for ${f.name}", e)
@@ -793,20 +795,6 @@ object GdxSource {
       .putString("EXISTS_DEFAULT", sqlLit)
       .build())
   }
-
-  /** A catalyst-INTERNAL value rendered as canonical cell text — how
-    * the catalog turns `ALTER TABLE ... ADD COLUMN ... DEFAULT <lit>`
-    * (a connector Literal) into the stored default. */
-  private[graft] def internalCellText(dt: DataType, v: Any): String =
-    dt match {
-      case d: DecimalType =>
-        v.asInstanceOf[Decimal].toJavaBigDecimal.toPlainString
-      case _: org.apache.spark.sql.types.MapType | ArrayType(_, _) |
-           _: StructType | org.apache.spark.sql.types.VariantType =>
-        throw new IllegalArgumentException(
-          s"gdx: no cell-text literal for ${dt.catalogString}")
-      case _ => v.toString // long/double/boolean/date-int/ts-micros/utf8
-    }
 
   /** A SQL literal equivalent to the canonical cell text — what the
     * analyzer folds when filling an INSERT's omitted column. */
@@ -900,825 +888,6 @@ object GdxSource {
     })
   }
 
-  // ------------------------------------------------- typed-cell codecs
-  // One canonical text form per type (scaladoc at [[typeNameOf]]);
-  // every read/write surface — the DSv2 reader/writer (Catalyst
-  // internal forms), the DML substrate and changefeed (external Row
-  // forms) — goes through these four functions, so a new type is
-  // added in exactly one place.
-  import org.apache.spark.sql.catalyst.util.DateTimeUtils
-
-  /** Codec era tag for escape-encoded files (the `e:` manifest
-    * overlay): every data file written since the escape layer landed
-    * carries `e:1`, and its string cells round-trip ARBITRARY Unicode.
-    * Files without the overlay predate the layer; their vocabulary
-    * never admitted an escapable character, so they decode raw. */
-  private[graft] val EscCodec = "1"
-
-  /** Escape one string VALUE into its canonical cell text. The escape
-    * set is exactly the line format's structural vocabulary — tab/
-    * newline (field and row separators), comma (array/map-entry and
-    * struct-field separators), parens (struct/collection cell
-    * delimiters), '=' (map key=value), and the backslash itself:
-    *
-    *   \  → \\    TAB → \t    LF → \n    CR → \r
-    *   ,  → \c    (   → \p    )  → \q    =  → \e
-    *
-    * Applied uniformly to every string surface (top-level cells,
-    * struct leaves at any depth, map keys, map values), so escaped
-    * content contains NO raw structural character and every splitter
-    * stays a plain depth/separator scan. The mapping is injective and
-    * deterministic — equal values always render equal cell bytes
-    * (the canonical-bytes property dedup and DV restatements rely
-    * on) — and a string with no escapable characters renders as
-    * itself, which keeps the new era byte-identical with the legacy
-    * one on the legacy vocabulary. A literal "\N" escapes its
-    * backslash (→ `\\N`), so the raw `\N` cell text still uniquely
-    * means NULL. */
-  private[graft] def escapeCell(s: String): String = {
-    var i = 0
-    val n = s.length
-    // fast path: most cells carry none of the 8 escapable characters
-    while (i < n && !isEscapable(s.charAt(i))) i += 1
-    if (i == n) return s
-    val sb = new java.lang.StringBuilder(n + 8)
-    sb.append(s, 0, i)
-    while (i < n) {
-      val c = s.charAt(i)
-      c match {
-        case '\\' => sb.append("\\\\")
-        case '\t' => sb.append("\\t")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case ','  => sb.append("\\c")
-        case '('  => sb.append("\\p")
-        case ')'  => sb.append("\\q")
-        case '='  => sb.append("\\e")
-        case _    => sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
-
-  private def isEscapable(c: Char): Boolean =
-    c == '\\' || c == '\t' || c == '\n' || c == '\r' ||
-    c == ','  || c == '('  || c == ')'  || c == '='
-
-  /** Invert [[escapeCell]]. Only ever applied to cells of an
-    * escape-era file (`e:1` entries), whose writers emit no other
-    * escape sequences — an unknown sequence or a trailing lone
-    * backslash is file corruption and fails loudly. The extended
-    * sequences `\d` (.) and `\m` (;) are produced only by
-    * [[escapeStatText]] (manifest string bounds) and decode here so
-    * both surfaces share one inverse. */
-  private[graft] def unescapeCell(s: String): String = {
-    var i = s.indexOf('\\')
-    if (i < 0) return s
-    val n = s.length
-    val sb = new java.lang.StringBuilder(n)
-    sb.append(s, 0, i)
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '\\') {
-        require(i + 1 < n, s"gdx decode: dangling escape in '$s'")
-        i += 1
-        s.charAt(i) match {
-          case '\\' => sb.append('\\')
-          case 't'  => sb.append('\t')
-          case 'n'  => sb.append('\n')
-          case 'r'  => sb.append('\r')
-          case 'c'  => sb.append(',')
-          case 'p'  => sb.append('(')
-          case 'q'  => sb.append(')')
-          case 'e'  => sb.append('=')
-          case 'd'  => sb.append('.')
-          case 'm'  => sb.append(';')
-          case bad  => throw new IllegalArgumentException(
-            s"gdx decode: unknown escape '\\$bad' in '$s'")
-        }
-      } else sb.append(c)
-      i += 1
-    }
-    sb.toString
-  }
-
-  /** Parse one cell into its Catalyst INTERNAL form (what a
-    * PartitionReader emits): Int days, Long micros, Decimal,
-    * Boolean, UTF8String. */
-  private[graft] def parseInternalCell(dt: DataType, s: String,
-                                       esc: Boolean = false): Any =
-    dt match {
-      case LongType       => s.toLong
-      case DoubleType     => s.toDouble
-      case DateType       => s.toInt
-      case TimestampType  => s.toLong
-      case BooleanType    => s.toBoolean
-      case d: DecimalType =>
-        Decimal(new java.math.BigDecimal(s), d.precision, d.scale)
-      case ArrayType(st: StructType, _) =>
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          splitArrayStructCells(s).map(e =>
-            parseStructInternal(st, st, e, esc): Any))
-      case ArrayType(et, _) =>
-        val parts: Array[String] =
-          if (s.isEmpty) Array.empty else s.split(',')
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          et match {
-            case FloatType  => parts.map(p => Float.box(p.toFloat))
-            case DoubleType => parts.map(p => Double.box(p.toDouble))
-            case _          => parts.map(p => Long.box(p.toLong))
-          })
-      case org.apache.spark.sql.types.MapType(_, st: StructType, _) =>
-        val entries: Array[(String, String)] =
-          parseMapEntries(s, structValued = true)
-        new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            entries.map(e => UTF8String.fromString(
-              decodeText(e._1, esc)): Any)),
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            entries.map(e => parseStructInternal(st, st, e._2, esc): Any)))
-      case _: org.apache.spark.sql.types.MapType =>
-        val entries: Array[(String, String)] = parseMapEntries(s)
-        new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            entries.map(e => UTF8String.fromString(
-              decodeText(e._1, esc)): Any)),
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            entries.map(e => UTF8String.fromString(
-              decodeText(e._2, esc)): Any)))
-      case st: StructType => parseStructInternal(st, st, s, esc)
-      case org.apache.spark.sql.types.VariantType =>
-        // the stored cell is the value's canonical JSON text; Spark's
-        // own parser rebuilds the VariantVal (deterministic builder —
-        // re-rendering an unchanged value reproduces the same bytes)
-        org.apache.spark.sql.catalyst.expressions.variant
-          .VariantExpressionEvalUtils.parseJson(
-            UTF8String.fromString(decodeText(s, esc)),
-            allowDuplicateKeys = false, failOnError = true)
-      case _              => UTF8String.fromString(decodeText(s, esc))
-    }
-
-  /** Terminal string decode under the file's codec era: escape-era
-    * cells invert [[escapeCell]], legacy cells pass through raw (their
-    * vocabulary never allowed an escape sequence to exist). */
-  @inline private def decodeText(s: String, esc: Boolean): String =
-    if (esc) unescapeCell(s) else s
-
-  /** Split one struct cell's `(a,b,...)` text into its positional
-    * sub-cells; nested struct sub-cells keep their own parens (the
-    * depth tracker skips their commas — leaf strings are forbidden
-    * from carrying ','/'('/')', so parens are unambiguous). */
-  private[graft] def splitStructCells(s: String): Array[String] = {
-    require(s.length >= 2 && s.charAt(0) == '(' &&
-      s.charAt(s.length - 1) == ')',
-      s"gdx: malformed struct cell '$s' (expected parenthesized form)")
-    val inner = s.substring(1, s.length - 1)
-    val out = Array.newBuilder[String]
-    var depth = 0; var start = 0; var i = 0
-    while (i < inner.length) {
-      inner.charAt(i) match {
-        case '('               => depth += 1
-        case ')'               => depth -= 1
-        case ',' if depth == 0 => out += inner.substring(start, i)
-                                  start = i + 1
-        case _                 => ()
-      }
-      i += 1
-    }
-    out += inner.substring(start)
-    out.result()
-  }
-
-  /** Split an `array<struct<...>>` cell's `(..),(..)` text into its
-    * element cells ("" = the empty array) — the paren depth tracker
-    * skips commas inside elements (struct leaf strings never carry a
-    * RAW , ( ) in any era: the legacy vocabulary banned them, the
-    * escape era encodes them). */
-  private[graft] def splitArrayStructCells(s: String): Array[String] = {
-    if (s.isEmpty) return Array.empty
-    val out = Array.newBuilder[String]
-    var depth = 0; var start = 0; var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '('               => depth += 1
-        case ')'               => depth -= 1
-        case ',' if depth == 0 => out += s.substring(start, i)
-                                  start = i + 1
-        case _                 => ()
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.result()
-  }
-
-  /** Decode one INTERNAL cell under a possibly NARROWED requested
-    * type — Catalyst's nested schema pruning may request a struct (or
-    * a struct-element array) with fewer sub-fields than the file
-    * stores; the cell decodes by the STORED positional layout and
-    * projects the requested sub-fields by name. Identical types take
-    * the plain path. */
-  private[graft] def parseInternalCellPruned(requested: DataType,
-      stored: DataType, s: String, esc: Boolean = false): Any =
-    (requested, stored) match {
-    case (rq: StructType, sv: StructType) if rq ne sv =>
-      parseStructInternal(sv, rq, s, esc)
-    case (ArrayType(rq: StructType, _), ArrayType(sv: StructType, _))
-        if rq ne sv =>
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        splitArrayStructCells(s).map(e =>
-          parseStructInternal(sv, rq, e, esc): Any))
-    case (org.apache.spark.sql.types.MapType(_, rq: StructType, _),
-          org.apache.spark.sql.types.MapType(_, sv: StructType, _))
-        if rq ne sv =>
-      val entries = parseMapEntries(s, structValued = true)
-      new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          entries.map(e => UTF8String.fromString(
-            decodeText(e._1, esc)): Any)),
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          entries.map(e => parseStructInternal(sv, rq, e._2, esc): Any)))
-    case _ => parseInternalCell(requested, s, esc)
-  }
-
-  /** Decode a struct cell written under `stored` into the (possibly
-    * nested-pruned) `requested` shape — sub-fields are matched by
-    * NAME against the stored layout, a requested field past the
-    * cell's arity reads NULL (trailing-field evolution: old cells
-    * simply have fewer sub-cells). */
-  private[graft] def parseStructInternal(stored: StructType,
-      requested: StructType, s: String,
-      esc: Boolean = false): InternalRow = {
-    val parts = splitStructCells(s)
-    val vals = new Array[Any](requested.length)
-    var i = 0
-    while (i < requested.length) {
-      val f = requested.fields(i)
-      val si = stored.fieldNames.indexOf(f.name)
-      require(si >= 0, s"gdx read: unknown struct field '${f.name}'")
-      vals(i) =
-        if (si >= parts.length || parts(si) == NullMarker) null
-        else (f.dataType, stored.fields(si).dataType) match {
-          case (rq: StructType, sv: StructType) =>
-            parseStructInternal(sv, rq, parts(si), esc)
-          case (rq @ (ArrayType(_, _) |
-                _: org.apache.spark.sql.types.MapType), sv) =>
-            // collection sub-cells wrap their top-level text in one
-            // paren pair; the pruned decode handles a narrowed
-            // element/value struct exactly like a top-level column
-            parseInternalCellPruned(rq, sv,
-              stripCollectionWrap(parts(si)), esc)
-          case (dt, _) => parseInternalCell(dt, parts(si), esc)
-        }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(vals)
-  }
-
-  /** Decode one map cell's `k=v,k=v` text (keys pre-sorted at write
-    * time): the FIRST '=' of each entry splits key from value, so
-    * values may carry '='. STRING-valued maps split entries on every
-    * comma (their vocabulary bans ',' in keys and values but ALLOWS
-    * unbalanced parens — a depth tracker would silently swallow
-    * entry boundaries after a value like `a(b`); STRUCT-valued maps
-    * (`structValued`) split on TOP-LEVEL commas only — their values
-    * are parenthesized cells with commas inside, and their write
-    * vocabulary bans parens everywhere else (keys included), so the
-    * depth is always well-formed. */
-  private def parseMapEntries(s: String,
-                              structValued: Boolean = false)
-      : Array[(String, String)] =
-    if (s.isEmpty) Array.empty
-    else (if (structValued) splitArrayStructCells(s)
-          else s.split(',')).map { e =>
-      val j = e.indexOf('=')
-      require(j >= 0, s"gdx: malformed map entry '$e'")
-      (e.substring(0, j), e.substring(j + 1))
-    }
-
-  /** Parse one cell into its EXTERNAL (Row) form — what
-    * `createDataFrame(rdd, schema)` converts: LocalDate / Instant /
-    * java BigDecimal / boxed primitives. */
-  private[graft] def parseExternalCell(dt: DataType, s: String,
-                                       esc: Boolean = false): Any =
-    dt match {
-      case LongType       => Long.box(s.toLong)
-      case DoubleType     => Double.box(s.toDouble)
-      case DateType       => java.time.LocalDate.ofEpochDay(s.toLong)
-      case TimestampType  => DateTimeUtils.microsToInstant(s.toLong)
-      case BooleanType    => Boolean.box(s.toBoolean)
-      case d: DecimalType => new java.math.BigDecimal(s).setScale(d.scale)
-      case ArrayType(st: StructType, _) =>
-        splitArrayStructCells(s).toSeq
-          .map(e => parseExternalCell(st, e, esc))
-      case ArrayType(et, _) =>
-        val parts: Array[String] =
-          if (s.isEmpty) Array.empty else s.split(',')
-        (et match {
-          case FloatType  => parts.map(_.toFloat).toSeq
-          case DoubleType => parts.map(_.toDouble).toSeq
-          case _          => parts.map(_.toLong).toSeq
-        })
-      case org.apache.spark.sql.types.MapType(_, st: StructType, _) =>
-        scala.collection.immutable.ListMap(
-          parseMapEntries(s, structValued = true).toSeq
-            .map(e => decodeText(e._1, esc) ->
-              parseExternalCell(st, e._2, esc)): _*)
-      case _: org.apache.spark.sql.types.MapType =>
-        // ListMap preserves the stored (key-sorted) order, keeping the
-        // external round-trip byte-identical with the internal one
-        scala.collection.immutable.ListMap(parseMapEntries(s).toSeq
-          .map(e => (decodeText(e._1, esc), decodeText(e._2, esc))): _*)
-      case st: StructType =>
-        val parts = splitStructCells(s)
-        org.apache.spark.sql.Row.fromSeq(
-          st.fields.zipWithIndex.map { case (f, i) =>
-            if (i >= parts.length || parts(i) == NullMarker) null
-            else f.dataType match {
-              case ArrayType(_, _) |
-                   _: org.apache.spark.sql.types.MapType =>
-                parseExternalCell(f.dataType,
-                  stripCollectionWrap(parts(i)), esc)
-              case dt => parseExternalCell(dt, parts(i), esc)
-            }
-          }.toSeq)
-      case org.apache.spark.sql.types.VariantType =>
-        // external form of VariantType IS VariantVal (no Row wrapper)
-        org.apache.spark.sql.catalyst.expressions.variant
-          .VariantExpressionEvalUtils.parseJson(
-            UTF8String.fromString(decodeText(s, esc)),
-            allowDuplicateKeys = false, failOnError = true)
-      case _              => decodeText(s, esc)
-    }
-
-  /** Strip the ONE paren pair a collection-typed struct sub-cell
-    * wraps its top-level text in. */
-  private def stripCollectionWrap(s: String): String = {
-    require(s.length >= 2 && s.charAt(0) == '(' &&
-      s.charAt(s.length - 1) == ')',
-      s"gdx: malformed collection sub-cell '$s' (expected a " +
-        "parenthesized wrap)")
-    s.substring(1, s.length - 1)
-  }
-
-  /** Render one INTERNAL-form cell (non-null) onto the line being
-    * written. `ctx` names the writing surface in the unescapable-
-    * string error. */
-  private[graft] def appendInternalCell(sb: java.lang.StringBuilder,
-      dt: DataType,
-      r: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-      i: Int, ctx: String, field: String): Unit = dt match {
-    case LongType       => sb.append(r.getLong(i)); ()
-    case DoubleType     => sb.append(r.getDouble(i)); ()
-    case DateType       => sb.append(r.getInt(i)); ()
-    case TimestampType  => sb.append(r.getLong(i)); ()
-    case BooleanType    => sb.append(r.getBoolean(i)); ()
-    case d: DecimalType =>
-      sb.append(r.getDecimal(i, d.precision, d.scale)
-        .toJavaBigDecimal.toPlainString); ()
-    case ArrayType(st: StructType, _) =>
-      val arr = r.getArray(i)
-      var j = 0
-      while (j < arr.numElements()) {
-        if (j > 0) sb.append(',')
-        require(!arr.isNullAt(j),
-          s"gdx $ctx: array field $field must not contain NULL " +
-            "elements (the comma-joined encoding has no element-null " +
-            "marker)")
-        appendStructCellInternal(sb, st, arr.getStruct(j, st.length),
-          ctx, s"$field[]")
-        j += 1
-      }
-    case ArrayType(et, _) =>
-      val arr = r.getArray(i)
-      var j = 0
-      while (j < arr.numElements()) {
-        if (j > 0) sb.append(',')
-        require(!arr.isNullAt(j),
-          s"gdx $ctx: array field $field must not contain NULL " +
-            "elements (the comma-joined encoding has no element-null " +
-            "marker)")
-        et match {
-          case FloatType  => sb.append(arr.getFloat(j)); ()
-          case DoubleType => sb.append(arr.getDouble(j)); ()
-          case _          => sb.append(arr.getLong(j)); ()
-        }
-        j += 1
-      }
-    case org.apache.spark.sql.types.MapType(_, st: StructType, _) =>
-      val m = r.getMap(i)
-      val ks = m.keyArray(); val vs = m.valueArray()
-      val entries = new Array[(String, String)](m.numElements())
-      var j = 0
-      while (j < entries.length) {
-        require(!ks.isNullAt(j) && !vs.isNullAt(j),
-          s"gdx $ctx: map field $field must not contain NULL keys " +
-            "or values (the k=v encoding has no entry-null marker)")
-        val vb = new java.lang.StringBuilder
-        appendStructCellInternal(vb, st, vs.getStruct(j, st.length),
-          ctx, s"$field{}")
-        entries(j) = (ks.getUTF8String(j).toString, vb.toString)
-        j += 1
-      }
-      appendMapEntries(sb, entries, ctx, field, structValued = true)
-    case _: org.apache.spark.sql.types.MapType =>
-      val m = r.getMap(i)
-      val ks = m.keyArray(); val vs = m.valueArray()
-      val entries = new Array[(String, String)](m.numElements())
-      var j = 0
-      while (j < entries.length) {
-        require(!ks.isNullAt(j) && !vs.isNullAt(j),
-          s"gdx $ctx: map field $field must not contain NULL keys " +
-            "or values (the k=v encoding has no entry-null marker)")
-        entries(j) = (ks.getUTF8String(j).toString,
-          vs.getUTF8String(j).toString)
-        j += 1
-      }
-      appendMapEntries(sb, entries, ctx, field)
-    case st: StructType =>
-      appendStructCellInternal(sb, st, r.getStruct(i, st.length),
-        ctx, field)
-    case org.apache.spark.sql.types.VariantType =>
-      // canonical JSON rendering, escape-encoded like any string —
-      // arbitrary nested content is inert to the positional splitters
-      sb.append(escapeCell(
-        r.getVariant(i).toJson(java.time.ZoneOffset.UTC))); ()
-    case _ =>
-      // escape-era write: arbitrary Unicode round-trips ([[escapeCell]]
-      // removes every structural character; a literal "\N" escapes its
-      // backslash so the raw NULL marker stays unambiguous)
-      sb.append(escapeCell(r.getUTF8String(i).toString)); ()
-  }
-
-  /** Render one struct value as its canonical `(sub,sub,...)` cell.
-    * Scalar leaves reuse the normal cell forms (none can carry a raw
-    * ','), string leaves escape-encode ([[escapeCell]]), nested
-    * structs recurse, COLLECTION sub-fields wrap their ordinary
-    * top-level cell text in one extra paren pair (depth-exact for the
-    * splitters at any nesting), NULL sub-fields write the `\N` marker
-    * (parens keep it unambiguous with a NULL cell). */
-  private def appendStructCellInternal(sb: java.lang.StringBuilder,
-      st: StructType,
-      sr: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-      ctx: String, field: String): Unit = {
-    sb.append('(')
-    var j = 0
-    while (j < st.length) {
-      if (j > 0) sb.append(',')
-      val dt = st.fields(j).dataType
-      val fname = s"$field.${st.fields(j).name}"
-      if (sr.isNullAt(j)) sb.append(NullMarker)
-      else dt match {
-        case nested: StructType =>
-          appendStructCellInternal(sb, nested,
-            sr.getStruct(j, nested.length), ctx, fname)
-        case StringType =>
-          appendStructLeafString(sb, sr.getUTF8String(j).toString,
-            ctx, fname)
-        case ArrayType(_, _) | _: org.apache.spark.sql.types.MapType =>
-          sb.append('(')
-          appendInternalCell(sb, dt, sr, j, ctx, fname)
-          sb.append(')')
-        case _ => appendInternalCell(sb, dt, sr, j, ctx, fname)
-      }
-      j += 1
-    }
-    sb.append(')'); ()
-  }
-
-  private def appendStructLeafString(sb: java.lang.StringBuilder,
-      s: String, ctx: String, field: String): Unit = {
-    // escape-era write: the leaf's commas/parens/newlines escape, so
-    // the positional encoding's depth tracker never sees them raw and
-    // real chat text ("Hi, how are you? (thanks)") lives in struct
-    // content columns without flattening or a JSON round-trip
-    sb.append(escapeCell(s)); ()
-  }
-
-  /** Render map entries SORTED BY KEY (one canonical text per map
-    * value), enforcing the vocabulary the decoder can invert: keys
-    * carry no ','/'='/tab/newline; STRING values no ','/tab/newline;
-    * STRUCT values (`structValued`) are pre-rendered parenthesized
-    * cells whose own leaf vocabulary already guarantees depth-
-    * trackable commas. */
-  private def appendMapEntries(sb: java.lang.StringBuilder,
-      entries: Array[(String, String)], ctx: String,
-      field: String, structValued: Boolean = false): Unit = {
-    // canonical order: sorted by the key VALUE (pre-escape), which
-    // coincides with the legacy sorted-key-text order on the legacy
-    // vocabulary (escape-free keys render as themselves)
-    java.util.Arrays.sort(entries,
-      Ordering.by((e: (String, String)) => e._1))
-    var j = 0
-    while (j < entries.length) {
-      val (k, v) = entries(j)
-      if (j > 0) sb.append(',')
-      // keys escape ',' '=' (entry structure) and parens (the
-      // struct-valued depth splitter); STRING values escape the same
-      // set. STRUCT values (`structValued`) are pre-rendered
-      // parenthesized cells whose own leaves already escaped — they
-      // append verbatim.
-      sb.append(escapeCell(k)).append('=')
-      if (structValued) sb.append(v) else sb.append(escapeCell(v))
-      j += 1
-    }
-    // "" must stay unambiguous: an EMPTY map is "" by construction,
-    // and a single-entry map is never "" (it carries its '=')
-  }
-
-  /** Render one EXTERNAL-form cell (non-null): external Rows carry
-    * either the java.sql or the java.time flavor depending on the
-    * session's datetime-API setting — both are accepted. */
-  private[graft] def appendExternalCell(sb: java.lang.StringBuilder,
-      dt: DataType, r: org.apache.spark.sql.Row, i: Int,
-      ctx: String, field: String): Unit = dt match {
-    case LongType   => sb.append(r.getLong(i)); ()
-    case DoubleType => sb.append(r.getDouble(i)); ()
-    case DateType   => sb.append(r.get(i) match {
-      case d: java.sql.Date        => DateTimeUtils.fromJavaDate(d)
-      case ld: java.time.LocalDate => ld.toEpochDay.toInt
-    }); ()
-    case TimestampType => sb.append(r.get(i) match {
-      case t: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(t)
-      case in: java.time.Instant => DateTimeUtils.instantToMicros(in)
-    }); ()
-    case BooleanType    => sb.append(r.getBoolean(i)); ()
-    case _: DecimalType =>
-      sb.append(r.getDecimal(i).toPlainString); ()
-    case ArrayType(st: StructType, _) =>
-      val arr = r.getSeq[org.apache.spark.sql.Row](i)
-      var j = 0
-      arr.foreach { v =>
-        if (j > 0) sb.append(',')
-        require(v != null,
-          s"gdx $ctx: array field $field must not contain NULL " +
-            "elements (the comma-joined encoding has no element-null " +
-            "marker)")
-        appendStructCellExternal(sb, st, v, ctx, s"$field[]")
-        j += 1
-      }
-    case ArrayType(_, _) =>
-      val arr = r.getSeq[Any](i)
-      var j = 0
-      arr.foreach { v =>
-        if (j > 0) sb.append(',')
-        require(v != null,
-          s"gdx $ctx: array field $field must not contain NULL " +
-            "elements (the comma-joined encoding has no element-null " +
-            "marker)")
-        sb.append(v.toString)
-        j += 1
-      }
-    case org.apache.spark.sql.types.MapType(_, st: StructType, _) =>
-      val m = r.getMap[Any, Any](i)
-      val entries = m.toArray.map { case (k, v) =>
-        require(k != null && v != null,
-          s"gdx $ctx: map field $field must not contain NULL keys " +
-            "or values (the k=v encoding has no entry-null marker)")
-        val vb = new java.lang.StringBuilder
-        appendStructCellExternal(vb, st,
-          v.asInstanceOf[org.apache.spark.sql.Row], ctx, s"$field{}")
-        (k.toString, vb.toString)
-      }
-      appendMapEntries(sb, entries, ctx, field, structValued = true)
-    case _: org.apache.spark.sql.types.MapType =>
-      val m = r.getMap[Any, Any](i)
-      val entries = m.toArray.map { case (k, v) =>
-        require(k != null && v != null,
-          s"gdx $ctx: map field $field must not contain NULL keys " +
-            "or values (the k=v encoding has no entry-null marker)")
-        (k.toString, v.toString)
-      }
-      appendMapEntries(sb, entries, ctx, field)
-    case st: StructType =>
-      appendStructCellExternal(sb, st, r.getStruct(i), ctx, field)
-    case org.apache.spark.sql.types.VariantType =>
-      sb.append(escapeCell(r.getAs[org.apache.spark.unsafe.types
-        .VariantVal](i).toJson(java.time.ZoneOffset.UTC))); ()
-    case _ =>
-      // escape-era write (see the internal twin)
-      sb.append(escapeCell(r.getString(i))); ()
-  }
-
-  /** External-Row twin of [[appendStructCellInternal]]. */
-  private def appendStructCellExternal(sb: java.lang.StringBuilder,
-      st: StructType, sr: org.apache.spark.sql.Row,
-      ctx: String, field: String): Unit = {
-    sb.append('(')
-    var j = 0
-    while (j < st.length) {
-      if (j > 0) sb.append(',')
-      val dt = st.fields(j).dataType
-      val fname = s"$field.${st.fields(j).name}"
-      if (sr.isNullAt(j)) sb.append(NullMarker)
-      else dt match {
-        case nested: StructType =>
-          appendStructCellExternal(sb, nested, sr.getStruct(j),
-            ctx, fname)
-        case StringType =>
-          appendStructLeafString(sb, sr.getString(j), ctx, fname)
-        case ArrayType(_, _) | _: org.apache.spark.sql.types.MapType =>
-          sb.append('(')
-          appendExternalCell(sb, dt, sr, j, ctx, fname)
-          sb.append(')')
-        case _ => appendExternalCell(sb, dt, sr, j, ctx, fname)
-      }
-      j += 1
-    }
-    sb.append(')'); ()
-  }
-
-  /** Extended-stats lane of a column: 0 = long repr (LONG, DATE,
-    * TIMESTAMP, BOOLEAN — min/max tracked as longs), 1 = double,
-    * 2 = exact decimal, 3 = string (TRUNCATED bounds — see
-    * [[truncLowerBound]]/[[truncUpperBound]]); -1 = no stats. */
-  private[graft] def extStatKind(dt: DataType): Int = dt match {
-    case LongType | DateType | TimestampType | BooleanType => 0
-    case DoubleType     => 1
-    case _: DecimalType => 2
-    case StringType     => 3
-    case _              => -1
-  }
-
-  /** Max UTF-16 code units a published string bound keeps — the
-    * Iceberg truncate(16) default: long content contributes a 16-char
-    * prefix window, which is what makes `lang = 'uk'` / domain-prefix
-    * predicates prune files while a 100 KB document costs 32 bytes of
-    * manifest. */
-  private[graft] val StatStringPrefix = 16
-
-  /** How much of each string the accumulator RETAINS while streaming
-    * rows (memory bound for content columns): longer than the
-    * published prefix + 1, so the final truncation is exact. */
-  private[graft] val StatStringTrack = 64
-
-  /** LOWER bound of every string sharing `s`'s prefix window:
-    * truncation only ever shortens, and a prefix sorts ≤ all its
-    * extensions. A split surrogate pair at the cut shortens one more
-    * unit (bounds must stay valid UTF-8-encodable text). */
-  private[graft] def truncLowerBound(s: String): String =
-    if (s.length <= StatStringPrefix) s
-    else {
-      val cut = if (Character.isHighSurrogate(
-          s.charAt(StatStringPrefix - 1))) StatStringPrefix - 1
-        else StatStringPrefix
-      s.substring(0, cut)
-    }
-
-  /** STRICT UPPER bound of every string sharing `s`'s prefix window:
-    * truncate, then increment the last incrementable UTF-16 unit
-    * (skipping increments that would land in — or strand — the
-    * surrogate block, so the bound stays valid encodable text; the
-    * order is Java's code-unit compareTo, the same order the
-    * accumulator and the prune comparisons use). None = every unit is
-    * U+FFFF — unbounded, publish nothing. Short strings are exact
-    * (inclusive). */
-  private[graft] def truncUpperBound(s: String): Option[String] = {
-    if (s.length <= StatStringPrefix) return Some(s)
-    val cut = if (Character.isHighSurrogate(
-        s.charAt(StatStringPrefix - 1))) StatStringPrefix - 1
-      else StatStringPrefix
-    var j = cut - 1
-    while (j >= 0) {
-      val c = s.charAt(j)
-      if (c == '\uFFFF' || c == '\uDFFF') j -= 1 // move left
-      else if (Character.isHighSurrogate(c))
-        // dropping the pair's low half would strand c; U+E000 sorts
-        // above every surrogate and stands alone
-        return Some(s.substring(0, j) + '\uE000')
-      else {
-        var next = (c + 1).toChar
-        if (next >= '\uD800' && next <= '\uDFFF' &&
-            !Character.isLowSurrogate(c)) next = '\uE000'
-        return Some(s.substring(0, j) + next)
-      }
-    }
-    None
-  }
-
-  /** Escape a string BOUND for the manifest's `x:c=min..max;…` field:
-    * [[escapeCell]]'s set plus the overlay's own delimiters ('.' and
-    * ';'); [[unescapeCell]] inverts both. */
-  private[graft] def escapeStatText(s: String): String =
-    escapeCell(s).replace(".", "\\d").replace(";", "\\m")
-
-  /** One extended-stats lane: a top-level orderable column (empty
-    * `steps`) or a statable LEAF of a struct column, addressed by the
-    * field index at each nesting level (`steps`) with the struct
-    * arity at each level (`arities` — what `getStruct` needs). Stats
-    * publish under the DOT-JOINED name (`meta.score`) — exactly how
-    * Spark names a pushed nested predicate, so [[pruneByStats]] zone-
-    * maps leaf fields with zero extra machinery. */
-  private[graft] final class StatLane(val col: Int,
-      val steps: Array[Int], val arities: Array[Int],
-      val kind: Int, val name: String, val leafDt: DataType)
-    extends Serializable
-
-  /** Every stats lane of a schema: orderable top-level columns (k
-    * excluded — it has its own min/max slot) plus every orderable
-    * struct leaf, depth-first. */
-  private[graft] def statLanes(schema: StructType): Array[StatLane] = {
-    val out = Array.newBuilder[StatLane]
-    def walk(col: Int, st: StructType, steps: List[Int],
-             arities: List[Int], prefix: String): Unit =
-      st.fields.zipWithIndex.foreach { case (sf, j) =>
-        sf.dataType match {
-          case nested: StructType =>
-            walk(col, nested, steps :+ j, arities :+ st.length,
-              s"$prefix.${sf.name}")
-          case dt if extStatKind(dt) >= 0 =>
-            out += new StatLane(col, (steps :+ j).toArray,
-              (arities :+ st.length).toArray, extStatKind(dt),
-              s"$prefix.${sf.name}", dt)
-          case _ => ()
-        }
-      }
-    schema.fields.zipWithIndex.drop(1).foreach { case (f, i) =>
-      f.dataType match {
-        case st: StructType => walk(i, st, Nil, Nil, f.name)
-        case dt if extStatKind(dt) >= 0 =>
-          out += new StatLane(i, Array.empty, Array.empty,
-            extStatKind(dt), f.name, dt)
-        case _ => ()
-      }
-    }
-    out.result()
-  }
-
-  /** Feed lane `e` of `acc` from an INTERNAL row (descending nested
-    * structs; a NULL at any step contributes nothing). */
-  private[graft] def addLaneInternal(acc: ExtStatAcc, e: Int,
-      lane: StatLane,
-      r: org.apache.spark.sql.catalyst.expressions.SpecializedGetters)
-      : Unit = {
-    var g = r
-    var idx = lane.col
-    var p = 0
-    var live = !g.isNullAt(idx)
-    while (live && p < lane.steps.length) {
-      g = g.getStruct(idx, lane.arities(p))
-      idx = lane.steps(p)
-      live = !g.isNullAt(idx)
-      p += 1
-    }
-    if (live) lane.kind match {
-      case 0 => acc.addL(e, longReprInternal(lane.leafDt, g, idx))
-      case 1 => acc.addD(e, g.getDouble(idx))
-      case 3 => acc.addS(e, g.getUTF8String(idx).toString)
-      case _ =>
-        val d = lane.leafDt.asInstanceOf[DecimalType]
-        acc.addB(e,
-          g.getDecimal(idx, d.precision, d.scale).toJavaBigDecimal)
-    }
-  }
-
-  /** External-Row twin of [[addLaneInternal]]. */
-  private[graft] def addLaneExternal(acc: ExtStatAcc, e: Int,
-      lane: StatLane, r: org.apache.spark.sql.Row): Unit = {
-    var g = r
-    var idx = lane.col
-    var p = 0
-    var live = !g.isNullAt(idx)
-    while (live && p < lane.steps.length) {
-      g = g.getStruct(idx)
-      idx = lane.steps(p)
-      live = !g.isNullAt(idx)
-      p += 1
-    }
-    if (live) lane.kind match {
-      case 0 => acc.addL(e, longReprExternal(g.get(idx)))
-      case 1 => acc.addD(e, g.getDouble(idx))
-      case 3 => acc.addS(e, g.getString(idx))
-      case _ => acc.addB(e, g.getDecimal(idx))
-    }
-  }
-
-  /** A kind-0 column's INTERNAL value as its canonical long repr. */
-  private[graft] def longReprInternal(dt: DataType,
-      r: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-      i: Int): Long = dt match {
-    case LongType      => r.getLong(i)
-    case DateType      => r.getInt(i).toLong
-    case TimestampType => r.getLong(i)
-    case BooleanType   => if (r.getBoolean(i)) 1L else 0L
-    case other => throw new IllegalArgumentException(
-      s"gdx: $other has no long repr")
-  }
-
-  /** A kind-0 column's EXTERNAL value as its canonical long repr. */
-  private[graft] def longReprExternal(v: Any): Long = v match {
-    case l: java.lang.Long       => l.longValue
-    case d: java.sql.Date        => DateTimeUtils.fromJavaDate(d).toLong
-    case ld: java.time.LocalDate => ld.toEpochDay
-    case t: java.sql.Timestamp   => DateTimeUtils.fromJavaTimestamp(t)
-    case in: java.time.Instant   => DateTimeUtils.instantToMicros(in)
-    case b: java.lang.Boolean    => if (b.booleanValue) 1L else 0L
-    case other => throw new IllegalArgumentException(
-      s"gdx: $other has no long repr")
-  }
-
   /** A pushed-filter literal as the BigDecimal its column's stats
     * compare in — numbers as themselves, date/time literals as their
     * canonical long repr, booleans as 0/1. None = cannot prune. */
@@ -1736,75 +905,6 @@ object GdxSource {
     case b: java.lang.Boolean =>
       Some(BigDecimal(if (b.booleanValue) 1 else 0))
     case _ => None
-  }
-
-  /** Streaming min/max tracker for the extended-stats columns of ONE
-    * output file, one lane per [[extStatKind]]. The NaN rule is the
-    * double lane's: a NaN POISONS the column's range for this file
-    * (Spark orders NaN above every double, so a min/max computed from
-    * the non-NaN values could wrongly prune a file whose NaN rows
-    * satisfy a > predicate) — `result` suppresses poisoned columns,
-    * and absence is never a prune. */
-  private[graft] final class ExtStatAcc(n: Int, kinds: Array[Int]) {
-    val seen = new Array[Boolean](n)
-    val nan = new Array[Boolean](n)
-    private val minL = Array.fill(n)(Long.MaxValue)
-    private val maxL = Array.fill(n)(Long.MinValue)
-    private val minD = Array.fill(n)(Double.MaxValue)
-    private val maxD = Array.fill(n)(Double.MinValue)
-    private val minB = new Array[java.math.BigDecimal](n)
-    private val maxB = new Array[java.math.BigDecimal](n)
-    private val minS = new Array[String](n)
-    private val maxS = new Array[String](n)
-    def addL(e: Int, v: Long): Unit = {
-      seen(e) = true
-      if (v < minL(e)) minL(e) = v
-      if (v > maxL(e)) maxL(e) = v
-    }
-    def addD(e: Int, v: Double): Unit = {
-      seen(e) = true
-      if (java.lang.Double.isNaN(v)) nan(e) = true
-      else {
-        if (v < minD(e)) minD(e) = v
-        if (v > maxD(e)) maxD(e) = v
-      }
-    }
-    def addB(e: Int, v: java.math.BigDecimal): Unit = {
-      seen(e) = true
-      if (minB(e) == null || v.compareTo(minB(e)) < 0) minB(e) = v
-      if (maxB(e) == null || v.compareTo(maxB(e)) > 0) maxB(e) = v
-    }
-    def addS(e: Int, v: String): Unit = {
-      seen(e) = true
-      // retain a bounded window per row (memory cap for content
-      // columns): the published bounds only consult the first
-      // StatStringPrefix+1 units, and min/max over tracked prefixes
-      // stay valid lower/upper sources (a prefix sorts ≤ its
-      // extensions, and the upper bound construction dominates every
-      // string sharing the max's prefix window)
-      val t = if (v.length <= GdxSource.StatStringTrack) v
-        else v.substring(0, GdxSource.StatStringTrack)
-      if (minS(e) == null || t.compareTo(minS(e)) < 0) minS(e) = t
-      if (maxS(e) == null || t.compareTo(maxS(e)) > 0) maxS(e) = t
-    }
-    def result(name: Int => String): Map[String, (String, String)] =
-      (0 until n).iterator.filter(e => seen(e) && !nan(e)).flatMap { e =>
-        kinds(e) match {
-          case 0 => Some(name(e) -> (minL(e).toString, maxL(e).toString))
-          case 1 => Some(name(e) -> (minD(e).toString, maxD(e).toString))
-          case 3 =>
-            // string bounds publish TRUNCATED + escaped (the overlay's
-            // own delimiters must never appear raw); an unboundable
-            // max (all U+FFFF) publishes nothing — absence = keep
-            GdxSource.truncUpperBound(maxS(e)).map { up =>
-              name(e) -> (GdxSource.escapeStatText(
-                GdxSource.truncLowerBound(minS(e))),
-                GdxSource.escapeStatText(up))
-            }
-          case _ =>
-            Some(name(e) -> (minB(e).toPlainString, maxB(e).toPlainString))
-        }
-      }.toMap
   }
 
   /** Line prefix carrying the snapshot's schema; written in EVERY
@@ -1875,9 +975,10 @@ object GdxSource {
     def render: String
     def keyOf(v: Long): Long
     /** Type-aware key: `v` is the column's canonical LONG REPR
-      * ([[longReprInternal]] — epoch-micros for TIMESTAMP, epoch-day
-      * for DATE, the raw value for BIGINT). Temporal transforms scale
-      * their divisor to the repr; everything else ignores the type.
+      * ([[GdxLineFormat.longReprInternal]] — epoch-micros for
+      * TIMESTAMP, epoch-day for DATE, the raw value for BIGINT).
+      * Temporal transforms scale their divisor to the repr; everything
+      * else ignores the type.
       * The BIGINT interpretation stays the historical epoch-millis
       * contract, so every pre-typed-column table keeps its layout. */
     def keyOf(v: Long, dt: DataType): Long = keyOf(v)
@@ -2181,10 +1282,6 @@ object GdxSource {
         StructType((0 until cm.arity).map(s =>
           bySlot.getOrElse(s, StructField(s"__gdx_dropped_$s", StringType))))
     }
-
-  /** NULL marker in the line format (hive-style); rejected as a
-    * literal string value at write time. */
-  private[graft] val NullMarker = "\\N"
 
   /** Driver-side Hadoop conf (active session's, else defaults). */
   def driverConf(): Configuration =
@@ -2998,21 +2095,6 @@ object GdxSource {
                      version: Int = -1): Seq[Path] =
     committedEntries(path, conf, version).map(e => entryPath(path, e.name))
 
-  /** Counts the bytes a data-file writer pushes, so the manifest can
-    * carry the file's exact size (`b:`) without a post-write stat. */
-  private[graft] final class CountingOutputStream(
-      underlying: java.io.OutputStream) extends java.io.OutputStream {
-    var count: Long = 0L
-    override def write(b: Int): Unit = {
-      underlying.write(b); count += 1
-    }
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-      underlying.write(b, off, len); count += len
-    }
-    override def flush(): Unit = underlying.flush()
-    override def close(): Unit = underlying.close()
-  }
-
   private def writeLines(fs: FileSystem, p: Path,
                          lines: Seq[String]): Unit = {
     val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
@@ -3329,9 +2411,9 @@ object GdxSource {
               fs.rename(bsrc, new Path(base, fin + GdxBloom.Suffix))
           }
           // every freshly committed file is escape-era: its writer
-          // encoded string cells through [[escapeCell]]
+          // encoded string cells through [[GdxLineFormat.escapeCell]]
           renamed += tmp -> GdxFileEntry(fin, Some(stats),
-            enc = Some(EscCodec))
+            enc = Some(GdxLineFormat.EscCodec))
           renamed(tmp)
         }
         val checkpoint = replace || replaceWhere.isDefined ||
@@ -3476,15 +2558,17 @@ object GdxSource {
           }
         // STRING bounds (kind-3 lanes): `mn` is a valid lower bound
         // (truncation shortens) and `mx` a valid upper bound (strict
-        // when truncated — see [[truncUpperBound]]); comparisons are
-        // Java code-unit order, the exact order the bounds were
-        // accumulated and constructed in. A string literal identifies
-        // the column as a string lane (predicates never mix types).
+        // when truncated — see [[GdxLineFormat.truncUpperBound]]);
+        // comparisons are Java code-unit order, the exact order the
+        // bounds were accumulated and constructed in. A string literal
+        // identifies the column as a string lane (predicates never mix
+        // types).
         def strKeep(c: String)(miss: (String, String) => Boolean)
             : Boolean =
           st.cols.get(c) match {
             case Some((mn, mx)) =>
-              !miss(unescapeCell(mn), unescapeCell(mx))
+              !miss(GdxLineFormat.unescapeCell(mn),
+                GdxLineFormat.unescapeCell(mx))
             case None => true
           }
         pushed.forall {
@@ -3526,7 +2610,8 @@ object GdxSource {
               if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
             st.cols.get(c) match {
               case Some((mnE, mxE)) =>
-                val mn = unescapeCell(mnE); val mx = unescapeCell(mxE)
+                val mn = GdxLineFormat.unescapeCell(mnE)
+                val mx = GdxLineFormat.unescapeCell(mxE)
                 vs.exists { case w: String => w >= mn && w <= mx }
               case None => true
             }
@@ -3613,12 +2698,12 @@ object GdxSource {
         val d = if (pre.isEmpty) base else new Path(base, pre)
         try fs.listStatus(d).toSeq
           .map(st => s"$pre${st.getPath.getName}" -> st.getLen)
-        catch { case _: Exception => Seq.empty }
+        catch { case NonFatal(_) => Seq.empty }
       }.toMap
       def sizeOf(e: GdxFileEntry): Long =
         e.stats.flatMap(_.bytes).getOrElse(sized.getOrElse(e.name,
           try fs.getFileStatus(entryPath(dir, e.name)).getLen
-          catch { case _: Exception => Long.MaxValue })) // unknowable: large
+          catch { case NonFatal(_) => Long.MaxValue })) // unknowable: large
       // candidates: small by bytes, or carrying a DV worth folding —
       // grouped by their directory so the layout survives the rewrite.
       // The threshold doubles as the TARGET BIN SIZE: a directory
@@ -3938,8 +3023,8 @@ object GdxSource {
             // (the overlap closure's decimal interval math cannot
             // prove lex-disjointness on them), so clustering on a
             // string column would never converge
-            if (extStatKind(f.dataType) >= 0 &&
-                extStatKind(f.dataType) != 3)
+            if (GdxLineFormat.extStatKind(f.dataType) >= 0 &&
+                GdxLineFormat.extStatKind(f.dataType) != 3)
               Some((f.name :: acc).reverse.mkString("."))
             else None
           else f.dataType match {
@@ -4419,51 +3504,8 @@ object GdxSource {
                               dirStr: String,
                               dvByName: Map[String, Option[String]],
                               sconf: SerializableHadoopConf): DvWrite = {
-    val perFile = positions.rdd
-      .mapPartitions { rows =>
-        // packed map-side as `_pos << 2 | _act`: the shuffle moves one
-        // primitive array per (partition, file), not a record per row
-        val byFile = scala.collection.mutable.HashMap
-          .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
-        rows.foreach { r =>
-          byFile.getOrElseUpdate(r.getString(0),
-            new scala.collection.mutable.ArrayBuilder.ofLong) +=
-            (r.getLong(1) << 2 | r.getInt(2))
-        }
-        byFile.iterator.map { case (f, b) => (f, b.result()) }
-      }
-      .reduceByKey(_ ++ _)
-      .map { case (name, packed) =>
-        // sorted, a repeated position sits next to its twin
-        java.util.Arrays.sort(packed)
-        var upd = 0L; var del = 0L; var repeated = false
-        var i = 0
-        while (i < packed.length) {
-          if (i > 0 && (packed(i) >>> 2) == (packed(i - 1) >>> 2))
-            repeated = true
-          val act = packed(i) & 3
-          if (act == 1) upd += 1 else if (act == 2) del += 1
-          i += 1
-        }
-        if (repeated || upd + del == 0) (name, null: String, 0L, 0L, repeated)
-        else {
-          val base = new Path(dirStr)
-          val fs = base.getFileSystem(sconf.conf)
-          val old = dvByName(name).map(d =>
-            GdxSource.readDvPositions(fs, GdxSource.entryPath(dirStr, d)))
-            .getOrElse(java.util.Collections.emptySet[Long]())
-          val all = new java.util.TreeSet[Long](old)
-          packed.foreach(p => if ((p & 3) != 0) all.add(p >>> 2))
-          val dvName = s"dv-${java.util.UUID.randomUUID}.dvx"
-          val dvPath = new Path(base, dvName)
-          val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-            fs.create(dvPath, false), "UTF-8"))
-          try all.forEach(p => out.println(p)) finally out.close()
-          GdxSource.failOnWriteError(out, dvPath)
-          (name, dvName, upd, del, false)
-        }
-      }
-      .collect()
+    val perFile = GdxLineFormat.writeDvs(positions.queryExecution.toRdd,
+      dirStr, dvByName, sconf)
     DvWrite(perFile.collect { case (f, d, _, _, _) if d != null => (f, d) },
       perFile.map(_._3).sum, perFile.map(_._4).sum, perFile.exists(_._5))
   }
@@ -4584,22 +3626,34 @@ object GdxSource {
 
   /** A table's committed state at one version: what [[rowChange]]
     * computes a statement against, and the header block a commit built
-    * on it restates. */
-  private[graft] final case class TableSnapshot(entries: Seq[GdxFileEntry],
-      schema: StructType, colmap: Option[Colmap],
-      checks: Seq[(String, String)], partitionCol: Option[String]) {
+    * on it restates. The entry list is read on first use: a pure INSERT
+    * never needs it. */
+  private[graft] final class TableSnapshot(
+      readEntries: () => Seq[GdxFileEntry], val schema: StructType,
+      val colmap: Option[Colmap], val checks: Seq[(String, String)],
+      val partitionCol: Option[String]) {
+    lazy val entries: Seq[GdxFileEntry] = readEntries()
+    /** The same version's headers over entry list `es`. */
+    def withEntries(es: Seq[GdxFileEntry]): TableSnapshot =
+      new TableSnapshot(() => es, schema, colmap, checks, partitionCol)
     def headers: Seq[String] =
       headerLines(schema, checks, colmap, partitionCol)
   }
 
-  /** The snapshot at version `v` (the latest for `v` ≤ 0). */
+  /** The snapshot at version `v` (the latest for `v` ≤ 0): the version
+    * resolved once and its headers read in one header-only read. */
   private[graft] def snapshotAt(dir: String, conf: Configuration,
                                 v: Int): TableSnapshot = {
-    val ver = if (v > 0) v else -1
-    TableSnapshot(committedEntries(dir, conf, ver),
-      committedSchema(dir, conf, ver), committedColmap(dir, conf, ver),
-      committedConstraints(dir, conf, ver),
-      committedPartitionCol(dir, conf, ver))
+    val fs = new Path(dir).getFileSystem(conf)
+    val ver = if (v > 0) v else latestDecidedVersion(dir, conf)
+    val m = if (ver > 0) manifestFor(dir, ver) else manifest(dir)
+    require(v <= 0 || fs.exists(m),
+      s"gdx: snapshot version $v does not exist under $dir")
+    val md = Some(m).filter(fs.exists(_)).map(readManifestHeaders(fs, _))
+    new TableSnapshot(
+      () => committedEntries(dir, conf, if (ver > 0) ver else -1),
+      md.flatMap(_.schema).getOrElse(schema), md.flatMap(_.colmap),
+      md.toSeq.flatMap(_.checks), md.flatMap(_.partitionCol))
   }
 
   /** Refuse assignment targets outside `schema`, before any work — the
@@ -4686,7 +3740,8 @@ object GdxSource {
         // An empty/all-NULL source key set matches nothing: the fold
         // stays at the inverted window, which carries every file
         val srcWin: Option[(Long, Long)] = ms.pruneKey.map { key =>
-          ms.rows.select(key.cast("long")).rdd.mapPartitions { rs =>
+          val keys = ms.rows.select(key.cast("long")).queryExecution.toRdd
+          keys.mapPartitions { rs =>
             var lo = Long.MaxValue; var hi = Long.MinValue
             rs.foreach { r =>
               if (!r.isNullAt(0)) {
@@ -4845,164 +3900,84 @@ object GdxSource {
     }
   }
 
-  /** The snapshot's LIVE rows as a DataFrame of (_file, _pos, cols...):
-    * one task per file, already-DV'd positions skipped, fields parsed
-    * under the snapshot's full schema (missing trailing fields = NULL,
-    * pre-evolution files). The substrate DELETE/UPDATE predicates run
-    * on, and MERGE's target. Its plan's size statistics are the
-    * entries' manifest bytes, so the planner broadcasts a small target
-    * at planning time instead of shuffling both join sides for AQE to
-    * convert; with any entry's size unrecorded it keeps no stats. */
+  /** The snapshot's LIVE rows as a DataFrame of (_file, _pos, cols...),
+    * decoded by the scan's reader ([[GdxLineFormat.liveRows]]): DV'd
+    * positions skipped, every era's file read under the snapshot's
+    * schema through its column mapping (a pre-column file reads the
+    * declared default, else NULL). The substrate DELETE/UPDATE
+    * predicates run on, MERGE's target and the compactions' input. Its
+    * plan's size statistics are the entries' manifest bytes, so the
+    * planner broadcasts a small target at planning time instead of
+    * shuffling both join sides for AQE to convert; with any entry's
+    * size unrecorded it keeps no stats. */
   private def liveFrame(spark: SparkSession, dirStr: String,
                         entries: Seq[GdxFileEntry],
                         tblSchema: StructType,
                         sconf: SerializableHadoopConf,
                         colmap: Option[Colmap] = None)
       : org.apache.spark.sql.DataFrame = {
-    val types = tblSchema.fields.map(_.dataType)
-    // physical line slot per logical field (identity when unmapped)
-    val slots = slotsOf(tblSchema, colmap).toArray
-    // era fill: pre-column files read the declared initial default
-    val dflts: Array[Any] = tblSchema.fields.map(f =>
-      defaultCellOf(f).map(parseExternalCell(f.dataType, _)).orNull)
-    val dvByName = entries.map(e => e.name -> e.dv).toMap
-    val liveSchema = StructType(
-      StructField("_file", StringType) +:
-      StructField("_pos", LongType) +: tblSchema.fields)
-    val rdd = spark.sparkContext
-      .parallelize(entries.map(e => (e.name, e.escaped)),
-        math.min(math.max(entries.size, 1),
-          spark.sparkContext.defaultParallelism))
-      .flatMap { case (name, esc) =>
-        val p = GdxSource.entryPath(dirStr, name)
-        val fs = p.getFileSystem(sconf.conf)
-        val old = dvByName(name).map(d =>
-          GdxSource.readDvPositions(fs, GdxSource.entryPath(dirStr, d)))
-          .getOrElse(java.util.Collections.emptySet[Long]())
-        val in = new java.io.BufferedReader(
-          new java.io.InputStreamReader(fs.open(p), "UTF-8"))
-        val it = Iterator.continually(in.readLine())
-          .takeWhile(_ != null).zipWithIndex
-          .flatMap { case (line, idx) =>
-            val fields = line.split("\t", -1)
-            if (fields.length >= 2 && fields(0).nonEmpty &&
-                !old.contains(idx.toLong)) {
-              val vals = types.zipWithIndex.map { case (dt, li) =>
-                val i = slots(li)
-                if (i >= fields.length) dflts(li)
-                else if (fields(i) == GdxSource.NullMarker) null
-                else GdxSource.parseExternalCell(dt, fields(i), esc)
-              }
-              Some(org.apache.spark.sql.Row.fromSeq(
-                name +: Long.box(idx.toLong) +: vals.toSeq))
-            } else None
-          }
-        new Iterator[org.apache.spark.sql.Row] {
-          def hasNext: Boolean = { val h = it.hasNext; if (!h) in.close(); h }
-          def next(): org.apache.spark.sql.Row = it.next()
-        }
-      }
-    val df = spark.createDataFrame(rdd, liveSchema)
+    val rdd = GdxLineFormat.liveRows(spark.sparkContext,
+      entries.map(e => (e.name, entryPath(dirStr, e.name).toString,
+        e.dv.map(entryPath(dirStr, _).toString), e.escaped)),
+      tblSchema, physicalized(tblSchema, colmap), sconf)
     val sizes = entries.map(_.stats.flatMap(_.bytes))
-    org.apache.spark.sql.graft.ColumnBridge.analyzed(df) match {
-      case l: org.apache.spark.sql.execution.LogicalRDD
-          if sizes.forall(_.isDefined) =>
-        org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, l.copy()(
-          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-          Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(
-            BigInt(sizes.flatten.sum))), None))
-      case _ => df
-    }
+    rowFrame(spark, StructType(StructField("_file", StringType) +:
+      StructField("_pos", LongType) +: tblSchema.fields), rdd,
+      if (sizes.forall(_.isDefined)) Some(BigInt(sizes.flatten.sum))
+      else None)
   }
 
+  /** `rdd` as a DataFrame of `schema` — a `LogicalRDD`, with `bytes` as
+    * its size statistics when known. */
+  private def rowFrame(spark: SparkSession, schema: StructType,
+                       rdd: org.apache.spark.rdd.RDD[InternalRow],
+                       bytes: Option[BigInt])
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graft.ColumnBridge.ofRows(spark,
+      org.apache.spark.sql.execution.LogicalRDD(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
+        rdd)(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+        bytes.map(b =>
+          org.apache.spark.sql.catalyst.plans.logical.Statistics(b)), None))
+
   /** Write `rows` (in `tblSchema` column order) as GDX line files, one
-    * per non-empty partition, executor-side with UUID names; returns
-    * the manifest entries (zone-map stats included) — the files become
+    * per non-empty partition, executor-side with UUID names
+    * ([[GdxLineFormat.writeFiles]]); returns the manifest entries
+    * (zone-map and extended stats included — on a partitioned table
+    * the rewrite lands at the root, and the partition column's v..v
+    * range is what keeps the rewritten rows prunable). The files become
     * committed only when the caller's manifest publish wins. A `gated`
     * write's rows carry one trailing boolean column per CHECK
     * constraint after the `tblSchema` columns, true where the row
-    * violates it. The writer
-    * counts those flags and NULL keys, never writes the flag columns,
-    * and skips a NULL-key row (the line format needs a key). Returns
-    * the entries and the gate counts: NULL keys first, then one
-    * violation count per CHECK column (empty when not gated). Any
-    * non-zero count must refuse the publish; the files are then
-    * unreferenced orphans. */
+    * violates it. The writer counts those flags and NULL keys, never
+    * writes the flag columns, and skips a NULL-key row (the line format
+    * needs a key). Returns the entries and the gate counts: NULL keys
+    * first, then one violation count per CHECK column (empty when not
+    * gated). Any non-zero count must refuse the publish; the files are
+    * then unreferenced orphans. */
   private def writeGatedDataFiles(rows: org.apache.spark.sql.DataFrame,
                                   dirStr: String, tblSchema: StructType,
                                   sconf: SerializableHadoopConf,
                                   colmap: Option[Colmap],
                                   namePrefix: String, gated: Boolean)
       : (Seq[GdxFileEntry], Array[Long]) = {
-    val types = tblSchema.fields.map(_.dataType)
     // shredded columns re-derive from their variant source before the
     // rows render (generated-always — a rewrite can never drift them)
-    val rows2 = deriveShreds(rows, tblSchema)
-    // physical slot -> logical field (-1 = dead slot, written \N)
-    val layout = writeLayout(tblSchema, colmap)
-    // extended stats like the main writer (numeric non-key columns,
-    // NULLs excluded, NaN suppresses): on a partitioned table the
-    // UPDATE rewrite lands at the root, so the partition column's
-    // v..v range on these stats is what keeps updated rows PRUNABLE —
-    // without them every p = x query would plan every upd file forever
-    val lanes: Array[StatLane] = statLanes(tblSchema)
-    val first = tblSchema.length
-    val nChecks = rows.columns.length - first
-    val nGates = if (gated) nChecks + 1 else 0
-    val written = rows2.rdd.mapPartitions { all =>
-      if (!all.hasNext) Iterator.empty
-      else {
-        // a `col=key/` prefix keeps a partitioned rewrite INSIDE its
-        // directory, so the name still proves its key (SPJ, slices)
-        val name = s"${namePrefix}upd-${java.util.UUID.randomUUID}.gdx"
-        val p = GdxSource.entryPath(dirStr, name)
-        val fs = p.getFileSystem(sconf.conf)
-        val counter = new CountingOutputStream(fs.create(p, false))
-        val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-          counter, "UTF-8"))
-        var n = 0L; var mn = Long.MaxValue; var mx = Long.MinValue
-        val acc = new ExtStatAcc(lanes.length, lanes.map(_.kind))
-        val gate = new Array[Long](nGates)
-        val it = if (!gated) all else all.filter { r =>
-          var c = 0
-          while (c < nChecks) {
-            if (r.getBoolean(first + c)) gate(c + 1) += 1
-            c += 1
-          }
-          if (r.isNullAt(0)) { gate(0) += 1; false } else true
-        }
-        try it.foreach { r =>
-          val sb = new java.lang.StringBuilder
-          var pSlot = 0
-          while (pSlot < layout.length) {
-            if (pSlot > 0) sb.append('\t')
-            val i = layout(pSlot)
-            if (i < 0 || r.isNullAt(i)) sb.append(GdxSource.NullMarker)
-            else appendExternalCell(sb, types(i), r, i, "update",
-              tblSchema(i).name)
-            pSlot += 1
-          }
-          out.println(sb)
-          val k = r.getLong(0)
-          n += 1
-          if (k < mn) mn = k
-          if (k > mx) mx = k
-          var e = 0
-          while (e < lanes.length) {
-            addLaneExternal(acc, e, lanes(e), r)
-            e += 1
-          }
-        } finally out.close()
-        GdxSource.failOnWriteError(out, p)
-        val ext = acc.result(e => lanes(e).name)
-        Iterator((name, n, mn, mx, ext, counter.count, gate))
-      }
-    }.collect().toSeq
-    val gates = new Array[Long](nGates)
-    written.foreach(w => w._7.indices.foreach(i => gates(i) += w._7(i)))
-    (written.map { case (name, n, mn, mx, ext, bytes, _) =>
-      GdxFileEntry(name, Some(GdxFileStats(n, mn, mx, ext,
-        Map.empty, Some(bytes))), enc = Some(EscCodec))
+    val rendered = deriveShreds(rows, tblSchema)
+    // the renderer reads each cell by its column's declared type
+    require(tblSchema.fields.zip(rendered.schema.fields).forall {
+        case (t, r) => DataType.equalsStructurally(t.dataType, r.dataType,
+          ignoreNullability = true) },
+      s"gdx write: rows ${rendered.schema.simpleString} do not match " +
+        s"the table schema ${tblSchema.simpleString}")
+    val nChecks = rows.columns.length - tblSchema.length
+    val written = GdxLineFormat.writeFiles(rendered.queryExecution.toRdd,
+      dirStr, tblSchema, writeLayout(tblSchema, colmap), sconf, namePrefix,
+      nChecks, gated)
+    val gates = new Array[Long](if (gated) nChecks + 1 else 0)
+    written.foreach(w => w._3.indices.foreach(i => gates(i) += w._3(i)))
+    (written.toSeq.map { case (name, stats, _) =>
+      GdxFileEntry(name, Some(stats), enc = Some(GdxLineFormat.EscCodec))
     }, gates)
   }
 
@@ -5045,19 +4020,6 @@ object GdxSource {
     v
   }
 
-  /** ROW-LEVEL CHANGE FEED (CDF): the exact inserted/deleted rows
-    * between two retained versions, derived ENTIRELY from the format's
-    * structure — no change journal is ever written. Per version step:
-    * files added by the commit contribute their live rows as
-    * `insert`s, files dropped (truncate/restore) contribute their
-    * prior live rows as `delete`s, and a grown deletion vector on a
-    * surviving file contributes exactly the newly-DV'd positions as
-    * `delete`s. An UPDATE therefore appears as its delete+insert pair,
-    * a MERGE as the rewritten snapshot's diff — the Delta CDF
-    * reduction. Cost: proportional to CHANGED files/positions, never a
-    * table diff; one task per (version, file) pair. Output:
-    * (version, change_type, <table columns at `toV`>), pre-evolution
-    * rows null-filled. */
   /** True when every commit in (fromV, toV] only ADDED files — no
     * file removal (truncate/restore) and no deletion-vector growth.
     * Decided from manifest entry sets alone (driver-side, no data
@@ -5075,97 +4037,56 @@ object GdxSource {
     }
   }
 
+  /** ROW-LEVEL CHANGE FEED (CDF): the exact inserted/deleted rows
+    * between two retained versions, derived ENTIRELY from the format's
+    * structure — no change journal is ever written. Per version step:
+    * files added by the commit contribute their live rows as
+    * `insert`s, files dropped (truncate/restore) contribute their
+    * prior live rows as `delete`s, and a grown deletion vector on a
+    * surviving file contributes exactly the newly-DV'd positions as
+    * `delete`s. An UPDATE therefore appears as its delete+insert pair,
+    * a MERGE as the rewritten snapshot's diff — the Delta CDF
+    * reduction. Cost: proportional to CHANGED files/positions, never a
+    * table diff. Rows decode through the scan's reader
+    * ([[GdxLineFormat.changeRows]]) under `toV`'s schema and column
+    * mapping. Output: (version, change_type, <table columns at `toV`>),
+    * pre-column rows reading the declared default, else NULL. */
   def tableChanges(spark: SparkSession, dir: String,
                    fromV: Int, toV: Int)
       : org.apache.spark.sql.DataFrame = {
     require(fromV < toV, s"gdx changes: fromV $fromV must precede $toV")
     val conf = driverConf()
-    val sconf = new SerializableHadoopConf(conf)
     val outSchema = committedSchema(dir, conf, toV)
-    val types = outSchema.fields.map(_.dataType)
-    // the changefeed reads every era's file under toV's schema: the
-    // column mapping resolves each logical field to its physical slot
-    val slots = slotsOf(outSchema, committedColmap(dir, conf, toV)).toArray
-    // era fill: pre-column files feed the declared initial default
-    val dflts: Array[Any] = outSchema.fields.map(f =>
-      defaultCellOf(f).map(parseExternalCell(f.dataType, _)).orNull)
-    // (version, resolved file path, positions-to-skip dv, mode) where
-    // mode "insert"/"delete" reads all live rows and "dvdelta" reads
-    // exactly the freshly deleted positions (old dv, new dv)
-    case class Task(version: Int, file: String, dvSkip: Option[String],
-                    dvOld: Option[String], dvNew: Option[String],
-                    change: String, esc: Boolean)
-    val tasks = ((fromV + 1) to toV).flatMap { v =>
+    val reads = ((fromV + 1) to toV).flatMap { v =>
       val prev =
         if (v - 1 == 0) Seq.empty else committedEntries(dir, conf, v - 1)
       val cur = committedEntries(dir, conf, v)
       val prevBy = prev.map(e => e.name -> e).toMap
       val curBy = cur.map(e => e.name -> e).toMap
       def abs(n: String) = entryPath(dir, n).toString
-      val inserts = cur.filterNot(e => prevBy.contains(e.name)).map(e =>
-        Task(v, abs(e.name), e.dv.map(abs), None, None, "insert",
-          e.escaped))
-      val deletes = prev.filterNot(e => curBy.contains(e.name)).map(e =>
-        Task(v, abs(e.name), e.dv.map(abs), None, None, "delete",
-          e.escaped))
+      def read(change: String, e: GdxFileEntry) =
+        GdxLineFormat.ChangeRead(v, change, abs(e.name), e.dv.map(abs),
+          None, e.escaped)
+      val inserts = cur.filterNot(e => prevBy.contains(e.name))
+        .map(read("insert", _))
+      val deletes = prev.filterNot(e => curBy.contains(e.name))
+        .map(read("delete", _))
+      // a grown DV: exactly the positions the new sidecar adds
       val dvGrown = cur.flatMap { e =>
         prevBy.get(e.name) match {
           case Some(p) if p.dv != e.dv && e.dv.isDefined =>
-            Some(Task(v, abs(e.name), None, p.dv.map(abs),
-              e.dv.map(abs), "dvdelta", e.escaped))
+            Some(read("delete", e).copy(dv = p.dv.map(abs),
+              only = e.dv.map(abs)))
           case _ => None
         }
       }
       inserts ++ deletes ++ dvGrown
     }
-    val changeSchema = StructType(
-      StructField("version", IntegerType) +:
-      StructField("change_type", StringType) +: outSchema.fields)
-    val rdd = spark.sparkContext
-      .parallelize(tasks, math.min(math.max(tasks.size, 1),
-        spark.sparkContext.defaultParallelism))
-      .flatMap { t =>
-        val p = new Path(t.file)
-        val fs = p.getFileSystem(sconf.conf)
-        def dvSet(d: Option[String]): java.util.Set[Long] = d
-          .map(x => GdxSource.readDvPositions(fs, new Path(x)))
-          .getOrElse(java.util.Collections.emptySet[Long]())
-        val (skip, only) = t.change match {
-          case "dvdelta" =>
-            val fresh = new java.util.HashSet[Long](dvSet(t.dvNew))
-            fresh.removeAll(dvSet(t.dvOld))
-            (java.util.Collections.emptySet[Long](), Some(fresh))
-          case _ => (dvSet(t.dvSkip), None)
-        }
-        val kind = if (t.change == "dvdelta") "delete" else t.change
-        val in = new java.io.BufferedReader(
-          new java.io.InputStreamReader(fs.open(p), "UTF-8"))
-        val it = Iterator.continually(in.readLine())
-          .takeWhile(_ != null).zipWithIndex
-          .flatMap { case (line, idx) =>
-            val pos = idx.toLong
-            val wanted = only match {
-              case Some(set) => set.contains(pos)
-              case None      => !skip.contains(pos)
-            }
-            val fields = line.split("\t", -1)
-            if (wanted && fields.length >= 2 && fields(0).nonEmpty) {
-              val vals = types.zipWithIndex.map { case (dt, li) =>
-                val i = slots(li)
-                if (i >= fields.length) dflts(li)
-                else if (fields(i) == GdxSource.NullMarker) null
-                else GdxSource.parseExternalCell(dt, fields(i), t.esc)
-              }
-              Some(org.apache.spark.sql.Row.fromSeq(
-                Int.box(t.version) +: kind +: vals.toSeq))
-            } else None
-          }
-        new Iterator[org.apache.spark.sql.Row] {
-          def hasNext: Boolean = { val h = it.hasNext; if (!h) in.close(); h }
-          def next(): org.apache.spark.sql.Row = it.next()
-        }
-      }
-    spark.createDataFrame(rdd, changeSchema)
+    rowFrame(spark, StructType(StructField("version", IntegerType) +:
+        StructField("change_type", StringType) +: outSchema.fields),
+      GdxLineFormat.changeRows(spark.sparkContext, reads, outSchema,
+        physicalized(outSchema, committedColmap(dir, conf, toV)),
+        new SerializableHadoopConf(conf)), None)
   }
 
   /** RESTORE: roll the table back to retained snapshot `version` by
@@ -5427,21 +4348,12 @@ object GdxSource {
             br.getOrElse((name, i), 0L))
         }
       }
-    // min/max render through the SAME canonical text forms the
-    // manifest cells use ([[appendExternalCell]]'s vocabulary), so
-    // parseInternalCell re-materializes exact internal values
+    // min/max render as canonical cell text, which the scan's column
+    // statistics parse back into exact internal values
     def statText(dt: DataType, value: Any): Option[String] =
-      Option(value).map {
-        case d: java.sql.Date        =>
-          DateTimeUtils.fromJavaDate(d).toString
-        case ld: java.time.LocalDate => ld.toEpochDay.toString
-        case t: java.sql.Timestamp   =>
-          DateTimeUtils.fromJavaTimestamp(t).toString
-        case in: java.time.Instant   =>
-          DateTimeUtils.instantToMicros(in).toString
-        case bd: java.math.BigDecimal => bd.toPlainString
-        case other                    => other.toString
-      }
+      Option(value).map(v => GdxLineFormat.internalCellText(dt,
+        org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .convertToCatalyst(v)))
     val cols = fields.map { f =>
       val ndv = r.getLong(r.fieldIndex(s"__ndv_${f.name}"))
       val nulls = rows - r.getLong(r.fieldIndex(s"__nn_${f.name}"))
@@ -5469,8 +4381,8 @@ object GdxSource {
       fields.toSeq.map { f =>
         val cs = cols(f.name)
         Seq(f.name, cs.typeName, cs.ndv, cs.nullCount, cs.avgLen,
-          cs.maxLen, cs.min.getOrElse(NullMarker),
-          cs.max.getOrElse(NullMarker)).mkString("\t")
+          cs.maxLen, cs.min.getOrElse(GdxLineFormat.NullMarker),
+          cs.max.getOrElse(GdxLineFormat.NullMarker)).mkString("\t")
       }) ++
       fields.toSeq.flatMap { f =>
         cols(f.name).hist.map(h => (Seq("#hist", f.name, h.height) ++
@@ -5553,8 +4465,8 @@ object GdxSource {
       if (f.length != 8) None
       else Some(f(0) -> GdxColStat(f(1), f(2).toLong, f(3).toLong,
         f(4).toLong, f(5).toLong,
-        Some(f(6)).filter(_ != NullMarker),
-        Some(f(7)).filter(_ != NullMarker),
+        Some(f(6)).filter(_ != GdxLineFormat.NullMarker),
+        Some(f(7)).filter(_ != GdxLineFormat.NullMarker),
         hists.get(f(0))))
     }.toMap
     Some(GdxTableStats(hp(1).toInt, hp(2).toLong, cols))
@@ -6159,19 +5071,6 @@ object GdxSource {
     }
   }
 
-  /** Parse a `.dvx` sidecar into its deleted-position set. */
-  private[graft] def readDvPositions(fs: FileSystem,
-                                     p: Path): java.util.Set[Long] = {
-    val in = new java.io.BufferedReader(
-      new java.io.InputStreamReader(fs.open(p), "UTF-8"))
-    try {
-      val s = new java.util.HashSet[Long]()
-      Iterator.continually(in.readLine()).takeWhile(_ != null)
-        .filter(_.nonEmpty).foreach(l => s.add(l.toLong))
-      s
-    } finally in.close()
-  }
-
   // ------------------------------------------------------------ tags
   /** TAGS — immutable named refs to snapshot versions (the Iceberg
     * tag contract): `createTag(dir, "train_v1")` pins the exact file
@@ -6375,6 +5274,19 @@ object GdxSource {
     def stageAll(): Seq[(String, Int)] = parts.map { p =>
       val dir = p.dir
       val fs = new Path(dir).getFileSystem(conf)
+      // a write computed FROM a basis snapshot must land ON it — a
+      // moved base means a concurrent commit this write would erase;
+      // abort the whole transaction (the catch below publishes the
+      // abort decision) instead. Checked before the stage writes
+      // anything, and again at the claim
+      def checkBase(base: Int): Unit =
+        if (p.expectedBase >= 0 && base != p.expectedBase)
+          throw new GdxConcurrentModificationException(
+            s"gdx txn: $dir moved from version ${p.expectedBase} to " +
+              s"$base while the transaction was staged - its " +
+              "write would erase the concurrent commit; " +
+              "ROLLBACK and re-run the transaction")
+      if (p.expectedBase >= 0) checkBase(decidedHead(dir, conf))
       val snap = snapshotAt(dir, conf, p.expectedBase)
       val (staged, deleted) = p.stage(snap)
       removed += dir -> deleted
@@ -6385,16 +5297,7 @@ object GdxSource {
       var attempts = 0
       while (claimed < 0) {
         val base = decidedHead(dir, conf)
-        // a write computed FROM a basis snapshot must land ON it — a
-        // moved base means a concurrent commit this write would erase;
-        // abort the whole transaction (the catch below publishes the
-        // abort decision) instead
-        if (p.expectedBase >= 0 && base != p.expectedBase)
-          throw new GdxConcurrentModificationException(
-            s"gdx txn: $dir moved from version ${p.expectedBase} to " +
-              s"$base while the transaction was staged - its " +
-              "write would erase the concurrent commit; " +
-              "ROLLBACK and re-run the transaction")
+        checkBase(base)
         val v = base + 1
         val stageName = f"_txnstage-$v%08d-$id"
         val stageLines =
@@ -7674,7 +6577,7 @@ class GdxScan(path: String, version: Int, pushed: Array[Filter], limit: Int,
             def internal(s: Option[String]): java.util.Optional[Object] =
               s.filter(_ => typeOk)
                 .flatMap(t => scala.util.Try(
-                  GdxSource.parseInternalCell(f.dataType, t)).toOption)
+                  GdxLineFormat.parseInternalCell(f.dataType, t)).toOption)
                 .map(_.asInstanceOf[Object])
                 .fold(java.util.Optional.empty[Object]())(
                   java.util.Optional.of)
@@ -7901,9 +6804,9 @@ class GdxReaderFactory(pushed: Array[Filter], limit: Int,
           // the agg fold consumes lastK off the UNPRUNED base — its own
           // output schema is the aggregate row, not `required`
           case Some(ops) => new GdxAggReader(
-            new GdxFileReader(file, pushed, limit, conf,
+            new GdxLineFormat.Reader(file, pushed, limit, conf,
               tableSchema, tableSchema, dv, esc), ops)
-          case None => new GdxFileReader(file, pushed, limit, conf,
+          case None => new GdxLineFormat.Reader(file, pushed, limit, conf,
             required, tableSchema, dv, esc)
         }
       // a bin-packed group: chain the per-file readers in order; a
@@ -7912,7 +6815,7 @@ class GdxReaderFactory(pushed: Array[Filter], limit: Int,
       case GdxFileGroupPartition(files) =>
         new PartitionReader[InternalRow] {
           private val it = files.iterator
-          private var cur: GdxFileReader = _
+          private var cur: GdxLineFormat.Reader = _
           private var emitted = 0L
           override def next(): Boolean = {
             if (limit >= 0 && emitted >= limit) return false
@@ -7920,7 +6823,7 @@ class GdxReaderFactory(pushed: Array[Filter], limit: Int,
               if (cur == null) {
                 if (!it.hasNext) return false
                 val p = it.next()
-                cur = new GdxFileReader(p.file, pushed,
+                cur = new GdxLineFormat.Reader(p.file, pushed,
                   if (limit < 0) -1 else (limit - emitted).toInt,
                   conf, required, tableSchema, p.dv, p.esc)
               }
@@ -7935,126 +6838,9 @@ class GdxReaderFactory(pushed: Array[Filter], limit: Int,
     }
 }
 
-/** Line reader applying the pushed predicates before materializing and
-  * honoring a pushed per-partition limit. Rows are PROJECTED to
-  * `required` — the pruned schema [[GdxScanBuilder.pruneColumns]]
-  * accepted and [[GdxScan.readSchema]] advertises — in required order:
-  * the reader's output contract is exactly readSchema(), for every
-  * column subset and ordering Catalyst may request (v-only, k-only,
-  * (v,k), or none, as a pruned-to-empty count-style scan plans). Both
-  * columns still PARSE per line (the byte format has no column stride
-  * to skip); the saving is materialization — a k-only read never
-  * allocates a UTF8String. */
-class GdxFileReader(file: String, pushed: Array[Filter], limit: Int,
-                    conf: SerializableHadoopConf,
-                    required: StructType = GdxSource.schema,
-                    tableSchema: StructType = GdxSource.schema,
-                    dv: Option[String] = None,
-                    esc: Boolean = false)
-    extends PartitionReader[InternalRow] {
-  private val p = new Path(file)
-  private val fs = p.getFileSystem(conf.conf)
-  private val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-    fs.open(p), "UTF-8"))
-  // deletion vector: line positions subtracted from this file's rows
-  // (loaded once per task; empty when the snapshot carries no DV)
-  private val deleted: java.util.Set[Long] = dv
-    .map(d => GdxSource.readDvPositions(fs, new Path(d)))
-    .getOrElse(java.util.Collections.emptySet[Long]())
-  private var lineIdx = -1L
-  // per-output-slot (table field index, REQUESTED type, STORED type),
-  // resolved once against the snapshot's schema; a file written
-  // pre-evolution simply has fewer fields than the schema — missing
-  // slots read as NULL. The stored type matters for struct columns:
-  // Catalyst's nested schema pruning may request a NARROWED struct,
-  // and the cell must decode by the stored positional layout before
-  // projecting the requested sub-fields.
-  private val slots: Array[(Int, DataType, DataType)] = {
-    val idx = tableSchema.fieldNames.zipWithIndex.toMap
-    required.fields.map { f =>
-      val fi = idx.getOrElse(f.name, throw new IllegalArgumentException(
-        s"gdx read: unknown required column '${f.name}'"))
-      (fi, f.dataType, tableSchema.fields(fi).dataType)
-    }
-  }
-  // INITIAL DEFAULTS, resolved once per task: a row in a file written
-  // BEFORE the column existed (fewer physical slots) reads the
-  // declared default; an explicit \N written after stays NULL
-  private val slotDefaults: Array[Any] = required.fields.map(f =>
-    GdxSource.defaultCellOf(f)
-      .map(GdxSource.parseInternalCell(f.dataType, _)).orNull)
-  private var row: InternalRow = _
-  private var emitted = 0L
-  var lastK: Long = _
-  var lastV: String = _
-
-  private def project(fields: Array[String]): InternalRow = {
-    val vals = new Array[Any](slots.length)
-    var i = 0
-    while (i < slots.length) {
-      val (fi, dt, stored) = slots(i)
-      vals(i) =
-        if (fi >= fields.length) slotDefaults(i)
-        else if (fields(fi) == GdxSource.NullMarker) null
-        else GdxSource.parseInternalCellPruned(dt, stored, fields(fi),
-          esc)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-  }
-
-  private def keep(k: Long, v: String): Boolean = pushed.forall {
-    case EqualTo("k", want: Number)         => k == want.longValue
-    case GreaterThan("k", b: Number)        => k > b.longValue
-    case GreaterThanOrEqual("k", b: Number) => k >= b.longValue
-    case LessThan("k", b: Number)           => k < b.longValue
-    case LessThanOrEqual("k", b: Number)    => k <= b.longValue
-    // pushed string equality compares VALUES: an escape-era cell must
-    // decode first (the raw \N marker is NULL — never equal)
-    case EqualTo("v", want: String)         =>
-      if (esc) v != GdxSource.NullMarker &&
-        GdxSource.unescapeCell(v) == want
-      else v == want
-    case org.apache.spark.sql.sources.In("k", vs) => // runtime key set
-      vs.exists { case w: Number => k == w.longValue; case _ => true }
-    // pushed filters are TRUSTED by Spark (never re-checked post-scan),
-    // so IsNotNull("v") must be enforced here: a null v is stored as
-    // the \N marker and materializes back as NULL
-    case IsNotNull("v")                     => v != GdxSource.NullMarker
-    case IsNotNull(_)                       => true
-    case _                                  => true
-  }
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    var line = in.readLine()
-    while (line != null) {
-      lineIdx += 1
-      if (!deleted.contains(lineIdx)) {
-        val fields = line.split("\t", -1)
-        if (fields.length >= 2 && fields(0).nonEmpty) {
-          val k = fields(0).toLong
-          val v = fields(1)
-          if (keep(k, v)) {
-            lastK = k; lastV = v
-            row = project(fields)
-            emitted += 1
-            return true
-          }
-        }
-      }
-      line = in.readLine()
-    }
-    false
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = in.close()
-}
-
 /** Folds the (filtered) file stream into one partial-aggregate row —
   * count/min/max per file; Spark's final aggregate merges the files. */
-class GdxAggReader(base: GdxFileReader, ops: Seq[String])
+class GdxAggReader(base: GdxLineFormat.Reader, ops: Seq[String])
     extends PartitionReader[InternalRow] {
   private var done = false
   private var row: InternalRow = _
@@ -8573,8 +7359,9 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
         .create(exprs.toIndexedSeq)
     }
 
-  /** One output file: line sink + its zone map, extended stats, and
-    * bloom sidecar. `subdir` is "" (unpartitioned) or "<col>=<v>/". */
+  /** One output file: its lines and zone map ([[GdxLineFormat.LineSink]]),
+    * SUM stats and bloom sidecar. `subdir` is "" (unpartitioned) or
+    * "<col>=<v>/". */
   private final class Sink(subdir: String) {
     // `tag` carries the streaming epoch so re-attempts of the same
     // (partition, task) across epochs can never collide on a tmp name;
@@ -8585,20 +7372,9 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
     val name: String = subdir + f"part-$tag$partitionId%05d-$taskId-" +
       java.util.UUID.randomUUID().toString + ".gdx.tmp"
     val target = new Path(path, name)
-    // overwrite=false: with UUID'd names a collision is impossible, so
-    // an existing target is a bug worth failing loudly on, never data
-    // to silently replace (create() mkdirs the subdir as needed)
-    private val counter = new GdxSource.CountingOutputStream(
-      target.getFileSystem(conf.conf).create(target, false))
-    val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-      counter, "UTF-8"))
-    // zone map accumulated as rows stream through — an empty task keeps
-    // the inverted sentinel range (minK > maxK), which the manifest
-    // publishes and pruning treats as matching no predicate
-    var rows = 0L
-    var minK = Long.MaxValue
-    var maxK = Long.MinValue
-    val ext = new GdxSource.ExtStatAcc(lanes.length, lanes.map(_.kind))
+    val lines = new GdxLineFormat.LineSink(
+      target.getFileSystem(conf.conf), target, schema, layout, lanes,
+      "write")
     // per-LONG-column running SUM + non-null count (k included) for
     // metadata-only SUM/COUNT(col) — exact by construction; a Long
     // overflow poisons the column's entry (absence = fall back)
@@ -8609,27 +7385,22 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
     // commit renames alongside the data file (see [[GdxBloom]])
     val bloom = new Array[Byte](GdxBloom.Bits / 8)
 
-    def entry: (String, GdxFileStats) = {
-      val extMap = ext.result(e => lanes(e).name)
-      val sums = sumIdx.indices.iterator.filterNot(sumBad).map { e =>
+    def entry: (String, GdxFileStats) =
+      (name, lines.stats(sumIdx.indices.iterator.filterNot(sumBad).map { e =>
         schema(sumIdx(e)).name -> (sumL(e), sumN(e))
-      }.toMap
-      // entry is built after close(), so the counter is final
-      (name, GdxFileStats(rows, minK, maxK, extMap, sums,
-        Some(counter.count)))
-    }
+      }.toMap))
   }
 
   // extended zone maps: min/max per additional ORDERABLE column AND
   // per orderable STRUCT LEAF (dotted names — the form Spark pushes
   // nested predicates under), NULLs at any nesting step excluded,
   // tracked exactly in the column's own canonical form
-  // ([[GdxSource.extStatKind]]: longs/dates/timestamps/booleans in
+  // ([[GdxLineFormat.extStatKind]]: longs/dates/timestamps/booleans in
   // the long lane, doubles with the NaN-poison rule, decimals as
   // exact big decimals). A column that never sees a non-null value
   // publishes nothing (absence = cannot prune).
-  private val lanes: Array[GdxSource.StatLane] =
-    GdxSource.statLanes(schema)
+  private val lanes: Array[GdxLineFormat.StatLane] =
+    GdxLineFormat.statLanes(schema)
 
   // every LONG column (k included) carries a per-file SUM + non-null
   // count; doubles are deliberately excluded — float sums are
@@ -8651,7 +7422,7 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
       if (partitionIdx < 0) ""
       else if (r.isNullAt(partitionIdx)) "__null__"
       else partSpec.get.keyOf(
-        GdxSource.longReprInternal(schema(partitionIdx).dataType, r,
+        GdxLineFormat.longReprInternal(schema(partitionIdx).dataType, r,
           partitionIdx),
         schema(partitionIdx).dataType).toString
     var s = sinks.get(key)
@@ -8676,16 +7447,7 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
       c += 1
     }
     val sink = sinkFor(r)
-    val k = r.getLong(0)
-    sink.rows += 1
-    if (k < sink.minK) sink.minK = k
-    if (k > sink.maxK) sink.maxK = k
-    GdxBloom.set(sink.bloom, k)
-    var e = 0
-    while (e < lanes.length) {
-      GdxSource.addLaneInternal(sink.ext, e, lanes(e), r)
-      e += 1
-    }
+    GdxBloom.set(sink.bloom, r.getLong(0))
     var se = 0
     while (se < sumIdx.length) {
       val i = sumIdx(se)
@@ -8699,21 +7461,8 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
       }
       se += 1
     }
-    // fields joined by tab in physical-slot order; NULL as the reserved
-    // \N marker. String content escape-encodes ([[GdxSource.escapeCell]])
-    // so separators/terminators inside values never reach the line raw;
-    // the committed entry's `e:` overlay records the era.
-    val sb = new java.lang.StringBuilder
-    var pSlot = 0
-    while (pSlot < layout.length) {
-      if (pSlot > 0) sb.append('\t')
-      val i = layout(pSlot)
-      if (i < 0 || r.isNullAt(i)) sb.append(GdxSource.NullMarker)
-      else GdxSource.appendInternalCell(sb, schema(i).dataType, r, i,
-        "write", schema(i).name)
-      pSlot += 1
-    }
-    sink.out.println(sb)
+    // the committed entry's `e:` overlay records the escape era
+    sink.lines.write(r)
   }
 
   private def eachSink(f: Sink => Unit): Unit = {
@@ -8724,9 +7473,8 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
   override def commit(): WriterCommitMessage = {
     val files = Seq.newBuilder[(String, GdxFileStats)]
     eachSink { s =>
-      s.out.close()
-      GdxSource.failOnWriteError(s.out, s.target)
-      if (s.rows > 0) {
+      s.lines.finish()
+      if (s.lines.rows > 0) {
         val fs = s.target.getFileSystem(conf.conf)
         val bp = new Path(path, s.name + GdxBloom.Suffix)
         val bo = fs.create(bp, false)
@@ -8737,10 +7485,10 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
     GdxCommitMessage(files.result())
   }
   override def abort(): Unit = eachSink { s =>
-    s.out.close()
+    s.lines.close()
     val fs = s.target.getFileSystem(conf.conf)
     fs.delete(s.target, false)
     fs.delete(new Path(path, s.name + GdxBloom.Suffix), false); ()
   }
-  override def close(): Unit = eachSink(_.out.close())
+  override def close(): Unit = eachSink(_.lines.close())
 }

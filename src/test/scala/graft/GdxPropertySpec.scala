@@ -7,7 +7,7 @@ import org.scalacheck.rng.Seed
 /** Property tests for the GDX line format: round-trip fidelity across
   * arbitrary valid payloads, null patterns, and schema evolution. The
   * format's contract is exact value preservation for long/string/double
-  * plus \N-marked NULLs; since the escape era ([[GdxSource.escapeCell]])
+  * plus \N-marked NULLs; since the escape era ([[GdxLineFormat.escapeCell]])
   * string content is ARBITRARY Unicode — tabs, newlines, commas,
   * parens, backslashes and the literal "\N" all round-trip. */
 class GdxPropertySpec extends SparkSuite {
@@ -246,34 +246,33 @@ class GdxPropertySpec extends SparkSuite {
     val strs = samples(unicodeGen, 2000)
     assert(strs.exists(_.exists(c => c == ',' || c == '\n')))
     for (s <- strs) {
-      val e = sources.GdxSource.escapeCell(s)
-      assert(sources.GdxSource.unescapeCell(e) === s)
+      val e = sources.GdxLineFormat.escapeCell(s)
+      assert(sources.GdxLineFormat.unescapeCell(e) === s)
       // no raw structural character survives escaping
       assert(!e.exists(c => c == '\t' || c == '\n' || c == '\r' ||
         c == ',' || c == '(' || c == ')' || c == '='))
       // the raw NULL marker is unreachable from any VALUE
-      assert(e != sources.GdxSource.NullMarker)
+      assert(e != sources.GdxLineFormat.NullMarker)
     }
     // injectivity on a dense sample = canonical bytes (equal values
     // always produce equal cell text; distinct values distinct text)
-    assert(strs.distinct.map(sources.GdxSource.escapeCell)
+    assert(strs.distinct.map(sources.GdxLineFormat.escapeCell)
       .distinct.size === strs.distinct.size)
   }
 
   test("property: arbitrary Unicode round-trips through BOTH decode " +
-      "surfaces — the DSv2 scan (internal) and the changefeed " +
-      "(external)") {
+      "surfaces — the DSv2 scan and the changefeed") {
     for (vs <- samples(Gen.listOfN(25, unicodeGen), 3)) {
       val dir = freshDir("uni")
       val rows = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       rows.toDF("k", "v").repartition(2)
         .write.format(fmt).option("path", dir).mode("append").save()
-      // internal surface: the DSv2 PartitionReader
+      // the DSv2 scan's PartitionReader
       val got = spark.read.format(fmt).option("path", dir).load()
         .as[(Long, String)].collect().toSet
       assert(got === rows.toSet)
-      // external surface: tableChanges parses the same lines through
-      // parseExternalCell
+      // the changefeed surface: tableChanges decodes the same lines
+      // through the scan's reader, inside its own LogicalRDD
       val cdf = sources.GdxSource.tableChanges(spark, dir, 0, 1)
         .select("k", "v").as[(Long, String)].collect().toSet
       assert(cdf === rows.toSet)
@@ -309,8 +308,8 @@ class GdxPropertySpec extends SparkSuite {
           variant_get(col("v"), "$.opt", "long").isNotNull.as("p"))
         .as[(Long, String, Long, Boolean, Boolean)].collect().toSet
       assert(got === rows.toSet)
-      // external surface: the changefeed decodes the same cells through
-      // parseExternalCell into VariantVal rows
+      // the changefeed surface: tableChanges decodes the same cells
+      // into VariantVal columns
       val cdf = sources.GdxSource.tableChanges(spark, dir, 0, 1)
         .select(col("k"),
           variant_get(col("v"), "$.s", "string").as("s"))
@@ -362,7 +361,7 @@ class GdxPropertySpec extends SparkSuite {
   test("property: truncated string bounds are real bounds — lower ≤ " +
       "value, upper dominates every prefix-sharing extension, and " +
       "the stat escape round-trips") {
-    val gdx = sources.GdxSource
+    val gdx = sources.GdxLineFormat
     val strs = samples(unicodeGen, 1500) ++ Seq(
       "", "exactly16chars!!", "x" * 17, "￿" * 20,
       "a" * 15 + "😀" + "tail", // pair straddles the cut

@@ -426,6 +426,34 @@ class GdxTxnSpec extends SparkSuite with RefusalHelper {
     assert(s.table(s"$cat.lab.facts").count() === 1L)
   }
 
+  test("a staged mutation whose table moved is refused before it writes: " +
+      "no deletion vector or image file is left behind") {
+    val cat = "gdx_txnc2"
+    val (s, wh) = txnSession(cat)
+    s.sql(s"CREATE NAMESPACE $cat.lab")
+    s.sql(s"CREATE TABLE $cat.lab.dim (k BIGINT, v STRING)")
+    s.sql(s"INSERT INTO $cat.lab.dim VALUES (1, 'a'), (2, 'b')")
+    val dimDir = s"$wh/lab/dim"
+    val dir = new org.apache.hadoop.fs.Path(dimDir)
+    val fs = dir.getFileSystem(conf)
+    def written = fs.listStatus(dir).map(_.getPath.getName).filter(n =>
+      n.startsWith("dv-") || n.startsWith("upd-")).toSet
+    s.sql("BEGIN TRANSACTION")
+    s.sql(s"DELETE FROM $cat.lab.dim WHERE k >= 0")
+    Seq((99L, "concurrent")).toDF("k", "v")
+      .write.format(fmt).option("path", dimDir).mode("append").save()
+    val before = written
+    val e = intercept[Exception](s.sql("COMMIT"))
+    assert(Iterator.iterate(e: Throwable)(_.getCause)
+        .takeWhile(_ != null).take(8)
+        .exists(_.isInstanceOf[
+          graft.sources.GdxConcurrentModificationException]),
+      e.getMessage)
+    assert(written === before, "the refused DELETE wrote files")
+    assert(s.table(s"$cat.lab.dim").count() === 3L)
+    s.sql("ROLLBACK")
+  }
+
   test("staged sources are PINNED at stage time: mutating a source " +
       "between stage and COMMIT does not change what commits") {
     val cat = "gdx_txnp1"
