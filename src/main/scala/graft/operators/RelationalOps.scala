@@ -3732,7 +3732,11 @@ object RelationalOps extends QueryModule {
           .option("path", s"$wh/lab/dim").mode("append").save()
         val conflictAborts =
           (try { c.sql("COMMIT"); false } catch {
-            case t: Throwable => graft.sources.GdxSource.isConflict(t)
+            // Spark may wrap the conflict: walk the cause chain
+            case scala.util.control.NonFatal(t) =>
+              Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
+                .exists(_.isInstanceOf[
+                  graft.sources.GdxConcurrentModificationException])
           }) &&
           c.table(s"$cat.lab.facts").filter(col("k") === -1L)
             .count() == 0 &&

@@ -565,12 +565,11 @@ class GdxStagedTable(dir: String, declaredSchema: StructType,
       // needs no extra state
       override def truncate(): WriteBuilder = this
       override def build(): Write =
-        new GdxWrite(dir, replace = true, -1, declaredSchema, spec,
-          clusterWrite = true, viaCatalog = true) {
+        new GdxWrite(dir, replace = true, declaredSchema, spec,
+          viaCatalog = true) {
           override def toBatch: org.apache.spark.sql.connector.write
               .BatchWrite =
-            new GdxBatchWrite(dir, replace = true, -1, declaredSchema,
-              spec) {
+            new GdxBatchWrite(dir, replace = true, declaredSchema, spec) {
               override def commit(
                   messages: Array[WriterCommitMessage]): Unit = {
                 stashed = messages.toSeq
@@ -586,13 +585,9 @@ class GdxStagedTable(dir: String, declaredSchema: StructType,
       partitionCol = spec)
 
   override def abortStagedChanges(): Unit = {
+    GdxSource.dropTmps(dir, conf, stashed)
     val base = new Path(dir)
     val dfs = base.getFileSystem(conf)
-    stashed.collect { case m: GdxCommitMessage => m.files }.flatten
-      .foreach { case (tmp, _) =>
-        dfs.delete(new Path(base, tmp), false)
-        dfs.delete(new Path(base, tmp + GdxBloom.Suffix), false)
-      }
     // tidy the directory slot ONLY if it is genuinely empty: a
     // recursive delete here would race a concurrent staged creator of
     // the same identifier whose files are renamed but whose manifest

@@ -878,10 +878,9 @@ object GdxLineFormat {
     override def close(): Unit = in.close()
   }
 
-  /** One data file being written — the line renderer the DSv2 writer
-    * and the engine's writer share: fields joined by TAB in physical-
-    * slot order (`layout`: slot → field of `schema`, -1 = a dead slot,
-    * written `\N`), NULL as the reserved `\N` marker, string content
+  /** One data file being written by [[GdxDataWriter]], the one writer:
+    * fields joined by TAB in physical-slot order (`layout`: slot →
+    * field of `schema`, -1 = a dead slot, written `\N`), NULL as the reserved `\N` marker, string content
     * escape-encoded ([[escapeCell]]) so separators inside values never
     * reach the line raw. Tracks the file's zone map as rows stream
     * through: row count, key min/max (an empty file keeps the inverted
@@ -998,43 +997,6 @@ object GdxLineFormat {
       rowsOf(new Reader(t.file, Array.empty, -1, conf, required, stored,
         t.dv, t.esc, t.only))(new JoinedRow(lead, _))
     }
-
-  /** The engine's data-file write: each non-empty partition of `rows`
-    * (`schema`'s columns, then `nChecks` CHECK-violation flags) becomes
-    * one `<namePrefix>upd-<uuid>.gdx` file — a `col=key/` prefix keeps
-    * a partitioned rewrite inside its directory. A `gated` write counts
-    * NULL keys (skipping those rows: a line needs a key) and each CHECK
-    * flag that is true; the flags are never written. Returns each
-    * file's name, stats (no SUM stats) and gate counts (NULL keys, then
-    * one per CHECK; empty when not gated). */
-  private[graft] def writeFiles(rows: RDD[InternalRow], dir: String,
-      schema: StructType, layout: Array[Int], conf: SerializableHadoopConf,
-      namePrefix: String, nChecks: Int, gated: Boolean)
-      : Array[(String, GdxFileStats, Array[Long])] = {
-    val lanes = statLanes(schema)
-    val first = schema.length
-    val nGates = if (gated) nChecks + 1 else 0
-    rows.mapPartitions { all =>
-      if (!all.hasNext) Iterator.empty
-      else {
-        val name = s"${namePrefix}upd-${java.util.UUID.randomUUID}.gdx"
-        val p = GdxSource.entryPath(dir, name)
-        val sink = new LineSink(p.getFileSystem(conf.conf), p, schema,
-          layout, lanes, "update")
-        val gate = new Array[Long](nGates)
-        val it = if (!gated) all else all.filter { r =>
-          var c = 0
-          while (c < nChecks) {
-            if (r.getBoolean(first + c)) gate(c + 1) += 1
-            c += 1
-          }
-          if (r.isNullAt(0)) { gate(0) += 1; false } else true
-        }
-        try { it.foreach(sink.write); sink.finish() } finally sink.close()
-        Iterator((name, sink.stats(Map.empty), gate))
-      }
-    }.collect()
-  }
 
   /** The engine's DV write over `(_file, _pos, _act)` rows: one
     * `dv-<uuid>.dvx` sidecar per file with an applied position (`_act`

@@ -266,17 +266,19 @@ object SerializableHadoopConf {
   }
 }
 
-/** A CAS commit (`expectedBaseVersion`) found the snapshot advanced
-  * past the version the writer computed against — the write-write
-  * conflict signal for non-commutative commits (MERGE/DELETE). The
-  * caller re-reads the current snapshot and retries its computation. */
+/** A commit found the snapshot advanced past the version its writer
+  * computed against and could not recompute — the write-write conflict
+  * signal: a CAS'd [[GdxSource.commitFiles]] (`expectedBase`), a
+  * replaceWhere slice or constraint set that changed mid-write, a
+  * transaction whose basis moved, or a full-manifest publish that lost
+  * every retry. The caller re-reads the current snapshot and retries. */
 class GdxConcurrentModificationException(msg: String)
     extends RuntimeException(msg)
 
-/** A row offered to a GDX write failed a table CHECK constraint: the
-  * write job aborts (tmp files cleaned), no commit is published, and
-  * the table is untouched — the Delta constraint-enforcement
-  * contract. */
+/** Rows offered to a GDX write failed a table CHECK constraint: the
+  * writer counts them, the driver refuses before publishing (the
+  * message carries the count), and the table is untouched — the Delta
+  * constraint-enforcement contract. */
 class GdxConstraintViolationException(msg: String)
     extends RuntimeException(msg)
 
@@ -738,25 +740,6 @@ object GdxSource {
         case _ => f
       }
     })
-
-  /** Re-derive every shredded column of `schema` present in `rows`
-    * from its variant source (generated-always: user-supplied values
-    * are overwritten, so the shadow can never drift). A no-op on
-    * schemas with no shredded fields. */
-  private[graft] def deriveShreds(rows: org.apache.spark.sql.DataFrame,
-      schema: StructType): org.apache.spark.sql.DataFrame = {
-    val shreds = schema.fields.filter(f => shredOf(f).isDefined)
-    if (shreds.isEmpty) rows
-    else shreds.foldLeft(rows) { (df, f) =>
-      if (!df.columns.exists(_.equalsIgnoreCase(f.name))) df
-      else {
-        val (of, key) = shredOf(f).get
-        df.withColumn(f.name, org.apache.spark.sql.functions
-          .try_variant_get(org.apache.spark.sql.functions.col(of),
-            "$." + key, f.dataType.sql))
-      }
-    }
-  }
 
   /** Attach a validated default to a field: the text must be a
     * parseable cell of the field's type and must stay out of the
@@ -2170,16 +2153,17 @@ object GdxSource {
   }
 
   /** The full-manifest commit loop every GDX writer shares (MERGE,
-    * UPDATE/DELETE, small-file and clustered compaction, RESTORE,
-    * schema/layout/constraint changes): read the decided head `readV` (a stale transaction
-    * claim there is decided first), let `build(readV)` compute the
-    * statement against that snapshot, and publish its manifest lines
-    * at `readV + 1` under CAS, mirrored to `_manifest`. `build`
-    * returns `Left(result)` when nothing needs committing, else
-    * `Right((lines, result))`. A lost race recomputes on the advanced
-    * snapshot (whatever the lost attempt wrote stays an unreferenced
-    * orphan for [[vacuum]]); when `maxRetries` retries lose too, the
-    * statement fails with [[GdxConcurrentModificationException]]. */
+    * UPDATE/DELETE, every OPTIMIZE rewrite, nested-field drops,
+    * RESTORE, schema/layout/constraint changes): read the decided head
+    * `readV` (a stale transaction claim there is decided first), let
+    * `build(readV)` compute the statement against that snapshot, and
+    * publish its manifest lines at `readV + 1` under CAS, mirrored to
+    * `_manifest`. `build` returns `Left(result)` when nothing needs
+    * committing, else `Right((lines, result))`. A lost race recomputes
+    * on the advanced snapshot (whatever the lost attempt wrote stays an
+    * unreferenced orphan for [[vacuum]]); when `maxRetries` retries
+    * lose too, the statement fails with
+    * [[GdxConcurrentModificationException]]. */
   private def commitNext[R](dir: String, op: String, maxRetries: Int)
       (build: Int => Either[R, (Seq[String], R)]): R = {
     val conf = driverConf()
@@ -2217,7 +2201,7 @@ object GdxSource {
     try {
       if (java.nio.file.Files.exists(crcPath(src)))
         java.nio.file.Files.createLink(crcPath(dst), crcPath(src))
-    } catch { case _: Exception => () } // crc is best-effort metadata
+    } catch { case NonFatal(_) => () } // crc is best-effort metadata
 
   /** Atomically REPLACE `dst` with `lines` (vacuum's checkpoint
     * materialization rewrites an existing manifest in place): content
@@ -2245,9 +2229,22 @@ object GdxSource {
         .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** The single publish routine every commit path shares: rename each
-    * task's tmp file to its version-prefixed final name, then write
-    * snapshot N+1's manifest. Append commits publish a DELTA manifest
+  /** A replaceWhere slice: the raw partition-spec text, the allowed
+    * directory keys, and the slice's entries (name, dv) OBSERVED when
+    * the write was built. The commit conflict-checks the live slice
+    * against the observation: a concurrent writer that landed (or
+    * DV'd) rows inside the slice between build and publish would be
+    * silently erased by the restatement — that is a serialization
+    * conflict, surfaced loudly, exactly as Delta treats a txn that
+    * wrote into a replaceWhere range. Commits OUTSIDE the slice stay
+    * benign: the CAS-retry recomputes the carried set and proceeds. */
+  case class GdxReplaceWhere(spec: String, allowed: Set[Long],
+                             observedSlice: Set[(String, Option[String])])
+
+  /** The DSv2 publish routine (batch, streaming and staged catalog
+    * writes, and a catalog CREATE TABLE): rename each task's tmp file
+    * to its version-prefixed final name, then write snapshot N+1's
+    * manifest. Append commits publish a DELTA manifest
     * listing only this commit's files — O(files added), no read of the
     * previous snapshot at all; truncate, version 1, and every
     * [[CheckpointInterval]]-th version publish a full checkpoint (prior
@@ -2266,30 +2263,22 @@ object GdxSource {
     *
     * `expectedBase >= 0` turns the claim into a CAS: the commit must
     * land as exactly `expectedBase + 1` or throw
-    * [[GdxConcurrentModificationException]] — the conflict-DETECTING
-    * path non-commutative commits (a maintenance rewrite's
-    * read-compute-truncate) need, where silently landing on a later
-    * version would erase a concurrent writer's rows. The caller
-    * re-reads and retries the whole computation (see
-    * [[rewriteWithCas]]); commutative appends keep the
-    * retry-forward default. */
-  /** A replaceWhere slice: the raw partition-spec text, the allowed
-    * directory keys, and the slice's entries (name, dv) OBSERVED when
-    * the write was built. The commit conflict-checks the live slice
-    * against the observation: a concurrent writer that landed (or
-    * DV'd) rows inside the slice between build and publish would be
-    * silently erased by the restatement — that is a serialization
-    * conflict, surfaced loudly, exactly as Delta treats a txn that
-    * wrote into a replaceWhere range. Commits OUTSIDE the slice stay
-    * benign: the CAS-retry recomputes the carried set and proceeds. */
-  case class GdxReplaceWhere(spec: String, allowed: Set[Long],
-                             observedSlice: Set[(String, Option[String])])
-
-  /** `replaceWhere = Some(slice)`: PARTIAL overwrite — the commit
+    * [[GdxConcurrentModificationException]] — how a catalog CREATE
+    * TABLE and a staged CTAS/RTAS refuse a concurrent creator instead
+    * of silently re-declaring the table. Read-compute-publish
+    * statements (DML and every OPTIMIZE) never come here: they publish
+    * full manifests through [[commitNext]], which recomputes on a lost
+    * race.
+    *
+    * The write gate runs before any rename: a NULL key or CHECK
+    * violation the tasks counted ([[GdxCommitMessage]]'s `gate`)
+    * refuses the write and removes its tmp files.
+    *
+    * `replaceWhere = Some(slice)`: PARTIAL overwrite — the commit
     * carries forward every previous entry OUTSIDE the allowed
     * partition directories, drops every entry inside them, and adds
     * this write's files (which must all land inside). The Delta
-    * `replaceWhere` contract: a selective backfill/compaction replaces
+    * `replaceWhere` contract: a selective backfill replaces
     * one partition's files in one atomic snapshot while the other
     * 99.9% of a 100 TB table is carried by reference. Refused loudly
     * when any previous entry cannot PROVE its partition key from its
@@ -2344,6 +2333,12 @@ object GdxSource {
               "the replaceWhere condition")
         }
       }
+      // the write gate, before any rename: a NULL key or a CHECK
+      // violation the tasks counted refuses the whole write
+      try refuseGate("write", "written",
+        gateOf(messages.collect { case m: GdxCommitMessage => m }),
+        writeSchema.fields.head.name, enforcedConstraints.getOrElse(Nil))
+      catch { case NonFatal(t) => tidyTmps(); throw t }
       while (committed < 0) {
         // the claim invariant every reader relies on ("if v+1 exists,
         // v is decided"): before claiming `attempt`, decide any stale
@@ -2628,28 +2623,64 @@ object GdxSource {
 
   /** OPTIMIZE for the GDX table: rewrite the current snapshot's many
     * small files (the streaming-sink accretion shape) as `target`
-    * files, committed as a NEW truncate snapshot with identical rows.
+    * files, committed as a NEW full snapshot with identical rows.
     * Snapshot isolation does all the heavy lifting: readers planning
     * from the old manifest are untouched (their files are never
     * rewritten), time travel to the pre-compaction version keeps
     * working, and retention ([[vacuum]]) reclaims the small files once
     * no retained snapshot references them — the Delta OPTIMIZE /
-    * Iceberg rewrite_data_files contract. Returns (files before,
-    * files after); a no-op when already at or under `target`. */
+    * Iceberg rewrite_data_files contract. Published through
+    * [[commitNext]] ([[rewriteAll]]); a lost race recomputes on the
+    * advanced snapshot. Returns (files before, files published); a
+    * no-op when already at or under `target`. */
   def compact(spark: SparkSession, dir: String, target: Int = 1): (Int, Int) =
-    rewriteWithCas(dir) { readV =>
-      val conf = driverConf()
-      val before = committedEntries(dir, conf).size
+    rewriteAll(spark, dir, "compact") { (snap, live) =>
+      val before = snap.entries.size
       // a full OPTIMIZE is the advertised remedy for an ambiguous
       // partition-spec evolution history (replaceWhere/SPJ/grouped
       // aggregates point at it) — the already-compact short-circuit
       // must not leave that history in place, so any evolution tail
       // forces the materializing rewrite even at/below target
-      val evolved = committedPartitionCol(dir, conf)
-        .exists(_.contains(";"))
+      val evolved = snap.partitionCol.exists(_.contains(";"))
       if (before <= target && !evolved) None
-      else Some((before, snapshotReader(spark, dir, readV).coalesce(target)))
+      else Some((snap.schema, live().coalesce(target)))
     }
+
+  /** The full-rewrite loop [[compact]], [[optimizeZOrder]] and
+    * [[dropNestedField]] share, one [[commitNext]] body: `body` gets
+    * the snapshot at the read version and its live rows (a thunk — a
+    * no-op never reads them) and returns None for a no-op, or the
+    * schema and rows to write. The rows are written by the one writer
+    * under the HEAD partition spec with the identity layout, and
+    * published as a full manifest: column map reset, evolution-history
+    * tail cleared, constraints carried. Read-rewrite-publish is not
+    * commutative — a commit landing between the read and the publish
+    * would be dropped from the live table — so a lost race recomputes
+    * on the advanced snapshot (the conflict check Delta's OPTIMIZE
+    * performs). Returns (files before, files published). */
+  private def rewriteAll(spark: SparkSession, dir: String, op: String,
+                         maxRetries: Int = 10)
+      (body: (TableSnapshot, () => org.apache.spark.sql.DataFrame) =>
+        Option[(StructType, org.apache.spark.sql.DataFrame)]): (Int, Int) = {
+    val conf = driverConf()
+    val sconf = new SerializableHadoopConf(conf)
+    commitNext(dir, op, maxRetries) { readV =>
+      val snap = snapshotAt(dir, conf, readV)
+      val before = snap.entries.size
+      body(snap, () => liveFrame(spark, dir, snap.entries, snap.schema,
+          sconf, snap.colmap).drop("_file", "_pos")) match {
+        case None => Left((before, before))
+        case Some((to, rows)) =>
+          // the identity column map and the HEAD partition spec
+          val out = new TableSnapshot(() => Nil, to, None, snap.checks,
+            snap.partitionCol.map(partHeadOf))
+          val files = rewriteFiles(op, rows, dir, out, sconf,
+            partSpec = out.partitionCol.map(parsePartSpec))
+          Right((out.headers ++ files.sortBy(_.name).map(_.manifestLine),
+            (before, files.size)))
+      }
+    }
+  }
 
   /** BIN-PACKING OPTIMIZE — rewrite ONLY the small-file tail (and any
     * DV-carrying file), carry every file at or above `smallBytes` by
@@ -2678,13 +2709,8 @@ object GdxSource {
     val fs = base.getFileSystem(conf0)
     commitNext(dir, "compactSmall", maxRetries) { readV =>
       require(readV > 0, s"gdx compactSmall: no snapshot under $dir")
-      val entries = committedEntries(dir, conf0, readV)
-      // ONE manifest read supplies every header (a delta manifest
-      // carries them too); committedEntries above still resolves the
-      // delta chain for the file list
-      val md = readManifest(fs, manifestFor(dir, readV))
-      val tblSchema = md.schema.getOrElse(schema)
-      val tblColmap = md.colmap
+      val snap = snapshotAt(dir, conf0, readV)
+      val entries = snap.entries
       // sizes from the manifest's `b:` field when carried; the
       // remainder (legacy eras, clone refs) from ONE listing per
       // directory (the steady-state table this targets has thousands
@@ -2759,16 +2785,15 @@ object GdxSource {
       else {
         val rewritten = groups.sortBy(_._1).flatMap {
           case (prefix, es, bins) =>
-            writeGatedDataFiles(
-              liveFrame(spark, dir, es, tblSchema, sconf, tblColmap)
+            rewriteFiles("compactSmall",
+              liveFrame(spark, dir, es, snap.schema, sconf, snap.colmap)
                 .drop("_file", "_pos").coalesce(bins),
-              dir, tblSchema, sconf, tblColmap, prefix, gated = false)._1
+              dir, snap, sconf, prefix)
         }
         val rewriteNames = rewriteSet.map(_.name).toSet
         val updated = entries.filterNot(e => rewriteNames(e.name)) ++
           rewritten
-        Right((headerLines(tblSchema, md.checks, tblColmap,
-          md.partitionCol) ++ updated.sortBy(_.name).map(_.manifestLine),
+        Right((snap.headers ++ updated.sortBy(_.name).map(_.manifestLine),
           (before, updated.size)))
       }
     }
@@ -2791,39 +2816,32 @@ object GdxSource {
     }
   }
 
-  /** Did a commit lose a CAS race? Spark wraps a commit-time
-    * [[GdxConcurrentModificationException]] in its own job/write
-    * exceptions, so the cause chain is walked (a bounded depth). */
-  private[graft] def isConflict(t: Throwable): Boolean =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
-      .exists(_.isInstanceOf[GdxConcurrentModificationException])
-
   /** `OPTIMIZE ... WHERE`: partial compaction — rewrite ONLY the
     * predicate's partitions (DVs folded in, small files merged),
-    * carry every other partition's files by reference through a
-    * replaceWhere commit. At 100 TB this is how maintenance actually
-    * runs: the hot partitions (today's ingest, the DV-accreting GDPR
-    * targets) compact on a cadence, the cold 99.9% is never read or
-    * written. Same serializable loop as [[compact]] (CAS on the read
-    * version, recompute on a lost race); refused on bucket layouts and
-    * on tables with unproven-key files (the replaceWhere contract).
-    * Returns (touched files before, touched files after). */
+    * carry every other partition's files by reference. At 100 TB this
+    * is how maintenance actually runs: the hot partitions (today's
+    * ingest, the DV-accreting GDPR targets) compact on a cadence, the
+    * cold 99.9% is never read or written. One [[commitNext]] body like
+    * [[compact]]'s (a lost race recomputes on the advanced snapshot),
+    * under the replaceWhere slice rules: the header (with its
+    * evolution history) and column map are kept, and the statement is
+    * refused on bucket layouts, on an ambiguous spec history and on
+    * tables with unproven-key files. Returns (touched files before,
+    * touched files after). */
   def compactWhere(spark: SparkSession, dir: String, whereTxt: String,
                    target: Int = 1, maxRetries: Int = 10): (Int, Int) = {
-    import org.apache.spark.sql.functions.col
     val (c, values) = parsePartPredicate(whereTxt)
-    var attempt = 0
-    while (true) {
-      val conf = driverConf()
-      val readV = decidedHead(dir, conf)
-      val spec = committedPartSpec(dir, conf, readV).getOrElse(
+    val conf = driverConf()
+    val sconf = new SerializableHadoopConf(conf)
+    commitNext(dir, "compactWhere", maxRetries) { readV =>
+      val snap = snapshotAt(dir, conf, readV)
+      val spec = snap.partitionCol.map(parsePartSpec).getOrElse(
         throw new IllegalArgumentException(
           "gdx OPTIMIZE WHERE: the table declares no partition layout"))
       // a former spec colliding with the current directory key means
-      // `touched` could claim another era's files — refuse; a full
+      // `touch` could claim another era's files — refuse; a full
       // OPTIMIZE materializes the layout and clears the history
-      require(!committedPartitionCol(dir, conf, readV)
-          .exists(partDirAmbiguous),
+      require(!snap.partitionCol.exists(partDirAmbiguous),
         "gdx OPTIMIZE WHERE: a former partition spec shares the " +
           "current spec's directory key - run a full OPTIMIZE first")
       require(spec.isInstanceOf[GdxIdentityPart],
@@ -2832,97 +2850,34 @@ object GdxSource {
       require(c.equalsIgnoreCase(spec.col),
         s"gdx OPTIMIZE WHERE: $c is not the table's partition " +
           s"column (${spec.col})")
-      def touched(es: Seq[GdxFileEntry]): Seq[GdxFileEntry] =
-        es.filter(e => partKeyOf(spec.render, e.name)
-          .exists(_.exists(values.contains)))
-      val touch = touched(committedEntries(dir, conf, readV))
+      def keyOf(e: GdxFileEntry) = partKeyOf(spec.render, e.name)
+      val touch = snap.entries.filter(keyOf(_).exists(_.exists(values)))
       // no-op only when EVERY slice value is already compact and
       // DV-free — an aggregate count would let an imbalanced IN
       // (4 files in p=1, none in p=2) skip a needed rewrite
-      val perValue = touch.groupBy(e => partKeyOf(spec.render, e.name))
-      if (perValue.values.forall(es =>
+      if (touch.groupBy(keyOf).values.forall(es =>
           es.size <= target && es.forall(_.dv.isEmpty)))
-        return (touch.size, touch.size)
-      try {
-        snapshotReader(spark, dir, readV)
-          .filter(col(spec.col).isin(values.toSeq: _*))
-          .coalesce(target)
-          .write.format("graft.sources.GdxSource").option("path", dir)
-          .option("expectedBaseVersion", readV.toString)
-          .option("replaceWhere",
-            s"${spec.col} IN (${values.mkString(",")})")
-          .option("clusterWrite", "false")
-          .mode("overwrite").save()
-        return (touch.size, touched(committedEntries(dir, conf)).size)
-      } catch {
-        case t: Throwable if isConflict(t) && attempt < maxRetries =>
-          attempt += 1 // lost the race — recompute on the new snapshot
+        Left((touch.size, touch.size))
+      else {
+        // every entry must PROVE its key: a legacy or root-level DML
+        // file could hold slice rows, and dropping or keeping it blind
+        // would lose or duplicate them
+        val unproven = snap.entries.filter(keyOf(_).isEmpty)
+        require(unproven.isEmpty, "gdx OPTIMIZE WHERE: file(s) " +
+          s"${unproven.take(3).map(_.name).mkString(", ")} carry no " +
+          "provable partition key (legacy or DML-rewrite era) - run a " +
+          "full OPTIMIZE first to restore the partitioned layout")
+        val rewritten = rewriteFiles("compactWhere",
+          liveFrame(spark, dir, touch, snap.schema, sconf, snap.colmap)
+            .drop("_file", "_pos").coalesce(target),
+          dir, snap, sconf, partSpec = Some(spec))
+        val touched = touch.map(_.name).toSet
+        Right((snap.headers ++ (snap.entries.filterNot(e =>
+            touched(e.name)) ++ rewritten).sortBy(_.name)
+            .map(_.manifestLine),
+          (touch.size, rewritten.size)))
       }
     }
-    (-1, -1) // unreachable
-  }
-
-  /** The maintenance-rewrite serializable loop shared by [[compact]] and
-    * [[optimizeZOrder]]: read-rewrite-truncate is NOT commutative — a
-    * commit landing between the snapshot read and the overwrite publish
-    * would be silently dropped from the live table by a blind truncate
-    * (it would survive only in history). So the rewrite pins its READ to
-    * the version it observed, publishes with a CAS
-    * (`expectedBaseVersion`), and on a lost race recomputes against the
-    * advanced snapshot — [[commitNext]]'s contract, kept here by the
-    * DSv2 write's CAS, and the conflict check Delta's OPTIMIZE
-    * performs. `body`
-    * returns None for a no-op (already at/under target), or
-    * (files_before, rewritten frame) to publish. */
-  private def rewriteWithCas(dir: String, maxRetries: Int = 10)
-      (body: Int => Option[(Int, org.apache.spark.sql.DataFrame)])
-      : (Int, Int) = {
-    var attempt = 0
-    while (true) {
-      val readV = decidedHead(dir, driverConf())
-      body(readV) match {
-        case None => return {
-          val n = committedEntries(dir, driverConf()).size; (n, n)
-        }
-        case Some((before, rewritten)) =>
-          try {
-            // a maintenance rewrite preserves the table's declared
-            // hive-style layout: the truncate re-declares it, so
-            // OPTIMIZE compacts WITHIN partitions instead of silently
-            // un-partitioning the table
-            val w0 = rewritten.write.format("graft.sources.GdxSource")
-              .option("path", dir)
-              .option("expectedBaseVersion", readV.toString)
-              // the rewrite's own layout (Z-order range partitioning,
-              // compaction's target split) is the product — never
-              // re-cluster it on the partition column
-              .option("clusterWrite", "false")
-            // HEAD spec only: the full rewrite lands every live row
-            // under the CURRENT layout, so the truncate clears the
-            // evolution-history tail — OPTIMIZE is how a layout
-            // migration materializes
-            val w = committedPartitionCol(dir, driverConf())
-              .map(c => w0.option("partitionBy", partHeadOf(c)))
-              .getOrElse(w0)
-            w.mode("overwrite").save()
-            return (before, committedEntries(dir, driverConf()).size)
-          } catch {
-            case t: Throwable if isConflict(t) && attempt < maxRetries =>
-              attempt += 1 // lost the race — recompute on the new snapshot
-          }
-      }
-    }
-    (-1, -1) // unreachable
-  }
-
-  /** Reader pinned at `readV` (the CAS loop's observed snapshot) so the
-    * rewrite job and its CAS guard agree on the exact version — a scan
-    * of the LIVE table could silently include a commit the guard then
-    * fails to detect. */
-  private def snapshotReader(spark: SparkSession, dir: String, readV: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val r = spark.read.format("graft.sources.GdxSource").option("path", dir)
-    (if (readV > 0) r.option("version", readV.toString) else r).load()
   }
 
   /** OPTIMIZE … ZORDER BY for the GDX table: rewrite the current
@@ -2930,31 +2885,30 @@ object GdxSource {
     * equi-depth bucketize each listed column (one sampled
     * `approxQuantile` pass per column), interleave the bucket bits
     * ([[graft.functions.ZValue]], codegen'd), range-partition on the
-    * Z-value into ~`target` files, and publish as ONE truncate commit.
+    * Z-value into ~`target` files, and publish as ONE full commit.
     * Every listed column then has file-level locality simultaneously,
     * so the manifest's extended zone maps (min/max per numeric column)
     * prune on EVERY listed dimension — a linear sort gives its leading
     * key tight file ranges and leaves every other column's range as
     * wide as the table (the Delta OPTIMIZE ZORDER BY / Iceberg sort
     * rewrite contract; ZOrderSpec measures the difference). Snapshot
-    * isolation as in [[compact]]: old versions keep their files, time
-    * travel works, [[vacuum]] reclaims. At 100 TB this runs range-wise
-    * like any maintenance rewrite; the quantile pass is sample-sized
-    * and the clustering job is one range shuffle of the rewritten
-    * slice. Returns (files before, files after). */
+    * isolation and the lost-race recompute as in [[compact]]. At
+    * 100 TB this runs range-wise like any maintenance rewrite; the
+    * quantile pass is sample-sized and the clustering job is one range
+    * shuffle of the rewritten slice. Returns (files before, files
+    * published). */
   def optimizeZOrder(spark: SparkSession, dir: String, by: Seq[String],
-                     target: Int = 8): (Int, Int) =
-    rewriteWithCas(dir) { readV =>
-      import org.apache.spark.sql.functions.col
-      val before = committedEntries(dir, driverConf()).size
-      val df = snapshotReader(spark, dir, readV)
-      val sch = df.schema
-      require(by.nonEmpty, "gdx zorder: at least one clustering column")
+                     target: Int = 8): (Int, Int) = {
+    import org.apache.spark.sql.functions.col
+    require(by.nonEmpty, "gdx zorder: at least one clustering column")
+    rewriteAll(spark, dir, "zorder") { (snap, live) =>
+      val sch = snap.schema
       by.foreach { c =>
         require(sch.fieldNames.contains(c), s"gdx zorder: no column $c")
         require(graft.functions.ZValue.supportedType(sch(c).dataType),
           s"gdx zorder: $c is not numeric (${sch(c).dataType})")
       }
+      val df = live()
       // 256 equi-depth buckets per column: file-level clustering only
       // needs bucket count to comfortably exceed the target file count.
       // ONE multi-column quantile pass — per-column calls would scan the
@@ -2966,11 +2920,11 @@ object GdxSource {
           by.map(c => org.apache.spark.sql.graft.ColumnBridge
             .expression(df.col(c))),
           bounds))
-      Some((before,
-        df.withColumn("__z", z)
-          .repartitionByRange(target, col("__z"))
-          .drop("__z")))
+      Some((sch, df.withColumn("__z", z)
+        .repartitionByRange(target, col("__z"))
+        .drop("__z")))
     }
+  }
 
   // ---------------------------------------------- CLUSTER BY (layout)
   /** Declared clustering columns — the Delta liquid-clustering shape
@@ -3261,14 +3215,11 @@ object GdxSource {
     require(by.nonEmpty, "gdx optimize: no cluster columns")
     val conf0 = driverConf()
     val sconf = new SerializableHadoopConf(conf0)
-    val base = new Path(dir)
-    val fs = base.getFileSystem(conf0)
     commitNext(dir, "optimize", maxRetries = 10) { readV =>
       require(readV > 0, s"gdx optimize: no snapshot under $dir")
-      val entries = committedEntries(dir, conf0, readV)
-      val md = readManifest(fs, manifestFor(dir, readV))
-      val tblSchema = md.schema.getOrElse(schema)
-      val tblColmap = md.colmap
+      val snap = snapshotAt(dir, conf0, readV)
+      val entries = snap.entries
+      val tblSchema = snap.schema
       // canonical-case the references BEFORE any range lookup: zone-map
       // stats publish under canonical dotted names, so a direct API
       // caller's differently-cased `by` would otherwise read every file
@@ -3322,17 +3273,15 @@ object GdxSource {
         // the declared columns change.
         val genTag = java.util.UUID.randomUUID().toString
           .replace("-", "").take(12) + "@" + genClusterSpec(byC)
-        val rewritten = writeGatedDataFiles(
-          liveFrame(spark, dir, rewriteSet, tblSchema, sconf, tblColmap)
+        val rewritten = rewriteFiles("optimize",
+          liveFrame(spark, dir, rewriteSet, tblSchema, sconf, snap.colmap)
             .drop("_file", "_pos")
             .repartitionByRange(bins, byC.map(col): _*)
             .sortWithinPartitions(byC.map(col): _*),
-          dir, tblSchema, sconf, tblColmap, "", gated = false)._1
-          .map(_.copy(gen = Some(genTag)))
+          dir, snap, sconf).map(_.copy(gen = Some(genTag)))
         val updated = entries.filterNot(e => rewriteNames(e.name)) ++
           rewritten
-        Right((headerLines(tblSchema, md.checks, tblColmap,
-          md.partitionCol) ++ updated.sortBy(_.name).map(_.manifestLine),
+        Right((snap.headers ++ updated.sortBy(_.name).map(_.manifestLine),
           (before, updated.size)))
       }
     }
@@ -3638,6 +3587,9 @@ object GdxSource {
       new TableSnapshot(() => es, schema, colmap, checks, partitionCol)
     def headers: Seq[String] =
       headerLines(schema, checks, colmap, partitionCol)
+    /** [[refuseGate]] over this table's key column and constraints. */
+    def refuse(op: String, what: String, gate: Seq[Long]): Unit =
+      refuseGate(op, what, gate, schema.fields.head.name, checks)
   }
 
   /** The snapshot at version `v` (the latest for `v` ≤ 0): the version
@@ -3848,9 +3800,8 @@ object GdxSource {
       images(notMatched, "__n", f => lit(null).cast(f.dataType)) ++
       images(notMatchedBySource, "__b", f => col(tPre + f.name))
     val (rewrittenEntries, gate) = imgs.reduceOption(_.unionByName(_)) match {
-      case None =>
-        (Seq.empty[GdxFileEntry], new Array[Long](snap.checks.size + 1))
-      case Some(newRows) => writeGated(newRows, dir, snap, sconf)
+      case None => (Seq.empty[GdxFileEntry], Seq.empty[Long])
+      case Some(newRows) => writeDataFiles(newRows, dir, snap, sconf)
     }
     val newDvs = writeDvSidecars(ann.filter(dvRows).select(col("_file"),
       col("_pos"), when(updFlag, 1)
@@ -3859,7 +3810,7 @@ object GdxSource {
     if (newDvs.repeated) throw new GdxMergeCardinalityException(
       "gdx merge: the ON condition matched a target row to more " +
         "than one source row — an UPDATE/DELETE would be ambiguous")
-    refuseGate(stmt.op, s"${stmt.op}d", gate, snap)
+    snap.refuse(stmt.op, s"${stmt.op}d", gate)
     if (rewrittenEntries.isEmpty && newDvs.sidecars.isEmpty) None
     else {
       val (nUpd, nDel) = (newDvs.updated, newDvs.deleted)
@@ -3871,34 +3822,42 @@ object GdxSource {
     }
   }
 
-  /** `rows` (in `snap`'s column order) written as new data files, the
-    * write gating itself: NULL keys (the line format requires a key)
-    * and one violation flag per CHECK constraint ride each row as
-    * trailing columns the writer counts and never writes. Returns the
-    * entries and the gate counts for [[refuseGate]]. */
-  private def writeGated(rows: org.apache.spark.sql.DataFrame, dir: String,
-                         snap: TableSnapshot, sconf: SerializableHadoopConf)
-      : (Seq[GdxFileEntry], Array[Long]) = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
-    writeGatedDataFiles(rows.select(col("*") +:
-      snap.checks.zipWithIndex.map { case ((_, sql), i) =>
-        not(coalesce(expr(sql), lit(true))).as(s"__gdx_chk$i")
-      }: _*), dir, snap.schema, sconf, snap.colmap, "", gated = true)
-  }
-
-  /** Refuse a gated write's NULL keys, then its CHECK violations in
-    * constraint order; `what` names the rows ("updated", "inserted"). */
-  private def refuseGate(op: String, what: String, gate: Array[Long],
-                         snap: TableSnapshot): Unit = {
-    if (gate(0) > 0) throw new IllegalArgumentException(
-      s"gdx $op: ${gate(0)} $what row(s) have a NULL key " +
-        s"(${snap.schema.fields.head.name}) — the key column is required")
-    snap.checks.zipWithIndex.foreach { case ((n, sql), i) =>
-      if (gate(i + 1) > 0) throw new GdxConstraintViolationException(
-        s"gdx $op: ${gate(i + 1)} $what row(s) would violate CHECK " +
+  /** Refuse a write's NULL keys, then its CHECK violations in
+    * constraint order: `gate` holds [[GdxDataWriter]]'s counts (NULL
+    * keys, then one per constraint of `checks`), `key` names the key
+    * column and `what` the rows ("updated", "written"). */
+  private[graft] def refuseGate(op: String, what: String, gate: Seq[Long],
+                                key: String,
+                                checks: Seq[(String, String)]): Unit = {
+    def count(i: Int): Long = if (i < gate.length) gate(i) else 0L
+    if (count(0) > 0) throw new IllegalArgumentException(
+      s"gdx $op: ${count(0)} $what row(s) have a NULL key ($key) — " +
+        "the key column is required")
+    checks.zipWithIndex.foreach { case ((n, sql), i) =>
+      if (count(i + 1) > 0) throw new GdxConstraintViolationException(
+        s"gdx $op: ${count(i + 1)} $what row(s) would violate CHECK " +
           s"constraint $n ($sql)")
     }
   }
+
+  /** Delete the tmp files (and bloom sidecars) of DSv2 task
+    * `messages` — an aborted or replayed write's. */
+  private[graft] def dropTmps(path: String, conf: Configuration,
+                              messages: Seq[org.apache.spark.sql.connector
+                                .write.WriterCommitMessage]): Unit = {
+    val base = new Path(path)
+    val fs = base.getFileSystem(conf)
+    messages.collect { case m: GdxCommitMessage => m.files }.flatten
+      .foreach { case (tmp, _) =>
+        fs.delete(new Path(base, tmp), false)
+        fs.delete(new Path(base, tmp + GdxBloom.Suffix), false)
+      }
+  }
+
+  /** The gate counts of `messages`, summed position by position. */
+  private[graft] def gateOf(messages: Seq[GdxCommitMessage]): Seq[Long] =
+    messages.foldLeft(Seq.empty[Long])((sum, m) =>
+      sum.zipAll(m.gate, 0L, 0L).map { case (a, b) => a + b })
 
   /** The snapshot's LIVE rows as a DataFrame of (_file, _pos, cols...),
     * decoded by the scan's reader ([[GdxLineFormat.liveRows]]): DV'd
@@ -3940,45 +3899,51 @@ object GdxSource {
         bytes.map(b =>
           org.apache.spark.sql.catalyst.plans.logical.Statistics(b)), None))
 
-  /** Write `rows` (in `tblSchema` column order) as GDX line files, one
-    * per non-empty partition, executor-side with UUID names
-    * ([[GdxLineFormat.writeFiles]]); returns the manifest entries
-    * (zone-map and extended stats included — on a partitioned table
-    * the rewrite lands at the root, and the partition column's v..v
-    * range is what keeps the rewritten rows prunable). The files become
-    * committed only when the caller's manifest publish wins. A `gated`
-    * write's rows carry one trailing boolean column per CHECK
-    * constraint after the `tblSchema` columns, true where the row
-    * violates it. The writer counts those flags and NULL keys, never
-    * writes the flag columns, and skips a NULL-key row (the line format
-    * needs a key). Returns the entries and the gate counts: NULL keys
-    * first, then one violation count per CHECK column (empty when not
-    * gated). Any non-zero count must refuse the publish; the files are
-    * then unreferenced orphans. */
-  private def writeGatedDataFiles(rows: org.apache.spark.sql.DataFrame,
-                                  dirStr: String, tblSchema: StructType,
-                                  sconf: SerializableHadoopConf,
-                                  colmap: Option[Colmap],
-                                  namePrefix: String, gated: Boolean)
-      : (Seq[GdxFileEntry], Array[Long]) = {
-    // shredded columns re-derive from their variant source before the
-    // rows render (generated-always — a rewrite can never drift them)
-    val rendered = deriveShreds(rows, tblSchema)
+  /** `rows` (in `snap`'s column order) written as new data files of
+    * `snap`'s table by the one writer ([[GdxDataWriter.writeRows]]):
+    * final `<prefix>upd-<uuid>.gdx` names (a `col=key/` prefix keeps a
+    * directory's rewrite inside it; `partSpec` demuxes the rows into
+    * `col=key/` directories instead), the snapshot's physical layout,
+    * and its constraints enforced by the writer's gate. Returns the
+    * manifest entries (zone maps, SUM stats and bloom sidecars
+    * included) and the gate counts for [[TableSnapshot.refuse]]. The
+    * files become committed only when the caller's manifest publish
+    * wins; a refused statement leaves them unreferenced orphans for
+    * [[vacuum]]. */
+  private def writeDataFiles(rows: org.apache.spark.sql.DataFrame,
+                             dir: String, snap: TableSnapshot,
+                             sconf: SerializableHadoopConf,
+                             prefix: String = "",
+                             partSpec: Option[GdxPartSpec] = None)
+      : (Seq[GdxFileEntry], Seq[Long]) = {
+    val tblSchema = snap.schema
     // the renderer reads each cell by its column's declared type
-    require(tblSchema.fields.zip(rendered.schema.fields).forall {
+    require(tblSchema.length == rows.schema.length &&
+      tblSchema.fields.zip(rows.schema.fields).forall {
         case (t, r) => DataType.equalsStructurally(t.dataType, r.dataType,
           ignoreNullability = true) },
-      s"gdx write: rows ${rendered.schema.simpleString} do not match " +
+      s"gdx write: rows ${rows.schema.simpleString} do not match " +
         s"the table schema ${tblSchema.simpleString}")
-    val nChecks = rows.columns.length - tblSchema.length
-    val written = GdxLineFormat.writeFiles(rendered.queryExecution.toRdd,
-      dirStr, tblSchema, writeLayout(tblSchema, colmap), sconf, namePrefix,
-      nChecks, gated)
-    val gates = new Array[Long](if (gated) nChecks + 1 else 0)
-    written.foreach(w => w._3.indices.foreach(i => gates(i) += w._3(i)))
-    (written.toSeq.map { case (name, stats, _) =>
+    val msgs = GdxDataWriter.writeRows(rows.queryExecution.toRdd, dir,
+      sconf, prefix, tblSchema, activeChecks(snap.checks, tblSchema),
+      writeLayout(tblSchema, snap.colmap), partSpec)
+    (msgs.toSeq.flatMap(_.files).map { case (name, stats) =>
       GdxFileEntry(name, Some(stats), enc = Some(GdxLineFormat.EscCodec))
-    }, gates)
+    }, gateOf(msgs.toSeq))
+  }
+
+  /** A maintenance rewrite's files: [[writeDataFiles]], refused at once
+    * on any gate count (committed rows passed the gate when written). */
+  private def rewriteFiles(op: String, rows: org.apache.spark.sql.DataFrame,
+                           dir: String, snap: TableSnapshot,
+                           sconf: SerializableHadoopConf,
+                           prefix: String = "",
+                           partSpec: Option[GdxPartSpec] = None)
+      : Seq[GdxFileEntry] = {
+    val (files, gate) = writeDataFiles(rows, dir, snap, sconf, prefix,
+      partSpec)
+    snap.refuse(op, "rewritten", gate)
+    files
   }
 
   /** SHALLOW CLONE: a new table whose first manifest references the
@@ -4843,7 +4808,7 @@ object GdxSource {
     * mapping complexity: the live rows are rewritten under the
     * evolved schema (`dropFields` on the struct column — positions
     * after the dropped leaf shift in the NEW files only; DVs fold
-    * away) and committed as a truncate snapshot under CAS. Old
+    * away) and published as a full snapshot ([[rewriteAll]]). Old
     * snapshots keep their files AND their era's schema, so time
     * travel still reads the dropped leaf. Works one array level deep
     * (`messages.ts` inside `array<struct<...>>`). Refused while a
@@ -4875,9 +4840,9 @@ object GdxSource {
       s"gdx dropNestedField: constraint(s) " +
         s"${referencing.map(_._1).mkString(", ")} reference $path - " +
         "drop them first")
-    val out = rewriteWithCas(dir, maxRetries) { readV =>
-      val cur = committedSchema(dir, conf,
-        if (readV > 0) readV else -1)
+    val out = rewriteAll(spark, dir, "dropNestedField", maxRetries) {
+        (snap, live) =>
+      val cur = snap.schema
       // canonical-case the path while validating the evolved shape
       val canon = new Array[String](parts.length)
       def remove(st: StructType, depth: Int): StructType = {
@@ -4908,7 +4873,7 @@ object GdxSource {
               s"${other.catalogString}, not a struct")
         }
       }
-      remove(cur, 0)
+      val evolved = remove(cur, 0)
       val colName = canon(0)
       val colIdx = cur.fieldNames.indexWhere(
         _.equalsIgnoreCase(colName))
@@ -4927,10 +4892,7 @@ object GdxSource {
         case other => throw new IllegalArgumentException(
           s"gdx dropNestedField: $colName is ${other.catalogString}")
       }
-      val before = committedEntries(dir, conf,
-        if (readV > 0) readV else -1).size
-      Some((before, snapshotReader(spark, dir, readV)
-        .withColumn(colName, newCol)))
+      Some((evolved, live().withColumn(colName, newCol)))
     }
     reconcileClusterSidecar(dir, path, None)
     out
@@ -5341,10 +5303,10 @@ object GdxSource {
     require(shape(rows.schema) == shape(snap.schema),
       s"gdx txn: columns ${rows.schema.simpleString} do not match " +
         s"$dir's schema ${snap.schema.simpleString}")
-    val (entries, gate) = writeGated(rows.select(snap.schema.fieldNames
+    val (entries, gate) = writeDataFiles(rows.select(snap.schema.fieldNames
       .map(org.apache.spark.sql.functions.col).toSeq: _*), dir, snap,
       new SerializableHadoopConf(driverConf()))
-    refuseGate("txn", "inserted", gate, snap)
+    snap.refuse("txn", "inserted", gate)
     entries
   }
 
@@ -5776,8 +5738,6 @@ class GdxTable(path: String, tableSchema: StructType = GdxSource.schema,
       s"gdx: cannot write to a time-travel (version-pinned) view of " +
         s"$path")
     new GdxWriteBuilder(path,
-      Option(info.options.get("expectedBaseVersion")).map(_.toInt)
-        .getOrElse(-1),
       // the input frame's schema carries no field metadata — fold the
       // table's shred annotations back in so every write door derives
       // (a path-based getTable receives the FRAME schema as
@@ -5791,7 +5751,6 @@ class GdxTable(path: String, tableSchema: StructType = GdxSource.schema,
       // HEAD; user options keep their raw text (build() refuses `;`)
       Option(info.options.get("partitionBy"))
         .orElse(declaredPartition.map(GdxSource.partHeadOf)),
-      Option(info.options.get("clusterWrite")).forall(_.toBoolean),
       viaCatalog,
       Option(info.options.get("replaceWhere")))
   }
@@ -6005,8 +5964,9 @@ class GdxScanBuilder(path: String, version: Int,
           .forall(e => GdxSource.partKeyOf(pc, e.name).isDefined)) &&
           !builderPartRaw.exists(GdxSource.partDirAmbiguous))) &&
         // extended ops need every file's write era to have recorded
-        // the column's sum stats (legacy files, DML rewrite files, and
-        // pre-rename names fall back to the classic plan)...
+        // the column's sum stats (legacy files, files written before
+        // every writer kept them, and pre-rename names fall back to
+        // the classic plan)...
         sumStatCols(ops).forall(c => builderEntries.forall(
           _.stats.exists(_.sums.contains(c)))) &&
         // ...and every folded SUM must fit a Long exactly — an
@@ -6870,10 +6830,9 @@ class GdxAggReader(base: GdxLineFormat.Reader, ops: Seq[String])
 
 // --------------------------------------------------------------- write
 
-class GdxWriteBuilder(path: String, expectedBase: Int = -1,
+class GdxWriteBuilder(path: String,
                       writeSchema: StructType = GdxSource.schema,
                       partitionByOpt: Option[String] = None,
-                      clusterWrite: Boolean = true,
                       viaCatalog: Boolean = false,
                       replaceWhereOpt: Option[String] = None)
     extends WriteBuilder with SupportsOverwrite {
@@ -7025,8 +6984,8 @@ class GdxWriteBuilder(path: String, expectedBase: Int = -1,
         .map(e => (e.name, e.dv)).toSet
       GdxSource.GdxReplaceWhere(spec, vals, observed)
     }
-    new GdxWrite(path, replace && rw.isEmpty, expectedBase, writeSchema,
-      effective, clusterWrite, viaCatalog, rw)
+    new GdxWrite(path, replace && rw.isEmpty, writeSchema, effective,
+      viaCatalog, rw)
   }
 }
 
@@ -7037,14 +6996,13 @@ class GdxWriteBuilder(path: String, expectedBase: Int = -1,
   * task — one file per value per write instead of
   * tasks × values — while AQE's skew handling may still SPLIT a hot
   * value across tasks (several files for that value: exactly right).
-  * Maintenance rewrites (OPTIMIZE/compact, DV update rewrites) opt out
-  * via `option("clusterWrite", "false")` — their input layout (Z-order
+  * Maintenance rewrites never pass here: they write through the
+  * engine ([[GdxDataWriter.writeRows]]), whose input layout (Z-order
   * range partitioning, per-file rewrite sets) IS the product, and a
-  * re-cluster here would destroy it. */
-class GdxWrite(path: String, replace: Boolean, expectedBase: Int = -1,
+  * re-cluster would destroy it. */
+class GdxWrite(path: String, replace: Boolean,
                writeSchema: StructType = GdxSource.schema,
                partitionCol: Option[String] = None,
-               clusterWrite: Boolean = true,
                viaCatalog: Boolean = false,
                replaceWhere: Option[GdxSource.GdxReplaceWhere] = None)
     extends Write with RequiresDistributionAndOrdering {
@@ -7055,8 +7013,7 @@ class GdxWrite(path: String, replace: Boolean, expectedBase: Int = -1,
   // near one file per day. Identity/bucket layouts keep the clustered
   // shape.
   private def orderedSpec: Option[GdxSource.GdxPartSpec] =
-    partitionCol.filter(_ => clusterWrite)
-      .map(GdxSource.parsePartSpec)
+    partitionCol.map(GdxSource.parsePartSpec)
       .filter(sp => GdxSource.monotonePart(sp) &&
         !sp.isInstanceOf[GdxSource.GdxIdentityPart])
   override def requiredDistribution()
@@ -7071,7 +7028,7 @@ class GdxWrite(path: String, replace: Boolean, expectedBase: Int = -1,
               org.apache.spark.sql.connector.expressions
                 .SortDirection.ASCENDING)))
       case None =>
-        partitionCol.filter(_ => clusterWrite)
+        partitionCol
           .map(c => org.apache.spark.sql.connector.distributions
             .Distributions
             .clustered(Array(GdxSource.parsePartSpec(c) match {
@@ -7104,7 +7061,7 @@ class GdxWrite(path: String, replace: Boolean, expectedBase: Int = -1,
           }
     }
   private lazy val clusterCols: Seq[String] =
-    if (!clusterWrite || partitionCol.isDefined) Seq.empty
+    if (partitionCol.isDefined) Seq.empty
     else GdxSource.clusterByOf(path, GdxSource.driverConf())
       .flatMap(GdxSource.resolveClusterRef(writeSchema, _))
   private def clusterSort
@@ -7121,8 +7078,8 @@ class GdxWrite(path: String, replace: Boolean, expectedBase: Int = -1,
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
     if (clusterCols.nonEmpty) clusterSort else Array.empty
   override def toBatch: BatchWrite =
-    new GdxBatchWrite(path, replace, expectedBase, writeSchema,
-      partitionCol, replaceWhere)
+    new GdxBatchWrite(path, replace, writeSchema, partitionCol,
+      replaceWhere)
   override def toStreaming: wstreaming.StreamingWrite =
     new GdxStreamingWrite(path, writeSchema, partitionCol)
 }
@@ -7156,7 +7113,7 @@ class GdxStreamingWrite(path: String,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : wstreaming.StreamingDataWriterFactory =
-    new GdxStreamingWriterFactory(path,
+    new GdxWriterFactory(path,
       new SerializableHadoopConf(GdxSource.driverConf()), writeSchema,
       GdxSource.activeChecks(enforced, writeSchema),
       GdxSource.writeLayout(writeSchema,
@@ -7172,12 +7129,7 @@ class GdxStreamingWrite(path: String,
     val marker = txnMarker(epochId)
     if (fs.exists(marker)) {
       // replayed epoch: the original commit already published
-      messages.collect { case m: GdxCommitMessage =>
-        m.files.foreach { case (tmp, _) =>
-          fs.delete(new Path(path, tmp), false)
-          fs.delete(new Path(path, tmp + GdxBloom.Suffix), false)
-        }
-      }
+      GdxSource.dropTmps(path, conf, messages.toSeq)
       return
     }
     GdxSource.commitFiles(path, conf, replace = false, messages.toSeq,
@@ -7187,40 +7139,20 @@ class GdxStreamingWrite(path: String,
   }
 
   override def abort(epochId: Long,
-                     messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(GdxSource.driverConf())
-    messages.collect { case m: GdxCommitMessage =>
-      m.files.foreach { case (tmp, _) =>
-        fs.delete(new Path(path, tmp), false)
-        fs.delete(new Path(path, tmp + GdxBloom.Suffix), false)
-      }
-    }
-  }
+                     messages: Array[WriterCommitMessage]): Unit =
+    GdxSource.dropTmps(path, GdxSource.driverConf(), messages.toSeq)
 }
 
-class GdxStreamingWriterFactory(path: String, conf: SerializableHadoopConf,
-                                writeSchema: StructType = GdxSource.schema,
-                                checks: Seq[(String,
-                                  org.apache.spark.sql.catalyst.expressions
-                                    .Expression)] = Seq.empty,
-                                layout: Array[Int] = null,
-                                partSpec: Option[GdxSource.GdxPartSpec] =
-                                  None)
-    extends wstreaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    new GdxDataWriter(path, partitionId, taskId, conf,
-      tag = f"e$epochId%08d-", schema = writeSchema, checks = checks,
-      layoutIn = layout, partSpec = partSpec)
-}
-
-/** One task's committed tmp files (several under a partitioned write —
-  * one per partition value the task saw). */
-case class GdxCommitMessage(files: Seq[(String, GdxFileStats)])
+/** One task's written files (several under a partitioned write — one
+  * per partition value the task saw) and its gate counts: NULL-key
+  * rows first, then one violation count per CHECK the writer enforced
+  * (empty: nothing counted). The driver refuses a non-zero count
+  * ([[GdxSource.refuseGate]]) before it publishes anything. */
+case class GdxCommitMessage(files: Seq[(String, GdxFileStats)],
+                            gate: Seq[Long] = Seq.empty)
     extends WriterCommitMessage
 
 class GdxBatchWrite(path: String, replace: Boolean,
-                    expectedBase: Int = -1,
                     writeSchema: StructType = GdxSource.schema,
                     partitionCol: Option[String] = None,
                     replaceWhere: Option[GdxSource.GdxReplaceWhere] = None)
@@ -7246,8 +7178,9 @@ class GdxBatchWrite(path: String, replace: Boolean,
       GdxSource.committedColmap(path, GdxSource.driverConf())),
     partSpec)
 
-  /** Driver-side publish: rename each task's tmp file to its
-    * VERSION-PREFIXED final name, then write snapshot N+1's manifest —
+  /** Driver-side publish: refuse the tasks' NULL keys and CHECK
+    * violations, then rename each task's tmp file to its
+    * VERSION-PREFIXED final name and write snapshot N+1's manifest —
     * append publishes a delta of this commit's files (checkpointed
     * every [[GdxSource.CheckpointInterval]]), truncate starts a fresh
     * full list. Readers only ever see a manifest's list, so the commit
@@ -7265,23 +7198,17 @@ class GdxBatchWrite(path: String, replace: Boolean,
       graft.plans.GdxSqlTxn.refuseIfOpen(_, "a non-staged write into " +
         s"gdx($path)"))
     GdxSource.commitFiles(path, GdxSource.driverConf(), replace,
-      messages.toSeq, expectedBase, writeSchema, Some(enforced),
-      partitionCol, replaceWhere)
+      messages.toSeq, writeSchema = writeSchema,
+      enforcedConstraints = Some(enforced), partitionCol = partitionCol,
+      replaceWhere = replaceWhere)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = GdxSource.driverConf()
-    val base = new Path(path)
-    val fs = base.getFileSystem(conf)
-    messages.collect { case m: GdxCommitMessage =>
-      m.files.foreach { case (tmp, _) =>
-        fs.delete(new Path(base, tmp), false)
-        fs.delete(new Path(base, tmp + GdxBloom.Suffix), false)
-      }
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GdxSource.dropTmps(path, GdxSource.driverConf(), messages.toSeq)
 }
 
+/** The DSv2 batch and streaming writer factory: one [[GdxDataWriter]]
+  * per task, with `.gdx.tmp` names (a streaming epoch tags them). */
 class GdxWriterFactory(path: String, conf: SerializableHadoopConf,
                        writeSchema: StructType = GdxSource.schema,
                        checks: Seq[(String,
@@ -7289,18 +7216,39 @@ class GdxWriterFactory(path: String, conf: SerializableHadoopConf,
                            .Expression)] = Seq.empty,
                        layout: Array[Int] = null,
                        partSpec: Option[GdxSource.GdxPartSpec] = None)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
+    extends DataWriterFactory with wstreaming.StreamingDataWriterFactory {
+  private def writer(tag: String, partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
-    new GdxDataWriter(path, partitionId, taskId, conf,
-      schema = writeSchema, checks = checks, layoutIn = layout,
-      partSpec = partSpec)
+    new GdxDataWriter(path, conf,
+      GdxDataWriter.tmpName(tag, partitionId, taskId), writeSchema, checks,
+      layout, partSpec)
+  override def createWriter(partitionId: Int, taskId: Long)
+      : DataWriter[InternalRow] = writer("", partitionId, taskId)
+  override def createWriter(partitionId: Int, taskId: Long,
+                            epochId: Long): DataWriter[InternalRow] =
+    writer(f"e$epochId%08d-", partitionId, taskId)
 }
 
-/** Task-side writer: data lands in uniquely-named `.tmp` files that
-  * only the driver commit publishes; a speculative duplicate or failed
-  * attempt leaves at most unreferenced tmps (cleaned by abort, and
-  * harmless if leaked — readers never list the directory).
+/** The one task-side writer of GDX data files: every DSv2 batch and
+  * streaming write, and every engine write — MERGE/UPDATE/DELETE
+  * images, a transaction's INSERTs and every OPTIMIZE rewrite
+  * ([[GdxDataWriter.writeRows]]). Each file carries its zone map
+  * ([[GdxLineFormat.LineSink]]), per-LONG-column SUM stats and a bloom
+  * sidecar over k.
+  *
+  * `fileName` maps a partition subdirectory ("" or "<col>=<key>/") to
+  * a new file's directory-relative name: DSv2 tasks write uniquely-named
+  * `.gdx.tmp` files only the driver commit publishes
+  * ([[GdxDataWriter.tmpName]]); the engine writes the final names its
+  * manifest publish references ([[GdxDataWriter.engineName]]). Either
+  * way a failed or refused write leaves at most unreferenced files
+  * (removed by abort, or reclaimed by [[GdxSource.vacuum]] — readers
+  * never list the directory).
+  *
+  * The write gate: a NULL-key row is counted and skipped (a line needs
+  * a key), a row violating a CHECK in `checks` (SQL semantics, NULL
+  * passes) is counted; the counts ride the commit message, and the
+  * driver refuses any non-zero count before it publishes.
   *
   * With `partSpec` set (`PARTITIONED BY` on a LONG column — identity
   * or bucket transform) the task demuxes rows into one file PER
@@ -7311,8 +7259,8 @@ class GdxWriterFactory(path: String, conf: SerializableHadoopConf,
   * which makes static partition pruning exactly a zone-map prune; for
   * bucket layouts the directory key is [[GdxSource.bucketId]] of the
   * value and pruning goes through the bucket-directory overlay. */
-class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
-                    conf: SerializableHadoopConf, tag: String = "",
+class GdxDataWriter(path: String, conf: SerializableHadoopConf,
+                    fileName: String => String,
                     schema: StructType = GdxSource.schema,
                     checks: Seq[(String,
                       org.apache.spark.sql.catalyst.expressions
@@ -7363,14 +7311,7 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
     * SUM stats and bloom sidecar. `subdir` is "" (unpartitioned) or
     * "<col>=<v>/". */
   private final class Sink(subdir: String) {
-    // `tag` carries the streaming epoch so re-attempts of the same
-    // (partition, task) across epochs can never collide on a tmp name;
-    // the per-write UUID makes the name unique ACROSS APPLICATIONS too
-    // — task ids restart from 0 per app, so two processes appending
-    // concurrently would otherwise claim the same tmp (and the winning
-    // commit's renamed file could be clobbered by the loser's retry)
-    val name: String = subdir + f"part-$tag$partitionId%05d-$taskId-" +
-      java.util.UUID.randomUUID().toString + ".gdx.tmp"
+    val name: String = fileName(subdir)
     val target = new Path(path, name)
     val lines = new GdxLineFormat.LineSink(
       target.getFileSystem(conf.conf), target, schema, layout, lanes,
@@ -7409,6 +7350,9 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
   private val sumIdx: Array[Int] = schema.fields.zipWithIndex
     .collect { case (f, i) if f.dataType == LongType => i }
 
+  // NULL-key rows, then one violation count per CHECK
+  private val gate = new Array[Long](checks.length + 1)
+
   private val partitionName: String =
     partSpec.map(_.dirName).getOrElse("")
   // unpartitioned: exactly one sink, created eagerly (the historical
@@ -7436,14 +7380,10 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
 
   override def write(r0: InternalRow): Unit = {
     val r = if (shredProj == null) r0 else shredProj(r0)
-    require(!r.isNullAt(0), "gdx write: k (the key) must not be null")
-    // CHECK constraints, SQL semantics (NULL passes): a violation
-    // fails the task — the job aborts and nothing commits
+    if (r.isNullAt(0)) { gate(0) += 1; return }
     var c = 0
     while (c < checks.length) {
-      if (checks(c)._2.eval(r) == false)
-        throw new GdxConstraintViolationException(
-          s"gdx write: row violates CHECK constraint ${checks(c)._1}")
+      if (checks(c)._2.eval(r) == false) gate(c + 1) += 1
       c += 1
     }
     val sink = sinkFor(r)
@@ -7470,7 +7410,7 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
     while (it.hasNext) f(it.next())
   }
 
-  override def commit(): WriterCommitMessage = {
+  override def commit(): GdxCommitMessage = {
     val files = Seq.newBuilder[(String, GdxFileStats)]
     eachSink { s =>
       s.lines.finish()
@@ -7482,7 +7422,7 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
       }
       files += s.entry
     }
-    GdxCommitMessage(files.result())
+    GdxCommitMessage(files.result(), gate.toSeq)
   }
   override def abort(): Unit = eachSink { s =>
     s.lines.close()
@@ -7491,4 +7431,47 @@ class GdxDataWriter(path: String, partitionId: Int, taskId: Long,
     fs.delete(new Path(path, s.name + GdxBloom.Suffix), false); ()
   }
   override def close(): Unit = eachSink(_.lines.close())
+}
+
+object GdxDataWriter {
+  /** DSv2 task file names: `part-<tag><partition>-<task>-<uuid>.gdx.tmp`.
+    * `tag` carries the streaming epoch so re-attempts of the same
+    * (partition, task) across epochs can never collide; the per-file
+    * UUID makes the name unique ACROSS APPLICATIONS too — task ids
+    * restart from 0 per app, so two processes appending concurrently
+    * would otherwise claim the same tmp (and the winning commit's
+    * renamed file could be clobbered by the loser's retry). */
+  private[graft] def tmpName(tag: String, partitionId: Int, taskId: Long)
+      : String => String = subdir =>
+    subdir + f"part-$tag$partitionId%05d-$taskId-" +
+      java.util.UUID.randomUUID().toString + ".gdx.tmp"
+
+  /** Engine file names: final `<prefix><subdir>upd-<uuid>.gdx` names — a
+    * `prefix` of `col=key/` keeps a directory's rewrite inside it. */
+  private[graft] def engineName(prefix: String): String => String =
+    subdir => s"$prefix${subdir}upd-${java.util.UUID.randomUUID}.gdx"
+
+  /** The engine's task side: each non-empty partition of `rows`
+    * (`schema`'s columns) through one writer with
+    * [[engineName]]`(prefix)` names — a partition with no rows opens
+    * no file. Returns each task's commit message. A failed task leaves
+    * what it wrote for [[GdxSource.vacuum]]'s sweep, like a refused
+    * statement's files: nothing references them. Declared here, not in
+    * `GdxSource`: Spark's closure cleaner parses the class that
+    * declares the task closure. */
+  private[graft] def writeRows(rows: org.apache.spark.rdd.RDD[InternalRow],
+      dir: String, conf: SerializableHadoopConf, prefix: String,
+      schema: StructType,
+      checks: Seq[(String,
+        org.apache.spark.sql.catalyst.expressions.Expression)],
+      layout: Array[Int], partSpec: Option[GdxSource.GdxPartSpec])
+      : Array[GdxCommitMessage] =
+    rows.mapPartitions { it =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        val w = new GdxDataWriter(dir, conf, engineName(prefix), schema,
+          checks, layout, partSpec)
+        try { it.foreach(w.write); Iterator(w.commit()) } finally w.close()
+      }
+    }.collect()
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, In,
   LessThan}
-import graft.sources.GdxSource
+import graft.sources.{GdxBloom, GdxSource}
 
 /** Per-file bloom sidecars on the GDX format (GdxBloom): point lookups
   * must prune files a zone map cannot — and never change answers,
@@ -104,5 +104,65 @@ class GdxBloomSpec extends SparkSuite {
     // planned file returns no row because the DV subtracts it
     GdxSource.delete(spark, dir, col("k") === 123L)
     assert(read(dir).filter(col("k") === 123L).count() === 0L)
+  }
+
+  test("every write path publishes one stats set: DSv2, DML, staged " +
+      "and OPTIMIZE files all carry blooms and SUM stats") {
+    val cat = "gdx_bfstats"
+    val wh = graft.Scratch.tablePath("gdxbf_stats_")
+    val s = graft.Sessions.pinned(
+      org.apache.spark.sql.graft.ColumnBridge
+        .sessionWithExtensions(spark, new GraftExtensions()),
+      s"spark.sql.catalog.$cat" -> "graft.sources.GdxCatalog",
+      s"spark.sql.catalog.$cat.warehouse" -> wh)
+    s.sql(s"CREATE NAMESPACE $cat.lab")
+    s.sql(s"CREATE TABLE $cat.lab.t (k BIGINT, v STRING, w BIGINT)")
+    val dir = s"$wh/lab/t"
+    val conf = GdxSource.driverConf()
+    def rows(ks: Seq[Long]) =
+      ks.map(k => (k, s"v$k", k * 10)).toDF("k", "v", "w").coalesce(1)
+    def everyFileHasStats(step: String): Unit = {
+      // an empty file has no key to bloom
+      val live = GdxSource.committedEntries(dir, conf)
+        .filter(_.stats.exists(_.rows > 0))
+      assert(live.nonEmpty, step)
+      live.foreach { e =>
+        assert(new java.io.File(dir, e.name + GdxBloom.Suffix).exists(),
+          s"$step: ${e.name} has no bloom sidecar")
+        assert(Set("k", "w").subsetOf(e.stats.get.sums.keySet),
+          s"$step: ${e.name} carries SUM stats for ${e.stats.get.sums}")
+      }
+    }
+    rows(1L to 100L).write.format(fmt).option("path", dir)
+      .mode("append").save()
+    everyFileHasStats("append")
+    GdxSource.update(spark, dir, col("k") === 7L, Map("w" -> lit(700L)))
+    everyFileHasStats("update")
+    s.sql("BEGIN TRANSACTION")
+    s.sql(s"INSERT INTO $cat.lab.t VALUES (101, 'x', 1010), (102, 'y', 1020)")
+    s.sql("COMMIT")
+    everyFileHasStats("staged insert")
+    GdxSource.delete(spark, dir, col("k") === 50L)
+    everyFileHasStats("delete")
+    GdxSource.compactSmall(spark, dir, smallBytes = 1L << 30)
+    everyFileHasStats("compactSmall")
+    assert(GdxSource.committedEntries(dir, conf).forall(_.dv.isEmpty),
+      "compactSmall folds the DVs")
+    // the rewritten file answers SUM from the manifest...
+    val sumW = read(dir).agg(sum("w"))
+    assert(sumW.queryExecution.executedPlan.toString
+      .contains("COMPLETE(manifest)"), sumW.queryExecution.executedPlan)
+    assert(sumW.head.getLong(0) ===
+      read(dir).select("w").as[Long].collect().sum)
+    // ...and its bloom prunes the deleted key its zone map still spans
+    assert(GdxSource.plannedFiles(dir, Seq(EqualTo("k", 50L))) === ((0, 1)))
+    // an append overlapping every w range gives the recluster work
+    rows(Seq(103L, 1L, 99L)).write.format(fmt).option("path", dir)
+      .mode("append").save()
+    val before = GdxSource.committedEntries(dir, conf).map(_.name).toSet
+    GdxSource.optimizeClustered(spark, dir, Seq("w"), target = 2)
+    assert(GdxSource.committedEntries(dir, conf).map(_.name).toSet !=
+      before, "the recluster must rewrite")
+    everyFileHasStats("optimizeClustered")
   }
 }

@@ -46,6 +46,34 @@ class GdxConstraintSpec extends SparkSuite {
     assert(read(dir).count() === 4L)
   }
 
+  test("a write's NULL keys and CHECK violations are refused at commit " +
+      "with their counts, and its files are removed") {
+    val dir = freshDir("gate")
+    write(dir, Seq((1L, "a")))
+    GdxSource.addConstraint(spark, dir, "v_short", "length(v) <= 3")
+    val vBefore = GdxSource.listVersions(dir, GdxSource.driverConf())
+    def causes(e: Throwable) =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8).toSeq
+    val chk = intercept[Exception] {
+      write(dir, Seq((2L, "long"), (3L, "longer"), (4L, "ok")))
+    }
+    assert(causes(chk).exists(c =>
+      c.isInstanceOf[GdxConstraintViolationException] &&
+        c.getMessage.contains("2 written row(s) would violate CHECK " +
+          "constraint v_short")), chk)
+    val nul = intercept[Exception] {
+      Seq((Option.empty[Long], "n")).toDF("k", "v").coalesce(1)
+        .write.format(fmt).option("path", dir).mode("append").save()
+    }
+    assert(causes(nul).exists(c =>
+      c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("1 written row(s) have a NULL key (k)")), nul)
+    assert(GdxSource.listVersions(dir, GdxSource.driverConf()) === vBefore)
+    assert(read(dir).count() === 1L)
+    assert(!new java.io.File(dir).list().exists(_.contains(".gdx.tmp")),
+      "a refused write leaves no tmp file behind")
+  }
+
   test("ADD CONSTRAINT validates existing rows and refuses violators") {
     val dir = freshDir("val")
     write(dir, Seq((1L, "a"), (200L, "b")))

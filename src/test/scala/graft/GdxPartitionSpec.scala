@@ -139,12 +139,12 @@ class GdxPartitionSpec extends SparkSuite {
 
   test("OPTIMIZE compacts within partitions, never un-partitions") {
     val dir = freshDir("opt")
-    // clusterWrite=false: a default (clustered) write already lands one
-    // file per value, leaving compaction nothing to do — this test
-    // needs the fragmented tasks x values layout as its starting point
-    df(200, 4).repartition(8)
-      .write.format(fmt).option("path", dir).option("partitionBy", "p")
-      .option("clusterWrite", "false").mode("overwrite").save()
+    // a clustered write lands one file per value, leaving compaction
+    // nothing to do — four appends fragment each value into four files
+    df(200, 4).write.format(fmt).option("path", dir)
+      .option("partitionBy", "p").mode("overwrite").save()
+    for (_ <- 1 to 3)
+      df(200, 4).write.format(fmt).option("path", dir).mode("append").save()
     val (before, after) = GdxSource.compact(spark, dir, target = 2)
     assert(after < before)
     assert(GdxSource.committedPartitionCol(dir,
@@ -154,7 +154,7 @@ class GdxPartitionSpec extends SparkSuite {
     assert(entries.forall(_.name.matches("p=\\d+/.*")),
       s"compacted files must stay under their partitions: " +
         s"${entries.map(_.name)}")
-    assert(read(dir).count() === 200L)
+    assert(read(dir).count() === 800L)
     // and the compacted layout still prunes
     val kept = GdxSource.pruneByStats(entries, Seq(EqualTo("p", 2L)))
     assert(kept.nonEmpty && kept.forall(_.name.startsWith("p=2/")))

@@ -912,24 +912,31 @@ class GdxSourceSpec extends SparkSuite with PruneAuditHelper {
       "both commits' files (2 tasks each) must reconstruct")
   }
 
-  test("CAS commit: a stale expectedBaseVersion surfaces as conflict") {
+  test("CAS commit: a stale expectedBase surfaces as conflict") {
+    import graft.sources.{GdxCommitMessage, GdxConcurrentModificationException,
+      GdxFileStats, GdxSource}
     val dir = freshDir("cas")
     write(dir, Seq((1L, "a")))                        // v1
-    intercept[Exception] { // Spark wraps the commit-time conflict
-      Seq((2L, "b")).toDF("k", "v")
-        .write.format("graft.sources.GdxSource").option("path", dir)
-        .option("expectedBaseVersion", "0")           // stale: base is 1
-        .mode("overwrite").save()
+    val conf = GdxSource.driverConf()
+    // one task's written tmp file, as commitFiles receives it
+    def staged(name: String) = {
+      java.nio.file.Files.writeString(
+        java.nio.file.Path.of(dir, name), "2\tb\n")
+      Seq(GdxCommitMessage(Seq(name -> GdxFileStats(1, 2, 2))))
+    }
+    intercept[GdxConcurrentModificationException] {
+      GdxSource.commitFiles(dir, conf, replace = true,
+        staged("part-s.gdx.tmp"), expectedBase = 0) // stale: base is 1
     }
     assert(read(dir).as[(Long, String)].collect().toSet === Set((1L, "a")),
       "a conflicted commit must leave the table untouched")
-    assert(sources.GdxSource
-      .listVersions(dir, sources.GdxSource.driverConf()) === Seq(1),
+    assert(GdxSource.listVersions(dir, conf) === Seq(1),
       "a conflicted commit must not claim a version")
+    assert(!new java.io.File(dir, "part-s.gdx.tmp").exists(),
+      "a conflicted commit removes its tmp files")
     // the matching expectation commits normally
-    Seq((2L, "b")).toDF("k", "v")
-      .write.format("graft.sources.GdxSource").option("path", dir)
-      .option("expectedBaseVersion", "1").mode("append").save()
+    GdxSource.commitFiles(dir, conf, replace = false,
+      staged("part-m.gdx.tmp"), expectedBase = 1)
     assert(read(dir).count() === 2L)
   }
 

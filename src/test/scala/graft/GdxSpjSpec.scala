@@ -186,17 +186,23 @@ class GdxSpjSpec extends SparkSuite {
     assert(read(dir).count() === 400L)
   }
 
-  test("clusterWrite=false opts out (maintenance rewrites keep their " +
-      "own layout)") {
+  test("maintenance rewrites keep their own layout (no partition " +
+      "re-cluster)") {
     val dir = freshDir("optout")
-    (0 until 400).map(i => (i.toLong, s"r$i", (i % 4).toLong))
-      .toDF("k", "v", "p").repartition(8)
-      .write.format(fmt).option("path", dir).option("partitionBy", "p")
-      .option("clusterWrite", "false").mode("overwrite").save()
+    // two clustered appends: each lands one file per value
+    for (part <- 0 until 2)
+      (0 until 200).map(i => (part * 200L + i, s"r$i", (i % 4).toLong))
+        .toDF("k", "v", "p").repartition(8)
+        .write.format(fmt).option("path", dir).option("partitionBy", "p")
+        .mode("append").save()
+    // a Z-order rewrite range-partitions on k into 8 tasks, and each
+    // task demuxes its range into every partition directory it saw
+    GdxSource.optimizeZOrder(spark, dir, Seq("k"), target = 8)
     val entries = GdxSource.committedEntries(dir, GdxSource.driverConf())
     assert(entries.size > 4,
-      s"opt-out write must keep the incoming task layout: got " +
+      s"the rewrite must keep its own task layout: got " +
         s"${entries.size} files")
+    assert(entries.forall(_.name.matches("p=\\d+/.*")))
     assert(read(dir).count() === 400L)
   }
 

@@ -7,7 +7,7 @@ import graft.sources.{GdxMergeClause, GdxSource}
   * data file, DV sidecar or manifest whose bytes never reached the disk
   * fails its operation, and no version is published — a truncated file
   * must never be committed with stats that claim every row. */
-class GdxWriteFaultSpec extends SparkSuite {
+class GdxWriteFaultSpec extends SparkSuite with RefusalHelper {
   import spark.implicits._
 
   private val fmt = "graft.sources.GdxSource"
@@ -72,6 +72,30 @@ class GdxWriteFaultSpec extends SparkSuite {
       upsert(fdir, Seq((1L, "A"), (4L, "d")))))
     refused(dir)(failingWrites(_.startsWith("dv-"))(
       upsert(fdir, Seq((1L, "A"), (4L, "d")))))
+  }
+
+  test("a failed data-file create fails every OPTIMIZE rewrite: nothing " +
+      "is published and vacuum sweeps what it wrote") {
+    val dataFile: String => Boolean =
+      n => n.startsWith("upd-") && n.endsWith(".gdx")
+    val (dir, fdir) = table("optimize")
+    append(fdir, Seq((3L, "c")))
+    refusedAfterWrites(Seq(dir), rows(dir))(failingWrites(dataFile)(
+      GdxSource.compact(spark, fdir, target = 1)))
+    refusedAfterWrites(Seq(dir), rows(dir))(failingWrites(dataFile)(
+      GdxSource.optimizeZOrder(spark, fdir, Seq("k"), target = 2)))
+    // OPTIMIZE WHERE on a partitioned table: two appends fragment p=1
+    val pdir = java.nio.file.Files.createTempDirectory("gdxfault_where")
+      .toString + "/t"
+    val pfdir = s"${FaultingFileSystem.Scheme}://$pdir"
+    for (ks <- Seq(1L to 4L, 5L to 8L))
+      ks.map(k => (k, s"v$k", k % 2)).toDF("k", "v", "p").write
+        .format(fmt).option("path", pdir).option("partitionBy", "p")
+        .mode("append").save()
+    def prows = spark.read.format(fmt).option("path", pdir).load()
+      .collect().toSet
+    refusedAfterWrites(Seq(pdir), prows)(failingWrites(dataFile)(
+      GdxSource.compactWhere(spark, pfdir, "p = 1")))
   }
 
   test("a failed manifest write fails publishExclusive and leaves no " +

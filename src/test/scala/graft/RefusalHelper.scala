@@ -9,15 +9,25 @@ trait RefusalHelper { self: SparkSuite =>
 
   /** Runs `stmt`, which must be refused after writing and before
     * publishing: every table in `dirs` keeps its versions, `rows`
-    * reads as before, the new data and DV files (`upd-*`, `dv-*`)
-    * exist but no committed snapshot references them, and vacuum's
-    * unreferenced-file sweep deletes every one. Returns the refusal. */
+    * reads as before, the new data and DV files (`upd-*`, `dv-*`, at
+    * the root or in a partition directory) exist but no committed
+    * snapshot references them, and vacuum's unreferenced-file sweep
+    * deletes every one. Returns the refusal. */
   def refusedAfterWrites(dirs: Seq[String], rows: => Any)
                         (stmt: => Any): Throwable = {
     val conf = GdxSource.driverConf()
-    def written(dir: String): Set[String] = new java.io.File(dir)
-      .listFiles().map(_.getName)
-      .filter(n => n.startsWith("upd-") || n.startsWith("dv-")).toSet
+    // the table root and its `col=key/` partition directories
+    def written(dir: String): Set[String] = {
+      val root = new java.io.File(dir)
+      root.listFiles().toSeq.flatMap { f =>
+        if (f.isDirectory && f.getName.contains("="))
+          f.list().toSeq.map(n => s"${f.getName}/$n")
+        else Seq(f.getName)
+      }.filter { n =>
+        val leaf = n.substring(n.lastIndexOf('/') + 1)
+        leaf.startsWith("upd-") || leaf.startsWith("dv-")
+      }.toSet
+    }
     val versions = dirs.map(GdxSource.listVersions(_, conf))
     val rowsBefore = rows
     val filesBefore = dirs.map(written)

@@ -213,41 +213,78 @@ class ZOrderSpec extends SparkSuite {
     }
   }
 
-  test("OPTIMIZE publishes under CAS: a racing append is never dropped") {
-    // read-rewrite-truncate without a CAS would silently drop any
-    // commit that lands between the snapshot read and the publish —
-    // the rewrite must pin its read version, publish with
-    // expectedBaseVersion, and recompute on a lost race (the merge()
-    // loop). An appender hammers commits while OPTIMIZE runs
-    // repeatedly; every appended key must survive in the live table.
-    val dir = freshDir("cas") + "/t"
-    (0 until 2000).map(i => (i.toLong, s"r${i % 5}", (i * 7919L) % 1000L))
-      .toDF("k", "v", "s").repartition(8)
-      .write.format(fmt).option("path", dir).mode("overwrite").save()
+  /** `rewrite(round)` for rounds 0 to 3 while an appender lands ten
+    * one-row commits (`row(i)`, keys from 100000) on `dir`: every
+    * appended row must survive in the live table. */
+  private def racingAppends(dir: String,
+                            row: Int => org.apache.spark.sql.DataFrame)
+                           (rewrite: Int => Unit): Unit = {
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val appender = new Thread(() => {
       try {
         for (i <- 0 until 10) {
-          Seq((100000L + i, "x", 7L)).toDF("k", "v", "s").coalesce(1)
+          row(i).coalesce(1)
             .write.format(fmt).option("path", dir).mode("append").save()
           Thread.sleep(30)
         }
       } catch { case t: Throwable => failures.add(t) }
     })
     appender.start()
-    try {
-      for (_ <- 0 until 4) {
+    try for (round <- 0 until 4) rewrite(round)
+    finally appender.join(60000)
+    assert(failures.isEmpty, s"appender failed: ${failures.peek}")
+    assert(read(dir).filter(col("k") >= 100000L).count() === 10L,
+      "a racing append was dropped by the rewrite publish")
+  }
+
+  test("OPTIMIZE publishes under CAS: a racing append is never dropped") {
+    // read-rewrite-publish without a CAS would silently drop any
+    // commit that lands between the snapshot read and the publish —
+    // every rewrite pins its read version, publishes through the
+    // engine's commit loop and recomputes on a lost race. An appender
+    // hammers commits while each rewrite runs repeatedly.
+    val dir = freshDir("cas") + "/t"
+    (0 until 2000).map(i => (i.toLong, s"r${i % 5}", (i * 7919L) % 1000L))
+      .toDF("k", "v", "s").repartition(8)
+      .write.format(fmt).option("path", dir).mode("overwrite").save()
+    racingAppends(dir, i => Seq((100000L + i, "x", 7L)).toDF("k", "v", "s")) {
+      _ =>
         val (_, after) = GdxSource.optimizeZOrder(spark, dir,
           Seq("k", "s"), target = 4)
         assert(after >= 1)
         GdxSource.compact(spark, dir, target = 4)
-      }
-    } finally appender.join(60000)
-    assert(failures.isEmpty, s"appender failed: ${failures.peek}")
-    val live = read(dir)
-    assert(live.filter(col("k") >= 100000L).count() === 10L,
-      "a racing append was dropped by the rewrite publish")
+    }
+    assert(read(dir).count() === 2010L)
+    // a partial rewrite: OPTIMIZE WHERE on a partitioned copy, the
+    // appends landing inside the slice it rewrites
+    val pdir = freshDir("casp") + "/t"
+    (0 until 2000).map(i => (i.toLong, s"r${i % 5}", (i % 2).toLong))
+      .toDF("k", "v", "p").repartition(8)
+      .write.format(fmt).option("path", pdir).option("partitionBy", "p")
+      .mode("overwrite").save()
+    racingAppends(pdir,
+      i => Seq((100000L + i, "x", (i % 2).toLong)).toDF("k", "v", "p")) {
+      _ => GdxSource.compactWhere(spark, pdir, "p IN (0, 1)")
+    }
+    assert(read(pdir).count() === 2010L)
+    // a schema rewrite: each round drops one struct leaf while classic
+    // (k, v) appends land
+    val ndir = freshDir("casn") + "/t"
+    spark.range(2000).select(col("id").as("k"),
+      concat(lit("r"), (col("id") % 5).cast("string")).as("v"),
+      struct(Seq("a", "b", "c", "d", "e").map(f => col("id").as(f)): _*)
+        .as("m"))
+      .repartition(8)
+      .write.format(fmt).option("path", ndir).mode("overwrite").save()
+    racingAppends(ndir, i => Seq((100000L + i, "x")).toDF("k", "v")) {
+      round => GdxSource.dropNestedField(spark, ndir, s"m.${"abcd"(round)}")
+    }
+    val live = read(ndir)
+    assert(live.schema("m").dataType.asInstanceOf[
+      org.apache.spark.sql.types.StructType].fieldNames.toSeq === Seq("e"))
     assert(live.count() === 2010L)
+    assert(live.filter(col("k") < 100000L && col("m.e") =!= col("k"))
+      .count() === 0L, "a kept leaf lost its values")
   }
 
   test("VACUUM without RETAIN keeps history (conservative default)") {
